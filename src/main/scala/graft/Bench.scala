@@ -3,40 +3,13 @@ import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      // Local-FS I/O regime (r15, measured: 10-gate lifecycle subset
-      // 95.3 s → 79.1 s, ~17%): Hadoop's default local "file" FS is
-      // ChecksumFileSystem, which writes+verifies a client-side .crc
-      // sidecar per file — an artifact of LOCAL mode that production
-      // filesystems (HDFS datanode checksums, object-store etags) do not
-      // pay on this code path. RawLocalFileSystem drops the sidecars;
-      // commit semantics are unchanged (ManifestStore's create-exclusive
-      // claim and read-back live on the raw FS either way). Overridable
-      // via the standard spark.hadoop.* mechanism for deployments that
-      // want client checksums on local disk.
-      .config("spark.hadoop.fs.file.impl",
-        "org.apache.hadoop.fs.RawLocalFileSystem")
-      // v2 commit: task-commit renames instead of a sequential
-      // job-commit rename pass on the driver. Safe here by construction:
-      // every Spark write lands in a fresh per-commit/per-run directory
-      // whose VISIBILITY is governed by the ManifestStore manifest flip
-      // (or by being this run's scratch), so v1's stronger
-      // job-level atomicity adds nothing — the table format already
-      // provides it.
-      .config("spark.hadoop.mapreduce.fileoutputcommitter.algorithm.version", "2")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val cpus = Session.envCpus(32)
+    val spark = Session.local(cpus)
     // local-iteration filter, mirroring Verify: the driver sets no such
     // variable and always benches the full surface
     val only = sys.env.get("SPARK_GRAFT_ONLY")
       .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
-    def benched = SparkEntry.queries.filter(kv => only.forall(_.contains(kv._1)))
+    def benched = SparkEntry.queries.keySet.filter(k => only.forall(_.contains(k)))
     // Warm-up pass at the smallest SF: JIT + codegen compilation dominate
     // first executions in a fresh JVM (observed 3-10x inflation on the
     // first query to touch each operator family); timed numbers should
@@ -56,21 +29,15 @@ object Bench {
       "x195_sample_store")
     val warmDir = "/root/testdata/sf0.001"
     benched
-      .filter(kv => !SparkEntry.lifecycleQueries.contains(kv._1) || lifecycleWarm(kv._1))
-      .foreach { case (_, fn) =>
-        try fn(spark, warmDir).count() catch { case _: Throwable => }
-      }
+      .filter(k => !SparkEntry.lifecycleQueries.contains(k) || lifecycleWarm(k))
+      .foreach(timed(spark, _, warmDir))
     // Three timed passes, report the per-query MIN over SUCCESSFUL runs:
     // single-pass numbers in a shared JVM are GC/JIT-noise-dominated
     // (observed 3-10x spread on the same query; totals swung 37-46s with
     // min-of-2 under machine-load noise). A failed run must never
     // contribute its (fast) elapsed time — a query that failed every
     // pass reports -1 so the breakage is visible in the JSON.
-    def pass(): Map[String, Double] = benched.map { case (name, fn) =>
-      val t0 = System.nanoTime()
-      val ok = try { fn(spark, sfDir).count(); true } catch { case _: Throwable => false }
-      name -> (if (ok) (System.nanoTime() - t0) / 1e9 else Double.NaN)
-    }
+    def pass(): Map[String, Double] = benched.map(k => k -> timed(spark, k, sfDir)).toMap
     // Fixed calibration probe before each pass: the same cheap aggregation
     // every round, so machine-load noise shows up as calibration drift
     // instead of masquerading as a per-query regression (the r5 driver
@@ -89,9 +56,8 @@ object Bench {
     // only, and every pass carries an explicit verdict in the artifacts,
     // so a number can never silently include a loaded-machine sample.
     val timedBuf = scala.collection.mutable.ArrayBuffer[(Double, Map[String, Double])]()
-    def totalOf(p: Map[String, Double]): Double = p.values.filterNot(_.isNaN).sum
     def verdicts: Seq[Boolean] = {
-      val totals = timedBuf.map(t => totalOf(t._2))
+      val totals = timedBuf.map(t => passTotal(t._2))
       if (totals.isEmpty) Nil
       else { val best = totals.min; totals.map(_ <= 1.5 * best).toSeq }
     }
@@ -111,33 +77,11 @@ object Bench {
     val (calibs, passes) = (timedBuf.map(_._1).toSeq, timedBuf.map(_._2).toSeq)
     val clean = verdicts
     val cleanPasses = passes.zip(clean).collect { case (p, true) => p }
-    val results = passes.head.keys.map { k =>
-      val times = cleanPasses.map(_(k)).filterNot(_.isNaN)
-      k -> (if (times.isEmpty) -1.0 else times.min)
-    }.toMap
-    // per-pass totals over queries that succeeded in THAT pass: uniform
-    // inflation across passes = load noise; one slow pass = GC/JIT blip
-    val passTotals = passes.map(totalOf)
-    // 3-decimal values: the harness that captures this output keeps only a
-    // bounded TAIL of stdout (r2/r3 both came back `parsed: null` with the
-    // line's head — including the headline total — sliced off), so the
-    // line must be as short as full query names allow
-    def f3(v: Double): String = "%.3f".formatLocal(java.util.Locale.ROOT, v)
-    val qs = results.toSeq.sortBy(-_._2)
-      .map { case (k, v) => s"\"" + k + "\":" + f3(v) }
-      .mkString("{", ",", "}")
+    val results = passes.head.keys.map(k => k -> bestOf(cleanPasses.map(_(k)))).toMap
     // the -1 failure sentinel stays visible per query but must not deflate
     // the headline total; broken queries surface as an explicit count
     val total = results.values.filter(_ >= 0).sum
     val failed = results.values.count(_ < 0)
-    // engine-vs-lifecycle split (SparkEntry.lifecycleQueries): the
-    // lifecycle family's wall-time is micro-batch + store-commit floors,
-    // so its subtotal tracks commit-cycle count, not engine speed —
-    // per-query regression signal lives in the ENGINE subtotal
-    def familyTotal(in: String => Boolean): Double =
-      results.collect { case (k, v) if in(k) && v >= 0 => v }.sum
-    val lifecycleT = familyTotal(SparkEntry.lifecycleQueries.contains)
-    val engineT = familyTotal(k => !SparkEntry.lifecycleQueries.contains(k))
     // The COMPLETE per-query map as a first-class committed artifact
     // (r8 verdict #1): the stdout line above is captured through a
     // bounded tail that has repeatedly truncated the middle of the map,
@@ -145,19 +89,66 @@ object Bench {
     // the authoritative record — full min-of-passes map, every per-pass
     // map, and the calibration probes — written where `git add` finds it.
     writeDetail(results, passes, clean, calibs, sfDir, cpus)
-    val nClean = clean.count(identity)
-    val verdictJson = clean.map(c => "\"" + (if (c) "clean" else "polluted") + "\"")
-      .mkString("[", ",", "]")
-    val noise =
-      s""""pass_totals":${passTotals.map(f3).mkString("[", ",", "]")},"pass_verdicts":$verdictJson,"calib":${calibs.map(f3).mkString("[", ",", "]")}"""
-    val fams = s""""engine":${f3(engineT)},"lifecycle":${f3(lifecycleT)}"""
-    println(s"""{"metric":"total","value":${f3(total)},"unit":"sec","passes":$nClean,"failed":$failed,$fams,$noise,"queries":$qs,"sf":"$sfDir"}""")
+    def line(queries: Seq[(String, Double)]): String =
+      s"""{"metric":"total","value":${f3(total)},"unit":"sec","passes":${clean.count(identity)},"failed":$failed,${familiesJson(results)},"pass_totals":${arr(passes.map(passTotal))},"pass_verdicts":${verdictsJson(clean)},"calib":${arr(calibs)},"queries":${qmap(queries)},"sf":"$sfDir"}"""
+    val slowest = results.toSeq.sortBy(-_._2)
+    println(line(slowest))
     // Repeat the headline + slowest queries as a SHORT self-contained JSON
     // line LAST: whatever the capture buffer size, this one survives whole.
-    val top = results.toSeq.sortBy(-_._2).take(8)
-      .map { case (k, v) => s"\"" + k + "\":" + f3(v) }.mkString("{", ",", "}")
-    println(s"""{"metric":"total","value":${f3(total)},"unit":"sec","passes":$nClean,"failed":$failed,$fams,$noise,"queries":$top,"sf":"$sfDir"}""")
+    println(line(slowest.take(8)))
     spark.stop()
+  }
+
+  /** Wall seconds of one `count()` of the gated query `name` over `dir`,
+    * or NaN when it throws. The failure is printed to stderr, so a NaN
+    * (and the -1 it becomes in the JSON) always has a reason beside it.
+    */
+  def timed(spark: SparkSession, name: String, dir: String): Double = {
+    val fn = SparkEntry.queries(name)
+    val t0 = System.nanoTime()
+    try {
+      fn(spark, dir).count()
+      (System.nanoTime() - t0) / 1e9
+    } catch {
+      case e: Throwable =>
+        System.err.println(s"[bench] $name failed: $e")
+        Double.NaN
+    }
+  }
+
+  /** Min over the runs that succeeded; -1 when every run failed. A failed
+    * run must never contribute its (fast) elapsed time.
+    */
+  def bestOf(times: Seq[Double]): Double = {
+    val ok = times.filterNot(_.isNaN)
+    if (ok.isEmpty) -1.0 else ok.min
+  }
+
+  // 3-decimal values: the harness that captures the stdout line keeps only
+  // a bounded TAIL of stdout (r2/r3 both came back `parsed: null` with the
+  // line's head — including the headline total — sliced off), so the
+  // line must be as short as full query names allow
+  private def f3(v: Double): String = "%.3f".formatLocal(java.util.Locale.ROOT, v)
+  private def arr(xs: Seq[Double]): String = xs.map(f3).mkString("[", ",", "]")
+  private def qmap(kvs: Seq[(String, Double)]): String = kvs
+    .map { case (k, v) => "\"" + k + "\":" + (if (v.isNaN) "-1.0" else f3(v)) }
+    .mkString("{", ",", "}")
+  // per-pass totals over queries that succeeded in THAT pass: uniform
+  // inflation across passes = load noise; one slow pass = GC/JIT blip
+  private def passTotal(p: Map[String, Double]): Double = p.values.filterNot(_.isNaN).sum
+  private def verdictsJson(clean: Seq[Boolean]): String =
+    clean.map(c => "\"" + (if (c) "clean" else "polluted") + "\"").mkString("[", ",", "]")
+
+  /** Engine-vs-lifecycle split (SparkEntry.lifecycleQueries): the
+    * lifecycle family's wall-time is micro-batch + store-commit floors,
+    * so its subtotal tracks commit-cycle count, not engine speed —
+    * per-query regression signal lives in the ENGINE subtotal.
+    */
+  private def familiesJson(results: Map[String, Double]): String = {
+    def total(in: String => Boolean): Double =
+      results.collect { case (k, v) if in(k) && v >= 0 => v }.sum
+    s""""engine":${f3(total(k => !SparkEntry.lifecycleQueries.contains(k)))},""" +
+      s""""lifecycle":${f3(total(SparkEntry.lifecycleQueries.contains))}"""
   }
 
   /** Write `BENCH_DETAIL_r{NN}_c{cpus}.json` (plus the legacy
@@ -179,7 +170,7 @@ object Bench {
       clean: Seq[Boolean],
       calibs: Seq[Double],
       sfDir: String,
-      cpus: String): Unit = {
+      cpus: Int): Unit = {
     try {
       val root = new java.io.File(".").getCanonicalFile
       val prior = Option(root.listFiles()).getOrElse(Array.empty)
@@ -189,19 +180,7 @@ object Bench {
         }
       val round = sys.env.get("SPARK_GRAFT_ROUND").map(_.toInt)
         .getOrElse(if (prior.isEmpty) 1 else prior.max + 1)
-      def f3(v: Double): String = "%.3f".formatLocal(java.util.Locale.ROOT, v)
-      def qmap(m: Map[String, Double]): String = m.toSeq.sortBy(_._1)
-        .map { case (k, v) =>
-          "\"" + k + "\":" + (if (v.isNaN) "-1.0" else f3(v)) }
-        .mkString("{", ",", "}")
-      val passJson = passes.map(qmap).mkString("[", ",", "]")
-      def famTotal(in: String => Boolean): Double =
-        results.collect { case (k, v) if in(k) && v >= 0 => v }.sum
-      val fams =
-        s""""engine":${f3(famTotal(k => !SparkEntry.lifecycleQueries.contains(k)))},""" +
-          s""""lifecycle":${f3(famTotal(SparkEntry.lifecycleQueries.contains))}"""
-      val verdictJson = clean.map(c => "\"" + (if (c) "clean" else "polluted") + "\"")
-        .mkString("[", ",", "]")
+      def byName(m: Map[String, Double]): String = qmap(m.toSeq.sortBy(_._1))
       // cold-vs-steady cost visibility (r15 verdict #5): with per-JVM
       // ProtoStores, pass 1 pays every prototype build and later passes
       // hardlink-clone them — so the min map measures each gate's
@@ -210,32 +189,28 @@ object Bench {
       // build_pass_total = pass 1 (carries the proto builds);
       // steady_pass_total = best CLEAN pass after it (or pass 1 when it
       // is the only clean pass).
-      def passTotal(p: Map[String, Double]): Double =
-        p.values.filterNot(_.isNaN).sum
       val buildPassTotal = passes.headOption.map(passTotal).getOrElse(0.0)
       val steadyCleans = passes.zip(clean).drop(1).collect { case (p, true) => passTotal(p) }
       val steadyPassTotal = if (steadyCleans.nonEmpty) steadyCleans.min else buildPassTotal
       val json =
         s"""{"round":$round,"sf":"$sfDir","cpus":$cpus,"passes":${clean.count(identity)},
-           |"pass_verdicts":$verdictJson,
+           |"pass_verdicts":${verdictsJson(clean)},
            |"build_pass_total":${f3(buildPassTotal)},
            |"steady_pass_total":${f3(steadyPassTotal)},
-           |$fams,
-           |"calib":${calibs.map(f3).mkString("[", ",", "]")},
-           |"min":${qmap(results)},
-           |"per_pass":$passJson}""".stripMargin
-      val out = new java.io.File(root, f"BENCH_DETAIL_r$round%02d_c$cpus.json")
-      val w = new java.io.PrintWriter(out, "UTF-8")
-      try w.println(json) finally w.close()
-      println(s"bench detail -> ${out.getPath}")
+           |${familiesJson(results)},
+           |"calib":${arr(calibs)},
+           |"min":${byName(results)},
+           |"per_pass":${passes.map(byName).mkString("[", ",", "]")}}""".stripMargin
+      def write(name: String): Unit = {
+        val out = new java.io.File(root, name)
+        val w = new java.io.PrintWriter(out, "UTF-8")
+        try w.println(json) finally w.close()
+        println(s"bench detail -> ${out.getPath}")
+      }
+      write(f"BENCH_DETAIL_r$round%02d_c$cpus.json")
       // legacy alias: the 32-core main run keeps the unsuffixed name the
       // driver and prior rounds' audits read
-      if (cpus == "32") {
-        val alias = new java.io.File(root, f"BENCH_DETAIL_r$round%02d.json")
-        val w2 = new java.io.PrintWriter(alias, "UTF-8")
-        try w2.println(json) finally w2.close()
-        println(s"bench detail -> ${alias.getPath}")
-      }
+      if (cpus == 32) write(f"BENCH_DETAIL_r$round%02d.json")
     } catch {
       case e: Throwable =>
         // the artifact is best-effort: a read-only cwd must not fail the bench

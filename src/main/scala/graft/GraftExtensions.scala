@@ -6,12 +6,11 @@ import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
 import org.apache.spark.sql.graftfn.DotProductF64
 
 /** SparkSessionExtensions entry point: registers the engine's custom
-  * expressions as SQL functions, so plain `spark.sql` users get them too:
+  * expressions as SQL functions, so plain `spark.sql` users get them too.
+  * [[Session.local]] installs it on every graft session:
   *
   * {{{
-  * SparkSession.builder()
-  *   .withExtensions(new GraftExtensions)
-  *   .getOrCreate()
+  * val spark = graft.Session.local(cpus = 4)
   * spark.sql("SELECT graft_dot(a, b) FROM vectors")
   * }}}
   *

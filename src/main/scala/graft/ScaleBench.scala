@@ -765,38 +765,18 @@ object ScaleBench {
   private def time(
       spark: SparkSession, d1: String, dN: String,
       family: Seq[String]): (Map[String, Double], Map[String, Double]) = {
-    def pass(dir: String): Map[String, Double] = family.map { name =>
-      val t0 = System.nanoTime()
-      val ok = try { SparkEntry.queries(name)(spark, dir).count(); true }
-      catch { case _: Throwable => false }
-      name -> (if (ok) (System.nanoTime() - t0) / 1e9 else Double.NaN)
-    }.toMap
+    def pass(dir: String): Map[String, Double] =
+      family.map(name => name -> Bench.timed(spark, name, dir)).toMap
     def minOf(a: Map[String, Double], b: Map[String, Double]) =
-      a.map { case (k, v) =>
-        val ts = Seq(v, b(k)).filterNot(_.isNaN)
-        k -> (if (ts.isEmpty) -1.0 else ts.min)
-      }
+      a.map { case (k, v) => k -> Bench.bestOf(Seq(v, b(k))) }
     val (a1, aN, b1, bN) = (pass(d1), pass(dN), pass(d1), pass(dN))
     (minOf(a1, b1), minOf(aN, bN))
   }
 
   def main(args: Array[String]): Unit = {
     val baseDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val reps = args.headOption.map(_.toInt).getOrElse(10)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      // same local-FS I/O regime as Bench (see the comment there) — scale
-      // curves must measure the engine, not local .crc sidecar churn
-      .config("spark.hadoop.fs.file.impl",
-        "org.apache.hadoop.fs.RawLocalFileSystem")
-      .config("spark.hadoop.mapreduce.fileoutputcommitter.algorithm.version", "2")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session.local(Session.envCpus(32))
     val root = Scratch.path("scalebench")
     val (d1, dN) = (s"$root/x1", s"$root/x$reps")
     // SPARK_GRAFT_FAMILIES=r8_scale,srp_auto_scale restricts the run (and its
@@ -832,10 +812,7 @@ object ScaleBench {
       stage(spark, baseDir, dN, reps)
     }
     // JIT/codegen warm-up on the small SF, as Bench does
-    selected.flatMap(_._2).distinct.foreach { n =>
-      try SparkEntry.queries(n)(spark, "/root/testdata/sf0.001").count()
-      catch { case _: Throwable => }
-    }
+    selected.flatMap(_._2).distinct.foreach(Bench.timed(spark, _, "/root/testdata/sf0.001"))
     def js(m: Map[String, Double]) =
       m.map { case (k, v) => s"\"" + k + "\":" + f"$v%.3f" }.mkString("{", ",", "}")
     def report(metric: String, family: Seq[String]): Unit = {
@@ -1013,12 +990,7 @@ object ScaleBench {
         val t2 = System.nanoTime()
         ((t1 - t0) / 1e9, (t2 - t1) / 1e9, 0.0)
       }
-      def funnel(dir: String): Double = {
-        val t0 = System.nanoTime()
-        try SparkEntry.queries("x240_stream_registry")(spark, dir).count()
-        catch { case _: Throwable => return Double.NaN }
-        (System.nanoTime() - t0) / 1e9
-      }
+      def funnel(dir: String): Double = Bench.timed(spark, "x240_stream_registry", dir)
       def minCycle(dir: String, tag: String): (Double, Double, Double) = {
         val (a, b) = (cycle(dir, tag), cycle(dir, tag))
         val f = math.min(funnel(dir), funnel(dir))

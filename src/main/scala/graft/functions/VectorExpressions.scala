@@ -67,17 +67,4 @@ object VectorExpressions {
   def dotProduct(a: Column, b: Column): Column =
     ExpressionUtils.column(
       DotProductF64(ExpressionUtils.expression(a), ExpressionUtils.expression(b)))
-
-  /** Register `graft_dot` on an EXISTING session (new sessions should use
-    * `.withExtensions(new graft.GraftExtensions)` instead).
-    */
-  def register(spark: org.apache.spark.sql.SparkSession): Unit =
-    spark.sessionState.functionRegistry.registerFunction(
-      org.apache.spark.sql.catalyst.FunctionIdentifier("graft_dot"),
-      new org.apache.spark.sql.catalyst.expressions.ExpressionInfo(
-        classOf[DotProductF64].getName, "graft_dot"),
-      (children: Seq[Expression]) => {
-        require(children.size == 2, "graft_dot(arrA, arrB) takes 2 arguments")
-        DotProductF64(children.head, children(1))
-      })
 }

@@ -2,7 +2,7 @@ package graft.sources
 
 import java.time.LocalDate
 
-import org.apache.hadoop.fs.{FileSystem, FileUtil, Path}
+import org.apache.hadoop.fs.{FileUtil, Path}
 import org.apache.spark.sql.SparkSession
 
 import graft.expr.DateMacros
@@ -110,8 +110,11 @@ object FileTransport {
     val fresh = dst.isFile && dst.length == st.getLen &&
       st.getModificationTime > 0 && sec(dst.lastModified) == sec(st.getModificationTime)
     if (!fresh) {
-      val localFs = FileSystem.getLocal(conf)
-      FileUtil.copy(fs, src, localFs, new Path(dst.toString), false, true, conf)
+      // the configured "file" FS, not FileSystem.getLocal: getLocal casts
+      // it to the checksummed LocalFileSystem and throws when the session
+      // runs RawLocalFileSystem (the Bench/Verify I/O regime)
+      val dstPath = new Path(dst.toURI)
+      FileUtil.copy(fs, src, dstPath.getFileSystem(conf), dstPath, false, true, conf)
       if (st.getModificationTime > 0) dst.setLastModified(st.getModificationTime)
     }
     dst.toString

@@ -120,12 +120,12 @@ object FixedWidth {
     *
     * `encoding` matches the reference's per-file charset (`encoding`
     * attribute, decode at cubicerpetl.py:342-343) — legacy fixed-width
-    * drops are routinely Latin-1/cp1252. Spark's text source hardwires
-    * UTF-8, so non-UTF-8 charsets read the raw line BYTES via Hadoop's
-    * TextInputFormat (which splits records on the 0x0A byte — correct and
-    * splittable for any ASCII-compatible charset) and decode per line on
-    * executors. UTF-16-family charsets (multi-byte newlines) are rejected
-    * rather than silently mis-split.
+    * drops are routinely Latin-1/cp1252. Spark's text source splits
+    * records on the 0x0A byte (correct and splittable for any
+    * ASCII-compatible charset) and keeps each line's bytes as they are, so
+    * non-UTF-8 charsets take those raw bytes back with a cast to binary
+    * and decode per line on executors. UTF-16-family charsets (multi-byte
+    * newlines) are rejected rather than silently mis-split.
     */
   def readFile(
       spark: SparkSession,
@@ -135,7 +135,7 @@ object FixedWidth {
       footerCols: Seq[FwColumn] = Nil,
       encoding: String = "UTF-8"): DataFrame = {
     val charset = java.nio.charset.Charset.forName(encoding)
-    // Whitelist by PROPERTY, not by name: TextInputFormat splits records on
+    // Whitelist by PROPERTY, not by name: the text source splits records on
     // the 0x0A byte, so the charset must encode '\n' as exactly that byte
     // (and round-trip an ASCII probe). A name blacklist misses charsets
     // like EBCDIC (cp037/cp500), which contain no 0x0A line bytes at all
@@ -169,21 +169,15 @@ object FixedWidth {
     // monotonically_increasing_id is ordered within a partition and by
     // partition id across partitions, which matches within-file line order
     // for a single splittable text file read in order.
+    // (Not SparkContext.hadoopFile: it calls FileSystem.getLocal, which
+    // throws under the RawLocalFileSystem regime graft.Session runs.)
+    val text = spark.read.text(path)
     val lines =
-      if (charset == java.nio.charset.StandardCharsets.UTF_8) spark.read.text(path)
+      if (charset == java.nio.charset.StandardCharsets.UTF_8) text
       else {
         val name = charset.name // serialize the name, not the Charset
-        val raw = spark.sparkContext.hadoopFile(path,
-          classOf[org.apache.hadoop.mapred.TextInputFormat],
-          classOf[org.apache.hadoop.io.LongWritable],
-          classOf[org.apache.hadoop.io.Text])
-          .map { case (_, t) =>
-            new String(t.getBytes, 0, t.getLength, java.nio.charset.Charset.forName(name))
-          }
-        spark.createDataFrame(raw.map(org.apache.spark.sql.Row(_)),
-          org.apache.spark.sql.types.StructType(Seq(
-            org.apache.spark.sql.types.StructField("value",
-              org.apache.spark.sql.types.StringType))))
+        val decode = udf((b: Array[Byte]) => new String(b, java.nio.charset.Charset.forName(name)))
+        text.select(decode(col("value").cast("binary")).as("value"))
       }
     parseLines(lines.withColumn("__line_no", monotonically_increasing_id()),
       cols, headerCols, footerCols).drop("__line_no")

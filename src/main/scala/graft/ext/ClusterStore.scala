@@ -191,22 +191,7 @@ object ClusterStore {
       table: String,
       partitions: Int = 8,
       idA: String = "id_a",
-      idB: String = "id_b"): Unit =
-    appendPairsFp(spark, newPairs, table, partitions, idA, idB, _ => ())
-
-  /** [[appendPairs]] with a failpoint hook invoked AFTER each commit
-    * ("twin", "main", "delete") — the test seam that lets the spec
-    * crash an append at any point of its three-commit window and prove
-    * replays converge. Production (the public overload) passes a no-op.
-    */
-  private[graft] def appendPairsFp(
-      spark: SparkSession,
-      newPairs: DataFrame,
-      table: String,
-      partitions: Int,
-      idA: String,
-      idB: String,
-      failpoint: String => Unit): Unit = {
+      idB: String = "id_b"): Unit = {
     requireGeometry(spark, table, partitions)
     val touched = Dedup.materialize(
       newPairs.select(col(idA).as("id"))
@@ -305,14 +290,11 @@ object ClusterStore {
       ManifestStore.write(spark, twinRows.limit(0), twin, "ptid")
     ManifestStore.merge(spark, twin, twinRows, Seq("id"), Seq("ptid"),
       txnRecord = Map(TxnApp -> fp))
-    failpoint("twin")
     ManifestStore.merge(spark, table, relabeled, Seq("id"), Seq("pt"),
       txnRecord = if (willDelete) Map.empty else Map(TxnApp -> fp))
-    failpoint("main")
     if (willDelete)
       ManifestStore.delete(spark, table, staleLive, Seq("id", "pt"), Seq("pt"),
         txnRecord = Map(TxnApp -> fp))
-    failpoint("delete")
   }
 
   /** Right-to-be-forgotten over the maintained cluster labels — the
@@ -352,21 +334,7 @@ object ClusterStore {
       ids: DataFrame,
       idCol: String,
       table: String,
-      partitions: Int = 8): Unit =
-    forgetFp(spark, ids, idCol, table, partitions, _ => ())
-
-  /** [[forget]] with a failpoint hook invoked AFTER each commit
-    * ("twin", "main", "mainDelete", "twinDelete") — the test seam that
-    * crashes a forget at any point of its commit window and proves
-    * replays converge (the [[appendPairsFp]] convention).
-    */
-  private[graft] def forgetFp(
-      spark: SparkSession,
-      ids: DataFrame,
-      idCol: String,
-      table: String,
-      partitions: Int,
-      failpoint: String => Unit): Unit = {
+      partitions: Int = 8): Unit = {
     requireGeometry(spark, table, partitions)
     val twin = twinTable(table)
     requireNoRebuildWindow(spark, table, "forgetting")
@@ -408,9 +376,7 @@ object ClusterStore {
         changed.select(col("id"), col("label"), col("prev_label"))
           .withColumn("ptid", bucket(col("id"), partitions)),
         Seq("id"), Seq("ptid"))
-      failpoint("twin")
       ManifestStore.merge(spark, table, mainRows, Seq("id"), Seq("pt"))
-      failpoint("main")
     }
     // doomed rows die under every label bucket they might occupy; a
     // relabeled survivor's old copy dies here only when the main merge
@@ -426,11 +392,9 @@ object ClusterStore {
     val dels = Dedup.materialize(doomedMain.unionByName(staleSurv).distinct())
     if (!dels.head(1).isEmpty)
       ManifestStore.delete(spark, table, dels, Seq("id", "pt"), Seq("pt"))
-    failpoint("mainDelete")
     ManifestStore.delete(spark, twin,
       doomed.withColumn("ptid", bucket(col("id"), partitions)),
       Seq("id"), Seq("ptid"))
-    failpoint("twinDelete")
   }
 
   /** REBUILD the label store from the pair-generating LSH index — the
@@ -474,19 +438,7 @@ object ClusterStore {
       idxTable: String,
       table: String,
       threshold: Double,
-      partitions: Int = 8): Unit =
-    rebuildFromIndexFp(spark, idxTable, table, threshold, partitions, _ => ())
-
-  /** [[rebuildFromIndex]] with the failpoint seam ("twin", "main") —
-    * the [[appendPairsFp]] convention.
-    */
-  private[graft] def rebuildFromIndexFp(
-      spark: SparkSession,
-      idxTable: String,
-      table: String,
-      threshold: Double,
-      partitions: Int,
-      failpoint: String => Unit): Unit = {
+      partitions: Int = 8): Unit = {
     requireGeometry(spark, table, partitions)
     val g = StoreSidecar.read(spark, idxTable, Seq("bands", "rowsPerBand"))
       .getOrElse(throw new IllegalStateException(
@@ -509,11 +461,9 @@ object ClusterStore {
       labels.withColumn("prev_label", col("label"))
         .withColumn("ptid", bucket(col("id"), partitions)),
       twinTable(table), Seq("ptid"), txnRecord = Map(TxnRebuild -> idxVersion))
-    failpoint("twin")
     ManifestStore.write(spark,
       labels.withColumn("pt", bucket(col("label"), partitions)),
       table, Seq("pt"), txnRecord = Map(TxnRebuild -> idxVersion))
-    failpoint("main")
   }
 
   /** The (id, label) table — the LATEST snapshot by default, or a

@@ -1,6 +1,8 @@
 package graft.ext
 
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.SparkSession
+import graft.sources.Failpoints
 
 /** The `_graft_geometry.json` sidecar shared by every maintained store
   * ([[DedupStores]], [[VectorStore]], [[ClusterStore]]): a tiny
@@ -9,22 +11,27 @@ import org.apache.spark.sql.SparkSession
   * recording the build-time geometry that later probes/appends must
   * match. Each store keeps its OWN mismatch policy (lenient-if-missing,
   * must-exist, …); this object holds the one copy of the IO + parse so
-  * a fix to sidecar handling lands everywhere at once.
+  * a fix to sidecar handling lands everywhere at once. Every writer
+  * reports its file as a durable step to [[graft.sources.Failpoints]].
   */
 private[graft] object StoreSidecar {
 
-  private def path(root: String) =
-    new org.apache.hadoop.fs.Path(root, "_graft_geometry.json")
+  private def path(root: String) = new Path(root, "_graft_geometry.json")
 
-  def write(spark: SparkSession, root: String, fields: Seq[(String, Long)]): Unit = {
-    val p = path(root)
-    val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
-    val out = fs.create(p, true)
-    try out.write(
-      fields.map { case (k, v) => s""""$k":$v""" }
-        .mkString("{", ",", "}").getBytes("UTF-8"))
-    finally out.close()
+  private def marker(root: String, name: String) = new Path(root, s"_graft_$name")
+
+  private def fsOf(spark: SparkSession, p: Path) =
+    p.getFileSystem(spark.sessionState.newHadoopConf())
+
+  /** Overwrite one small file — a durable step. */
+  private def put(spark: SparkSession, p: Path, text: String): Unit = {
+    val out = fsOf(spark, p).create(p, true)
+    try out.write(text.getBytes("UTF-8")) finally out.close()
+    Failpoints.step(p.toString)
   }
+
+  def write(spark: SparkSession, root: String, fields: Seq[(String, Long)]): Unit =
+    put(spark, path(root), fields.map { case (k, v) => s""""$k":$v""" }.mkString("{", ",", "}"))
 
   /** All requested keys parsed from the sidecar, or None when the file
     * is absent OR any key is missing/unparsable (a partial sidecar is
@@ -32,7 +39,7 @@ private[graft] object StoreSidecar {
     */
   def read(spark: SparkSession, root: String, keys: Seq[String]): Option[Map[String, Long]] = {
     val p = path(root)
-    val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
+    val fs = fsOf(spark, p)
     if (!fs.exists(p)) return None
     val in = fs.open(p)
     val txt =
@@ -56,22 +63,16 @@ private[graft] object StoreSidecar {
     * folds corrections away may clear via [[clearMarker]] AFTER the
     * fold commits (slow-path-safe in the same way).
     */
-  def setMarker(spark: SparkSession, root: String, name: String): Unit = {
-    val p = new org.apache.hadoop.fs.Path(root, s"_graft_$name")
-    val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
-    val out = fs.create(p, true)
-    try out.write("1".getBytes("UTF-8")) finally out.close()
-  }
+  def setMarker(spark: SparkSession, root: String, name: String): Unit =
+    put(spark, marker(root, name), "1")
 
-  def hasMarker(spark: SparkSession, root: String, name: String): Boolean = {
-    val p = new org.apache.hadoop.fs.Path(root, s"_graft_$name")
-    p.getFileSystem(spark.sessionState.newHadoopConf()).exists(p)
-  }
+  def hasMarker(spark: SparkSession, root: String, name: String): Boolean =
+    fsOf(spark, marker(root, name)).exists(marker(root, name))
 
   def clearMarker(spark: SparkSession, root: String, name: String): Unit = {
-    val p = new org.apache.hadoop.fs.Path(root, s"_graft_$name")
-    val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
-    if (fs.exists(p)) { fs.delete(p, false); () }
+    val p = marker(root, name)
+    val fs = fsOf(spark, p)
+    if (fs.exists(p)) { fs.delete(p, false); Failpoints.step(p.toString) }
   }
 
   /** The require-or-init policy most stores share (IndexStore,

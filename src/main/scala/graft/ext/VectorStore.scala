@@ -226,29 +226,7 @@ object VectorStore {
       stride: Long,
       rebuildSeq: Long,
       trainIters: Int = 0,
-      attrCols: Seq[String] = Nil): Unit =
-    rebuildFp(spark, data, centroids, idCol, vecCol, root, dim, m, k,
-      stride, rebuildSeq, trainIters, attrCols, _ => ())
-
-  /** [[rebuild]] with the failpoint seam ("started", "model", "twin",
-    * "attrs") — the ClusterStore.rebuildFromIndexFp convention, so the
-    * spec can kill the job at every commit boundary and replay.
-    */
-  private[graft] def rebuildFp(
-      spark: SparkSession,
-      data: DataFrame,
-      centroids: DataFrame,
-      idCol: String,
-      vecCol: String,
-      root: String,
-      dim: Int,
-      m: Int,
-      k: Int,
-      stride: Long,
-      rebuildSeq: Long,
-      trainIters: Int,
-      attrCols: Seq[String],
-      failpoint: String => Unit): Unit = {
+      attrCols: Seq[String] = Nil): Unit = {
     // an attrs-bearing store must stay attrs-bearing (and vice versa):
     // a rebuild that silently dropped the attrs table would break every
     // filtered probe, and one that silently added it would orphan the
@@ -270,27 +248,21 @@ object VectorStore {
       else Pq.codebookKmeans(data, idCol, vecCol, dim, m, k, stride, trainIters)
     ManifestStore.write(spark, cb, codebookT(root), Seq("sub"),
       txnRecord = Map(TxnRebuild -> rebuildSeq))
-    failpoint("opened")
     writeGeometry(spark, root, Geometry(dim, m, k, stride, trainIters))
-    failpoint("started")
     ManifestStore.write(spark,
       centroids.select(col(idCol).as("centroid_id"),
         col(vecCol).cast("array<double>").as("cv"))
         .withColumn("__pt", lit(0L)),
       centroidsT(root), "__pt")
-    failpoint("model")
     val codes = Dedup.materialize(
       encodeRows(spark, data, root, idCol, vecCol, dim, m))
     ManifestStore.write(spark,
       codes.select(col("vec_id"), col("centroid_id")).distinct()
         .withColumn("ptid", idBucket(col("vec_id"))),
       assignT(root), "ptid")
-    failpoint("twin")
-    if (attrCols.nonEmpty) {
+    if (attrCols.nonEmpty)
       ManifestStore.write(spark, attrRows(data, codes, idCol, attrCols),
         attrsT(root), "centroid_id")
-      failpoint("attrs")
-    }
     // the final data commit closes the fence
     ManifestStore.write(spark, codes, codesT(root), Seq("centroid_id"),
       txnRecord = Map(TxnRebuild -> rebuildSeq))

@@ -321,26 +321,7 @@ object ViewStore {
       forgetSeq: Long,
       groupCols: Seq[String] = Nil,
       sumCols: Seq[String] = Nil,
-      partitions: Int = 8): Unit =
-    forgetAFp(spark, root, doomedA, jk, aKeys, forgetSeq, groupCols,
-      sumCols, partitions, _ => ())
-
-  /** [[forgetA]] with the failpoint seam ("corr", "view") — the
-    * appendPairsFp convention, so specs and composed gates can open the
-    * exact crash windows the fence guards (correction committed,
-    * deletes not) and prove refusal + replay convergence.
-    */
-  private[graft] def forgetAFp(
-      spark: SparkSession,
-      root: String,
-      doomedA: DataFrame,
-      jk: String,
-      aKeys: Seq[String],
-      forgetSeq: Long,
-      groupCols: Seq[String],
-      sumCols: Seq[String],
-      partitions: Int,
-      failpoint: String => Unit): Unit = {
+      partitions: Int = 8): Unit = {
     requireGeometry(spark, root, partitions)
     val doomed = Dedup.materialize(
       doomedA.select((aKeys :+ jk).distinct.map(col): _*).distinct()
@@ -365,10 +346,8 @@ object ViewStore {
         ManifestStore.merge(spark, aggT(root), corr, Seq("day"), Seq("day"),
           txnRecord = Map(ForgetTxn -> forgetSeq))
     }
-    failpoint("corr")
     if (hasView)
       ManifestStore.delete(spark, vT(root), doomed, aKeys, Seq("__jpt"))
-    failpoint("view")
     if (ManifestStore.exists(spark, aT(root)))
       ManifestStore.delete(spark, aT(root), doomed, aKeys, Seq("__jpt"),
         txnRecord = Map(ForgetTxn -> forgetSeq))

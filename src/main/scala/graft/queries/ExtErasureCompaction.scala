@@ -1441,7 +1441,7 @@ private[graft] trait ExtErasureCompaction extends ExtLmStores {
   // cannot fold, but days past the monitoring horizon DROP outright —
   // the bounds over the retained window are exactly "heavy hitters over
   // the last N days", and the store stays O(retained days × m). The
-  // gate simulates the torn prune window first (summaries deleted,
+  // gate crashes a prune in its torn window first (summaries deleted,
   // totals not — hhFromStore's fence REQUIREd to refuse), then replays
   // hhPruneDays to convergence (twice — idempotent) and reads the
   // retained window; oracle = the frequency threshold over the
@@ -1451,11 +1451,12 @@ private[graft] trait ExtErasureCompaction extends ExtLmStores {
     import graft.sources.ManifestStore
     val table = FreshTables.next(spark, dir, "hhretain")
     ProtoStores.cloneTo(spark, hh3Proto(spark, dir), table)
-    // simulated crash: the prune's FIRST delete landed (summaries),
-    // the totals delete didn't — the day sets diverge and the
-    // torn-window fence must refuse the read
-    ManifestStore.delete(spark, s"$table/hh",
-      Seq("d0").toDF("day"), Seq("day"), Seq("day"))
+    // crash after the prune's FIRST delete landed (summaries), before
+    // the totals delete — the day sets diverge and the torn-window
+    // fence must refuse the read
+    graft.sources.Failpoints.crashAfter(s"$table/hh") {
+      Sketches.hhPruneDays(spark, table, Seq("d0"))
+    }
     val refused =
       try { Sketches.hhFromStore(spark, table, 50L).head(1); false }
       catch { case e: IllegalArgumentException => e.getMessage.contains("diverge") }
@@ -1502,8 +1503,8 @@ private[graft] trait ExtErasureCompaction extends ExtLmStores {
   //                the four sketches (CM x114, histogram x123, HLL x143,
   //                KMV x148) on their own gate fixtures' day slices.
   // Post-drain, the CROSS-STORE FENCE INTERPLAY leg: an erasure request
-  // against the view family crashes after its correction commit (the
-  // forgetAFp seam), and a batch re-delivered INTO that window must see
+  // against the view family crashes after its correction commit (a
+  // Failpoints crash), and a batch re-delivered INTO that window must see
   // the view fold REFUSE (the forget fence) while the other ten stores'
   // folds land — then the erasure replays to completion (twice), the
   // doomed keys are REQUIREd gone, and the batch re-delivers in full
@@ -1721,17 +1722,15 @@ private[graft] trait ExtErasureCompaction extends ExtLmStores {
     // --- CROSS-STORE FENCE INTERPLAY: one store's crash window open
     // while the other ten proceed — the composition no pairwise gate
     // exercises. An erasure request against the view family crashes
-    // after its correction commit (the forgetAFp seam), leaving the
-    // view store's forget fence CLOSED to appends...
+    // after its correction commit (crashAfter fails loudly if that
+    // commit never lands), leaving the view store's forget fence
+    // CLOSED to appends...
     val doomedLi = li.filter(col("okey") % 13 === 5)
-    val boom = new RuntimeException("x242 fence fixture")
-    try {
-      ViewStore.forgetAFp(spark, vwT, doomedLi, "okey",
+    graft.sources.Failpoints.crashAfter(s"$vwT/aggview") {
+      ViewStore.forgetA(spark, vwT, doomedLi, "okey",
         Seq("okey", "l_linenumber"), forgetSeq = 9L,
-        groupCols = Seq("o_orderpriority"), sumCols = Seq("l_quantity"),
-        partitions = 8, p => if (p == "corr") throw boom)
-      throw new IllegalStateException("x242: fence fixture did not fire")
-    } catch { case e: RuntimeException if e eq boom => () }
+        groupCols = Seq("o_orderpriority"), sumCols = Seq("l_quantity"))
+    }
     // ...a batch re-delivered INTO the window: the view fold must
     // REFUSE loudly, and every other store's fold must land — ten
     // transactional commit streams progressing through a neighbor's
@@ -2216,8 +2215,8 @@ private[graft] trait ExtErasureCompaction extends ExtLmStores {
   // under a started/completed txn fence (the x215 pattern: codebook
   // overwrite records the ticket as started, the codes overwrite as
   // completed; probes/appends/forgets refuse mid-window, spec-pinned
-  // with failpoints in VectorForgetSpec). Run twice — the second is
-  // the crash-window replay, which must converge. The probe is then
+  // with Failpoints crashes in VectorForgetSpec). Run twice — the second
+  // is the crash-window replay, which must converge. The probe is then
   // x128's pipeline derived ENTIRELY from the survivors: corpus,
   // centroid sample, codebook seeds, and queries all exclude the
   // forgotten subject — the model influence is gone, not just the rows.

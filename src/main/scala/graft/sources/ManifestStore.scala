@@ -150,8 +150,12 @@ object ManifestStore {
     hinted.orElse(latestByListing(fs, path))
   }
 
+  private def newest(fs: FileSystem, path: String, advice: String = ""): Manifest =
+    latest(fs, path).getOrElse(
+      throw new java.io.FileNotFoundException(s"ManifestStore: no manifest under $path$advice"))
+
   private def readManifest(fs: FileSystem, path: String, version: Int): Manifest = {
-    val p = new Path(manifestDir(path), f"v$version%08d.json")
+    val p = versionFile(path, version)
     val in = fs.open(p)
     val text = try scala.io.Source.fromInputStream(in, "UTF-8").mkString finally in.close()
     val j = JsonMethods.parse(text)
@@ -215,9 +219,8 @@ object ManifestStore {
   }
 
   private def commitManifest(fs: FileSystem, path: String, m: Manifest): Unit = {
-    val dir = manifestDir(path)
-    fs.mkdirs(dir)
-    val dst = new Path(dir, f"v${m.version}%08d.json")
+    fs.mkdirs(manifestDir(path))
+    val dst = versionFile(path, m.version)
     val entries = m.partitions.toSeq.sortBy(_._1)
       .map { case (k, v) => s""""${k}":"${v}"""" }.mkString("{", ",", "}")
     val colsJson = m.partitionCols.map(c => s""""$c"""").mkString("[", ",", "]")
@@ -286,6 +289,57 @@ object ManifestStore {
     (uuid, leafPartitionDirs(fs, commitRoot, partitionCols).map(_._1))
   }
 
+  /** The snapshot a commit builds on: the newest readable manifest,
+    * checked against the caller's declared partition columns when it
+    * declares them (compaction keeps whatever the table has).
+    */
+  private def base(fs: FileSystem, path: String, partitionCols: Option[Seq[String]]): Manifest = {
+    val m = newest(fs, path, " — write() first")
+    for (pc <- partitionCols)
+      require(m.partitionCols == pc,
+        s"ManifestStore: table is partitioned by ${m.partitionCols.mkString(",")}, not ${pc.mkString(",")}")
+    m
+  }
+
+  /** Live leaf names of `m` that the partition-column `tuples` address.
+    * The tuples are staged hive-partitioned under `_tmp/<tag>_<uuid>`:
+    * Spark's own dynamic-partition write yields the leaf names with the
+    * table's exact escaping — never string-format partition values.
+    * `__probe` keeps the staged file non-degenerate when the frame holds
+    * only partition columns (partitionBy strips them from the data).
+    */
+  private def stagedLeafs(
+      fs: FileSystem, path: String, tag: String, tuples: DataFrame,
+      partitionCols: Seq[String], m: Manifest): Set[String] = {
+    val probeDir = new Path(path, s"_tmp/${tag}_${java.util.UUID.randomUUID().toString}")
+    try {
+      tuples.withColumn("__probe", org.apache.spark.sql.functions.lit(1))
+        .write.partitionBy(partitionCols: _*).parquet(probeDir.toString)
+      leafPartitionDirs(fs, probeDir, partitionCols).map(_._1)
+        .filter(m.partitions.contains).toSet
+    } finally { try fs.delete(probeDir, true) catch { case _: java.io.IOException => () } }
+  }
+
+  /** Delete a staged commit no manifest references. */
+  private def reclaim(fs: FileSystem, path: String, uuid: String): Unit =
+    try fs.delete(new Path(path, s"commits/$uuid"), true)
+    catch { case _: java.io.IOException => () }
+
+  /** The one commit step every publisher ends in: claim, read-back and
+    * hint ([[commitManifest]]), then the [[Failpoints]] durable-step
+    * hook. A claim that fails leaves no manifest referencing `m.commit`,
+    * so its staged directory is reclaimed now instead of waiting for
+    * [[vacuum]] — retry loops never accumulate orphan directories.
+    */
+  private def publish(fs: FileSystem, path: String, m: Manifest): Unit = {
+    try commitManifest(fs, path, m)
+    catch { case e: java.io.IOException =>
+      reclaim(fs, path, m.commit)
+      throw e
+    }
+    Failpoints.step(path)
+  }
+
   /** Initialize (or fully replace) the table: one data commit containing
     * every partition + a manifest mapping all of them to it.
     */
@@ -305,7 +359,7 @@ object ManifestStore {
     val fs = fsFor(spark, new Path(path))
     val (uuid, staged) = writeCommit(spark, path, df, partitionCols)
     val version = latest(fs, path).map(_.version + 1).getOrElse(1)
-    commitManifest(fs, path, Manifest(version, partitionCols,
+    publish(fs, path, Manifest(version, partitionCols,
       uuid, staged.map(_ -> s"commits/$uuid").toMap, txnRecord))
   }
 
@@ -338,11 +392,7 @@ object ManifestStore {
     */
   def read(spark: SparkSession, path: String, version: Option[Int] = None): DataFrame = {
     val fs = fsFor(spark, new Path(path))
-    val m = version match {
-      case Some(v) => readManifest(fs, path, v)
-      case None => latest(fs, path).getOrElse(
-        throw new java.io.FileNotFoundException(s"ManifestStore: no manifest under $path"))
-    }
+    val m = version.fold(newest(fs, path))(readManifest(fs, path, _))
     readLeafs(spark, path, m, m.partitions.keys.toSeq)
   }
 
@@ -355,22 +405,14 @@ object ManifestStore {
   /** The table's declared partition columns (from the newest manifest) —
     * what derived index maintainers ([[ZoneMaps]]) group stats by.
     */
-  def partitionColsOf(spark: SparkSession, path: String): Seq[String] = {
-    val fs = fsFor(spark, new Path(path))
-    latest(fs, path).getOrElse(
-      throw new java.io.FileNotFoundException(s"ManifestStore: no manifest under $path"))
-      .partitionCols
-  }
+  def partitionColsOf(spark: SparkSession, path: String): Seq[String] =
+    newest(fsFor(spark, new Path(path)), path).partitionCols
 
   /** The newest readable snapshot version — the freshness stamp derived
     * indexes pin themselves to.
     */
-  def currentVersion(spark: SparkSession, path: String): Int = {
-    val fs = fsFor(spark, new Path(path))
-    latest(fs, path).getOrElse(
-      throw new java.io.FileNotFoundException(s"ManifestStore: no manifest under $path"))
-      .version
-  }
+  def currentVersion(spark: SparkSession, path: String): Int =
+    newest(fsFor(spark, new Path(path)), path).version
 
   /** Whether the table exists AND its latest snapshot has at least one
     * live partition — distinguishes "never written" / "initialized from
@@ -407,9 +449,7 @@ object ManifestStore {
     * with zero rows.
     */
   def readPartitions(spark: SparkSession, path: String, leafs: Seq[String]): DataFrame = {
-    val fs = fsFor(spark, new Path(path))
-    val m = latest(fs, path).getOrElse(
-      throw new java.io.FileNotFoundException(s"ManifestStore: no manifest under $path"))
+    val m = newest(fsFor(spark, new Path(path)), path)
     // distinct: a duplicated leaf name must not scan (and return) that
     // partition's rows twice
     val live = leafs.distinct.filter(m.partitions.contains)
@@ -486,19 +526,16 @@ object ManifestStore {
     * per key, compaction is content-preserving). Torn-claim "retry later"
     * conflicts still propagate, see the merge scaladoc.
     */
-  private def withClaimRetry(maxRetries: Int)(attempt: () => Unit): Unit = {
-    var n = 0
-    while (true) {
-      try { attempt(); return }
-      catch {
-        case e: java.io.IOException
-            if e.getMessage != null &&
-              e.getMessage.contains("re-merge from the new snapshot") &&
-              n < maxRetries =>
-          n += 1
-      }
+  @annotation.tailrec
+  private def withClaimRetry[T](maxRetries: Int)(attempt: () => T): T =
+    scala.util.Try(attempt()) match {
+      case scala.util.Failure(e: java.io.IOException)
+          if e.getMessage != null &&
+            e.getMessage.contains("re-merge from the new snapshot") &&
+            maxRetries > 0 =>
+        withClaimRetry(maxRetries - 1)(attempt)
+      case r => r.get
     }
-  }
 
   /** Schema evolution (ADD columns only, the safe 95% of Delta/Iceberg
     * evolution): widen both sides to the union of their columns, missing
@@ -533,10 +570,7 @@ object ManifestStore {
       txnRecord: Map[String, Long] = Map.empty): Unit = {
     import org.apache.spark.sql.functions._
     val fs = fsFor(spark, new Path(path))
-    val m = latest(fs, path).getOrElse(
-      throw new java.io.FileNotFoundException(s"ManifestStore: no manifest under $path — write() first"))
-    require(m.partitionCols == partitionCols,
-      s"ManifestStore: table is partitioned by ${m.partitionCols.mkString(",")}, not ${partitionCols.mkString(",")}")
+    val m = base(fs, path, Some(partitionCols))
     // txn fence (the public Delta SetTransaction contract): if this
     // snapshot already contains a batch id >= ours from the same logical
     // writer, the merge was applied before a crash/replay — skip it
@@ -555,21 +589,6 @@ object ManifestStore {
     if (touched.isEmpty) return
     require(!touched.exists(_.contains(null)),
       s"merge: null ${partitionCols.mkString(",")} in batch")
-    // touched-partition predicate: single column pushes as an IN filter;
-    // tuples push as OR-of-AND, reduced PAIRWISE so the tree depth is
-    // log(tuples) — a linear reduce of thousands of touched tuples builds
-    // a right-skewed chain deep enough to overflow Catalyst's recursive
-    // transforms (both shapes prune directories at planning time)
-    def balanced(cs: Seq[org.apache.spark.sql.Column],
-        op: (org.apache.spark.sql.Column, org.apache.spark.sql.Column) => org.apache.spark.sql.Column): org.apache.spark.sql.Column = {
-      var cur = cs
-      while (cur.size > 1) cur = cur.grouped(2).map(_.reduce(op)).toSeq
-      cur.head
-    }
-    def touchedPred: org.apache.spark.sql.Column =
-      if (partitionCols.size == 1) col(partitionCols.head).isin(touched.map(_.head): _*)
-      else balanced(touched.map(tuple =>
-        partitionCols.zip(tuple).map { case (c, v) => col(c) === lit(v) }.reduce(_ && _)), _ || _)
     // current rows of the touched partitions, via the manifest — guarded
     // BEFORE read() runs: a manifest with zero live partitions (a table
     // initialized from an empty first batch) has nothing to scan, and
@@ -577,7 +596,12 @@ object ManifestStore {
     val out =
       if (m.partitions.isEmpty) batch
       else {
-        val current = read(spark, path).filter(touchedPred)
+        // touched-partition predicate: single column pushes as an IN
+        // filter; tuples as a balanced OR-of-AND (depth log(tuples), so
+        // thousands of touched tuples never overflow Catalyst's recursive
+        // transforms) — both shapes prune directories at planning time
+        val current = read(spark, path)
+          .filter(PartitionedStore.partitionValuesPred(partitionCols, touched))
         // upsertPlan selects the current columns out of the batch, which
         // would silently DROP a new batch column — surface that as an
         // explicit evolution decision instead
@@ -593,16 +617,8 @@ object ManifestStore {
     // consulted as a fence — progress markers whose consumers define
     // their own check (the ClusterStore replay fence), vs `txn` whose
     // >= skip is the streaming idempotence contract above
-    try commitManifest(fs, path, Manifest(m.version + 1, partitionCols, uuid,
+    publish(fs, path, Manifest(m.version + 1, partitionCols, uuid,
       m.partitions ++ staged.map(_ -> s"commits/$uuid"), m.txn ++ txnRecord ++ txn))
-    catch { case e: java.io.IOException =>
-      // our commit never became visible — no manifest references `uuid`,
-      // so reclaiming it immediately (instead of waiting for vacuum)
-      // keeps retry loops from accumulating orphan directories
-      try fs.delete(new Path(path, s"commits/$uuid"), true)
-      catch { case _: java.io.IOException => () }
-      throw e
-    }
   }
 
   /** Last streaming batch id the current snapshot records for the
@@ -652,10 +668,7 @@ object ManifestStore {
       txnRecord: Map[String, Long] = Map.empty): Unit = {
     import org.apache.spark.sql.functions._
     val fs = fsFor(spark, new Path(path))
-    val m = latest(fs, path).getOrElse(
-      throw new java.io.FileNotFoundException(s"ManifestStore: no manifest under $path — write() first"))
-    require(m.partitionCols == partitionCols,
-      s"ManifestStore: table is partitioned by ${m.partitionCols.mkString(",")}, not ${partitionCols.mkString(",")}")
+    val m = base(fs, path, Some(partitionCols))
     if (m.partitions.isEmpty) return
     val keyed =
       if (partitionCols.forall(keys.columns.contains))
@@ -667,45 +680,20 @@ object ManifestStore {
           .select((keyCols ++ partitionCols).distinct.map(col): _*)
           .join(keys.select(keyCols.map(col): _*).distinct(), keyCols, "left_semi")
           .distinct()
-    // stage the keys hive-partitioned: Spark's own dynamic-partition write
-    // yields the touched leaf names with the table's exact escaping
-    val probeDir = new Path(path, s"_tmp/delete_${java.util.UUID.randomUUID().toString}")
-    val touchedLeafs =
-      try {
-        // __probe keeps the staged file non-degenerate when the key IS the
-        // partition column (partitionBy strips partition cols from data)
-        keyed.withColumn("__probe", lit(1))
-          .write.partitionBy(partitionCols: _*).parquet(probeDir.toString)
-        leafPartitionDirs(fs, probeDir, partitionCols).map(_._1)
-          .filter(m.partitions.contains).toSet
-      } finally { try fs.delete(probeDir, true) catch { case _: java.io.IOException => () } }
+    val touchedLeafs = stagedLeafs(fs, path, "delete", keyed, partitionCols, m)
     if (touchedLeafs.isEmpty) return
     val touched = keyed.select(partitionCols.map(col): _*).distinct()
       .collect().map(r => partitionCols.indices.map(r.get)).toSeq
     require(!touched.exists(_.contains(null)),
       s"delete: null ${partitionCols.mkString(",")} in keys")
-    def balanced(cs: Seq[org.apache.spark.sql.Column]): org.apache.spark.sql.Column = {
-      var cur = cs
-      while (cur.size > 1) cur = cur.grouped(2).map(_.reduce(_ || _)).toSeq
-      cur.head
-    }
-    val touchedPred =
-      if (partitionCols.size == 1) col(partitionCols.head).isin(touched.map(_.head): _*)
-      else balanced(touched.map(tuple =>
-        partitionCols.zip(tuple).map { case (c, v) => col(c) === lit(v) }.reduce(_ && _)))
     val survivors = readLeafs(spark, path, m, touchedLeafs.toSeq)
-      .filter(touchedPred)
+      .filter(PartitionedStore.partitionValuesPred(partitionCols, touched))
       .join(keys.select(keyCols.map(col): _*).distinct(), keyCols, "left_anti")
     val (uuid, staged) = writeCommit(spark, path, survivors, partitionCols)
     // emptied partitions are exactly touched -- staged: their leaf entries
     // drop from the manifest instead of pointing at stale data
-    try commitManifest(fs, path, Manifest(m.version + 1, partitionCols, uuid,
+    publish(fs, path, Manifest(m.version + 1, partitionCols, uuid,
       (m.partitions -- touchedLeafs) ++ staged.map(_ -> s"commits/$uuid"), m.txn ++ txnRecord))
-    catch { case e: java.io.IOException =>
-      try fs.delete(new Path(path, s"commits/$uuid"), true)
-      catch { case _: java.io.IOException => () }
-      throw e
-    }
   }
 
   /** Atomic INSERT OVERWRITE of selected partitions (Delta's
@@ -751,50 +739,30 @@ object ManifestStore {
       txnRecord: Map[String, Long]): Unit = {
     import org.apache.spark.sql.functions._
     val fs = fsFor(spark, new Path(path))
-    val m = latest(fs, path).getOrElse(
-      throw new java.io.FileNotFoundException(s"ManifestStore: no manifest under $path — write() first"))
-    require(m.partitionCols == partitionCols,
-      s"ManifestStore: table is partitioned by ${m.partitionCols.mkString(",")}, not ${partitionCols.mkString(",")}")
+    val m = base(fs, path, Some(partitionCols))
     val doomedTuples = doomed.select(partitionCols.map(col): _*).distinct()
     require(doomedTuples.collect().forall(r => partitionCols.indices.forall(r.get(_) != null)),
       s"replaceWhere: null ${partitionCols.mkString(",")} in doomed")
-    // stage the doomed tuples hive-partitioned: Spark's own write yields
-    // the leaf names with the table's exact escaping (the delete()
-    // convention — never string-format partition values)
-    val probeDir = new Path(path, s"_tmp/replace_${java.util.UUID.randomUUID().toString}")
-    val doomedLeafs =
-      try {
-        doomedTuples.withColumn("__probe", lit(1))
-          .write.partitionBy(partitionCols: _*).parquet(probeDir.toString)
-        leafPartitionDirs(fs, probeDir, partitionCols).map(_._1)
-          .filter(m.partitions.contains).toSet
-      } finally { try fs.delete(probeDir, true) catch { case _: java.io.IOException => () } }
+    val doomedLeafs = stagedLeafs(fs, path, "replace", doomedTuples, partitionCols, m)
     // ONE batch execution: writeCommit stages the data and its staged
     // leaf names ARE the written-partition set (a pre-commit
     // `.select(partitionCols).collect()` would re-run the whole batch
     // plan — for compactDays that is the full epoch aggregation, twice)
     val (uuid, staged) = writeCommit(spark, path, batch, partitionCols)
-    def reclaim(): Unit =
-      try fs.delete(new Path(path, s"commits/$uuid"), true)
-      catch { case _: java.io.IOException => () }
     // a null partition value lands in Spark's default-partition leaf —
     // refused, with the staged commit reclaimed
     if (staged.exists(_.contains("__HIVE_DEFAULT_PARTITION__"))) {
-      reclaim()
+      reclaim(fs, path, uuid)
       throw new IllegalArgumentException(
         s"replaceWhere: null ${partitionCols.mkString(",")} in batch")
     }
     // nothing to drop, nothing written, nothing to record → no-op (no
     // manifest bump); with only a txnRecord to land, fall through — the
     // marker must still commit (the compaction completed fence)
-    if (doomedLeafs.isEmpty && staged.isEmpty && txnRecord.isEmpty) { reclaim(); return }
-    try commitManifest(fs, path, Manifest(m.version + 1, partitionCols, uuid,
+    if (doomedLeafs.isEmpty && staged.isEmpty && txnRecord.isEmpty) { reclaim(fs, path, uuid); return }
+    publish(fs, path, Manifest(m.version + 1, partitionCols, uuid,
       (m.partitions -- doomedLeafs) ++ staged.map(_ -> s"commits/$uuid"),
       m.txn ++ txnRecord))
-    catch { case e: java.io.IOException =>
-      reclaim()
-      throw e
-    }
   }
 
   /** EPOCH COMPACTION of a day-partitioned subtotal table — the generic
@@ -982,17 +950,13 @@ object ManifestStore {
     * `spark.sql.files.maxRecordsPerFile` — the write splits per task
     * without changing the plan shape.
     */
-  def compact(spark: SparkSession, path: String, maxRetries: Int = 3): Int = {
-    var collapsed = 0
-    withClaimRetry(maxRetries) { () => collapsed = compactAttempt(spark, path) }
-    collapsed
-  }
+  def compact(spark: SparkSession, path: String, maxRetries: Int = 3): Int =
+    withClaimRetry(maxRetries)(() => compactAttempt(spark, path))
 
   private def compactAttempt(spark: SparkSession, path: String): Int = {
     import org.apache.spark.sql.functions._
     val fs = fsFor(spark, new Path(path))
-    val m = latest(fs, path).getOrElse(
-      throw new java.io.FileNotFoundException(s"ManifestStore: no manifest under $path — write() first"))
+    val m = base(fs, path, None)
     val liveCommits = m.partitions.values.toSet
     if (liveCommits.size <= 1) return 0
     // readLeafs against THIS manifest, not a re-resolved latest: the
@@ -1003,13 +967,8 @@ object ManifestStore {
     val (uuid, staged) = writeCommit(spark, path, df, m.partitionCols)
     require(staged.toSet == m.partitions.keySet,
       s"compact: staged leafs ${staged.size} != live leafs ${m.partitions.size} — aborting before manifest flip")
-    try commitManifest(fs, path, Manifest(m.version + 1, m.partitionCols, uuid,
+    publish(fs, path, Manifest(m.version + 1, m.partitionCols, uuid,
       staged.map(_ -> s"commits/$uuid").toMap, m.txn))
-    catch { case e: java.io.IOException =>
-      try fs.delete(new Path(path, s"commits/$uuid"), true)
-      catch { case _: java.io.IOException => () }
-      throw e
-    }
     liveCommits.size
   }
 
@@ -1045,7 +1004,7 @@ object ManifestStore {
     // all of history). Age-gated like data, so an in-flight claim is
     // never stolen.
     for (v <- listVersions(fs, path) if v > m.version) {
-      val f = fs.getFileStatus(new Path(manifestDir(path), f"v$v%08d.json"))
+      val f = fs.getFileStatus(versionFile(path, v))
       if (f.getModificationTime <= cutoff &&
           scala.util.Try(readManifest(fs, path, v)).isFailure) {
         fs.delete(f.getPath, false); removed += 1
@@ -1057,7 +1016,7 @@ object ManifestStore {
     // reclaimed — time-travel depth IS the vacuum retention, by
     // construction rather than by documentation
     for (v <- listVersions(fs, path) if v < m.version) {
-      val p = new Path(manifestDir(path), f"v$v%08d.json")
+      val p = versionFile(path, v)
       if (fs.getFileStatus(p).getModificationTime <= cutoff) {
         fs.delete(p, false); removed += 1
       }

@@ -134,8 +134,8 @@ object PartitionedStore {
   }
 
   /** Balanced OR-of-AND membership predicate on partition values — the
-    * ManifestStore merge `touchedPred` convention shared by the derived
-    * skipping indexes ([[ZoneMaps]], [[BloomIndex]]): `tuples` are the
+    * touched-partition filter of ManifestStore's merge and delete, shared
+    * by the derived skipping indexes ([[ZoneMaps]], [[BloomIndex]]): `tuples` are the
     * qualifying partitions' values in `pcols` order; the OR tree is
     * balanced (depth log n) so thousands of qualifying partitions never
     * build a right-deep Catalyst expression.

@@ -1,7 +1,7 @@
 package graft
 
 import org.apache.spark.sql.functions._
-import graft.sources.{BloomIndex, ManifestStore, PartitionedStore}
+import graft.sources.{BloomIndex, Failpoints, ManifestStore, PartitionedStore}
 
 /** Per-partition Bloom equality skipping (x164): point lookups prune on
   * layouts zone maps can't help, no false negatives ever, staleness and
@@ -126,22 +126,21 @@ class BloomIndexSpec extends SparkSpec {
   }
 
   test("mergeAppend: replay after a crash before the stamp converges (bit_or is idempotent)") {
-    val root = fresh()
-    ManifestStore.write(spark,
-      rows.filter(_._3 < 3).toDF("id", "name", "pt"), root, "pt")
-    BloomIndex.refresh(spark, root, "name")
     val day3 = rows.filter(_._3 == 3).toDF("id", "name", "pt")
-    ManifestStore.merge(spark, root, day3, Seq("id"), "pt")
-    BloomIndex.mergeAppend(spark, root, "name", day3)
-    val once = wordsOf(root, "name")
-    // crash window: words committed, sidecar not — roll the stamp back
-    // and replay the same batch
-    val bt = new org.apache.hadoop.fs.Path(root, "_bloom/name").toString
-    val stamped = graft.ext.StoreSidecar.read(spark, bt,
-      Seq("version", "bits", "hashes")).get
-    graft.ext.StoreSidecar.write(spark, bt, Seq(
-      "version" -> (stamped("version") - 1),
-      "bits" -> stamped("bits"), "hashes" -> stamped("hashes")))
+    def merged(): String = {
+      val root = fresh()
+      ManifestStore.write(spark,
+        rows.filter(_._3 < 3).toDF("id", "name", "pt"), root, "pt")
+      BloomIndex.refresh(spark, root, "name")
+      ManifestStore.merge(spark, root, day3, Seq("id"), "pt")
+      root
+    }
+    val ref = merged()
+    BloomIndex.mergeAppend(spark, ref, "name", day3)
+    val once = wordsOf(ref, "name")
+    // crash window: words committed, sidecar not — replay the same batch
+    val root = merged()
+    Failpoints.crashAfter(s"$root/_bloom/name")(BloomIndex.mergeAppend(spark, root, "name", day3))
     BloomIndex.mergeAppend(spark, root, "name", day3)
     assert(wordsOf(root, "name") == once)
   }

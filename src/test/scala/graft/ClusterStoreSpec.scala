@@ -2,6 +2,7 @@ package graft
 
 import org.apache.spark.sql.functions._
 import graft.ext.ClusterStore
+import graft.sources.Failpoints
 
 /** Maintained cluster-label store (x147): incremental merge semantics
   * on hand-built graphs.
@@ -52,21 +53,41 @@ class ClusterStoreSpec extends SparkSpec {
   }
 
   test("appendPairs: replay converges from the crash window (merge committed, delete not)") {
-    import graft.sources.ManifestStore
-    val root = fresh()
-    ClusterStore.build(spark, Seq((2L, 3L)).toDF("id_a", "id_b"), root, 4)
-    // replicate an append that died between its two commits: the
-    // relabeled rows are merged into their NEW partitions but the stale
-    // copies were never deleted — ids may be visible under both labels
-    val relabeled = Seq((1L, 1L), (2L, 1L), (3L, 1L)).toDF("id", "label")
-      .withColumn("pt", pmod(xxhash64(col("label").cast("string")), lit(4L)))
-    ManifestStore.merge(spark, root, relabeled, Seq("id"), "pt")
-    // replaying the SAME day through the public API must clear the
-    // duplicates and land on exactly the final labels
-    ClusterStore.appendPairs(spark, Seq((1L, 2L)).toDF("id_a", "id_b"), root, 4)
-    val got = ClusterStore.readLabels(spark, root)
+    // the append crashes after each of its commits in turn; (root, 1)
+    // is the window where the relabeled rows are merged into their NEW
+    // partitions but the stale copies were never deleted — ids visible
+    // under both labels. While a window is open a DIFFERENT day's append
+    // must fail loudly (the replay fence); replaying the SAME day through
+    // the public API must clear the duplicates and land on exactly the
+    // final labels, and then the next day proceeds.
+    val day1 = Seq((1L, 2L)).toDF("id_a", "id_b")
+    val day2 = Seq((5L, 6L)).toDF("id_a", "id_b")
+    def labels(root: String) = ClusterStore.readLabels(spark, root)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSeq.sorted
-    assert(got == Seq((1L, 1L), (2L, 1L), (3L, 1L)))
+    val (steps, (replayed, next)) = crashEveryStep(
+      fixture = () => {
+        val root = fresh()
+        ClusterStore.build(spark, Seq((2L, 3L)).toDF("id_a", "id_b"), root, 4)
+        root
+      },
+      op = root => ClusterStore.appendPairs(spark, day1, root, 4),
+      result = root => {
+        val replayed = labels(root)
+        ClusterStore.appendPairs(spark, day2, root, 4)
+        (replayed, labels(root))
+      }) { (root, st, last) =>
+      if (st == Failpoints.Step("", 1))
+        assert(labels(root).size > 3, "the merge-committed window should expose ids under two labels")
+      if (!last) {
+        val e = intercept[IllegalStateException](ClusterStore.appendPairs(spark, day2, root, 4))
+        assert(e.getMessage.contains("unreplayed crashed append"), s"$st: ${e.getMessage}")
+      }
+    }
+    // commit order: twin, main merge, stale delete
+    assert(steps == Seq(Failpoints.Step("/_idindex", 1), Failpoints.Step("", 1),
+      Failpoints.Step("", 2)))
+    assert(replayed == Seq((1L, 1L), (2L, 1L), (3L, 1L)))
+    assert(next == Seq((1L, 1L), (2L, 1L), (3L, 1L), (5L, 5L), (6L, 5L)))
   }
 
   test("twin lookup is partition-pruned: inputFiles ⊆ the touched ids' buckets") {
@@ -117,25 +138,6 @@ class ClusterStoreSpec extends SparkSpec {
       s"p1=$p1 q1=$q1 newMinP=$newMinP newMinQ=$newMinQ got=$got")
   }
 
-  test("replay converges from the crash window (twin committed, main not)") {
-    import graft.sources.ManifestStore
-    val root = fresh()
-    ClusterStore.build(spark, Seq((2L, 3L)).toDF("id_a", "id_b"), root, 4)
-    // replicate an append that died right after its FIRST commit: the
-    // twin carries the post-append labels (with prev_label = the
-    // pre-append ones) but the main table was never merged
-    val twinRows = Seq((1L, 1L, 1L), (2L, 1L, 2L), (3L, 1L, 2L))
-      .toDF("id", "label", "prev_label")
-      .withColumn("ptid", pmod(xxhash64(col("id").cast("string")), lit(4L)))
-    ManifestStore.merge(spark, s"$root/_idindex", twinRows, Seq("id"), "ptid")
-    // replaying the SAME day must locate the members via prev_label
-    // and land on exactly the final labels
-    ClusterStore.appendPairs(spark, Seq((1L, 2L)).toDF("id_a", "id_b"), root, 4)
-    val got = ClusterStore.readLabels(spark, root)
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toSeq.sorted
-    assert(got == Seq((1L, 1L), (2L, 1L), (3L, 1L)))
-  }
-
   test("double crash: after main merge, replay, after twin merge, replay — no duplicates") {
     // the sequence that would orphan stale rows if prev_label were
     // min(member labels): append crashes between main merge and stale
@@ -147,23 +149,14 @@ class ClusterStoreSpec extends SparkSpec {
     val root = fresh()
     ClusterStore.build(spark, Seq((2L, 3L)).toDF("id_a", "id_b"), root, 4)
     val day = Seq((1L, 2L)).toDF("id_a", "id_b")
-    case class Crash(at: String) extends RuntimeException(at)
-    def crashAfter(stage: String): String => Unit =
-      s => if (s == stage) throw Crash(stage)
     // crash 1: twin + main committed, stale delete not
-    intercept[Crash] {
-      ClusterStore.appendPairsFp(spark, day, root, 4, "id_a", "id_b",
-        crashAfter("main"))
-    }
+    Failpoints.crashAfter(root)(ClusterStore.appendPairs(spark, day, root, 4))
     // fixture guard: the crash window really exposes live duplicates
     assert(ClusterStore.readLabels(spark, root).count() > 3,
       "crash 1 should leave ids visible under two labels")
     // crash 2: the replay dies right after its FIRST commit — the twin
     // merge must not have destroyed the pre-append breadcrumb
-    intercept[Crash] {
-      ClusterStore.appendPairsFp(spark, day, root, 4, "id_a", "id_b",
-        crashAfter("twin"))
-    }
+    Failpoints.crashAfter(s"$root/_idindex")(ClusterStore.appendPairs(spark, day, root, 4))
     // final replay through the public API: exactly the final labels,
     // no duplicate ids, no orphaned stale rows
     ClusterStore.appendPairs(spark, day, root, 4)
@@ -191,30 +184,6 @@ class ClusterStoreSpec extends SparkSpec {
       (19L, 19L), (20L, 19L), (21L, 19L)))
   }
 
-  test("replay fence: a crashed day refuses a different day's append until replayed") {
-    val root = fresh()
-    ClusterStore.build(spark, Seq((2L, 3L)).toDF("id_a", "id_b"), root, 4)
-    val day1 = Seq((1L, 2L)).toDF("id_a", "id_b")
-    val day2 = Seq((5L, 6L)).toDF("id_a", "id_b")
-    // day 1 dies right after its first commit (the twin merge): the
-    // started fingerprint is recorded, the completed one is not
-    intercept[RuntimeException] {
-      ClusterStore.appendPairsFp(spark, day1, root, 4, "id_a", "id_b",
-        s => if (s == "twin") sys.error("boom"))
-    }
-    // a DIFFERENT day must fail loudly while the window is open
-    val e = intercept[IllegalStateException] {
-      ClusterStore.appendPairs(spark, day2, root, 4)
-    }
-    assert(e.getMessage.contains("unreplayed crashed append"))
-    // the crashed day's own replay is let through; then day 2 proceeds
-    ClusterStore.appendPairs(spark, day1, root, 4)
-    ClusterStore.appendPairs(spark, day2, root, 4)
-    val got = ClusterStore.readLabels(spark, root)
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    assert(got == Set((1L, 1L), (2L, 1L), (3L, 1L), (5L, 5L), (6L, 5L)))
-  }
-
   test("replay fence: covers the delete leg; a completed append opens the gate") {
     // a day whose relabel leaves stale copies OUTSIDE the merged
     // buckets (willDelete): the completion record rides the DELETE
@@ -229,10 +198,7 @@ class ClusterStoreSpec extends SparkSpec {
     // crash AFTER the main merge, BEFORE the stale delete
     val root = fresh()
     ClusterStore.build(spark, Seq((v2, v2 + 300)).toDF("id_a", "id_b"), root, 4)
-    intercept[RuntimeException] {
-      ClusterStore.appendPairsFp(spark, day1, root, 4, "id_a", "id_b",
-        s => if (s == "main") sys.error("boom"))
-    }
+    Failpoints.crashAfter(root)(ClusterStore.appendPairs(spark, day1, root, 4))
     intercept[IllegalStateException] {
       ClusterStore.appendPairs(spark, day2, root, 4)
     }
@@ -246,10 +212,7 @@ class ClusterStoreSpec extends SparkSpec {
     // the append is complete and the next day needs no replay
     val root2 = fresh()
     ClusterStore.build(spark, Seq((v2, v2 + 300)).toDF("id_a", "id_b"), root2, 4)
-    intercept[RuntimeException] {
-      ClusterStore.appendPairsFp(spark, day1, root2, 4, "id_a", "id_b",
-        s => if (s == "delete") sys.error("boom"))
-    }
+    Failpoints.crashAfter(root2, nth = 2)(ClusterStore.appendPairs(spark, day1, root2, 4))
     ClusterStore.appendPairs(spark, day2, root2, 4) // no fence trip
     val got2 = ClusterStore.readLabels(spark, root2)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
@@ -258,16 +221,15 @@ class ClusterStoreSpec extends SparkSpec {
   }
 
   test("pinned readers are snapshot-isolated across the crash window") {
-    import graft.sources.ManifestStore
     val root = fresh()
     ClusterStore.build(spark, Seq((2L, 3L)).toDF("id_a", "id_b"), root, 4)
     // a safe reader pins the newest version BEFORE the append starts
     val pinned = ClusterStore.versions(spark, root).head
-    // simulate an append crashed between its main merge and its stale
-    // delete: the live view shows ids under BOTH labels
-    val relabeled = Seq((1L, 1L), (2L, 1L), (3L, 1L)).toDF("id", "label")
-      .withColumn("pt", pmod(xxhash64(col("label").cast("string")), lit(4L)))
-    ManifestStore.merge(spark, root, relabeled, Seq("id"), "pt")
+    // an append crashed between its main merge and its stale delete:
+    // the live view shows ids under BOTH labels
+    Failpoints.crashAfter(root) {
+      ClusterStore.appendPairs(spark, Seq((1L, 2L)).toDF("id_a", "id_b"), root, 4)
+    }
     val live = ClusterStore.readLabels(spark, root).collect()
     assert(live.length > 3, "the crash window should expose duplicates live")
     // the pinned reader sees the consistent PRE-append snapshot: one
@@ -350,24 +312,30 @@ class ClusterStoreSpec extends SparkSpec {
   }
 
   test("rebuild fence: a crash between the overwrites blocks appends/forgets; replay cures") {
-    val (root, idx, _) = rebuildFixture()
-    intercept[RuntimeException] {
-      ClusterStore.rebuildFromIndexFp(spark, idx, root, 0.7, 4,
-        s => if (s == "twin") sys.error("boom"))
+    val (steps, got) = crashEveryStep(
+      fixture = () => rebuildFixture()._1,
+      op = root => ClusterStore.rebuildFromIndex(spark, s"$root/idx", root,
+        threshold = 0.7, partitions = 4),
+      // the replay closes the window: the store equals the index
+      // components, and appends flow again
+      result = root => {
+        ClusterStore.appendPairs(spark, Seq((5L, 6L)).toDF("id_a", "id_b"), root, 4)
+        ClusterStore.readLabels(spark, root)
+          .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+      }) { (root, _, last) =>
+      if (!last) {
+        val e = intercept[IllegalStateException] {
+          ClusterStore.appendPairs(spark, Seq((5L, 6L)).toDF("id_a", "id_b"), root, 4)
+        }
+        assert(e.getMessage.contains("crashed rebuild"))
+        val f = intercept[IllegalStateException] {
+          ClusterStore.forget(spark, Seq(1L).toDF("id"), "id", root, 4)
+        }
+        assert(f.getMessage.contains("crashed rebuild"))
+      }
     }
-    val e = intercept[IllegalStateException] {
-      ClusterStore.appendPairs(spark, Seq((5L, 6L)).toDF("id_a", "id_b"), root, 4)
-    }
-    assert(e.getMessage.contains("crashed rebuild"))
-    val f = intercept[IllegalStateException] {
-      ClusterStore.forget(spark, Seq(1L).toDF("id"), "id", root, 4)
-    }
-    assert(f.getMessage.contains("crashed rebuild"))
-    // the replay closes the window; the store equals the index components
-    ClusterStore.rebuildFromIndex(spark, idx, root, threshold = 0.7, partitions = 4)
-    ClusterStore.appendPairs(spark, Seq((5L, 6L)).toDF("id_a", "id_b"), root, 4)
-    val got = ClusterStore.readLabels(spark, root)
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+    // twin overwrite (started), main overwrite (completed)
+    assert(steps == Seq(Failpoints.Step("/_idindex", 1), Failpoints.Step("", 1)))
     assert(got.contains((5L, 5L)) && got.contains((6L, 5L)) &&
       got.contains((1L, 1L)) && got.contains((2L, 1L)) && got.contains((3L, 1L)),
       s"got $got")
@@ -376,9 +344,8 @@ class ClusterStoreSpec extends SparkSpec {
   test("rebuild is the universal repair: it closes a crashed APPEND window") {
     val (root, idx, _) = rebuildFixture()
     // an append dies after its first commit — the append fence trips
-    intercept[RuntimeException] {
-      ClusterStore.appendPairsFp(spark, Seq((40L, 41L)).toDF("id_a", "id_b"),
-        root, 4, "id_a", "id_b", s => if (s == "twin") sys.error("boom"))
+    Failpoints.crashAfter(s"$root/_idindex") {
+      ClusterStore.appendPairs(spark, Seq((40L, 41L)).toDF("id_a", "id_b"), root, 4)
     }
     intercept[IllegalStateException] {
       ClusterStore.appendPairs(spark, Seq((50L, 51L)).toDF("id_a", "id_b"), root, 4)

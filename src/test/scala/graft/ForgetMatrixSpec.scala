@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.functions._
 import graft.ext.{Dedup, DedupStores, IndexStore}
-import graft.sources.ManifestStore
+import graft.sources.{Failpoints, ManifestStore}
 
 /** Right-to-be-forgotten over the text-side maintained stores (x171
   * dedup stores, x172 BM25 index) — the cases the sf-gate fixture can't
@@ -236,32 +236,31 @@ class ForgetMatrixSpec extends SparkSpec {
   }
 
   test("x173: a replayed forget converges from every crash window") {
-    for (crashAt <- Seq("twin", "main", "mainDelete")) {
-      val root = fresh(s"cl_$crashAt")
-      ClusterStore.build(spark, pairGraph, root)
-      val doomed = Seq(1L, 10L).toDF("id")
-      intercept[RuntimeException] {
-        ClusterStore.forgetFp(spark, doomed, "id", root, 8,
-          fp => if (fp == crashAt) throw new RuntimeException(s"crash at $fp"))
-      }
-      // recovery: the SAME forget re-run to completion
-      ClusterStore.forget(spark, doomed, "id", root)
-      assert(labelMap(root) == Map(2L -> 2L, 3L -> 2L, 11L -> 11L),
-        s"crash window $crashAt did not converge")
-      val twinIds = ManifestStore.read(spark, s"$root/_idindex")
-        .select("id").collect().map(_.getLong(0)).toSet
-      assert(twinIds == Set(2L, 3L, 11L), s"twin after $crashAt: $twinIds")
-    }
+    val doomed = Seq(1L, 10L).toDF("id")
+    // recovery from every window: the SAME forget re-run to completion
+    val (steps, (labels, twinIds)) = crashEveryStep(
+      fixture = () => {
+        val root = fresh("cl")
+        ClusterStore.build(spark, pairGraph, root)
+        root
+      },
+      op = root => ClusterStore.forget(spark, doomed, "id", root),
+      result = root => (labelMap(root), ManifestStore.read(spark, s"$root/_idindex")
+        .select("id").collect().map(_.getLong(0)).toSet))((_, _, _) => ())
+    // members stay locatable at every crash point, so lookups die last:
+    // twin merge, main merge, main delete, twin delete
+    assert(steps == Seq(Failpoints.Step("/_idindex", 1), Failpoints.Step("", 1),
+      Failpoints.Step("", 2), Failpoints.Step("/_idindex", 2)))
+    assert(labels == Map(2L -> 2L, 3L -> 2L, 11L -> 11L))
+    assert(twinIds == Set(2L, 3L, 11L))
   }
 
   test("x173: forget refuses to run inside an open append crash window") {
     val root = fresh("cl")
     ClusterStore.build(spark, pairGraph, root)
     // crash an append between its twin merge and its main-table commit
-    intercept[RuntimeException] {
-      ClusterStore.appendPairsFp(spark, Seq((3L, 4L)).toDF("id_a", "id_b"),
-        root, 8, "id_a", "id_b",
-        fp => if (fp == "twin") throw new RuntimeException("crash"))
+    Failpoints.crashAfter(s"$root/_idindex") {
+      ClusterStore.appendPairs(spark, Seq((3L, 4L)).toDF("id_a", "id_b"), root)
     }
     val e = intercept[IllegalStateException] {
       ClusterStore.forget(spark, Seq(10L).toDF("id"), "id", root)

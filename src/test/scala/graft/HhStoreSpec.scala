@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.functions._
 import graft.ext.Sketches
-import graft.sources.ManifestStore
+import graft.sources.{Failpoints, ManifestStore}
 
 /** Maintained heavy-hitter store (x176/x177): deterministic per-day
   * exact top-m summaries + TPUT-style merged bounds — the cases the
@@ -101,9 +101,10 @@ class HhStoreSpec extends SparkSpec {
   test("torn append window (totals committed, summary not) is refused; replay converges") {
     val t = fresh()
     Sketches.hhAppendDay(spark, day("a" -> 10, "b" -> 5), "v", "d0", t, m = 2)
-    // simulate the crash window: d1's totals commit lands, its summary doesn't
-    val stats = Seq(("d1", 16L, 6L)).toDF("day", "n", "kth")
-    ManifestStore.merge(spark, s"$t/totals", stats, Seq("day"), "day")
+    // the crash window: d1's totals commit lands, its summary doesn't
+    Failpoints.crashAfter(s"$t/totals") {
+      Sketches.hhAppendDay(spark, day("a" -> 8, "c" -> 6, "d" -> 2), "v", "d1", t, m = 2)
+    }
     val e = intercept[IllegalArgumentException] {
       Sketches.hhFromStore(spark, t, minFractionDen = 2L)
     }
@@ -119,8 +120,8 @@ class HhStoreSpec extends SparkSpec {
     Sketches.hhAppendDay(spark, day("a" -> 10, "b" -> 5, "c" -> 3), "v", "d0", t, m = 2)
     Sketches.hhAppendDay(spark, day("a" -> 8, "c" -> 6, "d" -> 2), "v", "d1", t, m = 2)
     Sketches.hhAppendDay(spark, day("a" -> 4, "d" -> 7), "v", "d2", t, m = 2)
-    // simulated crash: the prune's summaries delete landed, totals not
-    ManifestStore.delete(spark, s"$t/hh", Seq("d0").toDF("day"), Seq("day"), Seq("day"))
+    // a crash after the prune's summaries delete landed, totals not
+    Failpoints.crashAfter(s"$t/hh")(Sketches.hhPruneDays(spark, t, Seq("d0")))
     val e = intercept[IllegalArgumentException] {
       Sketches.hhFromStore(spark, t, minFractionDen = 2L).head(1)
     }

@@ -482,6 +482,28 @@ class ScaleSpec extends SparkSpec {
     assert(ManifestStore.read(spark, path).count() == 3)
   }
 
+  test("manifest store: a write whose claim fails reclaims its staged commit") {
+    import graft.sources.ManifestStore
+    val path = java.nio.file.Files.createTempDirectory(java.nio.file.Paths.get(graft.Scratch.root), "graft_mstore_wclaim").toString + "/t"
+    val v1 = Seq((1L, "a", 10), (2L, "b", 20)).toDF("k", "v", "p")
+    ManifestStore.write(spark, v1, path, "p")
+    // a live committer's young torn claim on v2
+    val fs = org.apache.hadoop.fs.FileSystem.get(spark.sparkContext.hadoopConfiguration)
+    val out = fs.create(new org.apache.hadoop.fs.Path(path, "_manifests/v00000002.json"), false)
+    out.write("{torn".getBytes("UTF-8")); out.close()
+    def commitDirs(): Set[String] =
+      fs.listStatus(new org.apache.hadoop.fs.Path(path, "commits")).map(_.getPath.getName).toSet
+    val before = commitDirs()
+    val e = intercept[java.io.IOException] {
+      ManifestStore.write(spark, Seq((3L, "c", 10)).toDF("k", "v", "p"), path, "p")
+    }
+    assert(e.getMessage.contains("in-flight committer"), e.getMessage)
+    // no manifest references the staged commit, so it must not linger
+    // until vacuum
+    assert(commitDirs() == before)
+    assert(ManifestStore.read(spark, path).count() == 2)
+  }
+
   test("manifest store: snapshot resolution cost is flat in commit count (hint compaction)") {
     import graft.sources.ManifestStore
     val path = java.nio.file.Files.createTempDirectory(java.nio.file.Paths.get(graft.Scratch.root), "graft_mstore_hint").toString + "/t"

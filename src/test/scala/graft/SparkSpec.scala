@@ -2,6 +2,7 @@ package graft
 
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.scalatest.funsuite.AnyFunSuite
+import graft.sources.Failpoints
 
 /** Shared local session for all suites (one JVM, one session). */
 object SparkSpec {
@@ -19,4 +20,30 @@ abstract class SparkSpec extends AnyFunSuite {
 
   def sortedRows(df: DataFrame): Seq[Seq[Any]] =
     rowsOf(df).sortBy(_.mkString("|"))
+
+  /** Crash `op` right after each durable step a crash-free run of it
+    * takes, every time on a fresh `fixture()` root. `inWindow(root,
+    * step, last)` inspects the open window (`last`: the crash hit the
+    * final step, so the op had already completed); then `op` is
+    * replayed and must converge on the crash-free run's `result`.
+    * Returns the crash-free steps (paths relative to the fixture root,
+    * "" for the root itself) and result.
+    */
+  def crashEveryStep[T](fixture: () => String, op: String => Unit, result: String => T)(
+      inWindow: (String, Failpoints.Step, Boolean) => Unit): (Seq[Failpoints.Step], T) = {
+    val ref = fixture()
+    val steps = Failpoints.steps(op(ref)).map { st =>
+      assert(st.path.startsWith(ref), s"$st lies outside the fixture root $ref")
+      st.copy(path = st.path.stripPrefix(ref))
+    }
+    val want = result(ref)
+    for ((st, i) <- steps.zipWithIndex) {
+      val root = fixture()
+      Failpoints.crashAfter(root + st.path, st.nth)(op(root))
+      inWindow(root, st, i == steps.size - 1)
+      op(root)
+      assert(result(root) == want, s"replay after a crash at $st diverged")
+    }
+    (steps, want)
+  }
 }

@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.functions._
 import graft.ext.{IndexStore, Retrieval}
-import graft.sources.ManifestStore
+import graft.sources.{Failpoints, ManifestStore}
 
 /** ManifestStore.replaceWhere (atomic INSERT OVERWRITE of selected
   * partitions) + IndexStore.compactStats (x224): overwrite semantics,
@@ -91,12 +91,11 @@ class StatsCompactionSpec extends SparkSpec {
   test("crash window: forget and a NEW compaction refuse; same-seq replay cures") {
     val root = fresh("fence")
     threeDay(root)
-    // simulate a crash between compactStats' two commits: rebadge the
-    // lens days (started marker) without the stats replacement
-    val rebadged = ManifestStore.read(spark, s"$root/lens")
-      .filter(col("day").isin("d0", "d1")).withColumn("day", lit("epoch:a"))
-    ManifestStore.merge(spark, s"$root/lens", rebadged, Seq("id"), Seq("dpt"),
-      txnRecord = Map("compactStarted" -> 3L))
+    // a crash between compactStats' two commits: the lens days are
+    // rebadged (started marker) without the stats replacement
+    Failpoints.crashAfter(s"$root/lens") {
+      IndexStore.compactStats(spark, root, Seq("d0", "d1"), "epoch:a", 3L, partitions = 4)
+    }
     intercept[IllegalArgumentException] {
       IndexStore.forget(spark, docs.filter(col("doc_id") === 1),
         "doc_id", "text", root, forgetSeq = 1L, partitions = 4)

@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.functions._
 import graft.ext.VectorStore
-import graft.sources.ManifestStore
+import graft.sources.{Failpoints, ManifestStore}
 
 /** Right-to-be-forgotten over the maintained ANN index (x157):
   * pruned twin lookup, crash-path convergence, legacy backfill.
@@ -52,13 +52,11 @@ class VectorForgetSpec extends SparkSpec {
     val root = fresh()
     buildStore(root)
     val doomed = Seq(5L, 27L).toDF("vec_id")
-    // simulate the half-committed state: codes deleted, twin NOT —
-    // exactly what a crash after forget's first commit leaves behind
-    val asg = ManifestStore.read(spark, s"$root/assign")
-      .join(doomed, Seq("vec_id"), "left_semi")
-      .select(col("vec_id"), col("centroid_id"))
-    ManifestStore.delete(spark, s"$root/codes", asg,
-      Seq("vec_id"), Seq("centroid_id"))
+    // the half-committed state: codes deleted, twin NOT — a crash after
+    // forget's first commit
+    Failpoints.crashAfter(s"$root/codes")(VectorStore.forget(spark, doomed, "vec_id", root))
+    assert(ManifestStore.read(spark, s"$root/codes")
+      .join(doomed, Seq("vec_id"), "left_semi").count() == 0L)
     assert(ManifestStore.read(spark, s"$root/assign")
       .join(doomed, Seq("vec_id"), "left_semi").count() == 2L)
     // the recovery path: the SAME forget, re-run, must converge
@@ -113,43 +111,49 @@ class VectorForgetSpec extends SparkSpec {
   }
 
   test("rebuild replay converges from every crash position; the fence holds mid-window") {
+    // an attrs-bearing store, so the attrs overwrite is a crash position too
+    val attrs = Seq("label")
     val surv = emb.filter(col("vec_id") % 11 =!= 3)
     val cents = surv.filter(col("vec_id") % 50 === 0)
     val want = fresh()
     VectorStore.build(spark, surv, cents, "vec_id", "embedding", want,
-      64, 4, 16, 3)
+      64, 4, 16, 3, attrCols = attrs)
     val qs = surv.filter(col("vec_id") < 12)
-    val wantProbe = probeSet(want, qs)
-    // "opened" is the window the r14 advice flagged: the codebook commit
-    // has opened the fence but the geometry sidecar has NOT yet flipped —
-    // every surface must already refuse (pre-fix, the sidecar flipped
-    // first and a crash there left new-geometry probes passing both checks)
-    for (fp <- Seq("opened", "started", "model", "twin")) {
-      val root = fresh()
-      buildStore(root)
-      val boom = new RuntimeException(s"boom@$fp")
-      assert(intercept[RuntimeException] {
-        VectorStore.rebuildFp(spark, surv, cents, "vec_id", "embedding", root,
-          64, 4, 16, 3, rebuildSeq = 7L, trainIters = 0, attrCols = Nil,
-          p => if (p == fp) throw boom)
-      } eq boom)
+    def tableRows(r: String, sub: String) =
+      ManifestStore.read(spark, s"$r/$sub").collect().map(_.toSeq).toSet
+    val (steps, got) = crashEveryStep(
+      fixture = () => {
+        val root = fresh()
+        VectorStore.build(spark, emb, emb.filter(col("vec_id") % 50 === 0),
+          "vec_id", "embedding", root, 64, 4, 16, 3, attrCols = attrs)
+        root
+      },
+      // the replay (same ticket, same inputs) closes the window
+      op = root => VectorStore.rebuild(spark, surv, cents, "vec_id", "embedding", root,
+        64, 4, 16, 3, rebuildSeq = 7L, attrCols = attrs),
+      result = root => (probeSet(root, qs), tableRows(root, "attrs"))) { (root, st, last) =>
       // mid-window every read/write surface refuses loudly: the model
-      // tables and codes disagree about which model encoded what
-      for (op <- Seq[() => Any](
+      // tables and codes disagree about which model encoded what. The
+      // window right after the codebook commit is the one the r14
+      // advice flagged: the fence is open but the geometry sidecar has
+      // NOT yet flipped (pre-fix, the sidecar flipped first and a crash
+      // there left new-geometry probes passing both checks)
+      if (!last) for (op <- Seq[() => Any](
         () => VectorStore.probe(spark, qs, "vec_id", "embedding", root,
           64, 4, 16, 3, nprobe = 3, topK = 10),
         () => VectorStore.appendDay(spark, surv.limit(5), "vec_id", "embedding",
-          root, 64, 4, 16, 3),
+          root, 64, 4, 16, 3, attrCols = attrs),
         () => VectorStore.forget(spark, Seq(3L).toDF("vec_id"), "vec_id", root))) {
         val e = intercept[IllegalStateException](op())
-        assert(e.getMessage.contains("crashed rebuild"), s"$fp: ${e.getMessage}")
+        assert(e.getMessage.contains("crashed rebuild"), s"$st: ${e.getMessage}")
       }
-      // the replay (same ticket, same inputs) closes the window and
-      // converges to the survivors-only build
-      VectorStore.rebuild(spark, surv, cents, "vec_id", "embedding", root,
-        64, 4, 16, 3, rebuildSeq = 7L)
-      assert(probeSet(root, qs) == wantProbe, s"replay from $fp diverged")
     }
+    // codebook (fence opened), geometry sidecar, centroids, assign twin,
+    // attrs, codes (fence closed)
+    assert(steps.map(_.path) == Seq("/codebook", "/_graft_geometry.json", "/centroids",
+      "/assign", "/attrs", "/codes"))
+    // every replay converged to the survivors-only build
+    assert(got == ((probeSet(want, qs), tableRows(want, "attrs"))))
   }
 
   test("forgetting ids the store never held is a no-op") {

@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.functions._
 import graft.ext.ViewStore
-import graft.sources.ManifestStore
+import graft.sources.{Failpoints, ManifestStore}
 
 /** Incrementally maintained join view (x178): delta-rule correctness on
   * hand-built days — cross-day pairing, N:M fan-out, one-sided days,
@@ -141,14 +141,10 @@ class ViewStoreSpec extends SparkSpec {
     val root = fresh()
     appendAgg(root, Seq((1L, 10L, "x")).toDF("jk", "a_id", "a_val"),
       Seq((1L, 20L, "p")).toDF("jk", "b_id", "b_val"), "d0")
-    // simulate the crash window for d1: bases + agg committed, view NOT —
-    // replicate appendDayAgg's first two commits by hand
+    // the crash window for d1: bases + agg committed, view NOT
     val d1a = Seq((1L, 11L, "y")).toDF("jk", "a_id", "a_val")
-    ManifestStore.merge(spark, s"$root/a",
-      d1a.withColumn("__jpt", pmod(xxhash64(col("jk").cast("string")), lit(8L))),
-      Seq("a_id"), "__jpt")
-    val sub = Seq(("p", 1L, 11L, "d1")).toDF("b_val", "cnt", "sum_a_id", "day")
-    ManifestStore.merge(spark, s"$root/aggview", sub, Seq("day"), "day")
+    Failpoints.crashAfter(s"$root/aggview")(appendAgg(root, d1a, emptyB, "d1"))
+    assert(view(root) == Set((1L, 10L, 20L)))
     // the recovery replay: trueNew is still the same pair (view lacks
     // it), the day subtotal replaces identically, the view completes
     appendAgg(root, d1a, emptyB, "d1")
@@ -187,33 +183,42 @@ class ViewStoreSpec extends SparkSpec {
   }
 
   test("x181: crash after the correction commit — appends refused, the replay converges") {
-    val root = fresh()
-    appendAgg(root, Seq((1L, 10L, "x"), (2L, 11L, "y")).toDF("jk", "a_id", "a_val"),
-      Seq((1L, 20L, "p"), (2L, 21L, "q")).toDF("jk", "b_id", "b_val"), "d0")
-    // simulate: correction committed (with the started txn), view +
-    // base deletes lost
-    val corr = Seq(("p", -1L, -10L, "__forget_5")).toDF("b_val", "cnt", "sum_a_id", "day")
-    ManifestStore.merge(spark, s"$root/aggview", corr, Seq("day"), Seq("day"),
-      txnRecord = Map("graft.view.forget" -> 5L))
-    val e = intercept[IllegalStateException] {
-      appendAgg(root, Seq((3L, 12L, "z")).toDF("jk", "a_id", "a_val"), emptyB, "d1")
+    // the forget crashes after each of its commits in turn; while the
+    // fence is open (correction committed, base-A delete not) appends
+    // are refused. The replay: an identical correction replaces (or,
+    // after the view delete, the committed one stays put), the deletes
+    // complete, the fence closes — appends flow again
+    val (steps, got) = crashEveryStep(
+      fixture = () => {
+        val root = fresh()
+        appendAgg(root, Seq((1L, 10L, "x"), (2L, 11L, "y")).toDF("jk", "a_id", "a_val"),
+          Seq((1L, 20L, "p"), (2L, 21L, "q")).toDF("jk", "b_id", "b_val"), "d0")
+        root
+      },
+      op = root => forget(root, Seq((1L, 10L)).toDF("jk", "a_id"), 5L),
+      result = root => {
+        val forgotten = (agg(root), view(root))
+        appendAgg(root, Seq((2L, 12L, "z")).toDF("jk", "a_id", "a_val"), emptyB, "d1")
+        (forgotten, agg(root))
+      }) { (root, _, last) =>
+      if (!last) {
+        val e = intercept[IllegalStateException] {
+          appendAgg(root, Seq((3L, 12L, "z")).toDF("jk", "a_id", "a_val"), emptyB, "d1")
+        }
+        assert(e.getMessage.contains("unreplayed crashed forget"))
+      }
     }
-    assert(e.getMessage.contains("unreplayed crashed forget"))
-    // the replay: doomed view rows still present → identical correction
-    // replaces, deletes complete, the fence closes — appends flow again
-    forget(root, Seq((1L, 10L)).toDF("jk", "a_id"), 5L)
-    assert(agg(root) == Map("q" -> ((1L, 11L))))
-    appendAgg(root, Seq((2L, 12L, "z")).toDF("jk", "a_id", "a_val"), emptyB, "d1")
-    assert(agg(root) == Map("q" -> ((2L, 23L))))
+    // correction, view delete, base-A delete (closes the fence)
+    assert(steps.map(_.path) == Seq("/aggview", "/view", "/a"))
+    assert(got == (((Map("q" -> ((1L, 11L))), Set((2L, 11L, 21L))), Map("q" -> ((2L, 23L))))))
   }
 
   test("x237: compactAgg refuses inside an open forget window") {
     val root = fresh()
     appendAgg(root, Seq((1L, 10L, "x"), (2L, 11L, "y")).toDF("jk", "a_id", "a_val"),
       Seq((1L, 20L, "p"), (2L, 21L, "q")).toDF("jk", "b_id", "b_val"), "d0")
-    val corr = Seq(("p", -1L, -10L, "__forget_5")).toDF("b_val", "cnt", "sum_a_id", "day")
-    ManifestStore.merge(spark, s"$root/aggview", corr, Seq("day"), Seq("day"),
-      txnRecord = Map("graft.view.forget" -> 5L))
+    // a forget crashed after its correction commit
+    Failpoints.crashAfter(s"$root/aggview")(forget(root, Seq((1L, 10L)).toDF("jk", "a_id"), 5L))
     // folding the open window's correction day would be re-merged by
     // the replay's recomputed correction — refused like an append
     val e = intercept[IllegalStateException] {

@@ -1,7 +1,7 @@
 package graft
 
 import org.apache.spark.sql.functions._
-import graft.sources.{ManifestStore, PartitionedStore, ZoneMaps}
+import graft.sources.{Failpoints, ManifestStore, PartitionedStore, ZoneMaps}
 
 /** Zone-map data skipping (x163): pruning on clustered layouts,
   * conservative behavior everywhere else, staleness semantics.
@@ -88,18 +88,21 @@ class ZoneMapsSpec extends SparkSpec {
   }
 
   test("mergeAppend: refuses a version gap; replay after a crash before the stamp converges") {
-    val root = fresh()
-    ManifestStore.write(spark,
-      rows.toDF("id", "v").withColumn("pt", expr("v div 300L")), root, "pt")
-    ZoneMaps.refresh(spark, root, "v")
     val b1 = Seq((1001L, 40L)).toDF("id", "v").withColumn("pt", expr("v div 300L"))
-    ManifestStore.merge(spark, root, b1, Seq("id"), "pt")
-    ZoneMaps.mergeAppend(spark, root, "v", b1)
-    val once = rangesOf(root)
-    // crash window: maps committed, stamp not — roll back and replay
-    val zt = new org.apache.hadoop.fs.Path(root, "_zones/v").toString
-    val v = graft.ext.StoreSidecar.read(spark, zt, Seq("version")).get("version")
-    graft.ext.StoreSidecar.write(spark, zt, Seq("version" -> (v - 1)))
+    def merged(): String = {
+      val root = fresh()
+      ManifestStore.write(spark,
+        rows.toDF("id", "v").withColumn("pt", expr("v div 300L")), root, "pt")
+      ZoneMaps.refresh(spark, root, "v")
+      ManifestStore.merge(spark, root, b1, Seq("id"), "pt")
+      root
+    }
+    val ref = merged()
+    ZoneMaps.mergeAppend(spark, ref, "v", b1)
+    val once = rangesOf(ref)
+    // crash window: maps committed, stamp not — the replay converges
+    val root = merged()
+    Failpoints.crashAfter(s"$root/_zones/v")(ZoneMaps.mergeAppend(spark, root, "v", b1))
     ZoneMaps.mergeAppend(spark, root, "v", b1)
     assert(rangesOf(root) == once) // min/max re-merge is idempotent
     // two commits past the stamp: loud refusal, never false negatives

@@ -93,19 +93,24 @@ object Bpe {
       day: String,
       table: String,
       byCols: Seq[String] = Nil): Unit = {
-    import graft.sources.ManifestStore
-    // the epoch namespace is reserved for [[vocabCompact]]
-    require(!day.startsWith("epoch:"),
-      s"vocabAppendDay: day '$day' uses the reserved 'epoch:' prefix")
+    // refused before the emptiness probe, so an epoch-tagged empty day
+    // still fails
+    graft.sources.ManifestStore.requireDayTag("vocabAppendDay", day)
     // an empty day contributes nothing — don't poison the table with a
     // no-partition commit (a stream's empty micro-batch)
     if (docs.isEmpty) return
-    val v = LangModel.tokenRowsBy(docs, idCol, textCol, byCols)
-      .groupBy((byCols :+ "w").map(col): _*).agg(sum(lit(1L)).as("cnt"))
-      .withColumn("day", lit(day))
-    ManifestStore.mergeOrCreate(spark, table, v,
-      byCols ++ Seq("w", "day"), "day")
+    DayCells.append(spark, table, day, vocabCells(docs, idCol, textCol, byCols))
   }
+
+  private def vocabCells(
+      docs: DataFrame,
+      idCol: String,
+      textCol: String,
+      byCols: Seq[String]): (DayCells.Table, DataFrame) =
+    vocabTable(byCols) -> LangModel.tokenRowsBy(docs, idCol, textCol, byCols)
+      .groupBy((byCols :+ "w").map(col): _*).agg(sum(lit(1L)).as("cnt"))
+
+  private def vocabTable(byCols: Seq[String]) = DayCells.Table("", byCols :+ "w", Seq("cnt"))
 
   /** EPOCH COMPACTION of a [[vocabAppendDay]] store — the metadata diet
     * for a years-of-ingest vocabulary: word counts are plain exact
@@ -124,13 +129,8 @@ object Bpe {
       table: String,
       days: Seq[String],
       epochDay: String,
-      byCols: Seq[String] = Nil): Unit = {
-    require(epochDay.startsWith("epoch:"),
-      s"vocabCompact: epoch tag must carry the reserved 'epoch:' prefix, got '$epochDay'")
-    graft.sources.ManifestStore.compactDays(spark, table, "day",
-      groupCols = byCols :+ "w", sumCols = Seq("cnt"),
-      foldDays = days, epochDay = epochDay)
-  }
+      byCols: Seq[String] = Nil): Unit =
+    DayCells.compact(spark, table, days, epochDay, vocabTable(byCols))
 
   /** Right-to-be-forgotten over the vocab store (the x205/x181
     * negative-correction pattern reaching the tokenizer family): word
@@ -158,19 +158,8 @@ object Bpe {
       textCol: String,
       tag: String,
       table: String,
-      byCols: Seq[String] = Nil): Unit = {
-    import graft.sources.ManifestStore
-    require(!tag.startsWith("epoch:"),
-      s"vocabForget: tag '$tag' uses the reserved 'epoch:' prefix")
-    if (doomed.isEmpty) return
-    // marker FIRST (StoreSidecar.setMarker contract) — see lmForget
-    StoreSidecar.setMarker(spark, table, "has_corrections")
-    val neg = LangModel.tokenRowsBy(doomed, idCol, textCol, byCols)
-      .groupBy((byCols :+ "w").map(col): _*).agg((-sum(lit(1L))).as("cnt"))
-      .withColumn("day", lit(tag))
-    ManifestStore.mergeOrCreate(spark, table, neg,
-      byCols ++ Seq("w", "day"), "day")
-  }
+      byCols: Seq[String] = Nil): Unit =
+    DayCells.forget(spark, table, tag, doomed, vocabCells(doomed, idCol, textCol, byCols))
 
   /** The merged weighted vocabulary of a [[vocabAppendDay]] store —
     * counts SUM across days (losslessly: a word count is insensitive

@@ -103,42 +103,36 @@ object DataCard {
       sourceCol: String = "source",
       textCol: String = "text",
       langCol: String = "lang",
-      charsCol: String = "n_chars"): Unit = {
-    // the epoch namespace is reserved for [[compactDays]]
-    require(!day.startsWith("epoch:"),
-      s"DataCard.appendDay: day '$day' uses the reserved 'epoch:' prefix")
-    val d = docs.withColumn("day", lit(day))
-    def upsert(path: String, batch: DataFrame, keys: Seq[String]): Unit =
-      try ManifestStore.merge(spark, path, batch, keys, "day")
-      catch {
-        case _: java.io.FileNotFoundException =>
-          ManifestStore.write(spark, batch, path, "day")
-      }
+      charsCol: String = "n_chars"): Unit =
     // four DISJOINT subtotal tables with no commit-order contract (a
     // day replayed after any partial crash upserts identical rows into
-    // each) — commit them concurrently instead of paying 4 sequential
-    // job floors
-    Par.all(
-      () => upsert(s"$root/base",
-        d.groupBy(col(sourceCol).as("source"), col("day"))
-          .agg(count(lit(1)).as("n_docs"),
-            sum(TextAnalysis.wordCount(col(textCol))).as("tok_sum")),
-        Seq("source", "day")),
-      () => upsert(s"$root/lang",
-        d.groupBy(col(sourceCol).as("source"), col(langCol).as("lang"), col("day"))
-          .agg(count(lit(1)).as("cnt")),
-        Seq("source", "lang", "day")),
-      () => upsert(s"$root/len",
-        d.filter(col(charsCol).isNotNull)
-          .groupBy(col(sourceCol).as("source"), col(charsCol).as("n_chars"), col("day"))
-          .agg(count(lit(1)).as("cnt")),
-        Seq("source", "n_chars", "day")),
-      () => upsert(s"$root/fp",
-        d.groupBy(col(sourceCol).as("source"),
-            TextAnalysis.fingerprint(col(textCol)).as("fp"), col("day"))
-          .agg(count(lit(1)).as("cnt")),
-        Seq("source", "fp", "day")))
-  }
+    // each) — DayCells commits them concurrently instead of paying 4
+    // sequential job floors
+    DayCells.append(spark, root, day, cells(docs, sourceCol, textCol, langCol, charsCol): _*)
+
+  private val Base = DayCells.Table("base", Seq("source"), Seq("n_docs", "tok_sum"))
+  private val Lang = DayCells.Table("lang", Seq("source", "lang"), Seq("cnt"))
+  private val Len = DayCells.Table("len", Seq("source", "n_chars"), Seq("cnt"))
+  private val Fp = DayCells.Table("fp", Seq("source", "fp"), Seq("cnt"))
+
+  /** The four tables' subtotal cells over `docs` (see [[appendDay]]). */
+  private def cells(
+      docs: DataFrame,
+      sourceCol: String,
+      textCol: String,
+      langCol: String,
+      charsCol: String): Seq[(DayCells.Table, DataFrame)] = Seq(
+    Base -> docs.groupBy(col(sourceCol).as("source"))
+      .agg(count(lit(1)).as("n_docs"),
+        sum(TextAnalysis.wordCount(col(textCol))).as("tok_sum")),
+    Lang -> docs.groupBy(col(sourceCol).as("source"), col(langCol).as("lang"))
+      .agg(count(lit(1)).as("cnt")),
+    Len -> docs.filter(col(charsCol).isNotNull)
+      .groupBy(col(sourceCol).as("source"), col(charsCol).as("n_chars"))
+      .agg(count(lit(1)).as("cnt")),
+    Fp -> docs.groupBy(col(sourceCol).as("source"),
+        TextAnalysis.fingerprint(col(textCol)).as("fp"))
+      .agg(count(lit(1)).as("cnt")))
 
   /** Right-to-be-forgotten over the maintained datasheet — the x205/x243
     * negative-correction pattern on the four card subtotal tables, all
@@ -167,46 +161,13 @@ object DataCard {
       sourceCol: String = "source",
       textCol: String = "text",
       langCol: String = "lang",
-      charsCol: String = "n_chars"): Unit = {
-    require(!tag.startsWith("epoch:"),
-      s"DataCard.forget: tag '$tag' uses the reserved 'epoch:' prefix")
-    if (doomed.isEmpty) return
-    // marker FIRST (StoreSidecar.setMarker contract) — audit trail that
-    // this card has absorbed corrections; the reads' zero-net filters
-    // are always-on (the card tables are O(sources × attrs) rows, so
-    // there is no forget-free fast path worth branching for)
-    StoreSidecar.setMarker(spark, root, "has_corrections")
-    val d = doomed.withColumn("day", lit(tag))
-    def upsert(path: String, batch: DataFrame, keys: Seq[String]): Unit =
-      try ManifestStore.merge(spark, path, batch, keys, "day")
-      catch {
-        case _: java.io.FileNotFoundException =>
-          ManifestStore.write(spark, batch, path, "day")
-      }
-    // marker is already committed above; the four correction days land
-    // on DISJOINT tables with tag-keyed replaces — concurrent like
-    // appendDay's (a partial crash replays to convergence either way)
-    Par.all(
-      () => upsert(s"$root/base",
-        d.groupBy(col(sourceCol).as("source"), col("day"))
-          .agg((-count(lit(1))).as("n_docs"),
-            (-sum(TextAnalysis.wordCount(col(textCol)))).as("tok_sum")),
-        Seq("source", "day")),
-      () => upsert(s"$root/lang",
-        d.groupBy(col(sourceCol).as("source"), col(langCol).as("lang"), col("day"))
-          .agg((-count(lit(1))).as("cnt")),
-        Seq("source", "lang", "day")),
-      () => upsert(s"$root/len",
-        d.filter(col(charsCol).isNotNull)
-          .groupBy(col(sourceCol).as("source"), col(charsCol).as("n_chars"), col("day"))
-          .agg((-count(lit(1))).as("cnt")),
-        Seq("source", "n_chars", "day")),
-      () => upsert(s"$root/fp",
-        d.groupBy(col(sourceCol).as("source"),
-            TextAnalysis.fingerprint(col(textCol)).as("fp"), col("day"))
-          .agg((-count(lit(1))).as("cnt")),
-        Seq("source", "fp", "day")))
-  }
+      charsCol: String = "n_chars"): Unit =
+    // the marker is an audit trail that this card has absorbed
+    // corrections; the reads' zero-net filters are always-on (the card
+    // tables are O(sources × attrs) rows, so there is no forget-free
+    // fast path worth branching for)
+    DayCells.forget(spark, root, tag, doomed,
+      cells(doomed, sourceCol, textCol, langCol, charsCol): _*)
 
   /** EPOCH COMPACTION of all four day-keyed card stores — the metadata
     * diet for a datasheet maintained over years of daily ingest: every
@@ -226,22 +187,8 @@ object DataCard {
       spark: SparkSession,
       root: String,
       days: Seq[String],
-      epochDay: String): Unit = {
-    require(epochDay.startsWith("epoch:"),
-      s"DataCard.compactDays: epoch tag must carry the reserved 'epoch:' prefix, got '$epochDay'")
-    def fold(path: String, groupCols: Seq[String], sumCols: Seq[String]): Unit =
-      ManifestStore.compactDays(spark, path, "day",
-        groupCols = groupCols, sumCols = sumCols,
-        foldDays = days, epochDay = epochDay)
-    // "four INDEPENDENT atomic partition replacements" (scaladoc above)
-    // — fold them concurrently; a crash between any subset still leaves
-    // every table individually exact and a replay converges
-    Par.all(
-      () => fold(s"$root/base", Seq("source"), Seq("n_docs", "tok_sum")),
-      () => fold(s"$root/lang", Seq("source", "lang"), Seq("cnt")),
-      () => fold(s"$root/len", Seq("source", "n_chars"), Seq("cnt")),
-      () => fold(s"$root/fp", Seq("source", "fp"), Seq("cnt")))
-  }
+      epochDay: String): Unit =
+    DayCells.compact(spark, root, days, epochDay, Base, Lang, Len, Fp)
 
   /** Derive the card from the maintained stores — same schema and exact
     * same values as [[sourceCard]] over the union of all appended days.

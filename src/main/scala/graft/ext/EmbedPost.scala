@@ -162,32 +162,20 @@ object EmbedPost {
       dim: Int,
       day: String,
       table: String): Unit = {
-    import graft.sources.ManifestStore
-    // the epoch namespace is reserved for [[momentsCompact]]: a day
-    // replay under an epoch tag would REPLACE the folded subtotals
-    require(!day.startsWith("epoch:"),
-      s"momentsAppendDay: day '$day' uses the reserved 'epoch:' prefix")
+    // refused before the emptiness probe, so an epoch-tagged empty day
+    // still fails: a day replay under an epoch tag would REPLACE the
+    // folded subtotals
+    graft.sources.ManifestStore.requireDayTag("momentsAppendDay", day)
     // an empty day contributes zero to every moment — appending it
     // would only initialize/extend the store with no-partition commits
     // (a stream's empty micro-batch must not poison the table)
     if (df.isEmpty) return
-    val q = df.select(
-      expr(s"transform(CAST($vecCol AS ARRAY<DOUBLE>), " +
-        s"v -> CAST(round(v * ${Quant}L) AS BIGINT) + ${Shift}L)").as("vq"))
-    val m1 = q.select(posexplode(col("vq")).as(Seq("pos", "v")))
-      .groupBy(col("pos"))
-      .agg(sum(col("v")).as("sv"), count(lit(1)).as("n"))
-      .withColumn("day", lit(day))
-    val m2 = q
-      .select(posexplode(col("vq")).as(Seq("i", "vi")), col("vq"))
-      .select(col("i"), col("vi"),
-        posexplode(expr(s"slice(vq, i + 1, $dim - i)")).as(Seq("dj", "vj")))
-      .groupBy(col("i"), (col("i") + col("dj")).as("j"))
-      .agg(sum(col("vi") * col("vj")).as("svv"))
-      .withColumn("day", lit(day))
-    ManifestStore.mergeOrCreate(spark, s"$table/m1", m1, Seq("pos", "day"), "day")
-    ManifestStore.mergeOrCreate(spark, s"$table/m2", m2, Seq("i", "j", "day"), "day")
+    val (m1, m2) = batchMoments(df, vecCol, dim)
+    DayCells.append(spark, table, day, M1 -> m1, M2 -> m2)
   }
+
+  private val M1 = DayCells.Table("m1", Seq("pos"), Seq("sv", "n"))
+  private val M2 = DayCells.Table("m2", Seq("i", "j"), Seq("svv"))
 
   /** Right-to-be-forgotten over the moment store (the x171 forget
     * matrix reaches the spectral family): moments are EXACT sums, so
@@ -198,7 +186,9 @@ object EmbedPost {
     * same tag REPLACES its rows (day-keyed merge), so at-least-once
     * delivery of an erasure feed converges; distinct requests need
     * distinct tags. Cost: one pass over the DOOMED rows only +
-    * O(dim²) commit I/O — never touches history.
+    * O(dim²) commit I/O — never touches history. The store is marked
+    * `has_corrections` like every day store; the moment read sums
+    * everything and never consults the marker.
     */
   def momentsForget(
       spark: SparkSession,
@@ -207,17 +197,8 @@ object EmbedPost {
       dim: Int,
       tag: String,
       table: String): Unit = {
-    import graft.sources.ManifestStore
-    require(!tag.startsWith("epoch:"),
-      s"momentsForget: tag '$tag' uses the reserved 'epoch:' prefix")
-    if (doomed.isEmpty) return
     val (m1, m2) = batchMoments(doomed, vecCol, dim)
-    val neg1 = m1.select(col("pos"), (-col("sv")).as("sv"), (-col("n")).as("n"))
-      .withColumn("day", lit(tag))
-    val neg2 = m2.select(col("i"), col("j"), (-col("svv")).as("svv"))
-      .withColumn("day", lit(tag))
-    ManifestStore.mergeOrCreate(spark, s"$table/m1", neg1, Seq("pos", "day"), "day")
-    ManifestStore.mergeOrCreate(spark, s"$table/m2", neg2, Seq("i", "j", "day"), "day")
+    DayCells.forget(spark, table, tag, doomed, M1 -> m1, M2 -> m2)
   }
 
   /** EPOCH COMPACTION of the moment store — [[ManifestStore.compactDays]]
@@ -241,24 +222,21 @@ object EmbedPost {
       spark: SparkSession,
       table: String,
       daysAndTags: Seq[String],
-      epochDay: String): Unit = {
-    import graft.sources.ManifestStore
-    require(epochDay.startsWith("epoch:"),
-      s"momentsCompact: epoch tag must carry the reserved 'epoch:' prefix, got '$epochDay'")
-    ManifestStore.compactDays(spark, s"$table/m1", "day",
-      groupCols = Seq("pos"), sumCols = Seq("sv", "n"),
-      foldDays = daysAndTags, epochDay = epochDay)
-    ManifestStore.compactDays(spark, s"$table/m2", "day",
-      groupCols = Seq("i", "j"), sumCols = Seq("svv"),
-      foldDays = daysAndTags, epochDay = epochDay)
-  }
+      epochDay: String): Unit =
+    DayCells.compact(spark, table, daysAndTags, epochDay, M1, M2)
 
   /** Batch moments over a frame — the law [[momentsAppendDay]] stores
     * must merge to, bit-for-bit (specced): ((pos, sv, n), (i, j, svv)).
     */
   private[graft] def batchMoments(
       df: DataFrame, vecCol: String, dim: Int): (DataFrame, DataFrame) = {
-    val q = df.select(
+    // one quantizing projection PER table, not a shared one: the store
+    // commits m1 and m2 concurrently, and a transform's lambda variable
+    // holds its current element in the expression instance itself. Over
+    // a local input the optimizer evaluates that projection on the
+    // driver, once per plan, so two plans sharing one instance race on
+    // it and corrupt each other's sums.
+    def q = df.select(
       expr(s"transform(CAST($vecCol AS ARRAY<DOUBLE>), " +
         s"v -> CAST(round(v * ${Quant}L) AS BIGINT) + ${Shift}L)").as("vq"))
     val m1 = q.select(posexplode(col("vq")).as(Seq("pos", "v")))

@@ -69,8 +69,7 @@ object IndexStore {
     // the epoch namespace is reserved for [[compactStats]]: a day replay
     // under an epoch tag would REPLACE the epoch subtotal (day merges are
     // keyed) and silently drop every compacted day's counts
-    require(!day.startsWith("epoch:"),
-      s"IndexStore.appendDay: day '$day' uses the reserved 'epoch:' prefix (compactStats output)")
+    ManifestStore.requireDayTag("IndexStore.appendDay", day, " (compactStats output)")
     val tf = Dedup.materialize(
       LangModel.tokenRows(docs, idCol, textCol)
         .groupBy(col("id"), col("w")).agg(count(lit(1)).as("tf")))
@@ -320,9 +319,7 @@ object IndexStore {
       compactSeq: Long,
       partitions: Int = 8): Unit = {
     requireGeometry(spark, root, partitions)
-    require(epochDay.startsWith("epoch:"),
-      s"IndexStore.compactStats: epoch tag must carry the reserved 'epoch:' " +
-        s"prefix, got '$epochDay'")
+    ManifestStore.requireEpochTag("IndexStore.compactStats", epochDay)
     require(days.nonEmpty && !days.contains(epochDay),
       s"IndexStore.compactStats: days must be non-empty and not contain the epoch tag")
     // a NEW compaction over an older open window would close the forget

@@ -144,21 +144,23 @@ object LangModel {
       textCol: String,
       day: String,
       table: String): Unit = {
-    import graft.sources.ManifestStore
-    // the epoch namespace is reserved for [[lmCompact]]
-    require(!day.startsWith("epoch:"),
-      s"lmAppendDay: day '$day' uses the reserved 'epoch:' prefix")
+    // refused before the emptiness probe, so an epoch-tagged empty day
+    // still fails
+    graft.sources.ManifestStore.requireDayTag("lmAppendDay", day)
     // an empty day contributes nothing (see the moment store's note)
     if (ref.isEmpty) return
-    val bg = bigramRows(ref, idCol, textCol)
-      .groupBy(col("w1"), col("w2")).agg(count(lit(1)).as("cnt"))
-      .withColumn("day", lit(day))
-    val uni = tokenRows(ref, idCol, textCol)
-      .groupBy(col("w")).agg(count(lit(1)).as("cnt"))
-      .withColumn("day", lit(day))
-    ManifestStore.mergeOrCreate(spark, s"$table/bg", bg, Seq("w1", "w2", "day"), "day")
-    ManifestStore.mergeOrCreate(spark, s"$table/uni", uni, Seq("w", "day"), "day")
+    DayCells.append(spark, table, day, lmCells(ref, idCol, textCol): _*)
   }
+
+  private val Bg = DayCells.Table("bg", Seq("w1", "w2"), Seq("cnt"))
+  private val Uni = DayCells.Table("uni", Seq("w"), Seq("cnt"))
+
+  private def lmCells(docs: DataFrame, idCol: String, textCol: String)
+      : Seq[(DayCells.Table, DataFrame)] = Seq(
+    Bg -> bigramRows(docs, idCol, textCol)
+      .groupBy(col("w1"), col("w2")).agg(count(lit(1)).as("cnt")),
+    Uni -> tokenRows(docs, idCol, textCol)
+      .groupBy(col("w")).agg(count(lit(1)).as("cnt")))
 
   /** EPOCH COMPACTION of an [[lmAppendDay]] store — both tables fold by
     * plain exact sums: bigram counts per (w1, w2), unigram counts per
@@ -178,16 +180,8 @@ object LangModel {
       spark: org.apache.spark.sql.SparkSession,
       table: String,
       days: Seq[String],
-      epochDay: String): Unit = {
-    require(epochDay.startsWith("epoch:"),
-      s"lmCompact: epoch tag must carry the reserved 'epoch:' prefix, got '$epochDay'")
-    graft.sources.ManifestStore.compactDays(spark, s"$table/bg", "day",
-      groupCols = Seq("w1", "w2"), sumCols = Seq("cnt"),
-      foldDays = days, epochDay = epochDay)
-    graft.sources.ManifestStore.compactDays(spark, s"$table/uni", "day",
-      groupCols = Seq("w"), sumCols = Seq("cnt"),
-      foldDays = days, epochDay = epochDay)
-  }
+      epochDay: String): Unit =
+    DayCells.compact(spark, table, days, epochDay, Bg, Uni)
 
   /** Right-to-be-forgotten over the LM store (the x205/x181 negative-
     * correction pattern reaching the LM family): bigram and unigram
@@ -215,24 +209,10 @@ object LangModel {
       idCol: String,
       textCol: String,
       tag: String,
-      table: String): Unit = {
-    import graft.sources.ManifestStore
-    require(!tag.startsWith("epoch:"),
-      s"lmForget: tag '$tag' uses the reserved 'epoch:' prefix")
-    if (doomed.isEmpty) return
-    // marker FIRST (StoreSidecar.setMarker contract): readers switch to
-    // the net-sum slow path before any negative count can land; a crash
-    // after the marker costs only the slow path on an untouched store
-    StoreSidecar.setMarker(spark, table, "has_corrections")
-    val bg = bigramRows(doomed, idCol, textCol)
-      .groupBy(col("w1"), col("w2")).agg((-count(lit(1))).as("cnt"))
-      .withColumn("day", lit(tag))
-    val uni = tokenRows(doomed, idCol, textCol)
-      .groupBy(col("w")).agg((-count(lit(1))).as("cnt"))
-      .withColumn("day", lit(tag))
-    ManifestStore.mergeOrCreate(spark, s"$table/bg", bg, Seq("w1", "w2", "day"), "day")
-    ManifestStore.mergeOrCreate(spark, s"$table/uni", uni, Seq("w", "day"), "day")
-  }
+      table: String): Unit =
+    // a crash after the marker costs only the slow read path on an
+    // untouched store
+    DayCells.forget(spark, table, tag, doomed, lmCells(doomed, idCol, textCol): _*)
 
   /** Score a corpus against an [[lmAppendDay]] store — c2 sums across
     * days, V is the count of unigrams with POSITIVE net stored count,

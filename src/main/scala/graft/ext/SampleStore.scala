@@ -61,9 +61,8 @@ object SampleStore {
       byCols: Seq[String] = Nil): Unit = {
     require(k > 0 && slack >= 0, s"SampleStore.appendDay: k=$k, slack=$slack")
     // the epoch namespace is reserved for [[compactDays]]
-    require(!day.startsWith("epoch:"),
-      s"SampleStore.appendDay: day '$day' uses the reserved 'epoch:' prefix")
     import graft.sources.ManifestStore
+    ManifestStore.requireDayTag("SampleStore.appendDay", day)
     // (k, slack) are STORE properties (the kmv-store lesson): a day
     // appended at a different retention width would silently break the
     // pigeonhole that makes the merged read exact — and compactDays
@@ -122,8 +121,7 @@ object SampleStore {
       epochDay: String,
       byCols: Seq[String] = Nil): Unit = {
     import graft.sources.ManifestStore
-    require(epochDay.startsWith("epoch:"),
-      s"SampleStore.compactDays: epoch tag must carry the reserved 'epoch:' prefix, got '$epochDay'")
+    ManifestStore.requireEpochTag("SampleStore.compactDays", epochDay)
     require(foldDays.nonEmpty && !foldDays.contains(epochDay),
       "SampleStore.compactDays: foldDays must be non-empty and not contain the epoch tag")
     val g = StoreSidecar.read(spark, table, Seq("k", "slack")).getOrElse(
@@ -268,10 +266,10 @@ object SampleStore {
     * corpus slice and clears the ledger together.
     */
   def clearLedgerDay(spark: SparkSession, table: String, day: String): Unit = {
-    require(!day.startsWith("epoch:"),
-      s"SampleStore.clearLedgerDay: '$day' is an epoch — clearing its ledger " +
-        "without re-deriving its rows would launder the breach while the " +
-        "sample keeps serving the degraded retained set; use repairEpoch")
+    graft.sources.ManifestStore.requireDayTag("SampleStore.clearLedgerDay", day,
+      " — clearing an epoch's ledger without re-deriving its rows would launder " +
+        "the breach while the sample keeps serving the degraded retained set; " +
+        "use repairEpoch")
     clearLedgerAny(spark, table, day)
   }
 
@@ -312,9 +310,8 @@ object SampleStore {
       byCols: Seq[String] = Nil): Unit = {
     import graft.sources.ManifestStore
     import spark.implicits._
-    require(epochDay.startsWith("epoch:"),
-      s"SampleStore.repairEpoch: '$epochDay' is not an epoch day — re-append " +
-        "ordinary days via appendDay + clearLedgerDay")
+    ManifestStore.requireEpochTag("SampleStore.repairEpoch", epochDay,
+      " — re-append ordinary days via appendDay + clearLedgerDay")
     val g = StoreSidecar.read(spark, table, Seq("k", "slack")).getOrElse(
       throw new IllegalStateException(
         s"SampleStore.repairEpoch: $table has no (k, slack) geometry sidecar — " +

@@ -329,15 +329,10 @@ object Sketches {
       day: String,
       table: String,
       depth: Int,
-      width: Int): Unit = {
-    import graft.sources.ManifestStore
-    // the epoch namespace is reserved for [[countMinCompact]]
-    require(!day.startsWith("epoch:"),
-      s"countMinAppendDay: day '$day' uses the reserved 'epoch:' prefix")
-    val cells = countMinCells(df, valueCol, depth, width)
-      .withColumn("day", lit(day))
-    ManifestStore.mergeOrCreate(spark, table, cells, Seq("r", "cell", "day"), "day")
-  }
+      width: Int): Unit =
+    DayCells.append(spark, table, day, CmTable -> countMinCells(df, valueCol, depth, width))
+
+  private val CmTable = DayCells.Table("", Seq("r", "cell"), Seq("cnt"))
 
   /** EPOCH COMPACTION of a [[countMinAppendDay]] store — the plain-SUM
     * member of the fold matrix ([[graft.sources.ManifestStore.compactDays]]
@@ -354,13 +349,8 @@ object Sketches {
       spark: org.apache.spark.sql.SparkSession,
       table: String,
       days: Seq[String],
-      epochDay: String): Unit = {
-    require(epochDay.startsWith("epoch:"),
-      s"countMinCompact: epoch tag must carry the reserved 'epoch:' prefix, got '$epochDay'")
-    graft.sources.ManifestStore.compactDays(spark, table, "day",
-      groupCols = Seq("r", "cell"), sumCols = Seq("cnt"),
-      foldDays = days, epochDay = epochDay)
-  }
+      epochDay: String): Unit =
+    DayCells.compact(spark, table, days, epochDay, CmTable)
 
   /** Right-to-be-forgotten over the count-min store — the x205/x243
     * negative-correction pattern reaching the first LINEAR sketch: CM
@@ -388,18 +378,9 @@ object Sketches {
       tag: String,
       table: String,
       depth: Int,
-      width: Int): Unit = {
-    import graft.sources.ManifestStore
-    require(!tag.startsWith("epoch:"),
-      s"countMinForget: tag '$tag' uses the reserved 'epoch:' prefix")
-    if (doomed.isEmpty) return
-    // marker FIRST (StoreSidecar.setMarker contract): readers switch to
-    // the net-sum positive filter before any negative cell can land
-    StoreSidecar.setMarker(spark, table, "has_corrections")
-    val neg = countMinCells(doomed, valueCol, depth, width)
-      .withColumn("cnt", -col("cnt")).withColumn("day", lit(tag))
-    ManifestStore.mergeOrCreate(spark, table, neg, Seq("r", "cell", "day"), "day")
-  }
+      width: Int): Unit =
+    DayCells.forget(spark, table, tag, doomed,
+      CmTable -> countMinCells(doomed, valueCol, depth, width))
 
   /** The full-history cell table from a [[countMinAppendDay]] store.
     * Forget-marked stores (see [[countMinForget]]) drop zero-net cells —
@@ -447,14 +428,10 @@ object Sketches {
       valueCol: String,
       bucketWidth: Long,
       day: String,
-      table: String): Unit = {
-    import graft.sources.ManifestStore
-    // the epoch namespace is reserved for [[histCompact]]
-    require(!day.startsWith("epoch:"),
-      s"histAppendDay: day '$day' uses the reserved 'epoch:' prefix")
-    val cells = histCells(df, valueCol, bucketWidth).withColumn("day", lit(day))
-    ManifestStore.mergeOrCreate(spark, table, cells, Seq("bucket", "day"), "day")
-  }
+      table: String): Unit =
+    DayCells.append(spark, table, day, HistTable -> histCells(df, valueCol, bucketWidth))
+
+  private val HistTable = DayCells.Table("", Seq("bucket"), Seq("cnt"))
 
   /** EPOCH COMPACTION of a [[histAppendDay]] store — plain-SUM fold per
     * bucket ([[countMinCompact]]'s algebra on the histogram synopsis):
@@ -466,13 +443,8 @@ object Sketches {
       spark: org.apache.spark.sql.SparkSession,
       table: String,
       days: Seq[String],
-      epochDay: String): Unit = {
-    require(epochDay.startsWith("epoch:"),
-      s"histCompact: epoch tag must carry the reserved 'epoch:' prefix, got '$epochDay'")
-    graft.sources.ManifestStore.compactDays(spark, table, "day",
-      groupCols = Seq("bucket"), sumCols = Seq("cnt"),
-      foldDays = days, epochDay = epochDay)
-  }
+      epochDay: String): Unit =
+    DayCells.compact(spark, table, days, epochDay, HistTable)
 
   /** Right-to-be-forgotten over the histogram store — [[countMinForget]]'s
     * subtraction applied to the second linear sketch: bucket counts are
@@ -489,16 +461,9 @@ object Sketches {
       valueCol: String,
       bucketWidth: Long,
       tag: String,
-      table: String): Unit = {
-    import graft.sources.ManifestStore
-    require(!tag.startsWith("epoch:"),
-      s"histForget: tag '$tag' uses the reserved 'epoch:' prefix")
-    if (doomed.isEmpty) return
-    StoreSidecar.setMarker(spark, table, "has_corrections")
-    val neg = histCells(doomed, valueCol, bucketWidth)
-      .withColumn("cnt", -col("cnt")).withColumn("day", lit(tag))
-    ManifestStore.mergeOrCreate(spark, table, neg, Seq("bucket", "day"), "day")
-  }
+      table: String): Unit =
+    DayCells.forget(spark, table, tag, doomed,
+      HistTable -> histCells(doomed, valueCol, bucketWidth))
 
   /** The full-history bucket table from a [[histAppendDay]] store.
     * Forget-marked stores drop zero-net buckets (see [[histForget]]):
@@ -646,16 +611,12 @@ object Sketches {
       valueCol: String,
       day: String,
       table: String,
-      p: Int = 8): Unit = {
-    import graft.sources.ManifestStore
-    // the epoch namespace is reserved for [[hllCompact]]
-    require(!day.startsWith("epoch:"),
-      s"hllAppendDay: day '$day' uses the reserved 'epoch:' prefix")
-    val regs = hllRegisters(df, groupCol, valueCol, p)
-      .withColumn("day", lit(day))
-    ManifestStore.mergeOrCreate(spark, table, regs,
-      Seq(groupCol, "idx", "day"), "day")
-  }
+      p: Int = 8): Unit =
+    DayCells.append(spark, table, day,
+      hllTable(groupCol) -> hllRegisters(df, groupCol, valueCol, p))
+
+  private def hllTable(groupCol: String) =
+    DayCells.Table("", Seq(groupCol, "idx"), sumCols = Nil, maxCols = Seq("rho"))
 
   /** EPOCH COMPACTION of an [[hllAppendDay]] store —
     * [[graft.sources.ManifestStore.compactDays]] with a MAX fold:
@@ -674,13 +635,8 @@ object Sketches {
       table: String,
       groupCol: String,
       days: Seq[String],
-      epochDay: String): Unit = {
-    require(epochDay.startsWith("epoch:"),
-      s"hllCompact: epoch tag must carry the reserved 'epoch:' prefix, got '$epochDay'")
-    graft.sources.ManifestStore.compactDays(spark, table, "day",
-      groupCols = Seq(groupCol, "idx"), sumCols = Seq.empty,
-      foldDays = days, epochDay = epochDay, maxCols = Seq("rho"))
-  }
+      epochDay: String): Unit =
+    DayCells.compact(spark, table, days, epochDay, hllTable(groupCol))
 
   /** The full-history register table from a [[hllAppendDay]] store —
     * max-merge across days, feeding [[hllEstimate]] unchanged.
@@ -717,9 +673,7 @@ object Sketches {
       k: Int = 64,
       saltBuckets: Int = 8): Unit = {
     import graft.sources.ManifestStore
-    // the epoch namespace is reserved for [[kmvCompact]]
-    require(!day.startsWith("epoch:"),
-      s"kmvAppendDay: day '$day' uses the reserved 'epoch:' prefix")
+    ManifestStore.requireDayTag("kmvAppendDay", day)
     // geometry sidecar (the MediaStore/BenchRegistry convention): the
     // build k is a STORE property, not a call argument — a later fold
     // or read at a different k would silently truncate the sketch (and
@@ -793,8 +747,7 @@ object Sketches {
       k: Int = 64): Unit = {
     import graft.sources.ManifestStore
     import spark.implicits._
-    require(epochDay.startsWith("epoch:"),
-      s"kmvCompact: epoch tag must carry the reserved 'epoch:' prefix, got '$epochDay'")
+    ManifestStore.requireEpochTag("kmvCompact", epochDay)
     require(days.nonEmpty && !days.contains(epochDay),
       "kmvCompact: days must be non-empty and not contain the epoch tag")
     requireKmvK(spark, table, k, "kmvCompact")

@@ -183,8 +183,7 @@ object ViewStore {
       sumCols: Seq[String],
       partitions: Int = 8): Unit = {
     // the epoch namespace is reserved for [[compactAgg]]
-    require(!day.startsWith("epoch:"),
-      s"ViewStore.appendDayAgg: day '$day' uses the reserved 'epoch:' prefix")
+    ManifestStore.requireDayTag("ViewStore.appendDayAgg", day)
     // forget fence: a crashed forgetA (correction committed, base-A
     // delete not) must be replayed before new days append — an append
     // pairing still-present doomed rows would be double-corrected by
@@ -282,8 +281,7 @@ object ViewStore {
       epochDay: String,
       groupCols: Seq[String],
       sumCols: Seq[String]): Unit = {
-    require(epochDay.startsWith("epoch:"),
-      s"ViewStore.compactAgg: epoch tag must carry the reserved 'epoch:' prefix, got '$epochDay'")
+    ManifestStore.requireEpochTag("ViewStore.compactAgg", epochDay)
     requireNoOpenForget(spark, root, "compacting")
     ManifestStore.compactDays(spark, aggT(root), "day",
       groupCols = groupCols,

@@ -2,7 +2,8 @@ package graft.queries
 
 import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.ext.{AsofJoin, Chunking, DataCard, Dedup, Dsir, Events, Graph, LangModel, MediaStore, Multimodal, Pq, Privacy, Profiling, Quantiles, Redaction, Retrieval, SampleStore, Sampling, Scd2, Sharding, Similarity, Sketches, TextAnalysis}
+import graft.ext.{AsofJoin, Chunking, DataCard, Dedup, Dsir, Events, Graph, LangModel, MediaStore, Multimodal, Par, Pq, Privacy, Profiling, Quantiles, Redaction, Retrieval, SampleStore, Sampling, Scd2, Sharding, Similarity, Sketches, TextAnalysis}
+import graft.streaming.Drain
 
 /** x217-x241: composed erasure, media store, bench registry, epoch compaction rollout.
   * Mechanical slice of the former single-object ExtQueries (r14);
@@ -106,16 +107,6 @@ private[graft] trait ExtErasureCompaction extends ExtLmStores {
     import spark.implicits._
     import graft.ext.{ClusterStore, DedupStores, IndexStore, Scd2Store, VectorStore, ViewStore}
     import graft.sources.ManifestStore
-    // coarse phase profile (SPARK_GRAFT_X217_PROFILE=1): the bench-diet
-    // feedback loop — which of clone/request/audit/replay/folds carries
-    // the wall. Off by default; stderr only, never the result.
-    val profile = sys.env.contains("SPARK_GRAFT_X217_PROFILE")
-    var t0 = System.nanoTime()
-    def mark(phase: String): Unit = if (profile) {
-      val t1 = System.nanoTime()
-      Console.err.println(f"x217-profile $phase ${(t1 - t0) / 1e9}%.2f s")
-      t0 = t1
-    }
     // plain parquet reads, NOT materialized: these are the corpus tables
     // (caching the corpus is exactly what a 100 TB pipeline must not do);
     // only the small doomed slices below are pinned
@@ -170,45 +161,31 @@ private[graft] trait ExtErasureCompaction extends ExtLmStores {
     val toks = toks3(spark, dir)
     require(doomedDocs.count() > 0 && doomedVecs.count() > 0,
       "x217: empty erasure manifest")
-    mark("clones+request-slices")
     // the request fans out IN PARALLEL within each ordering phase — the
     // production orchestrator shape: the nine families touch disjoint
     // store tables, so within a phase their transactional deletes are
     // independent Spark jobs (local scheduler interleaves them; a real
     // cluster runs them from orchestrator workers). The PHASE order is
     // the documented contract and stays sequential.
-    def phase(steps: (String, () => Unit)*): Unit = {
-      import scala.concurrent.{Await, Future}
-      import scala.concurrent.ExecutionContext.Implicits.global
-      Await.result(
-        Future.sequence(steps.map { case (n, st) => Future {
-          val ts = System.nanoTime()
-          st()
-          if (profile) Console.err.println(
-            f"x217-profile   step:$n ${(System.nanoTime() - ts) / 1e9}%.2f s")
-        } }),
-        scala.concurrent.duration.Duration(20, "min"))
-      ()
-    }
     def runRequest(): Unit = {
       // phase 1: content-consuming forgets (need the subject's bytes,
       // so they run before any lakehouse delete could remove them)
-      phase(
-        "dedup" -> (() => DedupStores.forget(spark, doomedDocs, "doc_id", "text", fpT, idxT)),
-        "bm25" -> (() => IndexStore.forget(spark, doomedDocs, "doc_id", "text", bmT,
-          forgetSeq = 1L, partitions = 8)),
+      Par.all(
+        () => DedupStores.forget(spark, doomedDocs, "doc_id", "text", fpT, idxT),
+        () => IndexStore.forget(spark, doomedDocs, "doc_id", "text", bmT,
+          forgetSeq = 1L, partitions = 8),
         // null-text docs were never media-ingested (mediaBase filters
         // them), so the media request carries only ingested assets — an
         // unfiltered null blob would NPE inside dHash64
-        "media" -> (() => MediaStore.forget(spark, mediaBlobs(spark,
+        () => MediaStore.forget(spark, mediaBlobs(spark,
           doomedDocs.filter(col("text").isNotNull)
-            .select(col("doc_id").as("media_id"), col("text"))), mdT)))
+            .select(col("doc_id").as("media_id"), col("text"))), mdT))
       // phase 2: id-keyed derived stores
-      phase(
-        "ann" -> (() => VectorStore.forget(spark, doomedVecs.select(col("vec_id")), "vec_id", annT)),
-        "cluster" -> (() => ClusterStore.forget(spark, doomedDocIds, "id", clT, partitions = 8)),
-        "sample" -> (() => SampleStore.forget(spark, smpT, "doc_id",
-          doomedDocs.select(col("doc_id")), forgetSeq = 1L)))
+      Par.all(
+        () => VectorStore.forget(spark, doomedVecs.select(col("vec_id")), "vec_id", annT),
+        () => ClusterStore.forget(spark, doomedDocIds, "id", clT, partitions = 8),
+        () => SampleStore.forget(spark, smpT, "doc_id",
+          doomedDocs.select(col("doc_id")), forgetSeq = 1L))
       // phase 3: subtraction-correction stores (the forgets consume the
       // subject's CONTENT like phase 1 — negative counts derive from the
       // doomed text/vectors — but depend on nothing phase 1 deletes),
@@ -216,34 +193,33 @@ private[graft] trait ExtErasureCompaction extends ExtLmStores {
       // the hh monitor's RE-SUMMARIZATION (hh summaries cannot
       // subtract — each affected day re-summarizes from its SURVIVING
       // rows, a wholesale day replace; see Sketches.hhForgetDay)
-      phase(
-        "moments" -> (() => graft.ext.EmbedPost.momentsForget(spark, doomedVecs, "embedding", 64,
-          "f1", momT)),
-        "view" -> (() => ViewStore.forgetA(spark, vwT, doomedLi, "okey",
+      Par.all(
+        () => graft.ext.EmbedPost.momentsForget(spark, doomedVecs, "embedding", 64,
+          "f1", momT),
+        () => ViewStore.forgetA(spark, vwT, doomedLi, "okey",
           Seq("okey", "l_linenumber"), forgetSeq = 1L,
-          groupCols = Seq("o_orderpriority"), sumCols = Seq("l_quantity"))),
-        "lm" -> (() => LangModel.lmForget(spark,
+          groupCols = Seq("o_orderpriority"), sumCols = Seq("l_quantity")),
+        () => LangModel.lmForget(spark,
           doomedDocs.filter(col("doc_id") % 3 === 0), "doc_id", "text",
-          "__forget_1", lmT)),
-        "vocab" -> (() => graft.ext.Bpe.vocabForget(spark, doomedDocs, "doc_id", "text",
-          "__forget_1", vcT)),
-        "cm" -> (() => Sketches.countMinForget(spark, doomedEv, "k", "__forget_1", cmT,
-          depth = 4, width = 1024)),
-        "hist" -> (() => Sketches.histForget(spark,
+          "__forget_1", lmT),
+        () => graft.ext.Bpe.vocabForget(spark, doomedDocs, "doc_id", "text",
+          "__forget_1", vcT),
+        () => Sketches.countMinForget(spark, doomedEv, "k", "__forget_1", cmT,
+          depth = 4, width = 1024),
+        () => Sketches.histForget(spark,
           doomedDocs.select(col("n_chars")), "n_chars", bucketWidth = 32L,
-          "__forget_1", hsT)),
-        "card" -> (() => DataCard.forget(spark, doomedDocs, "__forget_1", cdT)),
+          "__forget_1", hsT),
+        () => DataCard.forget(spark, doomedDocs, "__forget_1", cdT),
         // one batched re-summarization of all three affected days
         // (hhForgetDays: bit-equal to the per-day loop, one commit pair)
-        "hh" -> (() => Sketches.hhForgetDays(spark,
+        () => Sketches.hhForgetDays(spark,
           toks.filter(col("id") % 7 =!= 2)
             .withColumn("__d", concat(lit("d"), col("day"))),
-          "w", "__d", Seq("d0", "d1", "d2"), hhT)))
+          "w", "__d", Seq("d0", "d1", "d2"), hhT))
       // phase 4: the dimension history, last
-      phase("scd2" -> (() => Scd2Store.forget(spark, scT, doomedUsers, "user_id")))
+      Scd2Store.forget(spark, scT, doomedUsers, "user_id")
     }
     runRequest()
-    mark("forgets")
     // --- BLIND AUDIT: zero hits for the subject in every id-keyed table ---
     // (the aggregate families — moments, LM, vocab, CM, histogram, card,
     // hh — hold no per-id rows to probe: their counts are value-keyed
@@ -270,19 +246,11 @@ private[graft] trait ExtErasureCompaction extends ExtLmStores {
       ("scd2", hits(scT, "user_id", doomedUsers)),
       ("media_idx", hits(mdT, "media_id",
         doomedDocs.select(col("doc_id").as("media_id")))))
-    val audit = {
-      import scala.concurrent.{Await, Future}
-      import scala.concurrent.ExecutionContext.Implicits.global
-      Await.result(
-        Future.sequence(auditProbes.map { case (n, f) => Future((n, f())) }),
-        scala.concurrent.duration.Duration(20, "min"))
-    }
+    val audit = Par.all(auditProbes.map { case (n, f) => () => (n, f()) }: _*)
     for ((name, n) <- audit)
       require(n == 0L, s"x217 blind audit: $n subject rows survived in $name")
-    mark("audit")
     // --- REPLAY the whole request: the orchestrator-crash recovery ---
     runRequest()
-    mark("replay")
     // --- serving fingerprints, one row per store ---
     def fold(store: String, df: DataFrame, canon: org.apache.spark.sql.Column): DataFrame =
       df.select(conv(substring(md5(canon), 1, 12), 16, 10).cast("long").as("__h"))
@@ -353,17 +321,6 @@ private[graft] trait ExtErasureCompaction extends ExtLmStores {
       fold("hh", Sketches.hhFromStore(spark, hhT, minFractionDen = 50L),
         concat_ws("|", col("v"), col("c_lo"), col("c_hi"),
           col("decided").cast("string"))))
-    if (profile) {
-      val names = Seq("dedup_fp", "dedup_idx", "cluster", "bm25", "ann",
-        "moments", "sample", "view", "scd2", "media", "lm", "vocab",
-        "cm", "hist", "card", "hh")
-      names.zip(folds).foreach { case (n, f) =>
-        val ts = System.nanoTime()
-        f.count()
-        Console.err.println(
-          f"x217-profile fold:$n ${(System.nanoTime() - ts) / 1e9}%.2f s")
-      }
-    }
     folds.reduce(_ unionByName _)
   }
 
@@ -665,10 +622,7 @@ private[graft] trait ExtErasureCompaction extends ExtLmStores {
       .option("checkpointLocation", s"$root/ckpt")
       .trigger(Trigger.AvailableNow())
       .start()
-    try {
-      if (!q.awaitTermination(300000))
-        throw new RuntimeException("x221: drain timeout")
-    } finally q.stop()
+    Drain(q, "x221", 300000)
     // at-least-once: re-deliver day 1 — the keyed merge replaces
     MediaStore.append(spark,
       mediaBlobs(spark, base.filter(col("day") === 1L)), table)
@@ -1420,10 +1374,7 @@ private[graft] trait ExtErasureCompaction extends ExtLmStores {
       .option("checkpointLocation", s"$base/ckpt")
       .trigger(Trigger.AvailableNow())
       .start()
-    try {
-      if (!q.awaitTermination(300000))
-        throw new RuntimeException("x240: drain timeout")
-    } finally q.stop()
+    Drain(q, "x240", 300000)
     // at-least-once: re-deliver day 1 — keyed merge replaces in place
     fold(corpus.filter(col("day") === 1L))
     val out = ManifestStore.read(spark, table).select(
@@ -1598,7 +1549,6 @@ private[graft] trait ExtErasureCompaction extends ExtLmStores {
         .select(col("lang"), concat_ws(" ", col("w"), col("__w1")).as("bg"))
         .withColumn("__b", pmod(TextAnalysis.md5Bucket(col("bg")), lit(3)))
     }
-    val profile = sys.env.contains("SPARK_GRAFT_X242_PROFILE")
     def fold(batch: DataFrame, scrubViews: Boolean)
         : Seq[(String, scala.util.Try[Unit])] = {
       val b = batch.agg(min(col("__b"))).head().getLong(0)
@@ -1682,21 +1632,7 @@ private[graft] trait ExtErasureCompaction extends ExtLmStores {
       // commit streams against disjoint tables (the x217 phase shape);
       // per-step Try outcomes let the fence-interplay leg below prove
       // ONE store's refusal while its neighbors proceed
-      import scala.concurrent.{Await, Future}
-      import scala.concurrent.ExecutionContext.Implicits.global
-      val t0 = System.nanoTime()
-      val res = Await.result(Future.sequence(steps.map { case (n, st) =>
-        Future {
-          val ts = System.nanoTime()
-          val r = scala.util.Try(st())
-          if (profile) Console.err.println(
-            f"x242-profile   step:$n ${(System.nanoTime() - ts) / 1e9}%.2f s")
-          (n, r)
-        }
-      }), scala.concurrent.duration.Duration(20, "min"))
-      if (profile) Console.err.println(
-        f"x242-profile fold:$day ${(System.nanoTime() - t0) / 1e9}%.2f s")
-      res
+      Par.all(steps.map { case (n, st) => () => (n, scala.util.Try(st())) }: _*)
     }
     def foldAll(batch: DataFrame, scrubViews: Boolean = false): Unit = {
       val bad = fold(batch, scrubViews)
@@ -1715,10 +1651,7 @@ private[graft] trait ExtErasureCompaction extends ExtLmStores {
       .option("checkpointLocation", s"$base/ckpt")
       .trigger(Trigger.AvailableNow())
       .start()
-    try {
-      if (!q.awaitTermination(600000))
-        throw new RuntimeException("x242: drain timeout")
-    } finally q.stop()
+    Drain(q, "x242", 600000)
     // --- CROSS-STORE FENCE INTERPLAY: one store's crash window open
     // while the other ten proceed — the composition no pairwise gate
     // exercises. An erasure request against the view family crashes
@@ -1764,23 +1697,17 @@ private[graft] trait ExtErasureCompaction extends ExtLmStores {
     // row accounting: the replay duplicated nothing, the day is whole —
     // ten independent read-only counts, fanned out (r15) instead of ten
     // sequential job floors; the REQUIREs check the same pairs
-    val acct = {
-      import scala.concurrent.{Await, Future}
-      import scala.concurrent.ExecutionContext.Implicits.global
-      val fs: Seq[() => Long] = Seq(
-        () => ManifestStore.read(spark, s"$ddT/fp").count(),
-        () => docs.filter(col("text").isNotNull).count(),
-        () => ManifestStore.read(spark, s"$annT/codes").count(),
-        () => emb.count(),
-        () => ManifestStore.read(spark, s"$bmT/lens").count(),
-        () => docs.count(),
-        () => ManifestStore.read(spark, mdT).count(),
-        () => mediaBase(spark, dir).count(),
-        () => ManifestStore.read(spark, judgeT).count(),
-        () => inc.count())
-      Await.result(Future.sequence(fs.map(f => Future(f()))),
-        scala.concurrent.duration.Duration(20, "min"))
-    }
+    val acct = Par.all(
+      () => ManifestStore.read(spark, s"$ddT/fp").count(),
+      () => docs.filter(col("text").isNotNull).count(),
+      () => ManifestStore.read(spark, s"$annT/codes").count(),
+      () => emb.count(),
+      () => ManifestStore.read(spark, s"$bmT/lens").count(),
+      () => docs.count(),
+      () => ManifestStore.read(spark, mdT).count(),
+      () => mediaBase(spark, dir).count(),
+      () => ManifestStore.read(spark, judgeT).count(),
+      () => inc.count())
     val Seq(fpRows, fpWant, annRows, embN, lensRows, docsN,
       mdRows, mediaN, judgeRows, incN) = acct
     require(fpRows == fpWant, s"x242: fp store holds $fpRows rows for $fpWant docs")

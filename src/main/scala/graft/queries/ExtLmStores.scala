@@ -3,6 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.ext.{AsofJoin, Chunking, DataCard, Dedup, Dsir, Events, Graph, LangModel, MediaStore, Multimodal, Pq, Privacy, Profiling, Quantiles, Redaction, Retrieval, SampleStore, Sampling, Scd2, Sharding, Similarity, Sketches, TextAnalysis}
+import graft.streaming.Drain
 
 /** x188-x216: SCD2 store, sample/moment/vocab/LM stores, zipf/heaps, rebuild/repair.
   * Mechanical slice of the former single-object ExtQueries (r14);
@@ -82,10 +83,7 @@ private[graft] trait ExtLmStores extends ExtSkipIndexes {
       .option("checkpointLocation", s"$base/ckpt")
       .trigger(Trigger.AvailableNow())
       .start()
-    try {
-      if (!q.awaitTermination(300000))
-        throw new RuntimeException("x189: drain timeout")
-    } finally q.stop()
+    Drain(q, "x189", 300000)
     val before = graft.sources.ManifestStore.read(spark, table).count()
     Scd2Store.appendDay(spark, table, feed.filter(col("day") === 1L),
       "user_id", "ts_us", "event_id", Seq("value"))
@@ -375,10 +373,7 @@ private[graft] trait ExtLmStores extends ExtSkipIndexes {
       .option("checkpointLocation", s"$base/ckpt")
       .trigger(Trigger.AvailableNow())
       .start()
-    try {
-      if (!q.awaitTermination(300000))
-        throw new RuntimeException("x196: drain timeout")
-    } finally q.stop()
+    Drain(q, "x196", 300000)
     // at-least-once: re-deliver day 1 — the (key, day) merge replaces
     SampleStore.appendDay(spark, docs.filter(col("day") === 1L),
       "doc_id", col("wc"), "d1", k = 100, slack = 8, table = table)
@@ -598,10 +593,7 @@ private[graft] trait ExtLmStores extends ExtSkipIndexes {
       .option("checkpointLocation", s"$base/ckpt")
       .trigger(Trigger.AvailableNow())
       .start()
-    try {
-      if (!q.awaitTermination(300000))
-        throw new RuntimeException("x200: drain timeout")
-    } finally q.stop()
+    Drain(q, "x200", 300000)
     // at-least-once: re-deliver day 1 — the day-keyed merges replace
     graft.ext.EmbedPost.momentsAppendDay(spark,
       emb.filter(col("day") === 1L), "embedding", 64, "d1", table)
@@ -734,10 +726,7 @@ private[graft] trait ExtLmStores extends ExtSkipIndexes {
       .option("checkpointLocation", s"$base/ckpt")
       .trigger(Trigger.AvailableNow())
       .start()
-    try {
-      if (!q.awaitTermination(300000))
-        throw new RuntimeException("x203: drain timeout")
-    } finally q.stop()
+    Drain(q, "x203", 300000)
     // at-least-once: re-deliver day 1 — the (w, day) merge replaces
     graft.ext.Bpe.vocabAppendDay(spark,
       docs.filter(col("day") === 1L), "doc_id", "text", "d1", table)
@@ -917,10 +906,7 @@ private[graft] trait ExtLmStores extends ExtSkipIndexes {
       .option("checkpointLocation", s"$base/ckpt")
       .trigger(Trigger.AvailableNow())
       .start()
-    try {
-      if (!q.awaitTermination(300000))
-        throw new RuntimeException("x208: drain timeout")
-    } finally q.stop()
+    Drain(q, "x208", 300000)
     // at-least-once: re-deliver day 1 — the day-keyed merges replace
     LangModel.lmAppendDay(spark, ref.filter(col("day") === 1L),
       "doc_id", "text", "d1", table)
@@ -1093,10 +1079,7 @@ private[graft] trait ExtLmStores extends ExtSkipIndexes {
       .option("checkpointLocation", s"$base/ckpt")
       .trigger(Trigger.AvailableNow())
       .start()
-    try {
-      if (!q.awaitTermination(300000))
-        throw new RuntimeException("x211: drain timeout")
-    } finally q.stop()
+    Drain(q, "x211", 300000)
     // at-least-once: re-deliver request batch 1 — the tag-keyed merge
     // must REPLACE, not subtract twice
     graft.ext.EmbedPost.momentsForget(spark,

@@ -3,6 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.ext.{AsofJoin, Chunking, DataCard, Dedup, Dsir, Events, Graph, LangModel, MediaStore, Multimodal, Pq, Privacy, Profiling, Quantiles, Redaction, Retrieval, SampleStore, Sampling, Scd2, Sharding, Similarity, Sketches, TextAnalysis}
+import graft.streaming.Drain
 
 /** x101-x137: time travel, sketch stores (CM/hist), PQ ANN, expectations, streaming stores.
   * Mechanical slice of the former single-object ExtQueries (r14);
@@ -289,8 +290,7 @@ private[graft] trait ExtSketchStores extends ExtCorpusStats {
       .option("checkpointLocation", s"$base/ckpt")
       .trigger(Trigger.AvailableNow())
       .start()
-    try { if (!q.awaitTermination(300000)) throw new RuntimeException("x111: drain timeout") }
-    finally q.stop()
+    Drain(q, "x111", 300000)
     val exact = Dedup.materialize(
       keys.groupBy(col("k")).agg(count(lit(1)).as("cnt")))
     val top = Sampling.scoredTopK(exact, "k", col("cnt"), k = 20).drop("sel_rank")
@@ -838,8 +838,7 @@ private[graft] trait ExtSketchStores extends ExtCorpusStats {
       .option("checkpointLocation", s"$base/ckpt")
       .trigger(Trigger.AvailableNow())
       .start()
-    try { if (!q.awaitTermination(300000)) throw new RuntimeException("x126: drain timeout") }
-    finally q.stop()
+    Drain(q, "x126", 300000)
     spark.table(qname).select(
       unix_micros(col("window.start")).as("window_start"),
       col("event_type"), col("n_events"),
@@ -1348,10 +1347,7 @@ private[graft] trait ExtSketchStores extends ExtCorpusStats {
       .option("checkpointLocation", s"$base/ckpt")
       .trigger(Trigger.AvailableNow())
       .start()
-    try {
-      if (!q.awaitTermination(300000))
-        throw new RuntimeException("x137: drain timeout")
-    } finally q.stop()
+    Drain(q, "x137", 300000)
     // at-least-once replay: re-deliver one batch AFTER the drain — the
     // (vec_id, sub) merge must replace, not duplicate
     VectorStore.appendDay(spark, inc.filter(batchKey === 1),

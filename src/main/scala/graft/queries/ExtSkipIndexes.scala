@@ -3,6 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.ext.{AsofJoin, Chunking, DataCard, Dedup, Dsir, Events, Graph, LangModel, MediaStore, Multimodal, Pq, Privacy, Profiling, Quantiles, Redaction, Retrieval, SampleStore, Sampling, Scd2, Sharding, Similarity, Sketches, TextAnalysis}
+import graft.streaming.Drain
 
 /** x163-x187: zone/bloom/token skipping indexes, forgets, hh store, view stores, graph expansion.
   * Mechanical slice of the former single-object ExtQueries (r14);
@@ -191,10 +192,7 @@ private[graft] trait ExtSkipIndexes extends ExtVectorStores {
       .option("checkpointLocation", s"$base/ckpt")
       .trigger(Trigger.AvailableNow())
       .start()
-    try {
-      if (!q.awaitTermination(300000))
-        throw new RuntimeException("x167: drain timeout")
-    } finally q.stop()
+    Drain(q, "x167", 300000)
     // at-least-once: re-deliver day 2 through the same maintenance path
     val replay = docs.filter(col("day") === 2).drop("day")
     ManifestStore.merge(spark, table, replay, Seq("doc_id"), "pt")
@@ -669,10 +667,7 @@ private[graft] trait ExtSkipIndexes extends ExtVectorStores {
       .option("checkpointLocation", s"$base/ckpt")
       .trigger(Trigger.AvailableNow())
       .start()
-    try {
-      if (!q.awaitTermination(300000))
-        throw new RuntimeException("x177: drain timeout")
-    } finally q.stop()
+    Drain(q, "x177", 300000)
     // at-least-once: re-deliver day 1
     Sketches.hhAppendDay(spark, toks.filter(col("day") === 1L), "w", "d1", table)
     val stored = graft.sources.ManifestStore.read(spark, s"$table/hh").count()
@@ -999,8 +994,7 @@ private[graft] trait ExtSkipIndexes extends ExtVectorStores {
       .option("checkpointLocation", s"$base/ckpt")
       .trigger(Trigger.AvailableNow())
       .start()
-    try { if (!q.awaitTermination(300000)) throw new RuntimeException("x184: drain timeout") }
-    finally q.stop()
+    Drain(q, "x184", 300000)
     spark.table(qname).select(col("user_id"),
       unix_micros(col("__sw.start")).as("window_start"),
       unix_micros(col("__sw.end")).as("window_end"),

@@ -3,6 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.ext.{AsofJoin, Chunking, DataCard, Dedup, Dsir, Events, Graph, LangModel, MediaStore, Multimodal, Pq, Privacy, Profiling, Quantiles, Redaction, Retrieval, SampleStore, Sampling, Scd2, Sharding, Similarity, Sketches, TextAnalysis}
+import graft.streaming.Drain
 
 /** x32-x64: quality gates, streaming drains, sampling, corpus funnels, mixture plans.
   * Mechanical slice of the former single-object ExtQueries (r14);
@@ -73,8 +74,7 @@ private[graft] trait ExtStreamSample extends ExtFoundations {
       .option("checkpointLocation", s"$base/ckpt")
       .trigger(Trigger.AvailableNow())
       .start()
-    try { if (!q.awaitTermination(300000)) throw new RuntimeException("x34: drain timeout") }
-    finally q.stop()
+    Drain(q, "x34", 300000)
     spark.table(qname)
   }
 
@@ -299,10 +299,8 @@ private[graft] trait ExtStreamSample extends ExtFoundations {
         .write.mode("append").parquet(errDir)
       routed.filter(col("okey").isNotNull).write.mode("append").parquet(outDir)
     })
-    if (!q.awaitTermination(120000)) {
-      q.stop() // never read partial output from a still-running drain
-      throw new IllegalStateException("x37: streaming drain did not finish in 120s")
-    }
+    // never read partial output from a still-running drain
+    Drain(q, "x37", 120000)
     spark.read.parquet(outDir).select(
       col("okey").cast("long").as("okey"),
       col(MergeRouter.ActionCol).as("action"),

@@ -3,6 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.ext.{AsofJoin, Chunking, DataCard, Dedup, Dsir, Events, Graph, LangModel, MediaStore, Multimodal, Pq, Privacy, Profiling, Quantiles, Redaction, Retrieval, SampleStore, Sampling, Scd2, Sharding, Similarity, Sketches, TextAnalysis}
+import graft.streaming.Drain
 
 /** x138-x162: HLL/KMV stores, recall audits, trained codebooks, index stores, drift.
   * Mechanical slice of the former single-object ExtQueries (r14);
@@ -220,10 +221,7 @@ private[graft] trait ExtVectorStores extends ExtSketchStores {
       .option("checkpointLocation", s"$base/ckpt")
       .trigger(Trigger.AvailableNow())
       .start()
-    try {
-      if (!q.awaitTermination(300000))
-        throw new RuntimeException("x142: drain timeout")
-    } finally q.stop()
+    Drain(q, "x142", 300000)
     // at-least-once: re-deliver day d1 — the keyed merge must replace
     fold(ev.filter(col("day") === "d1"))
     ManifestStore.read(spark, resT)
@@ -444,10 +442,7 @@ private[graft] trait ExtVectorStores extends ExtSketchStores {
       .option("checkpointLocation", s"$base/ckpt")
       .trigger(Trigger.AvailableNow())
       .start()
-    try {
-      if (!q.awaitTermination(300000))
-        throw new RuntimeException("x146: drain timeout")
-    } finally q.stop()
+    Drain(q, "x146", 300000)
     val regTable = spark.table(qname)
     require(regTable.count() <= 13L * 256L,
       "x146: streaming state exceeded the groups x 2^p register bound")
@@ -929,10 +924,7 @@ private[graft] trait ExtVectorStores extends ExtSketchStores {
       .option("checkpointLocation", s"$base/ckpt")
       .trigger(Trigger.AvailableNow())
       .start()
-    try {
-      if (!q.awaitTermination(300000))
-        throw new RuntimeException("x154: drain timeout")
-    } finally q.stop()
+    Drain(q, "x154", 300000)
     // at-least-once: re-deliver day d1 — the keyed merge must replace
     fold(ev.filter(col("day") === "d1"))
     ManifestStore.read(spark, resT)
@@ -1010,10 +1002,7 @@ private[graft] trait ExtVectorStores extends ExtSketchStores {
       .option("checkpointLocation", s"$base/ckpt")
       .trigger(Trigger.AvailableNow())
       .start()
-    try {
-      if (!q.awaitTermination(300000))
-        throw new RuntimeException("x155: drain timeout")
-    } finally q.stop()
+    Drain(q, "x155", 300000)
     // at-least-once: re-deliver one already-folded batch — keyed
     // merges must replace, never duplicate
     ClusterStore.appendPairs(spark,
@@ -1196,10 +1185,7 @@ private[graft] trait ExtVectorStores extends ExtSketchStores {
       .option("checkpointLocation", s"$base/ckpt")
       .trigger(Trigger.AvailableNow())
       .start()
-    try {
-      if (!q.awaitTermination(300000))
-        throw new RuntimeException("x159: drain timeout")
-    } finally q.stop()
+    Drain(q, "x159", 300000)
     // at-least-once: re-deliver day 1 — all three tables must replace
     IndexStore.appendDay(spark, docs.filter(col("day") === 1L).drop("day"),
       "doc_id", "text", "d1", root, partitions = 8)
@@ -1299,10 +1285,7 @@ private[graft] trait ExtVectorStores extends ExtSketchStores {
       .option("checkpointLocation", s"$base/ckpt")
       .trigger(Trigger.AvailableNow())
       .start()
-    try {
-      if (!q.awaitTermination(300000))
-        throw new RuntimeException("x161: drain timeout")
-    } finally q.stop()
+    Drain(q, "x161", 300000)
     // at-least-once: re-deliver day 1 — the (bucket, day) merge replaces
     Sketches.histAppendDay(spark, docs.filter(col("day") === 1L), "n_chars",
       bucketWidth = 32L, day = "day1", table = table)
@@ -1358,10 +1341,7 @@ private[graft] trait ExtVectorStores extends ExtSketchStores {
       .option("checkpointLocation", s"$base/ckpt")
       .trigger(Trigger.AvailableNow())
       .start()
-    try {
-      if (!q.awaitTermination(300000))
-        throw new RuntimeException("x162: drain timeout")
-    } finally q.stop()
+    Drain(q, "x162", 300000)
     // at-least-once: re-deliver day d1 — the (lang, day) merge replaces
     Sketches.kmvAppendDay(spark, bg.filter(col("day") === 1), "lang", "bg",
       "d1", table)

@@ -6,6 +6,7 @@ import graft.runner.JobRunner
 import graft.sinks.{CsvSink, MergeRouter}
 import graft.sources.InlinePayload
 import graft.spec.Specs._
+import graft.streaming.Drain
 
 /** Driver-gated queries for the orchestration + payload surfaces added on
   * top of CoreQueries: inline base64 payloads (S6), row defaults (S8),
@@ -421,10 +422,8 @@ object SurfaceQueries {
     val source = spark.readStream.schema("o_orderkey long, o_totalprice double").csv(srcDir)
     val q = OnlineJob.start(spark, job, source, logDir, ckpt,
       (routed, _) => routed.write.mode("append").parquet(outDir))
-    if (!q.awaitTermination(120000)) {
-      q.stop() // never read partial output from a still-running drain
-      throw new IllegalStateException("q39: streaming drain did not finish in 120s")
-    }
+    // never read partial output from a still-running drain
+    Drain(q, "q39", 120000)
     spark.read.parquet(outDir).select(
       col("okey").cast("long").as("okey"),
       col(MergeRouter.ActionCol).as("action"),

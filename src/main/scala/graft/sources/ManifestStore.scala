@@ -765,6 +765,20 @@ object ManifestStore {
       m.txn ++ txnRecord))
   }
 
+  /** The `epoch:` namespace, owned here: fold outputs ([[compactDays]]
+    * and the stores' own folds) are tagged inside it, and every tag a
+    * store appends (a day, a forget tag) must stay outside it, so an
+    * epoch can never be re-delivered as a day. `why` extends either
+    * refusal with an op-specific cure.
+    */
+  private[graft] def requireDayTag(op: String, day: String, why: String = ""): Unit =
+    require(!day.startsWith("epoch:"), s"$op: day '$day' uses the reserved 'epoch:' prefix$why")
+
+  /** A fold tag must carry the reserved `epoch:` prefix ([[requireDayTag]]). */
+  private[graft] def requireEpochTag(op: String, tag: String, why: String = ""): Unit =
+    require(tag.startsWith("epoch:"),
+      s"$op: epoch tag must carry the reserved 'epoch:' prefix, got '$tag'$why")
+
   /** EPOCH COMPACTION of a day-partitioned subtotal table — the generic
     * metadata diet over the store convention every maintained family
     * shares (one summable subtotal row set per ingested day, reads sum
@@ -781,9 +795,10 @@ object ManifestStore {
     * subject's aggregate contribution is destroyed by the fold, leaving
     * only the survivors' totals.
     *
-    * Contract: callers own the retention rule (a compacted day's
-    * re-delivery would double-count — reserve an `epoch:` namespace and
-    * refuse it on the append path, see IndexStore.appendDay) and any
+    * Retention rule: a compacted day's re-delivery would double-count,
+    * so fold tags live in the reserved `epoch:` namespace (refused here
+    * when `epochDay` lacks the prefix) and every append path refuses
+    * that namespace through [[requireDayTag]]. Callers own any
     * cross-table ordering fence (see IndexStore.compactStats, whose
     * lens breadcrumbs reference day names).
     */
@@ -801,6 +816,7 @@ object ManifestStore {
     // transform) would shadow the param under the wildcard import
     import org.apache.spark.sql.functions._
     import spark.implicits._
+    requireEpochTag("compactDays", epochDay)
     require(foldDays.nonEmpty && !foldDays.contains(epochDay),
       s"compactDays: foldDays must be non-empty and not contain the epoch tag")
     // maxCols: for stores whose day cells merge by MAX instead of SUM

@@ -180,9 +180,8 @@ object LateData {
       .option("checkpointLocation", ckpt)
       .trigger(Trigger.AvailableNow())
       .start()
-    try { if (!q.awaitTermination(timeoutMs)) throw new RuntimeException(s"$qn: drain timeout") }
+    try Drain(q, qn, timeoutMs)
     finally {
-      q.stop()
       // a drained memory-sink run never resumes from its checkpoint
       val fs = new Path(ckpt).getFileSystem(spark.sessionState.newHadoopConf())
       try fs.delete(new Path(ckpt), true) catch { case _: java.io.IOException => () }

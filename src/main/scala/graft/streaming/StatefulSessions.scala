@@ -120,9 +120,8 @@ object StatefulSessions {
       .option("checkpointLocation", ckpt)
       .trigger(Trigger.AvailableNow())
       .start()
-    try { if (!q.awaitTermination(timeoutMs)) throw new RuntimeException(s"$qn: drain timeout") }
+    try Drain(q, qn, timeoutMs)
     finally {
-      q.stop()
       val fs = new org.apache.hadoop.fs.Path(ckpt)
         .getFileSystem(spark.sessionState.newHadoopConf())
       try fs.delete(new org.apache.hadoop.fs.Path(ckpt), true)

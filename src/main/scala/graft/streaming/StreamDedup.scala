@@ -58,9 +58,8 @@ object StreamDedup {
       .option("checkpointLocation", ckpt)
       .trigger(Trigger.AvailableNow())
       .start()
-    try { if (!q.awaitTermination(timeoutMs)) throw new RuntimeException(s"$qn: drain timeout") }
+    try Drain(q, qn, timeoutMs)
     finally {
-      q.stop()
       val fs = new Path(ckpt).getFileSystem(spark.sessionState.newHadoopConf())
       try fs.delete(new Path(ckpt), true) catch { case _: java.io.IOException => () }
     }

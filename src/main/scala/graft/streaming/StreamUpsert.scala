@@ -106,11 +106,8 @@ object StreamUpsert {
       }
       .trigger(Trigger.AvailableNow())
       .start()
-    try {
-      if (!q.awaitTermination(timeoutMs))
-        throw new RuntimeException(s"stream-upsert drain timeout after ${timeoutMs}ms")
-    } finally {
-      q.stop()
+    try Drain(q, "stream-upsert", timeoutMs)
+    finally {
       // a drained run never resumes from its checkpoint — reclaim it
       val fs = new Path(ckpt).getFileSystem(spark.sessionState.newHadoopConf())
       try fs.delete(new Path(ckpt), true) catch { case _: java.io.IOException => () }

@@ -448,7 +448,7 @@ class CurriculumBpeSpec extends SparkSpec {
       .outputMode("complete")
       .option("checkpointLocation", s"$base/ckpt")
       .trigger(Trigger.AvailableNow()).start()
-    try assert(q.awaitTermination(120000)) finally q.stop()
+    graft.streaming.Drain(q, "scm_spec", 120000)
     val streamed = spark.table("scm_spec")
     val batch = Sketches.countMinCells(vals, "v", depth = 4, width = 64)
     assert(streamed.exceptAll(batch).count() == 0L &&

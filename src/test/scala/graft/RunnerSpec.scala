@@ -150,7 +150,7 @@ class RunnerSpec extends SparkSpec {
       LogStore.append(spark, logDir, ConnectorSink.toLog(results, jobSpec.name))
       seen += results.count()
     })
-    q.awaitTermination(60000)
+    graft.streaming.Drain(q, "online", 60000)
     assert(seen == 2L)
     assert(FakeDest.store.size() == 2)
 
@@ -161,7 +161,7 @@ class RunnerSpec extends SparkSpec {
       actions = routed.groupBy(MergeRouter.ActionCol).count()
         .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
     })
-    q2.awaitTermination(60000)
+    graft.streaming.Drain(q2, "online-restart", 60000)
     assert(actions == Map("update" -> 1L, "insert" -> 1L))
   }
 

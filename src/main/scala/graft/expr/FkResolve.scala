@@ -62,10 +62,4 @@ object FkResolve {
       .withColumn(MissCol, col(valueCol).isNotNull && col(outCol).isNull)
       .drop("__ns_name")
   }
-
-  /** Odoo many2one extract normalization (§1.3): RPC reads render m2o as
-    * a (id, name) struct/tuple — keep the id (reference `[0]` pick,
-    * cubicerpetl.py:692-695).
-    */
-  def m2oId(c: Column): Column = c.getField("_1").cast("long")
 }

@@ -42,9 +42,7 @@ object BenchRegistry {
       Seq("shingleN" -> shingleN.toLong), "BenchRegistry")("shingleN").toInt
 
   private def registryN(spark: SparkSession, table: String): Int =
-    StoreSidecar.read(spark, table, Seq("shingleN")).map(_("shingleN").toInt)
-      .getOrElse(throw new IllegalStateException(
-        s"BenchRegistry: $table has no shingleN sidecar — not a BenchRegistry table"))
+    StoreSidecar.require(spark, table, Seq("shingleN"), "BenchRegistry")("shingleN").toInt
 
   /** The live gram rows, tolerating a registry whose every suite has
     * been retired: retiring the last suite drops the table's last

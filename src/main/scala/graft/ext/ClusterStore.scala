@@ -123,14 +123,8 @@ object ClusterStore {
     * member retrieval misses them and the store accumulates duplicate
     * ids — fail loudly instead (the [[DedupStores]] sidecar cure).
     */
-  private def requireGeometry(spark: SparkSession, table: String, partitions: Int): Unit = {
-    val got = StoreSidecar.read(spark, table, Seq("partitions"))
-      .map(_("partitions").toInt)
-    require(got.isDefined,
-      s"ClusterStore: $table has no geometry sidecar — build() first")
-    require(got.contains(partitions),
-      s"ClusterStore: $table was built with partitions=${got.get}, not $partitions")
-  }
+  private def requireGeometry(spark: SparkSession, table: String, partitions: Int): Unit =
+    StoreSidecar.require(spark, table, Seq("partitions" -> partitions.toLong), "ClusterStore")
 
   /** Initialize the store from a pair set: labels = min-member
     * components, written to BOTH tables — the main one partitioned by
@@ -151,17 +145,6 @@ object ClusterStore {
         .withColumn("ptid", bucket(col("id"), partitions)),
       twinTable(table), "ptid")
   }
-
-  /** One-time migration for stores built before the twin index existed:
-    * derive it from the main table in a single full scan (the LAST such
-    * scan the store will ever do — every later lookup is pruned).
-    */
-  private def backfillTwin(spark: SparkSession, table: String, partitions: Int): Unit =
-    ManifestStore.write(spark,
-      ManifestStore.read(spark, table).select(col("id"), col("label"))
-        .withColumn("prev_label", col("label"))
-        .withColumn("ptid", bucket(col("id"), partitions)),
-      twinTable(table), "ptid")
 
   /** The partition-pruned twin probe: (id, label, prev_label) rows of
     * the touched ids, scanning ONLY their hash buckets' partitions —
@@ -213,8 +196,6 @@ object ClusterStore {
         s"ClusterStore: $table has an unreplayed crashed append (fingerprint $p) — " +
           "replay that day's pairs to convergence before appending a new day; " +
           "the prev_label breadcrumb is one step deep")
-    if (!ManifestStore.exists(spark, twin) && ManifestStore.hasData(spark, table))
-      backfillTwin(spark, table, partitions)
     // touched ids' current labels via the pruned twin probe. prev_label
     // rides along so a crash-window replay still finds members under
     // the pre-append buckets; in steady state it names dead labels
@@ -345,8 +326,6 @@ object ClusterStore {
           "replay that day's pairs to convergence before forgetting")
     val doomed = Dedup.materialize(ids.select(col(idCol).as("id")).distinct())
     if (doomed.head(1).isEmpty) return
-    if (!ManifestStore.exists(spark, twin) && ManifestStore.hasData(spark, table))
-      backfillTwin(spark, table, partitions)
     if (!ManifestStore.exists(spark, twin) || !ManifestStore.hasData(spark, twin))
       return // empty store: nothing to forget
     // the doomed ids' cluster labels — label ∪ prev_label so a crashed
@@ -440,10 +419,8 @@ object ClusterStore {
       threshold: Double,
       partitions: Int = 8): Unit = {
     requireGeometry(spark, table, partitions)
-    val g = StoreSidecar.read(spark, idxTable, Seq("bands", "rowsPerBand"))
-      .getOrElse(throw new IllegalStateException(
-        s"ClusterStore.rebuildFromIndex: $idxTable has no DedupStores geometry " +
-          "sidecar — not a minhash index table"))
+    val g = StoreSidecar.require(spark, idxTable, Seq("bands", "rowsPerBand"),
+      "ClusterStore.rebuildFromIndex")
     val idxVersion = ManifestStore.versions(spark, idxTable).headOption
       .getOrElse(throw new java.io.FileNotFoundException(
         s"ClusterStore.rebuildFromIndex: no readable snapshot under $idxTable"))

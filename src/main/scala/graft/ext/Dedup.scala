@@ -123,30 +123,14 @@ object Dedup {
   /** MinHash signature: k minimums of seeded hashes, where seed variant i
     * is xxhash64(xxhash64(shingle), i) — the string is hashed ONCE and the
     * k variants derive from the 8-byte value. MUST stay the same scheme as
-    * [[minhashPairs]]: signatures/band keys precomputed at ingest with
-    * these helpers have to bucket-match pairs produced by the relational
+    * [[minhashPairs]]: signatures precomputed at ingest with this
+    * helper have to bucket-match pairs produced by the relational
     * pipeline.
     */
   def minhashSignature(shingles: Column, k: Int): Column = {
     val hashed = transform(shingles, s => xxhash64(s))
     transform(sequence(lit(1), lit(k)),
       h => array_min(transform(hashed, s => xxhash64(s, h))))
-  }
-
-  /** LSH band keys computed DIRECTLY from the shingle array: band b hashes
-    * its r minhashes, and each minhash sub-expression appears exactly once
-    * in the output expression tree. (The obvious alternative — slice() over
-    * a [[minhashSignature]] column from a previous projection — duplicates
-    * the whole signature computation into every band when the optimizer
-    * collapses projections: 32× recompute, observed 93s → ~2s on 500 docs.)
-    * Same xxhash64(xxhash64(s), seed) scheme as [[minhashPairs]].
-    */
-  def minhashBandKeys(shingles: Column, bands: Int, rowsPerBand: Int): Column = {
-    val hashed = transform(shingles, s => xxhash64(s))
-    val mins = (0 until bands * rowsPerBand).map(h =>
-      array_min(transform(hashed, s => xxhash64(s, lit(h + 1)))))
-    array((0 until bands).map(b =>
-      xxhash64(mins.slice(b * rowsPerBand, (b + 1) * rowsPerBand): _*)): _*)
   }
 
   /** MinHash+LSH near-duplicate pairs, verified with exact Jaccard.

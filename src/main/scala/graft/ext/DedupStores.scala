@@ -217,16 +217,15 @@ object DedupStores {
       textCol: String,
       fpTable: String,
       idxTable: String): Unit = {
-    val g = readGeometry(spark, idxTable).getOrElse(
-      throw new IllegalStateException(
-        s"DedupStores.forget: $idxTable has no geometry sidecar — not a DedupStores table"))
+    val partitions = StoreSidecar.require(spark, idxTable, Seq("partitions"),
+      "DedupStores.forget")("partitions").toInt
     val doomedFp = docs
       .select(col(idCol).as("id"), TextAnalysis.fingerprint(col(textCol)).as("fp"))
       .distinct()
       .filter(col("fp").isNotNull)
-      .withColumn("pt", bucket(col("fp"), g.partitions))
+      .withColumn("pt", bucket(col("fp"), partitions))
     val doomedIds = docs.select(col(idCol).as("id")).distinct()
-      .withColumn("pt", bucket(col("id"), g.partitions))
+      .withColumn("pt", bucket(col("id"), partitions))
     // keyed deletes on disjoint tables, idempotent at every crash
     // position (x157/x171 contract) — delete both at once
     Par.all(
@@ -259,14 +258,13 @@ object DedupStores {
       idCol: String,
       fpTable: String,
       idxTable: String): Unit = {
-    val g = readGeometry(spark, idxTable).getOrElse(
-      throw new IllegalStateException(
-        s"DedupStores.forgetById: $idxTable has no geometry sidecar — not a DedupStores table"))
+    val partitions = StoreSidecar.require(spark, idxTable, Seq("partitions"),
+      "DedupStores.forgetById")("partitions").toInt
     val keyed = ids.select(col(idCol).as("id")).distinct()
     Par.all(
       () => ManifestStore.delete(spark, fpTable, keyed, Seq("id"), Seq("pt")),
       () => ManifestStore.delete(spark, idxTable,
-        keyed.withColumn("pt", bucket(col("id"), g.partitions)), Seq("id"), Seq("pt")))
+        keyed.withColumn("pt", bucket(col("id"), partitions)), Seq("id"), Seq("pt")))
   }
 
   /** [[Dedup.noveltyScore]] with history read from the PERSISTED index

@@ -44,79 +44,18 @@ object MediaStore {
   private def bucket(chunk: Column, ckey: Column, partitions: Int) =
     pmod(xxhash64(chunk, ckey), lit(partitions.toLong))
 
-  private case class Geometry(chunks: Int, partitions: Int)
-
-  /** Band-layout version stamped into the sidecar. v2 = the fixed
-    * chunks=1 key (full hash, not the pre-fix all-zeros mask). The
-    * version exists because the fix CHANGED the persisted layout for
-    * chunks=1 stores: on such a store, upgraded probes silently return
-    * zero matches and a forget prunes its delete to recomputed (wrong)
-    * pt buckets — erased assets would survive as matchable orphans, a
-    * silent privacy failure. [[bandVGate]] turns that into a loud
-    * refusal. chunks ≥ 2 layouts are identical across versions, so a
-    * legacy sidecar is upgraded in place on first touch.
-    */
-  private val BandV = 2L
-
-  /** Refuse a chunks=1 store whose sidecar predates the band-v2 layout
-    * (probe/forget there would be silently wrong — see [[BandV]]);
-    * upgrade compatible (chunks ≥ 2) legacy sidecars in place.
-    */
-  private def bandVGate(spark: SparkSession, table: String, g: Geometry): Unit =
-    StoreSidecar.read(spark, table, Seq("band_v")) match {
-      case Some(m) =>
-        require(m("band_v") == BandV,
-          s"MediaStore: $table has band_v=${m("band_v")} but this build " +
-            s"writes band_v=$BandV — rebuild the store with this code")
-      case None if g.chunks == 1 =>
-        throw new IllegalStateException(
-          s"MediaStore: $table is a chunks=1 store with a pre-band_v " +
-            "sidecar — its rows were banded under the broken all-zeros " +
-            "one-chunk key, which this build no longer visits: probes " +
-            "would silently match nothing and forgets would delete from " +
-            "the wrong buckets, leaving erased assets matchable. Rebuild " +
-            "the index from the corpus (or forgetById every asset and " +
-            "re-ingest) before using it with this build")
-      case None => // chunks ≥ 2: layout identical across versions — stamp it
-        StoreSidecar.write(spark, table, Seq(
-          "chunks" -> g.chunks.toLong, "partitions" -> g.partitions.toLong,
-          "band_v" -> BandV))
-    }
-
   /** Geometry sidecar, validated on every touch: a silent `chunks`
     * mismatch would band probes and index on different splits (recall
     * silently → 0), and a `partitions` mismatch would prune probes and
     * merges to the wrong buckets (missed rows, duplicate keys) — both
-    * fail loudly instead. First touch on a fresh table records it
-    * (including the [[BandV]] layout version).
+    * fail loudly instead. [[append]]'s first touch on a fresh table
+    * records it; every other op requires it.
     */
-  private def requireOrInitGeometry(
-      spark: SparkSession, table: String, want: Geometry): Geometry = {
-    StoreSidecar.read(spark, table, Seq("chunks", "partitions")) match {
-      case Some(got) =>
-        for ((k, v) <- Seq("chunks" -> want.chunks.toLong,
-                           "partitions" -> want.partitions.toLong))
-          require(got(k) == v,
-            s"MediaStore: $table was built with $k=${got(k)} but this call " +
-              s"uses $k=$v — a geometry mismatch silently corrupts reads or recall")
-        bandVGate(spark, table, want)
-      case None => // fresh table: record geometry + layout version together
-        StoreSidecar.write(spark, table, Seq(
-          "chunks" -> want.chunks.toLong, "partitions" -> want.partitions.toLong,
-          "band_v" -> BandV))
-    }
-    want
-  }
-
-  private def readGeometry(spark: SparkSession, table: String): Option[Geometry] =
-    StoreSidecar.read(spark, table, Seq("chunks", "partitions"))
-      .map(m => Geometry(m("chunks").toInt, m("partitions").toInt))
+  private case class Geometry(chunks: Int, partitions: Int)
 
   private def geometryOf(spark: SparkSession, table: String): Geometry = {
-    val g = readGeometry(spark, table).getOrElse(throw new IllegalStateException(
-      s"MediaStore: $table has no geometry sidecar — not a MediaStore table"))
-    bandVGate(spark, table, g)
-    g
+    val m = StoreSidecar.require(spark, table, Seq("chunks", "partitions"), "MediaStore")
+    Geometry(m("chunks").toInt, m("partitions").toInt)
   }
 
   /** The store's row shape: hash each blob once ([[Multimodal.dHash64]],
@@ -131,10 +70,6 @@ object MediaStore {
     // equal 0, not all-ones — the ckey would collapse to 0 for every
     // asset, silently funneling the whole index into one bucket (exact
     // results, dead pruning). The one-chunk key is the full hash.
-    // MIGRATION NOTE: this changes the persisted band key (and pt
-    // layout) for chunks=1 stores written by pre-fix code — such a
-    // store must be REBUILT (its rows all sit at ckey=0, which upgraded
-    // probes no longer visit). chunks ≥ 2 stores are bit-identical.
     val mask = if (bitsPer == 64) -1L else (1L << bitsPer) - 1
     Multimodal.dHash64(media).toDF()
       .select(col("media_id"), col("phash"), posexplode(
@@ -162,8 +97,9 @@ object MediaStore {
     require(chunks > 0 && 64 % chunks == 0,
       s"MediaStore: chunks=$chunks does not divide 64 bits evenly — the " +
         "leftover bits would silently lose recall (use 1, 2, 4, 8, 16, 32, 64)")
-    val g = requireOrInitGeometry(spark, table, Geometry(chunks, partitions))
-    val batch = Dedup.materialize(bandRows(media, g.chunks, g.partitions))
+    StoreSidecar.requireOrInit(spark, table,
+      Seq("chunks" -> chunks.toLong, "partitions" -> partitions.toLong), "MediaStore")
+    val batch = Dedup.materialize(bandRows(media, chunks, partitions))
     // immutable-bytes contract, now DETECTED instead of only documented:
     // re-ingesting CHANGED bytes under an old id rebands into other
     // buckets, stranding the old ckeys as match-capable orphans — the

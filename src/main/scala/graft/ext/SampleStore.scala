@@ -124,10 +124,7 @@ object SampleStore {
     ManifestStore.requireEpochTag("SampleStore.compactDays", epochDay)
     require(foldDays.nonEmpty && !foldDays.contains(epochDay),
       "SampleStore.compactDays: foldDays must be non-empty and not contain the epoch tag")
-    val g = StoreSidecar.read(spark, table, Seq("k", "slack")).getOrElse(
-      throw new IllegalStateException(
-        s"SampleStore.compactDays: $table has no (k, slack) geometry sidecar — " +
-          "not a SampleStore table (or it predates the sidecar; re-append any day)"))
+    val g = StoreSidecar.require(spark, table, Seq("k", "slack"), "SampleStore.compactDays")
     val (k, slack) = (g("k").toInt, g("slack").toInt)
     // byCols is a store property of the same class as (k, slack): a fold
     // with the wrong strata would window minority-stratum rows out of a
@@ -312,10 +309,7 @@ object SampleStore {
     import spark.implicits._
     ManifestStore.requireEpochTag("SampleStore.repairEpoch", epochDay,
       " — re-append ordinary days via appendDay + clearLedgerDay")
-    val g = StoreSidecar.read(spark, table, Seq("k", "slack")).getOrElse(
-      throw new IllegalStateException(
-        s"SampleStore.repairEpoch: $table has no (k, slack) geometry sidecar — " +
-          "not a SampleStore table"))
+    val g = StoreSidecar.require(spark, table, Seq("k", "slack"), "SampleStore.repairEpoch")
     val (k, slack) = (g("k").toInt, g("slack").toInt)
     // byCols is a store property (the compactDays strata check, same
     // reason): re-deriving with the wrong strata would replace the epoch

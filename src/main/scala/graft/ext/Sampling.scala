@@ -14,22 +14,6 @@ import org.apache.spark.sql.functions._
   */
 object Sampling {
 
-  /** Stratified top-k sample: the k rows with the smallest md5 rank within
-    * each stratum — exact per-stratum allocation (balanced corpora, eval
-    * holdouts), unlike fraction sampling whose per-stratum counts drift.
-    * Appends `sample_rank` (1..k within stratum). Ties broken by the key
-    * itself, so the result is total-order deterministic.
-    *
-    * Scale shape: a single `row_number` window would shuffle EVERY row of
-    * a stratum into one reducer task — with 5 languages at 100 TB that is
-    * 5 tasks holding 20 TB each. Instead a two-stage top-k (same trick as
-    * the ANN reducer funnel, Similarity.scala): stage 1 takes the local
-    * top-k within (stratum, salt) — `salt` splits each stratum into
-    * `saltBuckets` deterministic sub-streams — stage 2 re-ranks only the
-    * saltBuckets×k survivors per stratum. Pigeonhole-exact: any global
-    * top-k row has ≤ k-1 better-ranked rows in its OWN salt bucket, so
-    * stage 1 can never drop it.
-    */
   /** Temperature-weighted mixture sampling (alpha = 0.5): sources are
     * re-balanced toward sqrt-proportional shares — the standard scheme
     * for up-weighting low-resource sources in multilingual/multi-source
@@ -193,6 +177,22 @@ object Sampling {
       .drop("__salt", "__r1", "__sc")
   }
 
+  /** Stratified top-k sample: the k rows with the smallest md5 rank within
+    * each stratum — exact per-stratum allocation (balanced corpora, eval
+    * holdouts), unlike fraction sampling whose per-stratum counts drift.
+    * Appends `sample_rank` (1..k within stratum). Ties broken by the key
+    * itself, so the result is total-order deterministic.
+    *
+    * Scale shape: a single `row_number` window would shuffle EVERY row of
+    * a stratum into one reducer task — with 5 languages at 100 TB that is
+    * 5 tasks holding 20 TB each. Instead a two-stage top-k (same trick as
+    * the ANN reducer funnel, Similarity.scala): stage 1 takes the local
+    * top-k within (stratum, salt) — `salt` splits each stratum into
+    * `saltBuckets` deterministic sub-streams — stage 2 re-ranks only the
+    * saltBuckets×k survivors per stratum. Pigeonhole-exact: any global
+    * top-k row has ≤ k-1 better-ranked rows in its OWN salt bucket, so
+    * stage 1 can never drop it.
+    */
   def stratifiedTopK(
       df: DataFrame,
       strata: Seq[String],

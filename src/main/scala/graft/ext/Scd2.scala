@@ -149,15 +149,8 @@ object Scd2Store {
     */
   private def validateBuckets(
       spark: org.apache.spark.sql.SparkSession,
-      table: String, buckets: Int, op: String): Unit = {
-    val got = StoreSidecar.read(spark, table, Seq("buckets"))
-    require(got.isDefined,
-      s"Scd2Store.$op: $table exists but has no buckets sidecar — not a " +
-        "Scd2Store table (or its sidecar was lost); refusing to guess the bucket count")
-    require(got.get("buckets") == buckets.toLong,
-      s"Scd2Store.$op: $table was built with ${got.get("buckets")} buckets, " +
-        s"called with $buckets — a mismatched hash would miss the key's partition")
-  }
+      table: String, buckets: Int, op: String): Unit =
+    StoreSidecar.require(spark, table, Seq("buckets" -> buckets.toLong), s"Scd2Store.$op")
 
   /** Whole-key erasure (the GDPR case): every version of every doomed
     * key leaves the store in ONE bucket-pruned keyed delete commit —

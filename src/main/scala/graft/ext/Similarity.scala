@@ -130,9 +130,6 @@ object Similarity {
       .drop("__rn", "__sim", "cv", "cn", "__v", "__n")
   }
 
-  /** IVF search: probe the `nprobe` nearest centroid buckets per query,
-    * exact-rerank within them. Returns (query_id, rank, neighbor_id, cosine).
-    */
   /** The nprobe nearest centroids per query — the probe half of
     * [[ivfTopK]], public so compositions that rerank differently (e.g.
     * IVF + PQ's ADC) can reuse it. (small × small; NO self-id exclusion
@@ -151,6 +148,9 @@ object Similarity {
       excludeSelf = false)
       .select(col("query_id"), col("neighbor_id").as("centroid_id"))
 
+  /** IVF search: probe the `nprobe` nearest centroid buckets per query,
+    * exact-rerank within them. Returns (query_id, rank, neighbor_id, cosine).
+    */
   def ivfTopK(
       assigned: DataFrame, // corpus with centroid_id (from ivfAssign)
       centroids: DataFrame,
@@ -291,6 +291,16 @@ object Similarity {
     }
   }
 
+  /** Production band-key width for a corpus of `n` vectors: keeps
+    * expected bucket occupancy ~8 (candidates O(N) per band). ceil(log₂
+    * n) − 3, in [4, 48] — the key stays one LONG with headroom, and the
+    * upper clamp binds only past 2^51 vectors.
+    */
+  def srpAutoBits(n: Long): Int = {
+    val ceilLog2 = 64 - java.lang.Long.numberOfLeadingZeros(math.max(1L, n - 1))
+    math.max(4, math.min(48, ceilLog2 - 3))
+  }
+
   /** Random-hyperplane LSH near-dup pairs over embeddings — the
     * LSH-bucketed scale path for vector similarity (vs [[ivfTopK]]'s
     * cluster pruning): band t of `bands` hashes `bitsPerBand` projection
@@ -312,18 +322,8 @@ object Similarity {
     * keys stay one LONG). Measured on staged replicas: at 10× rows,
     * 6→10 bits cuts candidate work ~16× with recall at the threshold
     * unchanged by the banding analysis above.
-    */
-  /** Production band-key width for a corpus of `n` vectors: keeps
-    * expected bucket occupancy ~8 (candidates O(N) per band). ceil(log₂
-    * n) − 3, in [4, 48] — the key stays one LONG with headroom, and the
-    * upper clamp binds only past 2^51 vectors.
-    */
-  def srpAutoBits(n: Long): Int = {
-    val ceilLog2 = 64 - java.lang.Long.numberOfLeadingZeros(math.max(1L, n - 1))
-    math.max(4, math.min(48, ceilLog2 - 3))
-  }
-
-  /** `bitsPerBand <= 0` (the default) auto-sizes the band-key width to
+    *
+    * `bitsPerBand <= 0` (the default) auto-sizes the band-key width to
     * [[srpAutoBits]] of a cheap corpus count — the production sizing law
     * (bits ≈ log₂(N) − 3, ~8 vectors/bucket) applies by DEFAULT, so
     * pointing this at a 10⁹-vector corpus without tuning gets ~27-bit

@@ -681,25 +681,6 @@ object Sketches {
     // path). The per-day arrays cannot carry the law themselves: days
     // with < k distinct values store narrow arrays, so "widest stored
     // array" under-reports the build k.
-    //
-    // Sidecar INIT on a non-empty legacy (pre-sidecar) table is the one
-    // place a wrong k could be enshrined for good: a first post-upgrade
-    // append at k' < build-k would record k' and thereafter ENFORCE the
-    // truncating width, defeating the legacy widest-array fallback the
-    // readers still carry. Cross-check against the stored evidence
-    // before writing: any array wider than the claimed k is proof the
-    // claim is wrong. (k ≥ widest can still over-claim an under-filled
-    // legacy store — undetectable from data, stated at requireKmvK.)
-    if (StoreSidecar.read(spark, table, Seq("k", "saltBuckets")).isEmpty
-        && ManifestStore.hasData(spark, table)) {
-      val widest = ManifestStore.read(spark, table)
-        .agg(max(size(col("mins"))).as("w")).collect()(0).getInt(0)
-      require(k >= widest,
-        s"kmvAppendDay: $table is a legacy (pre-sidecar) store holding mins " +
-          s"arrays up to width $widest, but this call claims k=$k — recording " +
-          "the smaller k would enshrine a truncating geometry; call with the " +
-          "store's true build k")
-    }
     StoreSidecar.requireOrInit(spark, table, Seq(
       "k" -> k.toLong, "saltBuckets" -> saltBuckets.toLong), "Sketches.kmv")
     val mins = kmvMins(df, groupCol, valueCol, k, saltBuckets)
@@ -715,29 +696,11 @@ object Sketches {
     * fewer than k within the folded days — so it survives the fold
     * (the same pigeonhole that makes [[kmvMinsFromStore]]'s read
     * exact). Idempotent (re-folding the epoch row reproduces it). `k`
-    * must be the store's build k: a smaller fold width would DROP mins
-    * later reads still need — guarded best-effort against the widest
-    * stored array, and by contract. KMV has no forget (mins cannot be
-    * un-seen, x148's documented limit) — purely the metadata diet.
+    * must be the store's build k (the sidecar's): a smaller fold width
+    * would DROP mins later reads still need. KMV has no forget (mins
+    * cannot be un-seen, x148's documented limit) — purely the metadata
+    * diet.
     */
-  /** The store's build `k` from the geometry sidecar, REQUIREd equal to
-    * the caller's: a fold or read at a different k silently truncates
-    * the sketch (narrow per-day arrays defeat any best-effort "widest
-    * stored array" probe — build k=16 over days of ≤ 8 mins each passes
-    * that guard at fold k=8, and the truncated union then reads back as
-    * an EXACT count). Stores written before the sidecar existed have no
-    * file; for them the legacy widest-array guard below still applies.
-    */
-  private def requireKmvK(
-      spark: org.apache.spark.sql.SparkSession,
-      table: String, k: Int, op: String): Unit =
-    StoreSidecar.read(spark, table, Seq("k")).foreach { got =>
-      require(got("k") == k.toLong,
-        s"$op: $table was built with k=${got("k")} but this call uses k=$k — " +
-          "a width mismatch silently truncates the sketch or mislabels " +
-          "estimates as exact")
-    }
-
   def kmvCompact(
       spark: org.apache.spark.sql.SparkSession,
       table: String,
@@ -750,15 +713,10 @@ object Sketches {
     ManifestStore.requireEpochTag("kmvCompact", epochDay)
     require(days.nonEmpty && !days.contains(epochDay),
       "kmvCompact: days must be non-empty and not contain the epoch tag")
-    requireKmvK(spark, table, k, "kmvCompact")
+    StoreSidecar.require(spark, table, Seq("k" -> k.toLong), "kmvCompact")
     val doomedDays = (days :+ epochDay).distinct
     val cells = ManifestStore.read(spark, table)
       .filter(col("day").isin(doomedDays: _*))
-    val widest = cells.agg(coalesce(max(size(col("mins"))), lit(0)))
-      .head().getInt(0)
-    require(k >= widest,
-      s"kmvCompact: fold width k=$k is narrower than a stored sketch ($widest) — " +
-        "the fold would silently drop mins later reads need")
     val epoch = cells.groupBy(col(groupCol))
       .agg(slice(array_sort(array_distinct(flatten(collect_list(col("mins"))))), 1, k)
         .as("mins"))
@@ -775,7 +733,7 @@ object Sketches {
       groupCol: String,
       k: Int = 64): DataFrame = {
     import graft.sources.ManifestStore
-    requireKmvK(spark, table, k, "kmvMinsFromStore")
+    StoreSidecar.require(spark, table, Seq("k" -> k.toLong), "kmvMinsFromStore")
     ManifestStore.read(spark, table)
       .groupBy(col(groupCol))
       .agg(slice(array_sort(array_distinct(flatten(collect_list(col("mins"))))), 1, k)
@@ -846,7 +804,9 @@ object Sketches {
     // ledger). A generic compactDays over these tables would silently
     // loosen every certified threshold — the sidecar tag makes it
     // refuse instead (see ManifestStore.compactDays).
-    hhTagNoFold(spark, table)
+    for (sub <- Seq("totals", "hh"))
+      StoreSidecar.requireOrInit(spark, s"$table/$sub",
+        Seq("no_epoch_fold" -> 1L), "Sketches.hh")
     // totals first, summary second; a crash between the two commits
     // leaves the day sets diverging, which hhFromStore REFUSES loudly
     // (the kth bound only holds for a committed summary) — replaying
@@ -870,21 +830,6 @@ object Sketches {
     * no-ops on absent days). `epoch:` days cannot exist here (the
     * store refuses folding wholesale), so any day name is prunable.
     */
-  /** Install the `no_epoch_fold` tag on both hh sub-tables — run by
-    * every append, read, and prune, so a store created before the tag
-    * existed gains the compactDays refusal on its first touch by
-    * upgraded code (the legacy net: without this, a pre-tag store could
-    * be "successfully" folded once, silently loosening every certified
-    * bound).
-    */
-  private def hhTagNoFold(
-      spark: org.apache.spark.sql.SparkSession, table: String): Unit = {
-    StoreSidecar.requireOrInit(spark, s"$table/totals",
-      Seq("no_epoch_fold" -> 1L), "Sketches.hh")
-    StoreSidecar.requireOrInit(spark, s"$table/hh",
-      Seq("no_epoch_fold" -> 1L), "Sketches.hh")
-  }
-
   def hhPruneDays(
       spark: org.apache.spark.sql.SparkSession,
       table: String,
@@ -892,7 +837,6 @@ object Sketches {
     import graft.sources.ManifestStore
     import spark.implicits._
     require(days.nonEmpty, "hhPruneDays: no days to prune")
-    hhTagNoFold(spark, table)
     val doomed = days.toDF("day")
     ManifestStore.delete(spark, s"$table/hh", doomed, Seq("day"), Seq("day"))
     ManifestStore.delete(spark, s"$table/totals", doomed, Seq("day"), Seq("day"))
@@ -923,7 +867,6 @@ object Sketches {
       day: String,
       table: String,
       m: Int = 256): Unit = {
-    hhTagNoFold(spark, table)
     val any = !scrubbed.select(col(valueCol).cast("string").as("v"))
       .filter(col("v").isNotNull).head(1).isEmpty
     if (any) hhAppendDay(spark, scrubbed, valueCol, day, table, m)
@@ -959,7 +902,6 @@ object Sketches {
     import graft.sources.ManifestStore
     import org.apache.spark.sql.expressions.Window
     require(days.nonEmpty, "hhForgetDays: no days to forget")
-    hhTagNoFold(spark, table)
     val counts = Dedup.materialize(
       scrubbed.select(col(dayCol).cast("string").as("day"),
           col(valueCol).cast("string").as("v"))
@@ -1003,7 +945,6 @@ object Sketches {
       minFractionDen: Long): DataFrame = {
     import graft.sources.ManifestStore
     require(minFractionDen >= 1L, s"hhFromStore: minFractionDen=$minFractionDen")
-    hhTagNoFold(spark, table) // legacy net: first read installs the tag
     val hh = ManifestStore.read(spark, s"$table/hh")
     val tot = ManifestStore.read(spark, s"$table/totals")
     // torn-window fence: a day in one table but not the other means an

@@ -5,14 +5,18 @@ import org.apache.spark.sql.SparkSession
 import graft.sources.Failpoints
 
 /** The `_graft_geometry.json` sidecar shared by every maintained store
-  * ([[DedupStores]], [[VectorStore]], [[ClusterStore]]): a tiny
-  * flat-integer JSON at the table root — outside `manifests/`/
-  * `commits/`, so ManifestStore's reads and vacuum never touch it —
-  * recording the build-time geometry that later probes/appends must
-  * match. Each store keeps its OWN mismatch policy (lenient-if-missing,
-  * must-exist, …); this object holds the one copy of the IO + parse so
-  * a fix to sidecar handling lands everywhere at once. Every writer
-  * reports its file as a durable step to [[graft.sources.Failpoints]].
+  * ([[DedupStores]], [[VectorStore]], [[ClusterStore]], [[MediaStore]],
+  * …): a tiny flat-integer JSON at the table root — outside
+  * `manifests/`/`commits/`, so ManifestStore's reads and vacuum never
+  * touch it — recording the build-time geometry that later
+  * probes/appends must match. A store checks it through one of two
+  * policies, [[requireOrInit]] (record on first touch, then require an
+  * exact match) or [[require]] (must exist); DedupStores'
+  * validate-if-present probe/append check is the one remaining
+  * exception. This object holds the one copy of the IO, parse and
+  * compare loop, so a fix to sidecar handling lands everywhere at once.
+  * Every writer reports its file as a durable step to
+  * [[graft.sources.Failpoints]].
   */
 private[graft] object StoreSidecar {
 
@@ -75,13 +79,10 @@ private[graft] object StoreSidecar {
     if (fs.exists(p)) { fs.delete(p, false); Failpoints.step(p.toString) }
   }
 
-  /** The require-or-init policy most stores share (IndexStore,
-    * MediaStore, BenchRegistry): first touch on a fresh table RECORDS
-    * the geometry; every later touch REQUIRES an exact match and fails
-    * loudly otherwise — one copy of the compare loop so the stores
-    * cannot subtly diverge. (DedupStores keeps its own
-    * validate-if-present flavor: its probe validates a field SUBSET
-    * and must never initialize a partial sidecar.)
+  /** The require-or-init policy (IndexStore, ViewStore, MediaStore,
+    * BenchRegistry, SampleStore, kmv, hh): first touch on a fresh table
+    * RECORDS the geometry; every later touch REQUIREs an exact match and
+    * fails loudly otherwise.
     */
   def requireOrInit(
       spark: SparkSession,
@@ -89,14 +90,41 @@ private[graft] object StoreSidecar {
       want: Seq[(String, Long)],
       store: String): Map[String, Long] =
     read(spark, root, want.map(_._1)) match {
-      case Some(got) =>
-        for ((k, v) <- want)
-          require(got(k) == v,
-            s"$store: $root was built with $k=${got(k)} but this call uses $k=$v — " +
-              "a geometry mismatch silently corrupts reads or recall")
-        got
+      case Some(got) => matching(root, got, want, store)
       case None =>
         write(spark, root, want)
         want.toMap
     }
+
+  /** The must-exist policy: the recorded values of `keys`, failing
+    * loudly when the sidecar is absent — the store was never built, its
+    * build did not complete, or `root` is not this store's table. A
+    * guess in its place could let a mismatched geometry corrupt reads.
+    */
+  def require(
+      spark: SparkSession,
+      root: String,
+      keys: Seq[String],
+      store: String): Map[String, Long] =
+    read(spark, root, keys).getOrElse(throw new IllegalStateException(
+      s"$store: $root has no geometry sidecar — build the store first " +
+        "(or this is not its table)"))
+
+  /** [[require]], then REQUIRE `want` to match the recorded values exactly. */
+  def require(
+      spark: SparkSession,
+      root: String,
+      want: Seq[(String, Long)],
+      store: String)(implicit d: DummyImplicit): Map[String, Long] =
+    matching(root, require(spark, root, want.map(_._1), store), want, store)
+
+  private def matching(
+      root: String, got: Map[String, Long], want: Seq[(String, Long)],
+      store: String): Map[String, Long] = {
+    for ((k, v) <- want)
+      Predef.require(got(k) == v,
+        s"$store: $root was built with $k=${got(k)} but this call uses $k=$v — " +
+          "a geometry mismatch silently corrupts reads or recall")
+    got
+  }
 }

@@ -52,34 +52,22 @@ import graft.sources.ManifestStore
   */
 object VectorStore {
 
-  private case class Geometry(dim: Int, m: Int, k: Int, stride: Long, trainIters: Int)
+  private case class Geometry(dim: Int, m: Int, k: Int, stride: Long, trainIters: Int) {
+    def fields: Seq[(String, Long)] = Seq(
+      "dim" -> dim.toLong, "m" -> m.toLong, "k" -> k.toLong,
+      "stride" -> stride, "iters" -> trainIters.toLong)
+  }
 
   private def writeGeometry(spark: SparkSession, root: String, g: Geometry): Unit =
-    StoreSidecar.write(spark, root, Seq(
-      "dim" -> g.dim.toLong, "m" -> g.m.toLong, "k" -> g.k.toLong,
-      "stride" -> g.stride, "iters" -> g.trainIters.toLong))
+    StoreSidecar.write(spark, root, g.fields)
 
-  /** Validate the sidecar. `mustExist = true` (probe/append) makes a
-    * MISSING sidecar a hard error too: a build that crashed between its
-    * table writes would otherwise leave a store silently accepting
-    * geometry-mismatched appends — the exact corruption the sidecar
-    * exists to prevent.
+  /** Validate the sidecar (probe/append). A MISSING sidecar is a hard
+    * error too: a build that crashed between its table writes would
+    * otherwise leave a store silently accepting geometry-mismatched
+    * appends — the exact corruption the sidecar exists to prevent.
     */
-  private def requireGeometry(
-      spark: SparkSession, root: String, want: Geometry,
-      mustExist: Boolean = false): Unit =
-    StoreSidecar.read(spark, root, Seq("dim", "m", "k", "stride", "iters")) match {
-      case None =>
-        require(!mustExist,
-          s"VectorStore: $root has no geometry sidecar — the build did not " +
-            "complete (or this is not a VectorStore root); rebuild before use")
-      case Some(m) =>
-        val got = Geometry(m("dim").toInt, m("m").toInt, m("k").toInt, m("stride"),
-          m("iters").toInt)
-        require(got == want,
-          s"VectorStore: $root was built with $got but this call uses $want — " +
-            "appends against a different codebook silently corrupt ranking")
-    }
+  private def requireGeometry(spark: SparkSession, root: String, want: Geometry): Unit =
+    StoreSidecar.require(spark, root, want.fields, "VectorStore")
 
   /** Manifest txn key for the [[rebuild]] fence (the ClusterStore
     * .rebuildFromIndex pattern): the codebook table records the last
@@ -285,8 +273,7 @@ object VectorStore {
       stride: Long,
       trainIters: Int = 0,
       attrCols: Seq[String] = Nil): Unit = {
-    requireGeometry(spark, root, Geometry(dim, m, k, stride, trainIters),
-      mustExist = true)
+    requireGeometry(spark, root, Geometry(dim, m, k, stride, trainIters))
     requireNoOpenRebuild(spark, root)
     // an attrs-bearing store must receive attrs with every append — an
     // increment without them would silently vanish from every filtered
@@ -317,10 +304,9 @@ object VectorStore {
     * .delete]] privacy primitive applied to the vector side): remove
     * `ids`' code rows and their assignment rows, touching O(doomed ids'
     * buckets + their centroid partitions) — never a codes scan. The
-    * id→centroid lookup probes the `assign` twin's id-hash buckets
-    * (backfilled in one last full scan for stores built before the twin
-    * existed), then the codes delete is keyed (vec_id) and
-    * partition-pruned to exactly the doomed assignments' centroids.
+    * id→centroid lookup probes the `assign` twin's id-hash buckets,
+    * then the codes delete is keyed (vec_id) and partition-pruned to
+    * exactly the doomed assignments' centroids.
     *
     * Commit order: codes first (the data the subject asked to erase),
     * twin second; a crash between them leaves a twin row pointing at an
@@ -340,12 +326,6 @@ object VectorStore {
     val doomed = Dedup.materialize(
       ids.select(col(idCol).as("vec_id")).distinct())
     if (doomed.head(1).isEmpty) return
-    if (!ManifestStore.exists(spark, assignT(root)))
-      ManifestStore.write(spark,
-        ManifestStore.read(spark, codesT(root))
-          .select(col("vec_id"), col("centroid_id")).distinct()
-          .withColumn("ptid", idBucket(col("vec_id"))),
-        assignT(root), "ptid")
     val asg = Dedup.materialize(
       assignProbe(spark, root, doomed).select(col("vec_id"), col("centroid_id")))
     if (!asg.head(1).isEmpty) {
@@ -465,8 +445,7 @@ object VectorStore {
       topK: Int,
       trainIters: Int,
       attrPred: Option[org.apache.spark.sql.Column]): DataFrame = {
-    requireGeometry(spark, root, Geometry(dim, m, k, stride, trainIters),
-      mustExist = true)
+    requireGeometry(spark, root, Geometry(dim, m, k, stride, trainIters))
     requireNoOpenRebuild(spark, root)
     val cents = ManifestStore.read(spark, centroidsT(root))
       .select(col("centroid_id").as(idCol), col("cv").as(vecCol))

@@ -48,15 +48,9 @@ object ViewStore {
   private def bucket(c: org.apache.spark.sql.Column, partitions: Int) =
     pmod(xxhash64(c.cast("string")), lit(partitions.toLong))
 
-  private def requireGeometry(spark: SparkSession, root: String, partitions: Int): Unit = {
-    val got = StoreSidecar.read(spark, root, Seq("partitions"))
-      .map(_("partitions").toInt)
-    if (got.isEmpty)
-      StoreSidecar.write(spark, root, Seq("partitions" -> partitions.toLong))
-    else require(got.contains(partitions),
-      s"ViewStore: $root was built with partitions=${got.get}, not $partitions — " +
-        "a bucket mismatch breaks every pruned read and merge")
-  }
+  /** A bucket mismatch breaks every pruned read and merge. */
+  private def requireGeometry(spark: SparkSession, root: String, partitions: Int): Unit =
+    StoreSidecar.requireOrInit(spark, root, Seq("partitions" -> partitions.toLong), "ViewStore")
 
   /** Fold one day's increments of both sides into the bases and the
     * view. Either delta may be empty (a B-only day maintains the view

@@ -24,9 +24,6 @@ object OrderedOps {
       .drop("__break_at")
   }
 
-  /** `continue_on` row skip (reference :375-376, :383-384): plain filter. */
-  def continueOn(df: DataFrame, pred: Column): DataFrame = df.filter(!pred)
-
   /** Header/footer broadcast merge (reference :233-247): attach the single
     * first/last row (by `orderCol`) of `edge` onto every row of `df` —
     * a one-row broadcast cross join, never a shuffle of `df`.

@@ -324,6 +324,13 @@ object BloomIndex {
       "hashes" -> meta("hashes")))
   }
 
+  /** The conjunctive token residual — the ONE definition [[readContainsAll]]
+    * and [[SkippingIndexes]]' `HasTokens` predicate share, so the
+    * residual can never drift from the refresh's tokenization.
+    */
+  private[sources] def tokensResidual(textCol: String, terms: Seq[String]) =
+    terms.map(t => array_contains(tokenArr(col(textCol)), t)).reduce(_ && _)
+
   /** Rows whose token set contains EVERY term in `terms` — the keyword
     * sweep, scanning only partitions whose token bloom might contain
     * ALL of them when the index is fresh (a doc holding every term
@@ -332,13 +339,6 @@ object BloomIndex {
     * otherwise. The conjunctive residual ALWAYS applies; results never
     * depend on the blooms.
     */
-  /** The conjunctive token residual — the ONE definition [[readContainsAll]]
-    * and [[SkippingIndexes]]' `HasTokens` predicate share, so the
-    * residual can never drift from the refresh's tokenization.
-    */
-  private[sources] def tokensResidual(textCol: String, terms: Seq[String]) =
-    terms.map(t => array_contains(tokenArr(col(textCol)), t)).reduce(_ && _)
-
   def readContainsAll(
       spark: SparkSession,
       table: String,

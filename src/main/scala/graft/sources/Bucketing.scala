@@ -22,10 +22,4 @@ object Bucketing {
     val w = df.write.mode("overwrite").bucketBy(numBuckets, bucketCol)
     sortCol.fold(w)(s => w.sortBy(s)).format("parquet").saveAsTable(table)
   }
-
-  /** True when the executed plan of `df` contains no shuffle exchange —
-    * the property bucketed co-located joins buy.
-    */
-  def isShuffleFree(df: DataFrame): Boolean =
-    !df.queryExecution.executedPlan.toString.contains("Exchange hashpartitioning")
 }

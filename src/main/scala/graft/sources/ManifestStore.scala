@@ -61,8 +61,8 @@ object ManifestStore {
   /** `partitions` maps RELATIVE leaf partition paths as Spark wrote them
     * (single level `c=v`, or nested `a=1/b=2` for multi-level
     * partitioning) to the commit root owning that leaf's current version.
-    */
-  /** `txn` records, per logical writer id, the last streaming batch id
+    *
+    * `txn` records, per logical writer id, the last streaming batch id
     * whose merge this snapshot already contains — the public Delta
     * SetTransaction idea. It rides every subsequent manifest forward, so
     * a replayed batch can be recognized and skipped (exactly-once
@@ -72,12 +72,6 @@ object ManifestStore {
       version: Int, partitionCols: Seq[String], commit: String, partitions: Map[String, String],
       txn: Map[String, Long] = Map.empty)
 
-  /** Resolve the newest READABLE manifest: versions are tried newest-first
-    * and one that fails to parse is skipped — a torn file from an
-    * in-flight or crashed committer (the create-exclusive protocol writes
-    * content directly into the claim file) is simply not yet visible,
-    * which is the correct snapshot semantics.
-    */
   /** Version numbers present in `_manifests`, newest first. Stray files
     * that merely LOOK like manifests (e.g. a hand-dropped `v2-backup
     * .json`) are skipped, not parsed into a crash.
@@ -126,6 +120,12 @@ object ManifestStore {
       .map { v => metaOps.incrementAndGet(); scala.util.Try(readManifest(fs, path, v)) }
       .collectFirst { case scala.util.Success(m) => m }
 
+  /** Resolve the newest READABLE manifest: versions are tried newest-first
+    * and one that fails to parse is skipped — a torn file from an
+    * in-flight or crashed committer (the create-exclusive protocol writes
+    * content directly into the claim file) is simply not yet visible,
+    * which is the correct snapshot semantics.
+    */
   private def latest(fs: FileSystem, path: String): Option[Manifest] = {
     val hinted = readHint(fs, path).flatMap { h =>
       // commits are sequential, so probing forward from the hint finds
@@ -164,14 +164,6 @@ object ManifestStore {
       version,
       (j \ "partitionCols") match {
         case JArray(vs) => vs.map(str)
-        // fallback for manifests written before multi-level support
-        // (scalar "partitionCol") — without it a pre-existing table looks
-        // manifest-less and its live manifest would be "healed" away as a
-        // torn claim
-        case JNothing => (j \ "partitionCol") match {
-          case JString(c) => Seq(c)
-          case other => sys.error(s"manifest $p: partitionCol(s) = $other")
-        }
         case other => sys.error(s"manifest $p: partitionCols = $other")
       },
       str(j \ "commit"),
@@ -180,7 +172,7 @@ object ManifestStore {
         case other => sys.error(s"manifest $p: partitions = $other")
       },
       (j \ "txn") match {
-        // absent on pre-fencing manifests and batch-written tables
+        // absent on batch-written tables
         case JNothing => Map.empty
         case JObject(fields) => fields.map {
           case (k, JInt(v)) => k -> v.toLong
@@ -189,6 +181,20 @@ object ManifestStore {
         }.toMap
         case other => sys.error(s"manifest $p: txn = $other")
       })
+  }
+
+  /** How long an unreadable claim file is presumed to belong to a LIVE
+    * committer before commitManifest may reclaim it inline. A manifest is
+    * under a kilobyte; a committer that has not finished writing one in
+    * 15 minutes is dead. Must stay well below any vacuum retention.
+    */
+  private[sources] val TornClaimTimeoutMillis: Long = 15L * 60 * 1000
+
+  private def isClaimConflict(e: java.io.IOException): Boolean = e match {
+    case _: org.apache.hadoop.fs.FileAlreadyExistsException => true
+    case _: java.nio.file.FileAlreadyExistsException => true
+    // RawLocalFileSystem wraps the condition in a plain IOException
+    case other => other.getMessage != null && other.getMessage.contains("already exists")
   }
 
   /** Publish `m` as version `m.version` by CREATE-EXCLUSIVE on the
@@ -204,20 +210,6 @@ object ManifestStore {
     * window); the intended deployment is single-writer-per-table with
     * optimistic conflict DETECTION, not a lock service.
     */
-  /** How long an unreadable claim file is presumed to belong to a LIVE
-    * committer before commitManifest may reclaim it inline. A manifest is
-    * under a kilobyte; a committer that has not finished writing one in
-    * 15 minutes is dead. Must stay well below any vacuum retention.
-    */
-  private[sources] val TornClaimTimeoutMillis: Long = 15L * 60 * 1000
-
-  private def isClaimConflict(e: java.io.IOException): Boolean = e match {
-    case _: org.apache.hadoop.fs.FileAlreadyExistsException => true
-    case _: java.nio.file.FileAlreadyExistsException => true
-    // RawLocalFileSystem wraps the condition in a plain IOException
-    case other => other.getMessage != null && other.getMessage.contains("already exists")
-  }
-
   private def commitManifest(fs: FileSystem, path: String, m: Manifest): Unit = {
     fs.mkdirs(manifestDir(path))
     val dst = versionFile(path, m.version)
@@ -835,30 +827,6 @@ object ManifestStore {
           "per-day read-time guarantees (e.g. the heavy-hitter kth bounds) " +
           "that a group fold would silently loosen; this store must keep " +
           "its day granularity (prune old days by retention policy instead)")
-    // legacy-net backstop for the one store family the tag protects: an
-    // hh store written BEFORE the tag existed has no sidecar at all, and
-    // the tag-on-first-touch net only closes once upgraded code touches
-    // it — a generic compactDays arriving first would still fold it.
-    // Its structure is unmistakable though: an `hh`/`totals` sub-table
-    // with its sibling sub-table beside it. Refuse that shape when no
-    // sidecar says otherwise.
-    // (locally, not a bare block: a bare `{` after the throw above would
-    // parse as an anonymous subclass body of the exception)
-    locally {
-      val p = new Path(path)
-      val leaf = p.getName
-      if ((leaf == "hh" || leaf == "totals") && p.getParent != null
-          && graft.ext.StoreSidecar.read(spark, path, Seq("no_epoch_fold")).isEmpty) {
-        val sibling = new Path(p.getParent, if (leaf == "hh") "totals" else "hh")
-        if (fsFor(spark, p).exists(new Path(sibling, "_manifests")))
-          throw new IllegalStateException(
-            s"compactDays: $path looks like a pre-tag heavy-hitter sub-table " +
-              s"(sibling ${sibling.getName}/ table present, no sidecar) — " +
-              "hh day summaries are not epoch-foldable (the TA/TPUT bound " +
-              "needs per-day silence); touch the store with upgraded hh code " +
-              "to install its tag, or prune old days by retention instead")
-      }
-    }
     val aggs = sumCols.map(c => sum(col(c)).as(c)) ++ maxCols.map(c => max(col(c)).as(c))
     val doomedDays = (foldDays :+ epochDay).distinct
     val cur = read(spark, path)

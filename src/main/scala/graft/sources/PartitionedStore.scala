@@ -17,13 +17,6 @@ object PartitionedStore {
   def read(spark: SparkSession, path: String): DataFrame =
     spark.read.parquet(path)
 
-  /** Compact a partitioned dataset in place: rewrite each partition's
-    * many small files into ~`targetFiles` per partition. The small-files
-    * problem is the classic failure mode of incremental partitioned
-    * ingest (each micro-batch appends a file per partition per task);
-    * compaction restores scan efficiency. Rewrites through a temp
-    * directory so a crash mid-compact never truncates the source.
-    */
   /** The filesystem OWNING `p` — never `FileSystem.get(conf)`, which
     * returns the DEFAULT filesystem and would aim delete/rename at the
     * wrong store when the table lives on s3a/abfs but the default FS is
@@ -32,6 +25,13 @@ object PartitionedStore {
   private def fsFor(spark: SparkSession, p: org.apache.hadoop.fs.Path) =
     p.getFileSystem(spark.sessionState.newHadoopConf())
 
+  /** Compact a partitioned dataset in place: rewrite each partition's
+    * many small files into ~`targetFiles` per partition. The small-files
+    * problem is the classic failure mode of incremental partitioned
+    * ingest (each micro-batch appends a file per partition per task);
+    * compaction restores scan efficiency. Rewrites through a temp
+    * directory so a crash mid-compact never truncates the source.
+    */
   def compact(spark: SparkSession, path: String, partitionCols: Seq[String], targetFiles: Int = 1): Unit = {
     val tmp = path + "__compact_tmp"
     spark.read.parquet(path)

@@ -108,8 +108,8 @@ object Specs {
   /** Connector resource (reference etl_type='rpc', cubicerpetl.py:314-328):
     * a named model/table plus an Odoo-style domain filter that is pushed
     * to the source, and an explicit field list (projection pushdown).
-    */
-  /** `ids`/`idField` model the reference's template mode
+    *
+    * `ids`/`idField` model the reference's template mode
     * (`template_run_from` ∈ {single, multiple}, cubicerpetl.py:321-324):
     * the job supplies explicit `model_ids` and the extract reads exactly
     * those records instead of searching a domain.

@@ -165,25 +165,6 @@ class ClusterStoreSpec extends SparkSpec {
     assert(got == Seq((1L, 1L), (2L, 1L), (3L, 1L)), s"got=$got")
   }
 
-  test("pre-twin stores are backfilled once, then appends work pruned") {
-    val root = fresh()
-    ClusterStore.build(spark, Seq((2L, 3L), (20L, 21L)).toDF("id_a", "id_b"), root, 4)
-    // simulate a store built before the twin index existed
-    val fs = org.apache.hadoop.fs.FileSystem.get(
-      spark.sessionState.newHadoopConf())
-    fs.delete(new org.apache.hadoop.fs.Path(s"$root/_idindex"), true)
-    ClusterStore.appendPairs(spark, Seq((1L, 2L)).toDF("id_a", "id_b"), root, 4)
-    val got = ClusterStore.readLabels(spark, root)
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    assert(got == Set((1L, 1L), (2L, 1L), (3L, 1L), (20L, 20L), (21L, 20L)))
-    // the backfilled twin now serves later appends
-    ClusterStore.appendPairs(spark, Seq((19L, 20L)).toDF("id_a", "id_b"), root, 4)
-    val got2 = ClusterStore.readLabels(spark, root)
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    assert(got2 == Set((1L, 1L), (2L, 1L), (3L, 1L),
-      (19L, 19L), (20L, 19L), (21L, 19L)))
-  }
-
   test("replay fence: covers the delete leg; a completed append opens the gate") {
     // a day whose relabel leaves stale copies OUTSIDE the merged
     // buckets (willDelete): the completion record rides the DELETE

@@ -222,32 +222,6 @@ class EpochFoldSpec extends SparkSpec {
     assert(Sketches.hhFromStore(spark, t, minFractionDen = 10L).count() >= 0L)
   }
 
-  test("pre-tag hh store: the structural backstop refuses the fold before any touch") {
-    // the tag-on-first-touch legacy net only closes once upgraded hh
-    // code touches the store — a generic compactDays arriving FIRST
-    // must still refuse, on structure alone (hh/totals siblings, no
-    // sidecar)
-    val t = fresh("hhpre")
-    val vals = (1 to 200).map(i => (s"v${i % 11}", i % 2)).toDF("v", "day")
-    (0 until 2).foreach { d =>
-      Sketches.hhAppendDay(spark, vals.filter(col("day") === d).select(col("v")),
-        "v", s"d$d", t, m = 4)
-    }
-    val conf = spark.sessionState.newHadoopConf()
-    for (sub <- Seq("hh", "totals")) {
-      val p = new org.apache.hadoop.fs.Path(s"$t/$sub", "_graft_geometry.json")
-      assert(p.getFileSystem(conf).delete(p, false), s"fixture: no sidecar at $sub")
-    }
-    for (sub <- Seq("hh", "totals")) {
-      val e = intercept[IllegalStateException] {
-        ManifestStore.compactDays(spark, s"$t/$sub", "day",
-          groupCols = Seq("day"), sumCols = Seq("n"),
-          foldDays = Seq("d0", "d1"), epochDay = "epoch:01")
-      }
-      assert(e.getMessage.contains("heavy-hitter"), s"$sub: ${e.getMessage}")
-    }
-  }
-
   test("compactDays refuses a column spec that does not cover the table (strata guard)") {
     // a grouped vocab store folded WITHOUT its byCols would sum counts
     // across strata and write epoch rows missing the stratum column —
@@ -272,25 +246,5 @@ class EpochFoldSpec extends SparkSpec {
     val after = Bpe.vocabFromStore(spark, t, byCols = Seq("lang"))
       .orderBy("lang", "w").collect().map(_.toSeq).toSeq
     assert(after == before)
-  }
-
-  test("kmv legacy sidecar init cross-checks the claimed k against stored evidence") {
-    val t = fresh("kmvlegacy")
-    val vals = (1 to 60).map(i => ("g", s"v${i % 12}")).toDF("g", "v")
-    Sketches.kmvAppendDay(spark, vals, "g", "v", "d0", t, k = 16, saltBuckets = 4)
-    // simulate a pre-sidecar store
-    val conf = spark.sessionState.newHadoopConf()
-    val p = new org.apache.hadoop.fs.Path(t, "_graft_geometry.json")
-    assert(p.getFileSystem(conf).delete(p, false), "fixture: no sidecar")
-    // a first post-upgrade append claiming a SMALLER k than the stored
-    // arrays prove must refuse — recording it would enshrine a
-    // truncating geometry and defeat the legacy widest-array fallback
-    val e = intercept[IllegalArgumentException] {
-      Sketches.kmvAppendDay(spark, vals, "g", "v", "d1", t, k = 8, saltBuckets = 4)
-    }
-    assert(e.getMessage.contains("legacy"), e.getMessage)
-    // the true build k re-records the sidecar and appends fine
-    Sketches.kmvAppendDay(spark, vals, "g", "v", "d1", t, k = 16, saltBuckets = 4)
-    assert(graft.ext.StoreSidecar.read(spark, t, Seq("k")).exists(_("k") == 16L))
   }
 }

@@ -147,31 +147,6 @@ class HhStoreSpec extends SparkSpec {
     assert(Sketches.hhFromStore(spark, t, minFractionDen = 3L).count() == out.size)
   }
 
-  test("legacy net: a pre-tag store gains the no_epoch_fold refusal on first read") {
-    val t = fresh()
-    Sketches.hhAppendDay(spark, day("a" -> 10, "b" -> 5), "v", "d0", t, m = 2)
-    Sketches.hhAppendDay(spark, day("a" -> 8, "c" -> 6), "v", "d1", t, m = 2)
-    // simulate a store created before the tag existed: delete both
-    // sidecar files — compactDays would now fold it "successfully",
-    // silently loosening every certified bound
-    val conf = spark.sessionState.newHadoopConf()
-    for (sub <- Seq("hh", "totals")) {
-      val p = new org.apache.hadoop.fs.Path(s"$t/$sub", "_graft_geometry.json")
-      assert(p.getFileSystem(conf).delete(p, false), s"fixture: no sidecar at $sub")
-    }
-    // first read by upgraded code re-installs the tag...
-    Sketches.hhFromStore(spark, t, minFractionDen = 2L).count()
-    // ...and the fold refuses again on both sub-tables
-    for (sub <- Seq("hh", "totals")) {
-      val e = intercept[IllegalStateException] {
-        ManifestStore.compactDays(spark, s"$t/$sub", "day",
-          groupCols = Seq("day"), sumCols = Seq("n"),
-          foldDays = Seq("d0", "d1"), epochDay = "epoch:01")
-      }
-      assert(e.getMessage.contains("no_epoch_fold"), s"$sub: ${e.getMessage}")
-    }
-  }
-
   test("replaying a completed day replaces wholesale, never duplicates") {
     val t = fresh()
     Sketches.hhAppendDay(spark, day("a" -> 10, "b" -> 5), "v", "d0", t, m = 2)

@@ -194,39 +194,4 @@ class MediaStoreSpec extends SparkSpec {
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getInt(2))).toSet
     assert(got == Set((201L, 2L, 0)))
   }
-
-  test("band_v gate: pre-fix chunks=1 sidecars refuse loudly; chunks>=2 legacy upgrades in place") {
-    import graft.ext.StoreSidecar
-    // simulate a store written by pre-fix code: sidecar without band_v
-    def dropBandV(t: String, chunks: Int, partitions: Int): Unit =
-      StoreSidecar.write(spark, t, Seq(
-        "chunks" -> chunks.toLong, "partitions" -> partitions.toLong))
-    val t1 = fresh()
-    MediaStore.append(spark, blobs(store.take(4)), t1, chunks = 1, partitions = 4)
-    // fresh stores carry the layout version and keep working
-    assert(StoreSidecar.read(spark, t1, Seq("band_v")).exists(_("band_v") == 2L))
-    dropBandV(t1, 1, 4)
-    // on a pre-fix chunks=1 store every surface refuses: probes there
-    // would silently match nothing and forgets would prune the wrong
-    // buckets, leaving erased assets matchable (the silent privacy hole)
-    val ops: Seq[() => Any] = Seq(
-      () => MediaStore.probe(spark, blobs(twins), t1, maxDist = 0),
-      () => MediaStore.append(spark, blobs(store.drop(4)), t1,
-        chunks = 1, partitions = 4),
-      () => MediaStore.forget(spark, blobs(store.take(1)), t1),
-      () => MediaStore.forgetById(spark, Seq(1L).toDF("media_id"), "media_id", t1))
-    ops.foreach { op =>
-      val e = intercept[IllegalStateException](op())
-      assert(e.getMessage.contains("band_v") || e.getMessage.contains("pre-band_v"),
-        e.getMessage)
-    }
-    // chunks >= 2: the layout is identical across versions, so a legacy
-    // sidecar is stamped in place on first touch and reads are unchanged
-    val t2 = fresh()
-    MediaStore.append(spark, blobs(store.take(5)), t2, chunks = 4, partitions = 4)
-    dropBandV(t2, 4, 4)
-    val got2 = probeSet(t2, 3)
-    assert(got2 == oneShot(3, store.take(5)))
-    assert(StoreSidecar.read(spark, t2, Seq("band_v")).exists(_("band_v") == 2L))
-  }
 }

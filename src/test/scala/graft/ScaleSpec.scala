@@ -432,29 +432,14 @@ class ScaleSpec extends SparkSpec {
     assert(after == got)
   }
 
-  test("manifest store: legacy scalar manifests readable; empty batch is a no-op") {
+  test("manifest store: an empty batch is a no-op; a real merge then commits") {
     import graft.sources.ManifestStore
-    val path = java.nio.file.Files.createTempDirectory(java.nio.file.Paths.get(graft.Scratch.root), "graft_mstore_compat").toString + "/t"
+    val path = java.nio.file.Files.createTempDirectory(java.nio.file.Paths.get(graft.Scratch.root), "graft_mstore_empty").toString + "/t"
     val v1 = Seq((1L, "a", 10), (2L, "b", 20)).toDF("k", "v", "p")
     ManifestStore.write(spark, v1, path, "p")
-    // rewrite the manifest in the PRE-multi-level format (scalar
-    // "partitionCol") — an existing table must stay readable, not get
-    // its live manifest 'healed' away as a torn claim
-    val fs = org.apache.hadoop.fs.FileSystem.get(spark.sparkContext.hadoopConfiguration)
-    val mf = new org.apache.hadoop.fs.Path(path, "_manifests/v00000001.json")
-    val txt = {
-      val in = fs.open(mf)
-      try scala.io.Source.fromInputStream(in, "UTF-8").mkString finally in.close()
-    }
-    assert(txt.contains("\"partitionCols\":[\"p\"]"))
-    val legacy = txt.replace("\"partitionCols\":[\"p\"]", "\"partitionCol\":\"p\"")
-    val out = fs.create(mf, true)
-    out.write(legacy.getBytes("UTF-8")); out.close()
-    assert(ManifestStore.read(spark, path).count() == 2)
     // an empty merge batch is a no-op: no commit, no version bump
     ManifestStore.merge(spark, path, v1.filter(lit(false)), Seq("k"), Seq("p"))
     assert(ManifestStore.versions(spark, path) == Seq(1))
-    // and a real merge on the legacy table still works
     ManifestStore.merge(spark, path, Seq((3L, "c", 10)).toDF("k", "v", "p"), Seq("k"), "p")
     assert(ManifestStore.read(spark, path).count() == 3)
   }

@@ -5,7 +5,7 @@ import graft.ext.VectorStore
 import graft.sources.{Failpoints, ManifestStore}
 
 /** Right-to-be-forgotten over the maintained ANN index (x157):
-  * pruned twin lookup, crash-path convergence, legacy backfill.
+  * pruned twin lookup, crash-path convergence.
   */
 class VectorForgetSpec extends SparkSpec {
   import spark.implicits._
@@ -65,21 +65,6 @@ class VectorForgetSpec extends SparkSpec {
       .join(doomed, Seq("vec_id"), "left_semi").count() == 0L)
     assert(ManifestStore.read(spark, s"$root/assign")
       .join(doomed, Seq("vec_id"), "left_semi").count() == 0L)
-  }
-
-  test("legacy store without the twin: forget backfills it in one scan") {
-    val root = fresh()
-    buildStore(root)
-    // erase the twin — a store built before the assign table existed
-    val p = new org.apache.hadoop.fs.Path(s"$root/assign")
-    p.getFileSystem(spark.sessionState.newHadoopConf()).delete(p, true)
-    val doomed = Seq(9L).toDF("vec_id")
-    VectorStore.forget(spark, doomed, "vec_id", root)
-    assert(ManifestStore.read(spark, s"$root/codes")
-      .filter(col("vec_id") === 9L).count() == 0L)
-    // the backfilled twin now covers the SURVIVING corpus
-    val nAsg = ManifestStore.read(spark, s"$root/assign").count()
-    assert(nAsg == emb.count() - 1L)
   }
 
   private def probeSet(r: String, qs: org.apache.spark.sql.DataFrame) =

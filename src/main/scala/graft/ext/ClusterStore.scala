@@ -124,26 +124,30 @@ object ClusterStore {
     * ids — fail loudly instead (the [[DedupStores]] sidecar cure).
     */
   private def requireGeometry(spark: SparkSession, table: String, partitions: Int): Unit =
-    StoreSidecar.require(spark, table, Seq("partitions" -> partitions.toLong), "ClusterStore")
+    StoreSidecar.requireMatching(spark, table, Seq("partitions" -> partitions.toLong),
+      "ClusterStore")
 
   /** Initialize the store from a pair set: labels = min-member
     * components, written to BOTH tables — the main one partitioned by
     * the LABEL's hash bucket (pruned member retrieval), the twin by
-    * the ID's (pruned lookups).
+    * the ID's (pruned lookups). Twin first, as in [[rebuildFromIndex]];
+    * the sidecar goes LAST, so it marks a completed build: a build that
+    * crashes before it leaves a store every append/forget refuses in
+    * [[requireGeometry]], never one that relabels without its twin.
     */
   def build(
       spark: SparkSession,
       pairs: DataFrame,
       table: String,
       partitions: Int = 8): Unit = {
-    writeGeometry(spark, table, partitions)
     val labels = Dedup.materialize(Dedup.duplicateClusters(pairs))
-    ManifestStore.write(spark,
-      labels.withColumn("pt", bucket(col("label"), partitions)), table, "pt")
     ManifestStore.write(spark,
       labels.withColumn("prev_label", col("label"))
         .withColumn("ptid", bucket(col("id"), partitions)),
       twinTable(table), "ptid")
+    ManifestStore.write(spark,
+      labels.withColumn("pt", bucket(col("label"), partitions)), table, "pt")
+    writeGeometry(spark, table, partitions)
   }
 
   /** The partition-pruned twin probe: (id, label, prev_label) rows of

@@ -150,7 +150,7 @@ object Scd2Store {
   private def validateBuckets(
       spark: org.apache.spark.sql.SparkSession,
       table: String, buckets: Int, op: String): Unit =
-    StoreSidecar.require(spark, table, Seq("buckets" -> buckets.toLong), s"Scd2Store.$op")
+    StoreSidecar.requireMatching(spark, table, Seq("buckets" -> buckets.toLong), s"Scd2Store.$op")
 
   /** Whole-key erasure (the GDPR case): every version of every doomed
     * key leaves the store in ONE bucket-pruned keyed delete commit —

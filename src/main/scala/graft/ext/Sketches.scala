@@ -713,7 +713,7 @@ object Sketches {
     ManifestStore.requireEpochTag("kmvCompact", epochDay)
     require(days.nonEmpty && !days.contains(epochDay),
       "kmvCompact: days must be non-empty and not contain the epoch tag")
-    StoreSidecar.require(spark, table, Seq("k" -> k.toLong), "kmvCompact")
+    StoreSidecar.requireMatching(spark, table, Seq("k" -> k.toLong), "kmvCompact")
     val doomedDays = (days :+ epochDay).distinct
     val cells = ManifestStore.read(spark, table)
       .filter(col("day").isin(doomedDays: _*))
@@ -733,7 +733,7 @@ object Sketches {
       groupCol: String,
       k: Int = 64): DataFrame = {
     import graft.sources.ManifestStore
-    StoreSidecar.require(spark, table, Seq("k" -> k.toLong), "kmvMinsFromStore")
+    StoreSidecar.requireMatching(spark, table, Seq("k" -> k.toLong), "kmvMinsFromStore")
     ManifestStore.read(spark, table)
       .groupBy(col(groupCol))
       .agg(slice(array_sort(array_distinct(flatten(collect_list(col("mins"))))), 1, k)

@@ -11,7 +11,8 @@ import graft.sources.Failpoints
   * touch it — recording the build-time geometry that later
   * probes/appends must match. A store checks it through one of two
   * policies, [[requireOrInit]] (record on first touch, then require an
-  * exact match) or [[require]] (must exist); DedupStores'
+  * exact match) or [[require]] (must exist; [[requireMatching]] adds
+  * the exact match); DedupStores'
   * validate-if-present probe/append check is the one remaining
   * exception. This object holds the one copy of the IO, parse and
   * compare loop, so a fix to sidecar handling lands everywhere at once.
@@ -111,18 +112,18 @@ private[graft] object StoreSidecar {
         "(or this is not its table)"))
 
   /** [[require]], then REQUIRE `want` to match the recorded values exactly. */
-  def require(
+  def requireMatching(
       spark: SparkSession,
       root: String,
       want: Seq[(String, Long)],
-      store: String)(implicit d: DummyImplicit): Map[String, Long] =
+      store: String): Map[String, Long] =
     matching(root, require(spark, root, want.map(_._1), store), want, store)
 
   private def matching(
       root: String, got: Map[String, Long], want: Seq[(String, Long)],
       store: String): Map[String, Long] = {
-    for ((k, v) <- want)
-      Predef.require(got(k) == v,
+    for ((k, v) <- want if got(k) != v)
+      throw new IllegalArgumentException(
         s"$store: $root was built with $k=${got(k)} but this call uses $k=$v — " +
           "a geometry mismatch silently corrupts reads or recall")
     got

@@ -67,7 +67,7 @@ object VectorStore {
     * appends — the exact corruption the sidecar exists to prevent.
     */
   private def requireGeometry(spark: SparkSession, root: String, want: Geometry): Unit =
-    StoreSidecar.require(spark, root, want.fields, "VectorStore")
+    StoreSidecar.requireMatching(spark, root, want.fields, "VectorStore")
 
   /** Manifest txn key for the [[rebuild]] fence (the ClusterStore
     * .rebuildFromIndex pattern): the codebook table records the last

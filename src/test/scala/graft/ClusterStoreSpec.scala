@@ -239,6 +239,26 @@ class ClusterStoreSpec extends SparkSpec {
     }
   }
 
+  test("a crashed build leaves a store that appends and forgets refuse") {
+    // the sidecar is build's last step, so a crash after either table
+    // publish (twin first, then main) leaves no sidecar: an append must
+    // not relabel from the day's pairs alone, nor a forget do nothing
+    for (crashed <- Seq((r: String) => s"$r/_idindex", (r: String) => r)) {
+      val root = fresh()
+      Failpoints.crashAfter(crashed(root)) {
+        ClusterStore.build(spark, Seq((1L, 2L), (2L, 3L)).toDF("id_a", "id_b"), root, 4)
+      }
+      val e1 = intercept[IllegalStateException] {
+        ClusterStore.appendPairs(spark, Seq((3L, 4L)).toDF("id_a", "id_b"), root, 4)
+      }
+      assert(e1.getMessage.contains("no geometry sidecar"), e1.getMessage)
+      val e2 = intercept[IllegalStateException] {
+        ClusterStore.forget(spark, Seq(1L).toDF("id"), "id", root, 4)
+      }
+      assert(e2.getMessage.contains("no geometry sidecar"), e2.getMessage)
+    }
+  }
+
   // ---- rebuildFromIndex: the cure for forget's over-grouping ----
 
   /** Fixture: 3 exact-dup groups (identical text → Jaccard 1.0 pairs),

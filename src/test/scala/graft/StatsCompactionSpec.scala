@@ -188,7 +188,8 @@ class StatsCompactionSpec extends SparkSpec {
     assert(Sketches.kmvDistinctFromStore(spark, table, "grp", k = 16)
       .collect().map(r => (r.getString(0), r.getLong(1))).toSet == before)
     assert(ManifestStore.read(spark, table).count() == 2L)
-    // a narrower fold would drop mins later reads need — refused
+    // a narrower fold would drop mins later reads need — the sidecar's
+    // k check is the width guard that refuses it
     intercept[IllegalArgumentException] {
       Sketches.kmvCompact(spark, table, "grp", Seq("epoch:a"), "epoch:b", k = 8)
     }
@@ -199,10 +200,10 @@ class StatsCompactionSpec extends SparkSpec {
 
   test("kmv sidecar: narrow per-day arrays cannot launder a too-small fold k") {
     import graft.ext.Sketches
-    // the adversarial case the widest-array guard alone misses: build
-    // k=16 over days that each carry ≤ 8 distinct values, so every
-    // stored array is narrower than a k=8 fold — which would truncate
-    // the ≥ 8-wide UNION and then read back as an "exact" count
+    // the adversarial case for the sidecar's k check: build k=16 over
+    // days that each carry ≤ 8 distinct values, so no stored array is
+    // wider than a k=8 fold — which would truncate the ≥ 8-wide UNION
+    // and then read back as an "exact" count
     val rows = (1L to 12L).map(i => ("g", s"v$i")).toDF("grp", "v")
     val table = fresh("kmvnarrow")
     (0 until 3).foreach { b =>

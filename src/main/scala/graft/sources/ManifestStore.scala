@@ -2,6 +2,7 @@ package graft.sources
 
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.types.{DataType, StructType}
 import org.json4s._
 import org.json4s.jackson.JsonMethods
 
@@ -30,10 +31,13 @@ import org.json4s.jackson.JsonMethods
   * }}}
   *
   * Manifest: `{"version": N, "partitionCols": [c, ...],
-  * "commit": uuid, "partitions": {"c=v": "commits/<uuid>", ...}}` —
-  * RELATIVE leaf partition paths as Spark wrote them (hive-escaped;
-  * nested `a=1/b=2` for multi-level partitioning), mapped to the commit
-  * root that owns the partition's current version.
+  * "commit": uuid, "partitions": {"c=v": "commits/<uuid>", ...},
+  * "schemas": {"commits/<uuid>": <StructType JSON>, ...}}` — RELATIVE
+  * leaf partition paths as Spark wrote them (hive-escaped; nested
+  * `a=1/b=2` for multi-level partitioning), mapped to the commit root
+  * that owns the partition's current version; and, per live commit root,
+  * the schema of the data columns that commit wrote (partition columns
+  * excluded), so a read never infers a schema from parquet footers.
   *
   * Concurrency: optimistic. A committer claims version N+1 by renaming a
   * staged manifest to `v<N+1>.json`; HDFS rename fails if the destination
@@ -67,10 +71,30 @@ object ManifestStore {
     * SetTransaction idea. It rides every subsequent manifest forward, so
     * a replayed batch can be recognized and skipped (exactly-once
     * sinks); absent for tables written by batch-only writers.
+    *
+    * `schemas` maps each commit root to the data columns it wrote (its
+    * partition columns excluded); every publisher carries it forward and
+    * adds its own commit's entry, and [[commitManifest]] keeps only the
+    * entries of live commits.
     */
   private final case class Manifest(
       version: Int, partitionCols: Seq[String], commit: String, partitions: Map[String, String],
-      txn: Map[String, Long] = Map.empty)
+      txn: Map[String, Long], schemas: Map[String, StructType]) {
+    /** The snapshot after `c` lands on this one: the `dropped` leafs
+      * leave, `c`'s leafs point at `c`, and `c`'s schema is recorded.
+      */
+    def next(c: Commit, dropped: Set[String], txn: Map[String, Long]): Manifest =
+      Manifest(version + 1, partitionCols, c.uuid, (partitions -- dropped) ++ c.pointers,
+        txn, schemas + (c.root -> c.schema))
+  }
+
+  /** A staged data commit: the relative leaf partition paths Spark wrote
+    * under `commits/<uuid>` and the schema of its data columns.
+    */
+  private final case class Commit(uuid: String, leafs: Seq[String], schema: StructType) {
+    def root: String = s"commits/$uuid"
+    def pointers: Map[String, String] = leafs.map(_ -> root).toMap
+  }
 
   /** Version numbers present in `_manifests`, newest first. Stray files
     * that merely LOOK like manifests (e.g. a hand-dropped `v2-backup
@@ -180,6 +204,14 @@ object ManifestStore {
           case (k, other) => sys.error(s"manifest $p: txn.$k = $other")
         }.toMap
         case other => sys.error(s"manifest $p: txn = $other")
+      },
+      (j \ "schemas") match {
+        // absent: every live commit fails loudly in readLeafs
+        case JNothing => Map.empty
+        case JObject(fields) => fields.map { case (k, v) =>
+          k -> DataType.fromJson(JsonMethods.compact(JsonMethods.render(v))).asInstanceOf[StructType]
+        }.toMap
+        case other => sys.error(s"manifest $p: schemas = $other")
       })
   }
 
@@ -213,17 +245,19 @@ object ManifestStore {
   private def commitManifest(fs: FileSystem, path: String, m: Manifest): Unit = {
     fs.mkdirs(manifestDir(path))
     val dst = versionFile(path, m.version)
-    val entries = m.partitions.toSeq.sortBy(_._1)
-      .map { case (k, v) => s""""${k}":"${v}"""" }.mkString("{", ",", "}")
-    val colsJson = m.partitionCols.map(c => s""""$c"""").mkString("[", ",", "]")
-    // txn only when present keeps the format byte-identical for
-    // batch-only tables (and their fixture expectations)
-    val txnJson =
-      if (m.txn.isEmpty) ""
-      else m.txn.toSeq.sortBy(_._1)
-        .map { case (k, v) => s""""${k}":$v""" }.mkString(""","txn":{""", ",", "}")
-    val json =
-      s"""{"version":${m.version},"partitionCols":$colsJson,"commit":"${m.commit}","partitions":$entries$txnJson}"""
+    def sorted[V](kvs: Map[String, V])(f: V => JValue): JObject =
+      JObject(kvs.toList.sortBy(_._1).map { case (k, v) => k -> f(v) })
+    val live = m.partitions.values.toSet
+    val fields = List[JField](
+      "version" -> JInt(m.version),
+      "partitionCols" -> JArray(m.partitionCols.map(JString(_)).toList),
+      "commit" -> JString(m.commit),
+      "partitions" -> sorted(m.partitions)(JString(_))) ++
+      // txn only when present: batch-only tables carry none
+      Option.when(m.txn.nonEmpty)("txn" -> sorted(m.txn)(JInt(_))) :+
+      // schemas of live commits only, so the manifest stays O(live commits)
+      ("schemas" -> sorted(m.schemas.filter(s => live(s._1)))(s => JsonMethods.parse(s.json)))
+    val json = JsonMethods.compact(JsonMethods.render(JObject(fields)))
     def claim(): org.apache.hadoop.fs.FSDataOutputStream =
       try fs.create(dst, false)
       catch { case e: java.io.IOException if isClaimConflict(e) =>
@@ -269,16 +303,18 @@ object ManifestStore {
   }
 
   /** Write a data commit: the frame lands under `commits/<uuid>/` hive-
-    * partitioned (nested dirs for multi-level partitioning); returns
-    * (uuid, staged relative leaf partition paths).
+    * partitioned (nested dirs for multi-level partitioning); returns the
+    * staged commit with its relative leaf partition paths and the schema
+    * of the data columns it wrote.
     */
   private def writeCommit(
-      spark: SparkSession, path: String, df: DataFrame, partitionCols: Seq[String]): (String, Seq[String]) = {
+      spark: SparkSession, path: String, df: DataFrame, partitionCols: Seq[String]): Commit = {
     val uuid = java.util.UUID.randomUUID().toString
     val commitRoot = new Path(path, s"commits/$uuid")
     df.write.partitionBy(partitionCols: _*).parquet(commitRoot.toString)
     val fs = fsFor(spark, commitRoot)
-    (uuid, leafPartitionDirs(fs, commitRoot, partitionCols).map(_._1))
+    Commit(uuid, leafPartitionDirs(fs, commitRoot, partitionCols).map(_._1),
+      StructType(df.schema.filterNot(f => partitionCols.contains(f.name))))
   }
 
   /** The snapshot a commit builds on: the newest readable manifest,
@@ -349,10 +385,9 @@ object ManifestStore {
       txnRecord: Map[String, Long] = Map.empty): Unit = {
     require(partitionCols.nonEmpty, "ManifestStore.write: at least one partition column")
     val fs = fsFor(spark, new Path(path))
-    val (uuid, staged) = writeCommit(spark, path, df, partitionCols)
+    val c = writeCommit(spark, path, df, partitionCols)
     val version = latest(fs, path).map(_.version + 1).getOrElse(1)
-    publish(fs, path, Manifest(version, partitionCols,
-      uuid, staged.map(_ -> s"commits/$uuid").toMap, txnRecord))
+    publish(fs, path, Manifest(version, partitionCols, c.uuid, c.pointers, txnRecord, Map(c.root -> c.schema)))
   }
 
   /** Readable version numbers, newest first — the time-travel axis.
@@ -380,7 +415,10 @@ object ManifestStore {
     * root, each group scanned with `basePath` = that commit root (restores
     * the partition column), then unioned — the plan size is O(live
     * commits), not O(partitions), and compaction/vacuum keep live commits
-    * few.
+    * few. Each group is scanned with the schema its commit recorded in
+    * the manifest, so building the frame runs zero Spark jobs (no
+    * parquet footer inference; partition types are parsed from the leaf
+    * names, which runs no job).
     */
   def read(spark: SparkSession, path: String, version: Option[Int] = None): DataFrame = {
     val fs = fsFor(spark, new Path(path))
@@ -450,10 +488,11 @@ object ManifestStore {
   }
 
   /** Scan of `leafs` only, at snapshot `m` — the partition-restricted
-    * read that [[changes]] builds on. Commits whose files predate a
-    * schema evolution lack the added columns; `unionByName` with
-    * allowMissingColumns fills them with NULL, the standard
-    * Delta/Iceberg read-time semantics for evolved tables.
+    * read that [[changes]] builds on. Each commit group is scanned with
+    * its recorded schema; a live commit without one is refused. Commits
+    * whose files predate a schema evolution lack the added columns;
+    * `unionByName` with allowMissingColumns fills them with NULL, the
+    * standard Delta/Iceberg read-time semantics for evolved tables.
     */
   private def readLeafs(
       spark: SparkSession, path: String, m: Manifest, leafs: Seq[String]): DataFrame = {
@@ -463,8 +502,10 @@ object ManifestStore {
       throw new IllegalStateException(
         s"ManifestStore: table at $path has no partitions (initialized from an empty frame) — nothing to scan")
     byCommit.map { case (commitRel, parts) =>
+      val schema = m.schemas.getOrElse(commitRel, throw new IllegalStateException(
+        s"ManifestStore: manifest v${m.version} of $path records no schema for live commit $commitRel"))
       val base = new Path(path, commitRel).toString
-      spark.read.option("basePath", base)
+      spark.read.schema(schema).option("basePath", base)
         .parquet(parts.map(_._1).sorted.map(d => s"$base/$d"): _*)
     }.reduce(_.unionByName(_, allowMissingColumns = true))
   }
@@ -604,13 +645,12 @@ object ManifestStore {
           if (evolveSchema) alignSchemas(current, batch, partitionCols) else (current, batch)
         PartitionedStore.upsertPlan(cur2, bat2, keyCols)
       }
-    val (uuid, staged) = writeCommit(spark, path, out, partitionCols)
+    val c = writeCommit(spark, path, out, partitionCols)
     // txnRecord entries commit atomically with the data but are NEVER
     // consulted as a fence — progress markers whose consumers define
     // their own check (the ClusterStore replay fence), vs `txn` whose
     // >= skip is the streaming idempotence contract above
-    publish(fs, path, Manifest(m.version + 1, partitionCols, uuid,
-      m.partitions ++ staged.map(_ -> s"commits/$uuid"), m.txn ++ txnRecord ++ txn))
+    publish(fs, path, m.next(c, Set.empty, m.txn ++ txnRecord ++ txn))
   }
 
   /** Last streaming batch id the current snapshot records for the
@@ -681,11 +721,10 @@ object ManifestStore {
     val survivors = readLeafs(spark, path, m, touchedLeafs.toSeq)
       .filter(PartitionedStore.partitionValuesPred(partitionCols, touched))
       .join(keys.select(keyCols.map(col): _*).distinct(), keyCols, "left_anti")
-    val (uuid, staged) = writeCommit(spark, path, survivors, partitionCols)
+    val c = writeCommit(spark, path, survivors, partitionCols)
     // emptied partitions are exactly touched -- staged: their leaf entries
     // drop from the manifest instead of pointing at stale data
-    publish(fs, path, Manifest(m.version + 1, partitionCols, uuid,
-      (m.partitions -- touchedLeafs) ++ staged.map(_ -> s"commits/$uuid"), m.txn ++ txnRecord))
+    publish(fs, path, m.next(c, touchedLeafs, m.txn ++ txnRecord))
   }
 
   /** Atomic INSERT OVERWRITE of selected partitions (Delta's
@@ -740,21 +779,19 @@ object ManifestStore {
     // leaf names ARE the written-partition set (a pre-commit
     // `.select(partitionCols).collect()` would re-run the whole batch
     // plan — for compactDays that is the full epoch aggregation, twice)
-    val (uuid, staged) = writeCommit(spark, path, batch, partitionCols)
+    val c = writeCommit(spark, path, batch, partitionCols)
     // a null partition value lands in Spark's default-partition leaf —
     // refused, with the staged commit reclaimed
-    if (staged.exists(_.contains("__HIVE_DEFAULT_PARTITION__"))) {
-      reclaim(fs, path, uuid)
+    if (c.leafs.exists(_.contains("__HIVE_DEFAULT_PARTITION__"))) {
+      reclaim(fs, path, c.uuid)
       throw new IllegalArgumentException(
         s"replaceWhere: null ${partitionCols.mkString(",")} in batch")
     }
     // nothing to drop, nothing written, nothing to record → no-op (no
     // manifest bump); with only a txnRecord to land, fall through — the
     // marker must still commit (the compaction completed fence)
-    if (doomedLeafs.isEmpty && staged.isEmpty && txnRecord.isEmpty) { reclaim(fs, path, uuid); return }
-    publish(fs, path, Manifest(m.version + 1, partitionCols, uuid,
-      (m.partitions -- doomedLeafs) ++ staged.map(_ -> s"commits/$uuid"),
-      m.txn ++ txnRecord))
+    if (doomedLeafs.isEmpty && c.leafs.isEmpty && txnRecord.isEmpty) { reclaim(fs, path, c.uuid); return }
+    publish(fs, path, m.next(c, doomedLeafs, m.txn ++ txnRecord))
   }
 
   /** The `epoch:` namespace, owned here: fold outputs ([[compactDays]]
@@ -948,11 +985,10 @@ object ManifestStore {
     // snapshot even if another commit lands mid-compaction
     val df = readLeafs(spark, path, m, m.partitions.keys.toSeq)
       .repartition(m.partitionCols.map(col): _*)
-    val (uuid, staged) = writeCommit(spark, path, df, m.partitionCols)
-    require(staged.toSet == m.partitions.keySet,
-      s"compact: staged leafs ${staged.size} != live leafs ${m.partitions.size} — aborting before manifest flip")
-    publish(fs, path, Manifest(m.version + 1, m.partitionCols, uuid,
-      staged.map(_ -> s"commits/$uuid").toMap, m.txn))
+    val c = writeCommit(spark, path, df, m.partitionCols)
+    require(c.leafs.toSet == m.partitions.keySet,
+      s"compact: staged leafs ${c.leafs.size} != live leafs ${m.partitions.size} — aborting before manifest flip")
+    publish(fs, path, m.next(c, m.partitions.keySet, m.txn))
     liveCommits.size
   }
 

@@ -136,6 +136,66 @@ class LakehouseOpsSpec extends SparkSpec {
     assert(feed == Map(2L -> "update", 3L -> "insert"))
   }
 
+  // ------------------------------------------------------ recorded schema
+
+  /** The schema Spark infers from `df`'s own leaf dirs when each commit's
+    * leafs are scanned with `basePath` = its commit root and the scans are
+    * unioned in commit order, as a read grouped them before schemas were
+    * recorded in the manifest.
+    */
+  private def inferred(df: org.apache.spark.sql.DataFrame): org.apache.spark.sql.types.StructType =
+    df.inputFiles.toSeq
+      .map(f => new java.net.URI(f).getPath) // inputFiles are URI-escaped
+      .map { f =>
+        val commit = """^(.*/commits/[^/]+)/""".r.findFirstMatchIn(f).get.group(1)
+        commit -> f.substring(0, f.lastIndexOf('/'))
+      }
+      .groupBy(_._1).toSeq.sortBy(_._1)
+      .map { case (commit, leafs) =>
+        spark.read.option("basePath", commit).parquet(leafs.map(_._2).distinct.sorted: _*)
+      }
+      .reduce(_.unionByName(_, allowMissingColumns = true)).schema
+
+  test("every read path scans with the schema Spark would infer from the same leafs") {
+    val table = freshTable("schema")
+    val pc = Seq("p", "s")
+    // p is written as a long and reads back as an int; s values need hive
+    // escaping in their leaf names
+    val rows = for (k <- 1L to 8L) yield (k, s"v$k", k * 0.5, k % 3, if (k % 2 == 0) "a/b" else "c d=%")
+    ManifestStore.write(spark, rows.toDF("k", "v", "x", "p", "s"), table, pc)
+    val steps: Seq[(String, () => Unit)] = Seq(
+      "merge" -> (() => ManifestStore.merge(spark, table,
+        Seq((9L, "v9", 4.5, 0L, "a/b")).toDF("k", "v", "x", "p", "s"), Seq("k"), pc)),
+      "delete" -> (() => ManifestStore.delete(spark, table,
+        Seq((3L, 0L, "c d=%")).toDF("k", "p", "s"), Seq("k"), pc)),
+      "replaceWhere" -> (() => ManifestStore.replaceWhere(spark, table,
+        Seq((10L, "v10", 5.0, 1L, "c d=%")).toDF("k", "v", "x", "p", "s"),
+        Seq((1L, "c d=%")).toDF("p", "s"), pc)),
+      "compact" -> (() => assert(ManifestStore.compact(spark, table) > 1)),
+      "merge(evolveSchema)" -> (() => ManifestStore.merge(spark, table,
+        Seq((11L, "v11", 5.5, 2L, "a/b", 7)).toDF("k", "v", "x", "p", "s", "extra"),
+        Seq("k"), pc, evolveSchema = true)))
+    val afterWrite = ManifestStore.read(spark, table)
+    assert(afterWrite.schema("p").dataType == org.apache.spark.sql.types.IntegerType)
+    assert(afterWrite.schema == inferred(afterWrite), "write")
+    for ((name, op) <- steps) {
+      op()
+      val df = ManifestStore.read(spark, table)
+      assert(df.schema == inferred(df), name)
+    }
+    assert(ManifestStore.read(spark, table).columns.contains("extra"))
+    val v1 = ManifestStore.read(spark, table, version = Some(1))
+    assert(v1.schema == inferred(v1), "read(version = Some(1))")
+    // changes scans the old side at v1 and the new side at the evolved
+    // head; its columns carry the types both sides infer
+    val head = ManifestStore.versions(spark, table).head
+    val feed = ManifestStore.changes(spark, table, 1, head, Seq("k"))
+    val want = inferred(ManifestStore.read(spark, table))
+    assert(feed.schema.map(f => f.name -> f.dataType).toSet ==
+      want.map(f => f.name -> f.dataType).toSet + ("change_type" -> org.apache.spark.sql.types.StringType))
+    assert(feed.collect().nonEmpty)
+  }
+
   test("merge without evolveSchema and type changes are rejected") {
     val table = freshTable("evoerr")
     ManifestStore.write(spark, Seq((1L, "a", 0L)).toDF("k", "v", "p"), table, "p")

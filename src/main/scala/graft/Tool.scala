@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.ListenerBusAccess
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart}
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.FormattedMode
@@ -97,8 +98,9 @@ object Tool {
       val t0 = System.nanoTime()
       SparkEntry.queries(n)(spark, sfDir).count()
       val wall = (System.nanoTime() - t0) / 1e9
-      // listener events are async — give the bus a moment to drain
-      Thread.sleep(500)
+      // listener events are async: read the rows once the bus has
+      // delivered every event posted so far
+      ListenerBusAccess.drain(spark.sparkContext)
       import scala.jdk.CollectionConverters._
       val js = rows.asScala.toSeq.sortBy(_._1)
       println(f"===== $n wall=$wall%.2f s jobs=${js.size} jobWall=${js.map(_._2).sum}%.2f s tasks=${js.map(_._3).sum}")

@@ -329,22 +329,32 @@ object ManifestStore {
     m
   }
 
-  /** Live leaf names of `m` that the partition-column `tuples` address.
-    * The tuples are staged hive-partitioned under `_tmp/<tag>_<uuid>`:
+  /** Whether a leaf name holds Spark's default partition, where a null
+    * partition value lands — and an empty string too, since Spark writes
+    * both there (and reads both back as null).
+    */
+  private def isNullLeaf(leaf: String): Boolean = leaf.contains("__HIVE_DEFAULT_PARTITION__")
+
+  /** Live leaf names of `m` that the partition-column values of `tuples`
+    * address, from ONE write and no collect: the values are staged
+    * hive-partitioned, duplicates and all, under `_tmp/<tag>_<uuid>`, and
     * Spark's own dynamic-partition write yields the leaf names with the
-    * table's exact escaping — never string-format partition values.
-    * `__probe` keeps the staged file non-degenerate when the frame holds
-    * only partition columns (partitionBy strips them from the data).
+    * table's exact escaping — never string-format partition values. A
+    * default-partition leaf is the null signal, refused with `nullMsg`.
+    * `__probe` keeps the staged file non-degenerate (partitionBy strips
+    * the partition columns from the data).
     */
   private def stagedLeafs(
       fs: FileSystem, path: String, tag: String, tuples: DataFrame,
-      partitionCols: Seq[String], m: Manifest): Set[String] = {
+      partitionCols: Seq[String], m: Manifest, nullMsg: String): Set[String] = {
+    import org.apache.spark.sql.functions.{col, lit}
     val probeDir = new Path(path, s"_tmp/${tag}_${java.util.UUID.randomUUID().toString}")
     try {
-      tuples.withColumn("__probe", org.apache.spark.sql.functions.lit(1))
+      tuples.select(partitionCols.map(col): _*).withColumn("__probe", lit(1))
         .write.partitionBy(partitionCols: _*).parquet(probeDir.toString)
-      leafPartitionDirs(fs, probeDir, partitionCols).map(_._1)
-        .filter(m.partitions.contains).toSet
+      val leafs = leafPartitionDirs(fs, probeDir, partitionCols).map(_._1)
+      require(!leafs.exists(isNullLeaf), nullMsg)
+      leafs.filter(m.partitions.contains).toSet
     } finally { try fs.delete(probeDir, true) catch { case _: java.io.IOException => () } }
   }
 
@@ -422,9 +432,12 @@ object ManifestStore {
     */
   def read(spark: SparkSession, path: String, version: Option[Int] = None): DataFrame = {
     val fs = fsFor(spark, new Path(path))
-    val m = version.fold(newest(fs, path))(readManifest(fs, path, _))
-    readLeafs(spark, path, m, m.partitions.keys.toSeq)
+    readAll(spark, path, version.fold(newest(fs, path))(readManifest(fs, path, _)))
   }
+
+  /** Scan of every live leaf of snapshot `m`. */
+  private def readAll(spark: SparkSession, path: String, m: Manifest): DataFrame =
+    readLeafs(spark, path, m, m.partitions.keys.toSeq)
 
   /** Whether a committed manifest exists at `path` — the explicit
     * missing-table probe. One metadata resolve, no data I/O.
@@ -518,6 +531,10 @@ object ManifestStore {
     * column(s), non-null partition values, stable key→partition
     * assignment. Multi-level partitioning is supported — the touched set
     * is the distinct partition TUPLES, pruned as an OR-of-AND predicate.
+    * A batch whose rows are already on the driver (a `LocalRelation`:
+    * `toDF` of local rows, push-mode payloads) yields its tuples with no
+    * Spark job, any other batch with one distinct collect; the current
+    * rows are read at the snapshot the commit builds on.
     */
   def merge(
       spark: SparkSession,
@@ -601,7 +618,6 @@ object ManifestStore {
       txn: Option[(String, Long)] = None,
       evolveSchema: Boolean = false,
       txnRecord: Map[String, Long] = Map.empty): Unit = {
-    import org.apache.spark.sql.functions._
     val fs = fsFor(spark, new Path(path))
     val m = base(fs, path, Some(partitionCols))
     // txn fence (the public Delta SetTransaction contract): if this
@@ -614,18 +630,17 @@ object ManifestStore {
     // STREAM (stable across restarts), not the run.
     for ((app, bid) <- txn)
       if (m.txn.get(app).exists(_ >= bid)) return
-    val touched = batch.select(partitionCols.map(col): _*).distinct()
-      .collect().map(r => partitionCols.indices.map(r.get)).toSeq
+    val touched = PartitionedStore.touchedTuples(batch, partitionCols)
     // a zero-row batch touches nothing: no-op, no empty commit, no
     // manifest bump (also keeps the tuple predicate below off
     // empty.reduce)
     if (touched.isEmpty) return
     require(!touched.exists(_.contains(null)),
       s"merge: null ${partitionCols.mkString(",")} in batch")
-    // current rows of the touched partitions, via the manifest — guarded
-    // BEFORE read() runs: a manifest with zero live partitions (a table
-    // initialized from an empty first batch) has nothing to scan, and
-    // read() cannot build a frame from no files
+    // current rows of the touched partitions at snapshot m — guarded
+    // BEFORE the scan is built: a manifest with zero live partitions (a
+    // table initialized from an empty first batch) has nothing to scan,
+    // and readLeafs cannot build a frame from no files
     val out =
       if (m.partitions.isEmpty) batch
       else {
@@ -633,7 +648,7 @@ object ManifestStore {
         // filter; tuples as a balanced OR-of-AND (depth log(tuples), so
         // thousands of touched tuples never overflow Catalyst's recursive
         // transforms) — both shapes prune directories at planning time
-        val current = read(spark, path)
+        val current = readAll(spark, path, m)
           .filter(PartitionedStore.partitionValuesPred(partitionCols, touched))
         // upsertPlan selects the current columns out of the batch, which
         // would silently DROP a new batch column — surface that as an
@@ -677,9 +692,12 @@ object ManifestStore {
     * locate pass reads a sliver of a wide table.
     *
     * Touched LEAF NAMES are never re-derived by string-formatting values
-    * (see the merge scaladoc): the keys frame is staged hive-partitioned
-    * into a scratch dir and the leaf dirs Spark writes ARE the names —
-    * bit-identical escaping to the data commits, at O(keys) extra I/O.
+    * (see the merge scaladoc): the keys' partition columns are staged
+    * hive-partitioned into a scratch dir and the leaf dirs Spark writes
+    * ARE the names — bit-identical escaping to the data commits, at
+    * O(keys) extra I/O. That one write is also the null check: a null
+    * (or empty-string) partition value lands in Spark's default-partition
+    * leaf and is refused. Nothing is collected to the driver.
     */
   def delete(
       spark: SparkSession,
@@ -702,25 +720,21 @@ object ManifestStore {
     val fs = fsFor(spark, new Path(path))
     val m = base(fs, path, Some(partitionCols))
     if (m.partitions.isEmpty) return
-    val keyed =
-      if (partitionCols.forall(keys.columns.contains))
-        keys.select((keyCols ++ partitionCols).distinct.map(col): _*).distinct()
+    val keyFrame = keys.select(keyCols.map(col): _*)
+    val located =
+      if (partitionCols.forall(keys.columns.contains)) keys
       else
         // locate: key+partition columns only — parquet column pruning
         // keeps this pass narrow on a wide table
-        read(spark, path)
+        readAll(spark, path, m)
           .select((keyCols ++ partitionCols).distinct.map(col): _*)
-          .join(keys.select(keyCols.map(col): _*).distinct(), keyCols, "left_semi")
-          .distinct()
-    val touchedLeafs = stagedLeafs(fs, path, "delete", keyed, partitionCols, m)
-    if (touchedLeafs.isEmpty) return
-    val touched = keyed.select(partitionCols.map(col): _*).distinct()
-      .collect().map(r => partitionCols.indices.map(r.get)).toSeq
-    require(!touched.exists(_.contains(null)),
+          .join(keyFrame, keyCols, "left_semi")
+    val touchedLeafs = stagedLeafs(fs, path, "delete", located, partitionCols, m,
       s"delete: null ${partitionCols.mkString(",")} in keys")
+    if (touchedLeafs.isEmpty) return
+    // readLeafs scans the touched leafs only, so no partition filter
     val survivors = readLeafs(spark, path, m, touchedLeafs.toSeq)
-      .filter(PartitionedStore.partitionValuesPred(partitionCols, touched))
-      .join(keys.select(keyCols.map(col): _*).distinct(), keyCols, "left_anti")
+      .join(keyFrame, keyCols, "left_anti")
     val c = writeCommit(spark, path, survivors, partitionCols)
     // emptied partitions are exactly touched -- staged: their leaf entries
     // drop from the manifest instead of pointing at stale data
@@ -738,7 +752,10 @@ object ManifestStore {
     * This is what keyed ops cannot express: collapsing N partitions into
     * one (epoch compaction of day subtotals) or clearing a partition
     * outright, with no crash window in which both old and new rows are
-    * visible.
+    * visible. The doomed leafs come from one staging write of `doomed`
+    * (as in [[delete]]); a null or empty-string partition value, in
+    * `doomed` or in the batch, lands in the default-partition leaf and is
+    * refused.
     *
     * Contract: the batch carries COMPLETE contents for every partition
     * it touches (partition-level overwrite, not an upsert), with
@@ -768,13 +785,10 @@ object ManifestStore {
       doomed: DataFrame,
       partitionCols: Seq[String],
       txnRecord: Map[String, Long]): Unit = {
-    import org.apache.spark.sql.functions._
     val fs = fsFor(spark, new Path(path))
     val m = base(fs, path, Some(partitionCols))
-    val doomedTuples = doomed.select(partitionCols.map(col): _*).distinct()
-    require(doomedTuples.collect().forall(r => partitionCols.indices.forall(r.get(_) != null)),
+    val doomedLeafs = stagedLeafs(fs, path, "replace", doomed, partitionCols, m,
       s"replaceWhere: null ${partitionCols.mkString(",")} in doomed")
-    val doomedLeafs = stagedLeafs(fs, path, "replace", doomedTuples, partitionCols, m)
     // ONE batch execution: writeCommit stages the data and its staged
     // leaf names ARE the written-partition set (a pre-commit
     // `.select(partitionCols).collect()` would re-run the whole batch
@@ -782,7 +796,7 @@ object ManifestStore {
     val c = writeCommit(spark, path, batch, partitionCols)
     // a null partition value lands in Spark's default-partition leaf —
     // refused, with the staged commit reclaimed
-    if (c.leafs.exists(_.contains("__HIVE_DEFAULT_PARTITION__"))) {
+    if (c.leafs.exists(isNullLeaf)) {
       reclaim(fs, path, c.uuid)
       throw new IllegalArgumentException(
         s"replaceWhere: null ${partitionCols.mkString(",")} in batch")
@@ -980,11 +994,10 @@ object ManifestStore {
     val m = base(fs, path, None)
     val liveCommits = m.partitions.values.toSet
     if (liveCommits.size <= 1) return 0
-    // readLeafs against THIS manifest, not a re-resolved latest: the
+    // readAll against THIS manifest, not a re-resolved latest: the
     // staged-leafs == live-leafs check below must compare within one
     // snapshot even if another commit lands mid-compaction
-    val df = readLeafs(spark, path, m, m.partitions.keys.toSeq)
-      .repartition(m.partitionCols.map(col): _*)
+    val df = readAll(spark, path, m).repartition(m.partitionCols.map(col): _*)
     val c = writeCommit(spark, path, df, m.partitionCols)
     require(c.leafs.toSet == m.partitions.keySet,
       s"compact: staged leafs ${c.leafs.size} != live leafs ${m.partitions.size} — aborting before manifest flip")

@@ -83,8 +83,7 @@ object PartitionedStore {
       partitionCol: String,
       batchId: Option[String] = None): Unit = {
     import org.apache.spark.sql.functions._
-    val touched = batch.select(partitionCol).distinct()
-      .collect().map(_.get(0)).toSeq
+    val touched = touchedTuples(batch, Seq(partitionCol)).map(_.head)
     require(!touched.contains(null), s"merge: null $partitionCol in batch")
     val affected = read(spark, path).filter(col(partitionCol).isin(touched: _*))
     val out = upsertPlan(affected, batch, keyCols)
@@ -105,6 +104,22 @@ object PartitionedStore {
         throw new java.io.IOException(s"merge: rename ${s.getPath} -> $dst failed")
     }
     fs.delete(new org.apache.hadoop.fs.Path(tmp), true)
+  }
+
+  /** The distinct `cols` tuples of a merge batch — the touched set of
+    * [[merge]] and [[ManifestStore.merge]]. A batch whose rows are
+    * already on the driver (its projection optimizes to a
+    * `LocalRelation`: a `toDF` of local rows, a push-mode payload)
+    * collects with no Spark job and is deduplicated here; any other
+    * batch runs a `distinct()` collect.
+    */
+  private[sources] def touchedTuples(batch: DataFrame, cols: Seq[String]): Seq[Seq[Any]] = {
+    import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
+    import org.apache.spark.sql.functions.col
+    val tuples = batch.select(cols.map(col): _*)
+    val local = tuples.queryExecution.optimizedPlan.isInstanceOf[LocalRelation]
+    val rows = (if (local) tuples else tuples.distinct()).collect()
+    rows.map(r => cols.indices.map(r.get)).toSeq.distinct
   }
 
   /** The copy-on-write upsert plan shared by [[merge]] and

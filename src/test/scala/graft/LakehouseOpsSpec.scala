@@ -50,6 +50,69 @@ class LakehouseOpsSpec extends SparkSpec {
     assert(ManifestStore.versions(spark, table).head == vBefore)
   }
 
+  test("null partition values are refused without a trace; a located delete removes exactly its keys") {
+    val nul: String = null
+    val base = Map(1L -> (("a", "x")), 2L -> (("b", "x")), 3L -> (("c", "y")), 4L -> (("d", "z")))
+    def merge(p: String)(t: String): Unit = ManifestStore.merge(spark, t,
+      Seq((5L, "e", "x"), (6L, "f", p)).toDF("k", "v", "p"), Seq("k"), "p")
+    // the same batch built over a scan, so its rows are not on the driver
+    def mergeScanned(p: String)(t: String): Unit = ManifestStore.merge(spark, t,
+      ManifestStore.read(spark, t).where($"k" === 1L)
+        .select(($"k" + 10L).as("k"), $"v", lit(p).cast("string").as("p")), Seq("k"), "p")
+    def delete(p: String)(t: String): Unit = ManifestStore.delete(spark, t,
+      Seq((1L, "x"), (6L, p)).toDF("k", "p"), Seq("k"), Seq("p"))
+    def replaceDoomed(p: String)(t: String): Unit = ManifestStore.replaceWhere(spark, t,
+      Seq((5L, "e", "x")).toDF("k", "v", "p"), Seq("x", p).toDF("p"), Seq("p"))
+    def replaceBatch(p: String)(t: String): Unit = ManifestStore.replaceWhere(spark, t,
+      Seq((5L, "e", "x"), (6L, "f", p)).toDF("k", "v", "p"), Seq("x").toDF("p"), Seq("p"))
+    // Spark writes "" into the default-partition leaf, where null lands:
+    // merge checks the batch's values and takes "", while delete and
+    // replaceWhere may read that leaf name as the null it also encodes
+    val commit = "commit"
+    val cases = Seq[(String, String => Unit, Set[String])](
+      ("merge, null in the batch", merge(nul), Set("merge: null p in batch")),
+      ("merge, null in a scanned batch", mergeScanned(nul), Set("merge: null p in batch")),
+      ("merge, \"\" in the batch", merge(""), Set(commit)),
+      ("delete, null in the keys", delete(nul), Set("delete: null p in keys")),
+      ("delete, \"\" in the keys", delete(""), Set("delete: null p in keys", commit)),
+      ("replaceWhere, null in doomed", replaceDoomed(nul), Set("replaceWhere: null p in doomed")),
+      ("replaceWhere, \"\" in doomed", replaceDoomed(""), Set("replaceWhere: null p in doomed", commit)),
+      ("replaceWhere, null in the batch", replaceBatch(nul), Set("replaceWhere: null p in batch")),
+      ("replaceWhere, \"\" in the batch", replaceBatch(""), Set("replaceWhere: null p in batch")),
+      ("delete by key alone (located)", t => ManifestStore.delete(spark, t,
+        Seq(2L, 3L, 99L).toDF("k"), Seq("k"), Seq("p")), Set(commit)))
+    def files(dir: java.io.File): Seq[java.io.File] =
+      Option(dir.listFiles()).toSeq.flatten.flatMap(f => if (f.isDirectory) files(f) else Seq(f))
+    def commitDirs(t: String): Set[String] =
+      Option(new java.io.File(t, "commits").list()).toSeq.flatten.toSet
+    def referenced(t: String): Set[String] =
+      ManifestStore.read(spark, t).inputFiles.toSet.flatMap((f: String) =>
+        "commits/([^/]+)/".r.findFirstMatchIn(f).map(_.group(1)))
+    def rows(t: String): Map[Long, (String, String)] =
+      ManifestStore.read(spark, t).collect()
+        .map(r => r.getAs[Long]("k") -> ((r.getAs[String]("v"), r.getAs[String]("p")))).toMap
+    for ((name, op, allowed) <- cases) withClue(s"$name: ") {
+      val t = freshTable("nullpart")
+      ManifestStore.write(spark, base.toSeq.map { case (k, (v, p)) => (k, v, p) }.toDF("k", "v", "p"), t, "p")
+      val (v0, dirs0) = (ManifestStore.currentVersion(spark, t), commitDirs(t))
+      val outcome =
+        try { op(t); commit }
+        catch { case e: IllegalArgumentException =>
+          allowed.find(e.getMessage.contains).getOrElse(throw e) }
+      assert(allowed(outcome))
+      assert(files(new java.io.File(t, "_tmp")).isEmpty, "staged files left under _tmp/")
+      if (outcome == commit) {
+        assert(ManifestStore.currentVersion(spark, t) == v0 + 1)
+        assert((commitDirs(t) -- dirs0).subsetOf(referenced(t)), "unreferenced commit dir")
+      } else {
+        assert(ManifestStore.currentVersion(spark, t) == v0)
+        assert(commitDirs(t) == dirs0)
+        assert(rows(t) == base)
+      }
+      if (name.endsWith("(located)")) assert(rows(t) == base -- Seq(2L, 3L))
+    }
+  }
+
   // -------------------------------------------------------------- changes
 
   test("changes classifies insert/update/delete and scans only repointed partitions") {

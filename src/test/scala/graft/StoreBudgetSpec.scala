@@ -62,6 +62,21 @@ class StoreBudgetSpec extends SparkSpec {
         Seq((3L, 3L), (4L, 4L)).toDF("k", "p"), Seq("k"), Seq("p"))),
       "compact" -> jobs(assert(ManifestStore.compact(spark, table) == 3)),
       "read().count()" -> jobs(assert(ManifestStore.read(spark, table).count() == 23)))
-    assert(counts == Seq("merge" -> 4, "delete" -> 7, "compact" -> 2, "read().count()" -> 2))
+    assert(counts == Seq("merge" -> 2, "delete" -> 3, "compact" -> 2, "read().count()" -> 2))
+  }
+
+  test("replaceWhere and a merge whose batch is not driver-local run their pinned job counts") {
+    import org.apache.spark.sql.functions.{lit, max}
+    val table = fixture()
+    // an aggregate over the table: its rows are not on the driver, so the
+    // touched tuples come from a distinct collect
+    val aggregated = ManifestStore.read(spark, table).where($"p" >= 6L)
+      .groupBy("p").agg((max("k") + 1000L).as("k"), lit("agg").as("v"))
+    val counts = Seq(
+      "replaceWhere" -> jobs(ManifestStore.replaceWhere(spark, table,
+        Seq((300L, "r", 4L)).toDF("k", "v", "p"), Seq(4L, 5L).toDF("p"), Seq("p"))),
+      "merge(aggregate)" -> jobs(ManifestStore.merge(spark, table, aggregated, Seq("k"), "p")))
+    assert(ManifestStore.read(spark, table).count() == 21)
+    assert(counts == Seq("replaceWhere" -> 2, "merge(aggregate)" -> 5))
   }
 }

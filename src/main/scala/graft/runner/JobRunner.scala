@@ -15,7 +15,10 @@ import graft.spec.Specs._
   * remote state machine (`action_start`/`action_done`) becomes local
   * [[JobResult]] bookkeeping; the reference's 100-row chunk loop
   * (etl_cron.py:46-53, which silently DROPS the tail — SURVEY.md §2.8)
-  * is replaced by Spark partitioning over the full dataset.
+  * is replaced by Spark partitioning over the full dataset. A day file
+  * smaller than `spark.sql.files.openCostInBytes` (4 MB) is one input
+  * partition, so [[run]] spreads such a narrow extract by its routing key
+  * before the route (see [[spread]]); a wide input keeps its splits.
   */
 object JobRunner {
 
@@ -140,8 +143,44 @@ object JobRunner {
     val pkCol = if (transformed.columns.contains("pk")) "pk"
       else job.transform.pkField.getOrElse(
         throw new IllegalArgumentException(s"job ${job.name}: no pk column for routing"))
-    val routed = MergeRouter.route(transformed, state, pkCol, job.transform.reprocess)
+    val mode = job.transform.reprocess
+    // Delete routing already repartitions on the pk; a spread before it
+    // would be a second exchange
+    val incoming = if (mode != ReprocessMode.Delete && spread(spark, extracted))
+      transformed.repartition(col(pkCol).cast("string")) else transformed
+    val routed = MergeRouter.route(incoming, state, pkCol, mode)
     JobResult(job.name, routed, state)
+  }
+
+  /** Whether [[run]] hash-repartitions the transformed rows on the
+    * routing key (in the string form the route join compares) so that the
+    * transform, the route probe, the connector and the log write run on
+    * every core, with the partition count left to AQE. It does when the
+    * extract's widest file scan has fewer input partitions than
+    * `defaultParallelism` and at least twice AQE's
+    * `coalescePartitions.minPartitionSize` bytes: below that AQE would
+    * coalesce the exchange back to one task. The scans are read off the
+    * extract's physical plan on the driver (`FileSourceScanExec.inputRDD`
+    * builds the file partitions without running anything), so deciding
+    * starts no Spark job. An extract with no file scan, or whose scan
+    * prunes by a run-time subquery, is left alone.
+    */
+  private def spread(spark: SparkSession, extracted: DataFrame): Boolean = {
+    import org.apache.spark.sql.catalyst.expressions.DynamicPruning
+    import org.apache.spark.sql.execution.FileSourceScanExec
+    import org.apache.spark.sql.execution.datasources.FilePartition
+    import org.apache.spark.sql.internal.SQLConf
+    val scans = extracted.queryExecution.sparkPlan.collectLeaves().collect {
+      case s: FileSourceScanExec => s
+    }
+    if (scans.isEmpty || scans.exists(_.partitionFilters.exists(_.exists(_.isInstanceOf[DynamicPruning]))))
+      false
+    else {
+      val widest = scans.map(_.inputRDD.partitions).maxBy(_.length)
+      val bytes = widest.iterator.collect { case p: FilePartition => p.files.iterator.map(_.length).sum }.sum
+      val minPartition = spark.sessionState.conf.getConf(SQLConf.COALESCE_PARTITIONS_MIN_PARTITION_SIZE)
+      widest.length < spark.sparkContext.defaultParallelism && bytes >= 2 * minPartition
+    }
   }
 
   private def emptyState(spark: SparkSession): DataFrame = {

@@ -528,9 +528,11 @@ object ManifestStore {
     * manifest, anti-join on the keys, union the batch, rewrite those
     * partitions), but publication is a manifest pointer flip instead of
     * directory swaps. Same contract: batch carries the partition
-    * column(s), non-null partition values, stable key→partition
-    * assignment. Multi-level partitioning is supported — the touched set
-    * is the distinct partition TUPLES, pruned as an OR-of-AND predicate.
+    * column(s), partition values neither null nor `""` (both land in
+    * the default-partition leaf, see [[PartitionedStore.writesAsNull]]),
+    * stable key→partition assignment. Multi-level partitioning is
+    * supported — the touched set is the distinct partition TUPLES,
+    * pruned as an OR-of-AND predicate.
     * A batch whose rows are already on the driver (a `LocalRelation`:
     * `toDF` of local rows, push-mode payloads) yields its tuples with no
     * Spark job, any other batch with one distinct collect; the current
@@ -635,7 +637,7 @@ object ManifestStore {
     // manifest bump (also keeps the tuple predicate below off
     // empty.reduce)
     if (touched.isEmpty) return
-    require(!touched.exists(_.contains(null)),
+    require(!touched.exists(_.exists(PartitionedStore.writesAsNull)),
       s"merge: null ${partitionCols.mkString(",")} in batch")
     // current rows of the touched partitions at snapshot m — guarded
     // BEFORE the scan is built: a manifest with zero live partitions (a

@@ -59,7 +59,8 @@ object PartitionedStore {
     * drop the partition).
     *
     * Contract: batch rows carry the partition column; single-level
-    * partitioning; partition values must be non-null; and a key's
+    * partitioning; partition values must be neither null nor `""`
+    * ([[writesAsNull]]); and a key's
     * partition value must be STABLE across upserts — a row that moves
     * partitions would leave its old copy behind (detecting that requires
     * a global key scan, which defeats O(touched); route such changes as
@@ -84,7 +85,7 @@ object PartitionedStore {
       batchId: Option[String] = None): Unit = {
     import org.apache.spark.sql.functions._
     val touched = touchedTuples(batch, Seq(partitionCol)).map(_.head)
-    require(!touched.contains(null), s"merge: null $partitionCol in batch")
+    require(!touched.exists(writesAsNull), s"merge: null $partitionCol in batch")
     val affected = read(spark, path).filter(col(partitionCol).isin(touched: _*))
     val out = upsertPlan(affected, batch, keyCols)
     val tmp = path + "__merge_tmp_" +
@@ -121,6 +122,13 @@ object PartitionedStore {
     val rows = (if (local) tuples else tuples.distinct()).collect()
     rows.map(r => cols.indices.map(r.get)).toSeq.distinct
   }
+
+  /** A partition value Spark writes into the `__HIVE_DEFAULT_PARTITION__`
+    * leaf, which reads back as null: null itself and the empty string. A
+    * merge refuses both, since its touched filter (`p IN ('')`) would match
+    * none of that leaf's rows and the rewrite would drop them.
+    */
+  private[sources] def writesAsNull(v: Any): Boolean = v == null || v == ""
 
   /** The copy-on-write upsert plan shared by [[merge]] and
     * [[ManifestStore.merge]]: current rows that lose to a batch key are

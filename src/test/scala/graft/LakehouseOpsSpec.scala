@@ -65,18 +65,18 @@ class LakehouseOpsSpec extends SparkSpec {
       Seq((5L, "e", "x")).toDF("k", "v", "p"), Seq("x", p).toDF("p"), Seq("p"))
     def replaceBatch(p: String)(t: String): Unit = ManifestStore.replaceWhere(spark, t,
       Seq((5L, "e", "x"), (6L, "f", p)).toDF("k", "v", "p"), Seq("x").toDF("p"), Seq("p"))
-    // Spark writes "" into the default-partition leaf, where null lands:
-    // merge checks the batch's values and takes "", while delete and
-    // replaceWhere may read that leaf name as the null it also encodes
+    // Spark writes "" into the default-partition leaf, where null lands
+    // and reads back as null, so every op refuses "" as null
     val commit = "commit"
     val cases = Seq[(String, String => Unit, Set[String])](
       ("merge, null in the batch", merge(nul), Set("merge: null p in batch")),
       ("merge, null in a scanned batch", mergeScanned(nul), Set("merge: null p in batch")),
-      ("merge, \"\" in the batch", merge(""), Set(commit)),
+      ("merge, \"\" in the batch", merge(""), Set("merge: null p in batch")),
+      ("merge, \"\" in a scanned batch", mergeScanned(""), Set("merge: null p in batch")),
       ("delete, null in the keys", delete(nul), Set("delete: null p in keys")),
-      ("delete, \"\" in the keys", delete(""), Set("delete: null p in keys", commit)),
+      ("delete, \"\" in the keys", delete(""), Set("delete: null p in keys")),
       ("replaceWhere, null in doomed", replaceDoomed(nul), Set("replaceWhere: null p in doomed")),
-      ("replaceWhere, \"\" in doomed", replaceDoomed(""), Set("replaceWhere: null p in doomed", commit)),
+      ("replaceWhere, \"\" in doomed", replaceDoomed(""), Set("replaceWhere: null p in doomed")),
       ("replaceWhere, null in the batch", replaceBatch(nul), Set("replaceWhere: null p in batch")),
       ("replaceWhere, \"\" in the batch", replaceBatch(""), Set("replaceWhere: null p in batch")),
       ("delete by key alone (located)", t => ManifestStore.delete(spark, t,
@@ -110,6 +110,19 @@ class LakehouseOpsSpec extends SparkSpec {
         assert(rows(t) == base)
       }
       if (name.endsWith("(located)")) assert(rows(t) == base -- Seq(2L, 3L))
+    }
+  }
+
+  test("PartitionedStore.merge refuses a null or \"\" partition value and leaves the table as it was") {
+    val t = freshTable("pstore_null")
+    graft.sources.PartitionedStore.write(Seq((1L, "a", "x"), (2L, "b", "y")).toDF("k", "v", "p"), t, Seq("p"))
+    def rows = sortedRows(graft.sources.PartitionedStore.read(spark, t).select("k", "v", "p"))
+    val before = rows
+    for (p <- Seq(null, "")) withClue(s"p = '$p': ") {
+      val e = intercept[IllegalArgumentException](graft.sources.PartitionedStore.merge(spark, t,
+        Seq((3L, "c", "x"), (4L, "d", p)).toDF("k", "v", "p"), Seq("k"), "p"))
+      assert(e.getMessage.contains("merge: null p in batch"))
+      assert(rows == before)
     }
   }
 

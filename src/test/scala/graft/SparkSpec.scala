@@ -1,5 +1,7 @@
 package graft
 
+import org.apache.spark.ListenerBusAccess
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerStageSubmitted}
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.scalatest.funsuite.AnyFunSuite
 import graft.sources.Failpoints
@@ -7,6 +9,8 @@ import graft.sources.Failpoints
 /** Shared local session for all suites (one JVM, one session). */
 object SparkSpec {
   lazy val session: SparkSession = Session.local(4)
+
+  final case class Work(jobs: Int, stageTasks: Seq[Int])
 }
 
 abstract class SparkSpec extends AnyFunSuite {
@@ -14,6 +18,39 @@ abstract class SparkSpec extends AnyFunSuite {
   import spark.implicits._
 
   def sfDir = "/root/testdata/sf0.001"
+
+  /** The Spark jobs `body` runs on this thread (its own job group, so
+    * work other threads leave running is not counted) and the task count
+    * of each stage they submit, in submission order.
+    */
+  def sparkWork(body: => Any): SparkSpec.Work = {
+    val sc = spark.sparkContext
+    val group = s"budget-${java.util.UUID.randomUUID()}"
+    def ours(p: java.util.Properties) = Option(p).exists(_.getProperty("spark.jobGroup.id") == group)
+    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
+    val stageTasks = new java.util.concurrent.ConcurrentLinkedQueue[Int]()
+    val listener = new SparkListener {
+      override def onJobStart(js: SparkListenerJobStart): Unit =
+        if (ours(js.properties)) jobs.incrementAndGet()
+      override def onStageSubmitted(ss: SparkListenerStageSubmitted): Unit =
+        if (ours(ss.properties)) stageTasks.add(ss.stageInfo.numTasks)
+    }
+    ListenerBusAccess.drain(sc)
+    sc.addSparkListener(listener)
+    sc.setJobGroup(group, "job budget")
+    try {
+      body
+      ListenerBusAccess.drain(sc)
+      import scala.jdk.CollectionConverters._
+      SparkSpec.Work(jobs.get, stageTasks.asScala.toSeq)
+    } finally {
+      sc.clearJobGroup()
+      sc.removeSparkListener(listener)
+    }
+  }
+
+  /** The Spark jobs `body` runs on this thread, see [[sparkWork]]. */
+  def jobs(body: => Any): Int = sparkWork(body).jobs
 
   def rowsOf(df: DataFrame): Seq[Seq[Any]] =
     df.collect().toSeq.map(_.toSeq)

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.ListenerBusAccess
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import graft.sources.ManifestStore
 
 /** Spark job budgets of the store kernel: building a [[ManifestStore]]
@@ -11,30 +9,6 @@ import graft.sources.ManifestStore
   */
 class StoreBudgetSpec extends SparkSpec {
   import spark.implicits._
-
-  /** Spark jobs `body` runs on this thread (its own job group, so work
-    * other threads leave running is not counted).
-    */
-  private def jobs(body: => Any): Int = {
-    val sc = spark.sparkContext
-    val group = s"budget-${java.util.UUID.randomUUID()}"
-    val n = new java.util.concurrent.atomic.AtomicInteger(0)
-    val listener = new SparkListener {
-      override def onJobStart(js: SparkListenerJobStart): Unit =
-        if (Option(js.properties).exists(_.getProperty("spark.jobGroup.id") == group)) n.incrementAndGet()
-    }
-    ListenerBusAccess.drain(sc)
-    sc.addSparkListener(listener)
-    sc.setJobGroup(group, "store budget")
-    try {
-      body
-      ListenerBusAccess.drain(sc)
-      n.get
-    } finally {
-      sc.clearJobGroup()
-      sc.removeSparkListener(listener)
-    }
-  }
 
   /** Eight leafs `p=0..7`, three rows each, in one commit. */
   private def fixture(): String = {

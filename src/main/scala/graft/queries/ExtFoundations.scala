@@ -810,10 +810,10 @@ private[graft] trait ExtFoundations {
       *
       * On a local filesystem the parquet DATA files are HARDLINKED, not
       * copied — safe because every store format here treats data files
-      * as immutable once committed: ManifestStore/PartitionedStore
-      * writes create NEW uniquely-named part files under NEW commit
-      * dirs, merges and deletes retire files by unlinking (which leaves
-      * the prototype's link untouched), and nothing ever rewrites a
+      * as immutable once committed: ManifestStore writes create NEW
+      * uniquely-named part files under NEW commit dirs, merges and
+      * deletes retire files by unlinking (which leaves the prototype's
+      * link untouched), and nothing ever rewrites a
       * `.parquet` in place. The small MUTABLE files — the `_latest`
       * manifest hint and the `_graft_geometry.json` sidecar, both
       * overwritten in place via truncating creates — are byte-copied,

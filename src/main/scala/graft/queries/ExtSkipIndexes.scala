@@ -30,9 +30,9 @@ private[graft] trait ExtSkipIndexes extends ExtVectorStores {
     ZoneMaps.refresh(spark, table, "n_chars")
     val out = ZoneMaps.readWhere(spark, table, "n_chars",
       lo = 150L, hi = 300L, requireFresh = true)
-    val scanned = graft.sources.PartitionedStore.selectedPartitionCount(out)
+    val scanned = ManifestStore.selectedPartitionTotal(out)
     val total = docs.select(expr("n_chars div 64L")).distinct().count()
-    require(scanned.exists(n => n > 0L && n < total),
+    require(scanned > 0L && scanned < total,
       s"x163: scanned $scanned of $total partitions — the zone maps " +
         "skipped nothing (or everything)")
     out.select(col("doc_id"), col("lang"), col("n_chars"))
@@ -54,16 +54,16 @@ private[graft] trait ExtSkipIndexes extends ExtVectorStores {
   // results equal to the plain filter (no false negatives, so skipping
   // only drops provably-empty partitions).
   def x164BloomSkip(spark: SparkSession, dir: String): DataFrame = {
-    import graft.sources.{BloomIndex, ManifestStore, PartitionedStore}
+    import graft.sources.{BloomIndex, ManifestStore}
     val docs = t(spark, dir, "documents")
       .select(col("doc_id"), col("lang"), col("n_chars"))
     val table = FreshTables.next(spark, dir, "bloomidx")
     ManifestStore.write(spark, docs.withColumn("pt", col("lang")), table, "pt")
     BloomIndex.refresh(spark, table, "doc_id")
     val out = BloomIndex.readEq(spark, table, "doc_id", 42L, requireFresh = true)
-    val scanned = PartitionedStore.selectedPartitionCount(out)
+    val scanned = ManifestStore.selectedPartitionTotal(out)
     val total = docs.select(col("lang")).distinct().count()
-    require(scanned.exists(n => n > 0L && n < total),
+    require(scanned > 0L && scanned < total,
       s"x164: scanned $scanned of $total partitions — the blooms " +
         "skipped nothing (or everything)")
     out.select(col("doc_id"), col("lang"), col("n_chars"))
@@ -87,7 +87,7 @@ private[graft] trait ExtSkipIndexes extends ExtVectorStores {
   // bit-identity to a from-scratch refresh are specced
   // (BloomIndexSpec); the oracle is the plain two-point lookup.
   def x165BloomMaintained(spark: SparkSession, dir: String): DataFrame = {
-    import graft.sources.{BloomIndex, ManifestStore, PartitionedStore}
+    import graft.sources.{BloomIndex, ManifestStore}
     val docs = t(spark, dir, "documents")
       .select(col("doc_id"), col("lang"), col("n_chars"))
       .withColumn("pt", col("lang"))
@@ -100,7 +100,7 @@ private[graft] trait ExtSkipIndexes extends ExtVectorStores {
     val total = docs.select(col("lang")).distinct().count()
     val out = Seq(42L, 44L).map { id => // 42 → commit 1, 44 → commit 2
       val hit = BloomIndex.readEq(spark, table, "doc_id", id, requireFresh = true)
-      val scanned = PartitionedStore.selectedPartitionTotal(hit)
+      val scanned = ManifestStore.selectedPartitionTotal(hit)
       require(scanned > 0L && scanned < total,
         s"x165: doc $id scanned $scanned of $total partitions — the " +
           "maintained blooms skipped nothing (or everything)")
@@ -125,7 +125,7 @@ private[graft] trait ExtSkipIndexes extends ExtVectorStores {
   // version-gap refusal, and null-range pickup are specced
   // (ZoneMapsSpec).
   def x166ZoneMaintained(spark: SparkSession, dir: String): DataFrame = {
-    import graft.sources.{ManifestStore, PartitionedStore, ZoneMaps}
+    import graft.sources.{ManifestStore, ZoneMaps}
     val docs = t(spark, dir, "documents")
       .select(col("doc_id"), col("lang"), col("n_chars"))
       .withColumn("pt", expr("n_chars div 64L"))
@@ -137,7 +137,7 @@ private[graft] trait ExtSkipIndexes extends ExtVectorStores {
     ZoneMaps.mergeAppend(spark, table, "n_chars", day2)
     val out = ZoneMaps.readWhere(spark, table, "n_chars",
       lo = 150L, hi = 300L, requireFresh = true)
-    val scanned = PartitionedStore.selectedPartitionTotal(out)
+    val scanned = ManifestStore.selectedPartitionTotal(out)
     val total = docs.select(col("pt")).distinct().count()
     require(scanned > 0L && scanned < total,
       s"x166: scanned $scanned of $total partitions — the maintained " +
@@ -161,7 +161,7 @@ private[graft] trait ExtSkipIndexes extends ExtVectorStores {
   // requireFresh — the range read is the output (x163's oracle), the
   // point lookup's result is require'd in place.
   def x167StreamSkip(spark: SparkSession, dir: String): DataFrame = {
-    import graft.sources.{BloomIndex, ManifestStore, PartitionedStore, ZoneMaps}
+    import graft.sources.{BloomIndex, ManifestStore, ZoneMaps}
     import org.apache.spark.sql.streaming.Trigger
     val docs = t(spark, dir, "documents")
       .select(col("doc_id"), col("lang"), col("n_chars"))
@@ -199,14 +199,14 @@ private[graft] trait ExtSkipIndexes extends ExtVectorStores {
     ZoneMaps.maintainAppend(spark, table, "n_chars", replay)
     BloomIndex.maintainAppend(spark, table, "doc_id", replay)
     val hit = BloomIndex.readEq(spark, table, "doc_id", 42L, requireFresh = true)
-    val bScanned = PartitionedStore.selectedPartitionTotal(hit)
+    val bScanned = ManifestStore.selectedPartitionTotal(hit)
     val total = docs.select(col("pt")).distinct().count()
     require(bScanned > 0L && bScanned < total,
       s"x167: point lookup scanned $bScanned of $total partitions")
     require(hit.count() == 1L, "x167: point lookup lost doc 42")
     val out = ZoneMaps.readWhere(spark, table, "n_chars",
       lo = 150L, hi = 300L, requireFresh = true)
-    val zScanned = PartitionedStore.selectedPartitionTotal(out)
+    val zScanned = ManifestStore.selectedPartitionTotal(out)
     require(zScanned > 0L && zScanned < total,
       s"x167: range read scanned $zScanned of $total partitions")
     out.select(col("doc_id"), col("lang"), col("n_chars"))
@@ -228,8 +228,7 @@ private[graft] trait ExtSkipIndexes extends ExtVectorStores {
   // over-approximates, the intersection over-approximates the
   // conjunction, the residual filter always applies).
   def x168CompositeSkip(spark: SparkSession, dir: String): DataFrame = {
-    import graft.sources.{BloomIndex, ManifestStore, PartitionedStore,
-      SkippingIndexes, ZoneMaps}
+    import graft.sources.{BloomIndex, ManifestStore, SkippingIndexes, ZoneMaps}
     import graft.sources.SkippingIndexes.{Between, Eq}
     import graft.ext.ZOrder
     val docs = t(spark, dir, "documents")
@@ -252,9 +251,9 @@ private[graft] trait ExtSkipIndexes extends ExtVectorStores {
     val preds = Seq(Between("n_chars", 150L, 300L),
       Between("doc_id", 100L, 249L), Eq("lang", "fr"))
     val out = SkippingIndexes.readWhere(spark, table, preds, requireFresh = true)
-    val sBoth = PartitionedStore.selectedPartitionTotal(out)
+    val sBoth = ManifestStore.selectedPartitionTotal(out)
     val singles = preds.take(2).map { p =>
-      PartitionedStore.selectedPartitionTotal(
+      ManifestStore.selectedPartitionTotal(
         SkippingIndexes.readWhere(spark, table, Seq(p), requireFresh = true))
     }
     val total = ManifestStore.read(spark, table)
@@ -283,7 +282,7 @@ private[graft] trait ExtSkipIndexes extends ExtVectorStores {
   // then runs the composite read over the merged-built indexes:
   // pruning require'd, results equal the plain filter.
   def x169RefreshAll(spark: SparkSession, dir: String): DataFrame = {
-    import graft.sources.{ManifestStore, PartitionedStore, SkippingIndexes}
+    import graft.sources.{ManifestStore, SkippingIndexes}
     import graft.sources.SkippingIndexes.{Between, Eq}
     import graft.ext.ZOrder
     val docs = t(spark, dir, "documents")
@@ -305,7 +304,7 @@ private[graft] trait ExtSkipIndexes extends ExtVectorStores {
     val out = SkippingIndexes.readWhere(spark, table,
       Seq(Between("n_chars", 150L, 300L), Between("doc_id", 50L, 199L),
         Eq("lang", "de")), requireFresh = true)
-    val scanned = PartitionedStore.selectedPartitionTotal(out)
+    val scanned = ManifestStore.selectedPartitionTotal(out)
     val total = ManifestStore.read(spark, table)
       .select(col("pt")).distinct().count()
     require(scanned > 0L && scanned < total,
@@ -331,7 +330,7 @@ private[graft] trait ExtSkipIndexes extends ExtVectorStores {
   // refuses loudly (a broadcast semi-join is the right tool there) —
   // the boundary is documented, not silent.
   def x170BloomIn(spark: SparkSession, dir: String): DataFrame = {
-    import graft.sources.{BloomIndex, ManifestStore, PartitionedStore}
+    import graft.sources.{BloomIndex, ManifestStore}
     val docs = t(spark, dir, "documents")
       .select(col("doc_id"), col("lang"), col("n_chars"))
     val table = FreshTables.next(spark, dir, "bloomin")
@@ -339,7 +338,7 @@ private[graft] trait ExtSkipIndexes extends ExtVectorStores {
     BloomIndex.refresh(spark, table, "doc_id")
     val out = BloomIndex.readIn(spark, table, "doc_id",
       Seq(42L, 44L, 250L), requireFresh = true)
-    val scanned = PartitionedStore.selectedPartitionTotal(out)
+    val scanned = ManifestStore.selectedPartitionTotal(out)
     val total = docs.select(col("lang")).distinct().count()
     require(scanned > 0L && scanned < total,
       s"x170: scanned $scanned of $total partitions — the IN probe " +
@@ -531,7 +530,7 @@ private[graft] trait ExtSkipIndexes extends ExtVectorStores {
   // pruning (scanned strictly between 0 and the live-partition total
   // at every SF — verified 25/256 at sf0.01, 162/256 at sf0.1).
   def x174TokenSkip(spark: SparkSession, dir: String): DataFrame = {
-    import graft.sources.{BloomIndex, ManifestStore, PartitionedStore}
+    import graft.sources.{BloomIndex, ManifestStore}
     val docs = t(spark, dir, "documents")
       .select(col("doc_id"), col("lang"), col("text"))
     val table = FreshTables.next(spark, dir, "tokskip")
@@ -540,7 +539,7 @@ private[graft] trait ExtSkipIndexes extends ExtVectorStores {
     BloomIndex.refreshTokens(spark, table, "text")
     val out = BloomIndex.readContainsAll(spark, table, "text",
       Seq("dup", "vector"), requireFresh = true)
-    val scanned = PartitionedStore.selectedPartitionTotal(out)
+    val scanned = ManifestStore.selectedPartitionTotal(out)
     val total = docs.select(pmod(col("doc_id"), lit(256L))).distinct().count()
     require(scanned > 0L && scanned < total,
       s"x174: scanned $scanned of $total partitions — the token probe " +

@@ -358,25 +358,37 @@ object SurfaceQueries {
   // --- q38: copy-on-write parquet MERGE (incremental partitioned ingest) --
   // Build a year-partitioned table, merge a batch of updates (doubled
   // price for key%100=0) + inserts (new keys in a new 2024 partition),
-  // read the merged table back. Exercises PartitionedStore.merge — only
-  // touched partition directories are rewritten (see ScaleSpec).
-  def q38PartitionedMerge(spark: SparkSession, dir: String): DataFrame = {
-    import graft.sources.PartitionedStore
-    val tag = dir.replaceAll("[^a-zA-Z0-9]", "_")
-    val base = graft.Scratch.path(s"pstore_$tag")
+  // read the merged table back. Only the touched partitions are
+  // rewritten (see ScaleSpec).
+  def q38PartitionedMerge(spark: SparkSession, dir: String): DataFrame =
+    readMergedOrders(spark, buildMergedOrders(spark, dir, "pstore"))
+
+  /** A fresh `orders` table in a [[graft.sources.ManifestStore]],
+    * partitioned by `order_year`, after one merge of the q38 updates and
+    * inserts; returns the table path. The path is emptied first: a write
+    * on an existing table adds a version and keeps the old commits.
+    */
+  private def buildMergedOrders(spark: SparkSession, dir: String, name: String): String = {
+    import graft.sources.ManifestStore
+    val base = graft.Scratch.path(s"${name}_${dir.replaceAll("[^a-zA-Z0-9]", "_")}")
+    val root = new org.apache.hadoop.fs.Path(base)
+    root.getFileSystem(spark.sessionState.newHadoopConf()).delete(root, true)
     val orders = t(spark, dir, "orders")
       .withColumn("order_year", year(col("o_orderdate")).cast("int"))
-    PartitionedStore.write(orders, base, Seq("order_year"))
+    ManifestStore.write(spark, orders, base, "order_year")
     val updates = orders.filter(col("o_orderkey") % 100 === 0)
       .withColumn("o_totalprice", col("o_totalprice") * 2)
     val inserts = orders.filter(col("o_orderkey") % 1000 === 0)
       .withColumn("o_orderkey", col("o_orderkey") + 10000000L)
       .withColumn("order_year", lit(2024))
-    PartitionedStore.merge(spark, base, updates.unionByName(inserts),
+    ManifestStore.merge(spark, base, updates.unionByName(inserts),
       Seq("o_orderkey"), "order_year")
-    PartitionedStore.read(spark, base)
-      .select(col("o_orderkey"), col("o_totalprice"), col("order_year").cast("int").as("order_year"))
+    base
   }
+
+  private def readMergedOrders(spark: SparkSession, base: String): DataFrame =
+    graft.sources.ManifestStore.read(spark, base)
+      .select(col("o_orderkey"), col("o_totalprice"), col("order_year").cast("int").as("order_year"))
 
   val q38Sql: String =
     """SELECT o_orderkey,
@@ -641,33 +653,16 @@ object SurfaceQueries {
        UNION ALL
        SELECT 'a_customers', c_custkey, CAST(c_acctbal AS DOUBLE), 'insert' FROM customer"""
 
-  // --- q46: manifest-committed MERGE (atomic snapshot publication) --------
-  // Same merge semantics as q38 but through ManifestStore: immutable data
-  // commits + one atomic manifest rename per commit — no partition-dir
-  // swap window, snapshot-isolated readers, object-store-safe. The vacuum
-  // afterwards reclaims the superseded partition versions and must not
-  // change the readable snapshot.
+  // --- q46: manifest-committed MERGE then vacuum ---------------------------
+  // q38's table and merge (immutable data commits + one atomic manifest
+  // rename per commit), then a vacuum that reclaims the superseded
+  // partition versions and must not change the readable snapshot.
   def q46ManifestMerge(spark: SparkSession, dir: String): DataFrame = {
-    import graft.sources.ManifestStore
-    val tag = dir.replaceAll("[^a-zA-Z0-9]", "_")
-    val base = graft.Scratch.path(s"mstore_$tag")
-    val fs = org.apache.hadoop.fs.FileSystem.get(spark.sparkContext.hadoopConfiguration)
-    fs.delete(new org.apache.hadoop.fs.Path(base), true) // fresh table per run
-    val orders = t(spark, dir, "orders")
-      .withColumn("order_year", year(col("o_orderdate")).cast("int"))
-    ManifestStore.write(spark, orders, base, "order_year")
-    val updates = orders.filter(col("o_orderkey") % 100 === 0)
-      .withColumn("o_totalprice", col("o_totalprice") * 2)
-    val inserts = orders.filter(col("o_orderkey") % 1000 === 0)
-      .withColumn("o_orderkey", col("o_orderkey") + 10000000L)
-      .withColumn("order_year", lit(2024))
-    ManifestStore.merge(spark, base, updates.unionByName(inserts),
-      Seq("o_orderkey"), "order_year")
+    val base = buildMergedOrders(spark, dir, "mstore")
     // minAge 0: this gate is the table's only writer/reader; production
     // keeps the default retention so in-flight merges are never vacuumed
-    ManifestStore.vacuum(spark, base, minAgeMillis = 0L)
-    ManifestStore.read(spark, base)
-      .select(col("o_orderkey"), col("o_totalprice"), col("order_year").cast("int").as("order_year"))
+    graft.sources.ManifestStore.vacuum(spark, base, minAgeMillis = 0L)
+    readMergedOrders(spark, base)
   }
 
   val q46Sql: String = q38Sql

@@ -36,23 +36,15 @@ object ConnectorSink {
   /** Apply a routed DataFrame (from [[MergeRouter.route]]) through a
     * handler; returns the per-row results as a DataFrame ready for
     * [[LogStore.append]]. Deletes run before inserts within a partition
-    * (the reference's delete-then-insert refresh, :506-517); `skip` rows
-    * are dropped.
-    *
-    * `pkCol` optionally re-co-locates all actions for one pk in one
-    * partition (hash repartition on the key). [[MergeRouter.route]]
-    * already repartitions Delete-mode output on the pk, so routed frames
-    * are safe by default; pass `pkCol` as defense-in-depth when the
-    * routed frame was transformed in a way that may have re-shuffled it
-    * (a plain select/filter between route and sink preserves
-    * partitioning; joins and repartitions do not).
+    * (the reference's delete-then-insert refresh, :506-517), which
+    * [[MergeRouter.route]] makes safe by putting a pk's delete and insert
+    * rows in one partition; `skip` rows are dropped.
     */
-  def apply(routed: DataFrame, handler: Handler, pkCol: Option[String] = None): DataFrame = {
+  def apply(routed: DataFrame, handler: Handler): DataFrame = {
     val spark = routed.sparkSession
     import spark.implicits._
-    val colocated = pkCol.fold(routed)(k => routed.repartition(col(k)))
-    val actionIdx = colocated.schema.fieldIndex(MergeRouter.ActionCol)
-    colocated.mapPartitions { it =>
+    val actionIdx = routed.schema.fieldIndex(MergeRouter.ActionCol)
+    routed.mapPartitions { it =>
       val (deletes, rest) = it.partition(_.getString(actionIdx) == "delete")
       val byAction = rest.toSeq.groupBy(_.getString(actionIdx))
       handler.delete(deletes) ++

@@ -62,16 +62,18 @@ object MergeRouter {
       case OnlyUpdate =>
         joined.withColumn(ActionCol, when(matched, lit("update")).otherwise(lit("skip")))
       case Delete =>
-        val deletes = joined.filter(matched).withColumn(ActionCol, lit("delete"))
-        val inserts = joined.withColumn(ActionCol, lit("insert"))
-          .withColumn(IdCol, lit(null).cast(joined.schema(IdCol).dataType))
-        // The union puts a pk's delete row and re-insert row in DIFFERENT
-        // partitions; repartition on the pk here — where the mode is
-        // known — so any partition-local sink (ConnectorSink orders
-        // deletes first) applies delete-then-insert correctly without the
-        // caller having to remember a co-location flag. Other modes emit
-        // one action per pk and skip the extra shuffle.
-        deletes.unionByName(inserts).repartition(col(pkCol))
+        // one generator over the one joined frame: a matched row emits a
+        // delete of its old id and an insert, an unmatched row an insert,
+        // so the extract is scanned once. Repartition on the pk here —
+        // where the mode is known — so any partition-local sink
+        // (ConnectorSink orders deletes first) applies delete-then-insert
+        // to a pk's rows in one partition. Other modes emit one action per
+        // pk and skip the extra shuffle.
+        joined
+          .withColumn(ActionCol, explode(when(matched, array(lit("delete"), lit("insert")))
+            .otherwise(array(lit("insert")))))
+          .withColumn(IdCol, when(col(ActionCol) === "delete", col(IdCol)))
+          .repartition(col(pkCol))
     }
     routed
   }

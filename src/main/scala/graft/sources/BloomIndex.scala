@@ -357,7 +357,7 @@ object BloomIndex {
         if (quals.isEmpty) base.limit(0).filter(pred)
         else {
           val pcols = ManifestStore.partitionColsOf(spark, table)
-          base.filter(PartitionedStore.partitionValuesPred(pcols, quals))
+          base.filter(ManifestStore.partitionValuesPred(pcols, quals))
             .filter(pred)
         }
     }
@@ -433,7 +433,7 @@ object BloomIndex {
         if (quals.isEmpty) base.limit(0).filter(pred)
         else {
           val pcols = ManifestStore.partitionColsOf(spark, table)
-          base.filter(PartitionedStore.partitionValuesPred(pcols, quals))
+          base.filter(ManifestStore.partitionValuesPred(pcols, quals))
             .filter(pred)
         }
     }
@@ -465,7 +465,7 @@ object BloomIndex {
         if (quals.isEmpty) base.limit(0).filter(pred)
         else {
           val pcols = ManifestStore.partitionColsOf(spark, table)
-          base.filter(PartitionedStore.partitionValuesPred(pcols, quals))
+          base.filter(ManifestStore.partitionValuesPred(pcols, quals))
             .filter(pred)
         }
     }

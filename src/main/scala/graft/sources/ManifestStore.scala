@@ -6,14 +6,15 @@ import org.apache.spark.sql.types.{DataType, StructType}
 import org.json4s._
 import org.json4s.jackson.JsonMethods
 
-/** Manifest-committed partitioned parquet — the ATOMIC sibling of
-  * [[PartitionedStore]] (whose per-partition delete-then-rename swap has a
-  * documented crash window). The design is the public Delta/Iceberg idea
-  * reduced to its core: data files are IMMUTABLE and never moved or
-  * deleted by a commit; each commit writes new files plus one small
-  * manifest that maps every live partition to the commit directory owning
-  * its current version; readers resolve the LATEST manifest and scan only
-  * the files it references. That gives:
+/** Manifest-committed partitioned parquet — the one partitioned-table
+  * kernel: copy-on-write by partition, so a merge, delete or
+  * replaceWhere costs O(partitions it touches), never O(table), and
+  * every commit publishes atomically. The design is the public
+  * Delta/Iceberg idea reduced to its core: data files are IMMUTABLE and
+  * never moved or deleted by a commit; each commit writes new files plus
+  * one small manifest that maps every live partition to the commit
+  * directory owning its current version; readers resolve the LATEST
+  * manifest and scan only the files it references. That gives:
   *
   *  - atomic commits: the manifest becomes visible via a single file
   *    rename — a crash mid-merge leaves an orphaned commit directory and
@@ -44,8 +45,8 @@ import org.json4s.jackson.JsonMethods
   * exists, and a read-back verifies the claim on filesystems whose rename
   * overwrites (POSIX). The loser gets an IOException and must re-merge
   * from the new snapshot (its commit directory is orphaned, reclaimed by
-  * [[vacuum]]). Cost per merge beyond PartitionedStore: one manifest
-  * read + write — data I/O is identical (O(touched partitions)).
+  * [[vacuum]]). Cost of the atomic publication: one manifest read +
+  * write per commit, beside the data I/O of the touched partitions.
   */
 object ManifestStore {
 
@@ -288,8 +289,9 @@ object ManifestStore {
 
   /** RELATIVE leaf partition dirs under `root` as Spark wrote them
     * (depth = partitionCols.length, each segment `<col_i>=...`) — never
-    * re-derived by string-formatting values, see PartitionedStore.merge
-    * scaladoc.
+    * re-derived by string-formatting values: Spark hive-escapes special
+    * characters and nulls, and a name mismatch would silently drop the
+    * partition.
     */
   private def leafPartitionDirs(
       fs: FileSystem, root: Path, partitionCols: Seq[String]): Seq[(String, org.apache.hadoop.fs.FileStatus)] = {
@@ -523,14 +525,19 @@ object ManifestStore {
     }.reduce(_.unionByName(_, allowMissingColumns = true))
   }
 
-  /** Copy-on-write MERGE with an atomic commit: same data plan as
-    * [[PartitionedStore.merge]] (read ONLY touched partitions via the
-    * manifest, anti-join on the keys, union the batch, rewrite those
-    * partitions), but publication is a manifest pointer flip instead of
-    * directory swaps. Same contract: batch carries the partition
-    * column(s), partition values neither null nor `""` (both land in
-    * the default-partition leaf, see [[PartitionedStore.writesAsNull]]),
-    * stable key→partition assignment. Multi-level partitioning is
+  /** Copy-on-write MERGE (upsert) with an atomic commit — the at-scale
+    * form of the reference's update/insert reprocess against file
+    * storage: read ONLY the touched partitions via the manifest,
+    * anti-join their rows on the batch keys, union the batch, rewrite
+    * those partitions as one new commit and publish it with a manifest
+    * pointer flip. Untouched partitions are never read, rewritten or
+    * moved. Contract: the batch carries the partition column(s);
+    * partition values are neither null nor `""` (both land in the
+    * default-partition leaf, see [[writesAsNull]]); and a key's
+    * partition value is STABLE across upserts — a row that moves
+    * partitions would leave its old copy behind (detecting that needs a
+    * global key scan, which defeats O(touched); route such changes as an
+    * explicit [[delete]] plus merge). Multi-level partitioning is
     * supported — the touched set is the distinct partition TUPLES,
     * pruned as an OR-of-AND predicate.
     * A batch whose rows are already on the driver (a `LocalRelation`:
@@ -620,6 +627,7 @@ object ManifestStore {
       txn: Option[(String, Long)] = None,
       evolveSchema: Boolean = false,
       txnRecord: Map[String, Long] = Map.empty): Unit = {
+    import org.apache.spark.sql.functions.col
     val fs = fsFor(spark, new Path(path))
     val m = base(fs, path, Some(partitionCols))
     // txn fence (the public Delta SetTransaction contract): if this
@@ -632,12 +640,12 @@ object ManifestStore {
     // STREAM (stable across restarts), not the run.
     for ((app, bid) <- txn)
       if (m.txn.get(app).exists(_ >= bid)) return
-    val touched = PartitionedStore.touchedTuples(batch, partitionCols)
+    val touched = touchedTuples(batch, partitionCols)
     // a zero-row batch touches nothing: no-op, no empty commit, no
     // manifest bump (also keeps the tuple predicate below off
     // empty.reduce)
     if (touched.isEmpty) return
-    require(!touched.exists(_.exists(PartitionedStore.writesAsNull)),
+    require(!touched.exists(_.exists(writesAsNull)),
       s"merge: null ${partitionCols.mkString(",")} in batch")
     // current rows of the touched partitions at snapshot m — guarded
     // BEFORE the scan is built: a manifest with zero live partitions (a
@@ -651,8 +659,8 @@ object ManifestStore {
         // thousands of touched tuples never overflow Catalyst's recursive
         // transforms) — both shapes prune directories at planning time
         val current = readAll(spark, path, m)
-          .filter(PartitionedStore.partitionValuesPred(partitionCols, touched))
-        // upsertPlan selects the current columns out of the batch, which
+          .filter(partitionValuesPred(partitionCols, touched))
+        // the upsert selects the current columns out of the batch, which
         // would silently DROP a new batch column — surface that as an
         // explicit evolution decision instead
         val extra = batch.columns.filterNot(current.columns.contains)
@@ -660,7 +668,12 @@ object ManifestStore {
           s"merge: batch adds column(s) ${extra.mkString(",")} the table lacks — pass evolveSchema=true to evolve the schema")
         val (cur2, bat2) =
           if (evolveSchema) alignSchemas(current, batch, partitionCols) else (current, batch)
-        PartitionedStore.upsertPlan(cur2, bat2, keyCols)
+        // current rows that lose to a batch key are anti-joined away,
+        // then the batch is unioned in with the current column order
+        val keyed = bat2.select(keyCols.map(c => bat2(c).as(s"__k_$c")): _*)
+        val keep = cur2.join(keyed,
+          keyCols.map(c => cur2(c) === col(s"__k_$c")).reduce(_ && _), "left_anti")
+        keep.unionByName(bat2.select(keep.columns.map(col).toSeq: _*))
       }
     val c = writeCommit(spark, path, out, partitionCols)
     // txnRecord entries commit atomically with the data but are NEVER
@@ -668,6 +681,66 @@ object ManifestStore {
     // their own check (the ClusterStore replay fence), vs `txn` whose
     // >= skip is the streaming idempotence contract above
     publish(fs, path, m.next(c, Set.empty, m.txn ++ txnRecord ++ txn))
+  }
+
+  /** The distinct `cols` tuples of a merge batch — the touched set of
+    * [[merge]]. A batch whose rows are already on the driver (its
+    * projection optimizes to a `LocalRelation`: a `toDF` of local rows, a
+    * push-mode payload) collects with no Spark job and is deduplicated
+    * here; any other batch runs a `distinct()` collect.
+    */
+  private def touchedTuples(batch: DataFrame, cols: Seq[String]): Seq[Seq[Any]] = {
+    import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
+    import org.apache.spark.sql.functions.col
+    val tuples = batch.select(cols.map(col): _*)
+    val local = tuples.queryExecution.optimizedPlan.isInstanceOf[LocalRelation]
+    val rows = (if (local) tuples else tuples.distinct()).collect()
+    rows.map(r => cols.indices.map(r.get)).toSeq.distinct
+  }
+
+  /** A partition value Spark writes into the `__HIVE_DEFAULT_PARTITION__`
+    * leaf, which reads back as null: null itself and the empty string. A
+    * merge refuses both, since its touched filter (`p IN ('')`) would match
+    * none of that leaf's rows and the rewrite would drop them.
+    */
+  private def writesAsNull(v: Any): Boolean = v == null || v == ""
+
+  /** Balanced OR-of-AND membership predicate on partition values — the
+    * touched-partition filter of [[merge]], shared by the derived
+    * skipping indexes ([[ZoneMaps]], [[BloomIndex]]): `tuples` are the
+    * qualifying partitions' values in `pcols` order; the OR tree is
+    * balanced (depth log n) so thousands of qualifying partitions never
+    * build a right-deep Catalyst expression.
+    */
+  def partitionValuesPred(
+      pcols: Seq[String],
+      tuples: Seq[Seq[Any]]): org.apache.spark.sql.Column = {
+    import org.apache.spark.sql.Column
+    import org.apache.spark.sql.functions.{col, lit}
+    require(tuples.nonEmpty, "partitionValuesPred: empty qualifying set")
+    def balanced(cs: Seq[Column]): Column = {
+      var cur = cs
+      while (cur.size > 1) cur = cur.grouped(2).map(_.reduce(_ || _)).toSeq
+      cur.head
+    }
+    if (pcols.size == 1) col(pcols.head).isin(tuples.map(_.head): _*)
+    else balanced(tuples.map(tuple =>
+      pcols.zip(tuple).map { case (c, v) => col(c) === lit(v) }.reduce(_ && _)))
+  }
+
+  /** Partition directories selected by `df`'s plan, summed over EVERY
+    * scan in it (from each FileSourceScan's partition filters) — lets
+    * tests and ops verify pruning happened instead of trusting it. A
+    * multi-commit read is a union of one scan per live commit, and
+    * filter-based skipping ([[ZoneMaps]]) prunes each scan
+    * independently; `inputFiles` cannot see that pruning (it lists the
+    * FileIndex before filters apply).
+    */
+  def selectedPartitionTotal(df: DataFrame): Long = {
+    import org.apache.spark.sql.execution.FileSourceScanExec
+    df.queryExecution.executedPlan.collect {
+      case s: FileSourceScanExec => s.selectedPartitions.partitionCount.toLong
+    }.sum
   }
 
   /** Last streaming batch id the current snapshot records for the

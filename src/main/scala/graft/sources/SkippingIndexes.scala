@@ -128,7 +128,7 @@ object SkippingIndexes {
     val surviving = contributing.reduce(_ intersect _)
     if (surviving.isEmpty) return base.limit(0).filter(pred)
     val pcols = ManifestStore.partitionColsOf(spark, table)
-    base.filter(PartitionedStore.partitionValuesPred(pcols, surviving.toSeq))
+    base.filter(ManifestStore.partitionValuesPred(pcols, surviving.toSeq))
       .filter(pred)
   }
 }

@@ -177,7 +177,7 @@ object ZoneMaps {
         if (quals.isEmpty) base.limit(0).filter(pred)
         else {
           val pcols = ManifestStore.partitionColsOf(spark, table)
-          base.filter(PartitionedStore.partitionValuesPred(pcols, quals))
+          base.filter(ManifestStore.partitionValuesPred(pcols, quals))
             .filter(pred)
         }
     }

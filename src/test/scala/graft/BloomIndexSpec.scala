@@ -1,7 +1,7 @@
 package graft
 
 import org.apache.spark.sql.functions._
-import graft.sources.{BloomIndex, Failpoints, ManifestStore, PartitionedStore}
+import graft.sources.{BloomIndex, Failpoints, ManifestStore}
 
 /** Per-partition Bloom equality skipping (x164): point lookups prune on
   * layouts zone maps can't help, no false negatives ever, staleness and
@@ -25,7 +25,7 @@ class BloomIndexSpec extends SparkSpec {
     // doc_250 lives in pt=2 only; 2^17 bits over ~100 values per
     // partition makes a cross-partition false positive astronomically
     // unlikely for a fixed seed — pin exactly 1 scanned
-    assert(PartitionedStore.selectedPartitionCount(out).contains(1L))
+    assert(ManifestStore.selectedPartitionTotal(out) == 1L)
     assert(out.select(col("id")).collect().map(_.getLong(0)).toSeq == Seq(250L))
   }
 
@@ -74,7 +74,7 @@ class BloomIndexSpec extends SparkSpec {
     BloomIndex.refresh(spark, root, "name")
     // pt=1 is all-null → no bloom row → provably empty of `name = 'a'`
     val out = BloomIndex.readEq(spark, root, "name", "a", requireFresh = true)
-    assert(PartitionedStore.selectedPartitionCount(out).contains(1L))
+    assert(ManifestStore.selectedPartitionTotal(out) == 1L)
     assert(out.select(col("id")).collect().map(_.getLong(0)).toSeq == Seq(1L))
     intercept[IllegalArgumentException] {
       BloomIndex.readEq(spark, root, "name", null)
@@ -102,7 +102,7 @@ class BloomIndexSpec extends SparkSpec {
     // fresh at the NEW snapshot: both an old and a new value probe
     val newer = BloomIndex.readEq(spark, root, "name", "doc_350", requireFresh = true)
     assert(newer.select(col("id")).collect().map(_.getLong(0)).toSeq == Seq(350L))
-    assert(PartitionedStore.selectedPartitionTotal(newer) == 1L)
+    assert(ManifestStore.selectedPartitionTotal(newer) == 1L)
     val older = BloomIndex.readEq(spark, root, "name", "doc_50", requireFresh = true)
     assert(older.select(col("id")).collect().map(_.getLong(0)).toSeq == Seq(50L))
     // pure append: the merged index IS the from-scratch index, bit for bit
@@ -158,13 +158,13 @@ class BloomIndexSpec extends SparkSpec {
     // the replaced value's bits linger: its old partition still scans
     // (false positive) but the RESULT is exact — zero rows
     val gone = BloomIndex.readEq(spark, root, "name", "doc_250", requireFresh = true)
-    assert(PartitionedStore.selectedPartitionTotal(gone) == 1L)
+    assert(ManifestStore.selectedPartitionTotal(gone) == 1L)
     assert(gone.count() == 0L)
     // a full refresh re-measures and the lingering bits drop out
     BloomIndex.refresh(spark, root, "name")
     val after = BloomIndex.readEq(spark, root, "name", "doc_250", requireFresh = true)
     assert(after.count() == 0L)
-    assert(PartitionedStore.selectedPartitionTotal(after) == 0L)
+    assert(ManifestStore.selectedPartitionTotal(after) == 0L)
   }
 
   test("maintainAppend: no-op at stamp==snapshot, fold at gap 1, sized rebuild at a torn window") {
@@ -205,14 +205,14 @@ class BloomIndexSpec extends SparkSpec {
     // keys from two partitions (pt=0, pt=3) + one absent key
     val out = BloomIndex.readIn(spark, root, "name",
       Seq("doc_50", "doc_350", "doc_9999"), requireFresh = true)
-    assert(PartitionedStore.selectedPartitionTotal(out) == 2L)
+    assert(ManifestStore.selectedPartitionTotal(out) == 2L)
     assert(out.select(col("id")).collect().map(_.getLong(0)).toSet ==
       Set(50L, 350L))
     // all-absent: zero partitions
     val none = BloomIndex.readIn(spark, root, "name",
       Seq("doc_9998", "doc_9999"), requireFresh = true)
     assert(none.count() == 0L)
-    assert(PartitionedStore.selectedPartitionTotal(none) == 0L)
+    assert(ManifestStore.selectedPartitionTotal(none) == 0L)
     // boundaries: empty / null-bearing / oversized lists are refused
     intercept[IllegalArgumentException] {
       BloomIndex.readIn(spark, root, "name", Seq.empty)
@@ -232,7 +232,7 @@ class BloomIndexSpec extends SparkSpec {
     val out = BloomIndex.readEq(spark, root, "id", 250L, requireFresh = true)
     assert(out.select(col("name")).collect().map(_.getString(0)).toSeq ==
       Seq("doc_250"))
-    assert(PartitionedStore.selectedPartitionCount(out).contains(1L))
+    assert(ManifestStore.selectedPartitionTotal(out) == 1L)
   }
 
   // ---- token blooms (x174): keyword skipping inside a text column ----
@@ -252,7 +252,7 @@ class BloomIndexSpec extends SparkSpec {
     // prunes to pt 0, and the residual keeps only doc 1
     val out = BloomIndex.readContainsAll(spark, root, "text",
       Seq("alpha", "beta"), requireFresh = true)
-    assert(PartitionedStore.selectedPartitionCount(out).contains(1L))
+    assert(ManifestStore.selectedPartitionTotal(out) == 1L)
     assert(out.select(col("id")).collect().map(_.getLong(0)).toSeq == Seq(1L))
     // single common term: both holders found across partitions
     val a = BloomIndex.readContainsAll(spark, root, "text", Seq("alpha"),

@@ -113,19 +113,6 @@ class LakehouseOpsSpec extends SparkSpec {
     }
   }
 
-  test("PartitionedStore.merge refuses a null or \"\" partition value and leaves the table as it was") {
-    val t = freshTable("pstore_null")
-    graft.sources.PartitionedStore.write(Seq((1L, "a", "x"), (2L, "b", "y")).toDF("k", "v", "p"), t, Seq("p"))
-    def rows = sortedRows(graft.sources.PartitionedStore.read(spark, t).select("k", "v", "p"))
-    val before = rows
-    for (p <- Seq(null, "")) withClue(s"p = '$p': ") {
-      val e = intercept[IllegalArgumentException](graft.sources.PartitionedStore.merge(spark, t,
-        Seq((3L, "c", "x"), (4L, "d", p)).toDF("k", "v", "p"), Seq("k"), "p"))
-      assert(e.getMessage.contains("merge: null p in batch"))
-      assert(rows == before)
-    }
-  }
-
   // -------------------------------------------------------------- changes
 
   test("changes classifies insert/update/delete and scans only repointed partitions") {

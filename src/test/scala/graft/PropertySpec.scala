@@ -72,7 +72,7 @@ class PropertySpec extends SparkSpec {
     }
   }
 
-  test("merge routing covers every incoming row exactly once (non-delete modes)") {
+  test("merge routing covers every incoming row once; Delete adds a co-located delete") {
     import graft.sinks.MergeRouter
     import graft.spec.Specs.ReprocessMode
     forAllSeeded(Gen.zip(Gen.listOfN(30, Gen.chooseNum(1, 50)), Gen.listOfN(10, Gen.chooseNum(1, 50))), 4) {
@@ -85,6 +85,14 @@ class PropertySpec extends SparkSpec {
           val routed = MergeRouter.route(inc, st, "pk", mode)
           assert(routed.count() == inc.count(), s"mode $mode")
         }
+        val matched = incoming.distinct.count(stateKeys.contains)
+        val routed = MergeRouter.route(inc, st, "pk", ReprocessMode.Delete)
+          .select(col("pk"), col(MergeRouter.ActionCol), spark_partition_id().as("part"))
+          .collect().map(r => (r.getInt(0), r.getString(1), r.getInt(2)))
+        assert(routed.length == inc.count() + matched, "mode Delete")
+        assert(routed.count(_._2 == "delete") == matched)
+        for ((k, rows) <- routed.groupBy(_._1))
+          assert(rows.map(_._3).distinct.length == 1, s"pk $k spans partitions: ${rows.toSeq}")
       }
     }
   }

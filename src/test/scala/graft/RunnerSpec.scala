@@ -125,10 +125,9 @@ class RunnerSpec extends SparkSpec {
     val incoming = (1 to 200).toDF("pk")
     val state = (1 to 200).map(k => (k.toString, k.toLong)).toDF("pk", "model_id")
     val routed = MergeRouter.route(incoming, state, "pk", ReprocessMode.Delete)
-    // the union puts a pk's delete and insert rows in different partitions;
-    // pkCol co-location + partition-local delete-first makes the order safe.
-    ConnectorSink(routed, new MapHandler(routed.columns.indexOf("pk")),
-      pkCol = Some("pk")).count()
+    // route puts a pk's delete and insert rows in one partition; the
+    // sink's partition-local delete-first makes the order safe.
+    ConnectorSink(routed, new MapHandler(routed.columns.indexOf("pk"))).count()
     // if any insert had run before its delete, the delete would have
     // removed the NEW row and the pk would be missing from the store
     assert(FakeDest.store.size() == 200)

@@ -243,20 +243,20 @@ class ScaleSpec extends SparkSpec {
   }
 
   test("partitioned store prunes non-matching partition directories") {
-    import graft.sources.PartitionedStore
+    import graft.sources.ManifestStore
     val path = java.nio.file.Files.createTempDirectory(java.nio.file.Paths.get(graft.Scratch.root), "graft_part").toString + "/orders"
     val orders = spark.read.parquet(s"$sfDir/orders.parquet")
       .withColumn("order_year", year(col("o_orderdate")))
-    PartitionedStore.write(orders, path, Seq("order_year"))
-    val all = PartitionedStore.read(spark, path)
+    ManifestStore.write(spark, orders, path, "order_year")
+    val all = ManifestStore.read(spark, path)
     val years = all.select("order_year").distinct().count()
     assert(years > 1)
     val pruned = all.filter(col("order_year") === 1995)
     pruned.collect()
-    assert(PartitionedStore.selectedPartitionCount(pruned).contains(1L),
+    assert(ManifestStore.selectedPartitionTotal(pruned) == 1L,
       s"expected 1 selected partition of $years")
-    assert(PartitionedStore.selectedPartitionCount(all.filter(col("o_totalprice") > 0))
-      .exists(_ == years)) // non-partition filter prunes nothing
+    assert(ManifestStore.selectedPartitionTotal(all.filter(col("o_totalprice") > 0))
+      == years) // non-partition filter prunes nothing
   }
 
   test("watermark drops late events in append-mode windowed aggregation") {
@@ -292,41 +292,38 @@ class ScaleSpec extends SparkSpec {
     } finally q.stop()
   }
   test("copy-on-write merge rewrites only the touched partitions") {
-    import graft.sources.PartitionedStore
+    import graft.sources.ManifestStore
     val path = java.nio.file.Files.createTempDirectory(java.nio.file.Paths.get(graft.Scratch.root), "graft_merge").toString + "/t"
     val orders = spark.read.parquet(s"$sfDir/orders.parquet")
       .withColumn("order_year", year(col("o_orderdate")).cast("int"))
-    PartitionedStore.write(orders, path, Seq("order_year"))
-    def files(year: Int): Map[String, Long] = {
-      val d = new java.io.File(s"$path/order_year=$year")
-      if (!d.exists()) Map.empty
-      else d.listFiles().filter(_.getName.endsWith(".parquet"))
-        .map(f => f.getName -> f.lastModified()).toMap
-    }
+    ManifestStore.write(spark, orders, path, "order_year")
+    def files(version: Option[Int], year: Int): Set[String] =
+      ManifestStore.read(spark, path, version).inputFiles.filter(_.contains(s"/order_year=$year/")).toSet
     val years = orders.select("order_year").distinct()
       .collect().map(_.getInt(0)).sorted
     val (touchYear, quietYear) = (years.head, years.last)
-    val before = files(quietYear)
-    assert(before.nonEmpty)
+    assert(files(Some(1), quietYear).nonEmpty)
     // batch: update some keys in touchYear + insert a brand-new 2024 row
     val updates = orders.filter(col("order_year") === touchYear && col("o_orderkey") % 10 === 0)
       .withColumn("o_totalprice", col("o_totalprice") * 2)
-    val insert = orders.limit(1)
+    val insert = orders.orderBy("o_orderkey").limit(1)
       .withColumn("o_orderkey", lit(999999999L))
       .withColumn("order_year", lit(2024))
-    PartitionedStore.merge(spark, path, updates.unionByName(insert),
+    ManifestStore.merge(spark, path, updates.unionByName(insert),
       Seq("o_orderkey"), "order_year")
-    // untouched partition: identical files, byte-level (names + mtimes)
-    assert(files(quietYear) == before)
-    // touched + new partitions materialized correctly
-    val merged = PartitionedStore.read(spark, path)
-    assert(files(2024).nonEmpty)
-    assert(merged.filter(col("o_orderkey") === 999999999L).count() == 1)
+    // untouched partition: read from v1's files, never rewritten
+    assert(files(None, quietYear) == files(Some(1), quietYear))
+    assert(files(None, touchYear).intersect(files(Some(1), touchYear)).isEmpty)
+    // touched + new partitions hold the expected rows
+    val merged = ManifestStore.read(spark, path)
+    assert(files(None, 2024).nonEmpty)
+    assert(sortedRows(merged.filter(col("order_year") === 2024)) ==
+      sortedRows(insert.select(merged.columns.map(col).toSeq: _*)))
     val expectTouched = orders.filter(col("order_year") === touchYear)
       .withColumn("o_totalprice",
         when(col("o_orderkey") % 10 === 0, col("o_totalprice") * 2).otherwise(col("o_totalprice")))
     assert(sortedRows(merged.filter(col("order_year") === touchYear)) ==
-      sortedRows(expectTouched))
+      sortedRows(expectTouched.select(merged.columns.map(col).toSeq: _*)))
   }
 
   test("streaming dedup drops repeats within the watermark window") {
@@ -350,22 +347,6 @@ class ScaleSpec extends SparkSpec {
       val ids = spark.sql("SELECT id FROM dd_test").collect().map(_.getLong(0)).toSeq
       assert(ids.sorted == Seq(1L, 2L, 3L)) // the 10:02 repeat of id 1 was dropped
     } finally q.stop()
-  }
-
-  test("compaction collapses small files per partition, preserving data") {
-    import graft.sources.PartitionedStore
-    val path = java.nio.file.Files.createTempDirectory(java.nio.file.Paths.get(graft.Scratch.root), "graft_compact").toString + "/t"
-    val orders = spark.read.parquet(s"$sfDir/orders.parquet")
-      .withColumn("order_year", year(col("o_orderdate")))
-    // simulate fragmented incremental ingest: many tiny files per partition
-    orders.repartition(8).write.partitionBy("order_year").parquet(path)
-    def parquetFiles = java.nio.file.Files.walk(java.nio.file.Paths.get(path))
-      .filter(p => p.toString.endsWith(".parquet")).count()
-    val before = parquetFiles
-    val checksum = spark.read.parquet(path).agg(sum("o_orderkey")).collect().head.getLong(0)
-    PartitionedStore.compact(spark, path, Seq("order_year"))
-    assert(parquetFiles < before)
-    assert(spark.read.parquet(path).agg(sum("o_orderkey")).collect().head.getLong(0) == checksum)
   }
 
   test("manifest store: atomic merge, snapshot isolation, vacuum") {

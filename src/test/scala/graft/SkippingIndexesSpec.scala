@@ -1,7 +1,7 @@
 package graft
 
 import org.apache.spark.sql.functions._
-import graft.sources.{BloomIndex, ManifestStore, PartitionedStore, SkippingIndexes, ZoneMaps}
+import graft.sources.{BloomIndex, ManifestStore, SkippingIndexes, ZoneMaps}
 import graft.sources.SkippingIndexes.{Between, Eq, HasTokens, In}
 
 /** Composite skipping (x168): intersection prunes multiplicatively on
@@ -32,8 +32,8 @@ class SkippingIndexesSpec extends SparkSpec {
       requireFresh = true)
     val one = SkippingIndexes.readWhere(spark, root,
       Seq(Between("x", 300L, 400L)), requireFresh = true)
-    val sBoth = PartitionedStore.selectedPartitionTotal(both)
-    val sOne = PartitionedStore.selectedPartitionTotal(one)
+    val sBoth = ManifestStore.selectedPartitionTotal(both)
+    val sOne = ManifestStore.selectedPartitionTotal(one)
     assert(sBoth == 1L && sOne == 4L) // a cell vs an x-stripe
     val expected = grid.filter(g => g._3 >= 300 && g._3 <= 400 &&
       g._4 >= 300 && g._4 <= 400).map(_._1).toSet
@@ -51,7 +51,7 @@ class SkippingIndexesSpec extends SparkSpec {
       Seq(Eq("name", "n_137"), Between("x", 800L, 900L), Between("y", 0L, 2000L)))
     assert(out.select(col("id")).collect().map(_.getLong(0)).toSeq == Seq(137L))
     // the y predicate has no maps: silent in default mode, loud in requireFresh
-    assert(PartitionedStore.selectedPartitionTotal(out) == 1L)
+    assert(ManifestStore.selectedPartitionTotal(out) == 1L)
     intercept[IllegalArgumentException] {
       SkippingIndexes.readWhere(spark, root,
         Seq(Between("y", 0L, 2000L)), requireFresh = true)
@@ -71,7 +71,7 @@ class SkippingIndexesSpec extends SparkSpec {
       Seq(Between("x", 300L, 400L), Between("y", 300L, 400L)))
     assert(out.select(col("id")).collect().map(_.getLong(0)).toSet
       .contains(1000L))
-    assert(PartitionedStore.selectedPartitionTotal(out) == 16L) // all cells
+    assert(ManifestStore.selectedPartitionTotal(out) == 16L) // all cells
   }
 
   test("lifecycle interplay: vacuum keeps indexes fresh, compact stales them, an empty fold re-stamps") {
@@ -103,7 +103,7 @@ class SkippingIndexesSpec extends SparkSpec {
     BloomIndex.maintainAppend(spark, root, "name", empty)
     val out = readBoth()
     assert(out.select(col("id")).collect().map(_.getLong(0)).toSeq == Seq(126L))
-    assert(PartitionedStore.selectedPartitionTotal(out) == 1L)
+    assert(ManifestStore.selectedPartitionTotal(out) == 1L)
   }
 
   test("refreshAll: identical side tables to single-column refreshes, from merged one-scan passes") {
@@ -153,7 +153,7 @@ class SkippingIndexesSpec extends SparkSpec {
       Seq(Between("x", 300L, 400L), Between("y", 300L, 400L),
         Eq("name", "n_126")), requireFresh = true)
     assert(out.select(col("id")).collect().map(_.getLong(0)).toSeq == Seq(126L))
-    assert(PartitionedStore.selectedPartitionTotal(out) == 1L)
+    assert(ManifestStore.selectedPartitionTotal(out) == 1L)
   }
 
   test("an In predicate composes: union of the keys' partitions, intersected with the range") {
@@ -168,11 +168,11 @@ class SkippingIndexesSpec extends SparkSpec {
       Seq(In("name", Seq("n_126", "n_9")), Between("y", 250L, 475L)),
       requireFresh = true)
     assert(out.select(col("id")).collect().map(_.getLong(0)).toSeq == Seq(126L))
-    assert(PartitionedStore.selectedPartitionTotal(out) == 1L)
+    assert(ManifestStore.selectedPartitionTotal(out) == 1L)
     // the In alone scans both keys' cells
     val alone = SkippingIndexes.readWhere(spark, root,
       Seq(In("name", Seq("n_126", "n_9"))))
-    assert(PartitionedStore.selectedPartitionTotal(alone) == 2L)
+    assert(ManifestStore.selectedPartitionTotal(alone) == 2L)
     assert(alone.select(col("id")).collect().map(_.getLong(0)).toSet ==
       Set(9L, 126L))
   }
@@ -197,7 +197,7 @@ class SkippingIndexesSpec extends SparkSpec {
     val out = SkippingIndexes.readWhere(spark, root,
       Seq(Between("v", 0L, 390L), HasTokens("text", Seq("zone1"))),
       requireFresh = true)
-    assert(PartitionedStore.selectedPartitionTotal(out) == 1L)
+    assert(ManifestStore.selectedPartitionTotal(out) == 1L)
     assert(out.select(col("id")).collect().map(_.getLong(0)).toSet ==
       (20L until 40L).toSet.filter(_ * 10 <= 390L))
     // residual exactness: partition 3's bloom holds BOTH tokens (its
@@ -205,7 +205,7 @@ class SkippingIndexesSpec extends SparkSpec {
     // conjunctive residual must still return zero rows
     val none = SkippingIndexes.readWhere(spark, root,
       Seq(HasTokens("text", Seq("alpha", "beta"))), requireFresh = true)
-    assert(PartitionedStore.selectedPartitionTotal(none) == 1L)
+    assert(ManifestStore.selectedPartitionTotal(none) == 1L)
     assert(none.count() == 0L,
       "no single doc holds both tokens — the residual must filter them")
   }
@@ -220,6 +220,6 @@ class SkippingIndexesSpec extends SparkSpec {
       Seq(Between("x", 2000L, 3000L), Between("y", 300L, 400L)),
       requireFresh = true)
     assert(out.count() == 0L)
-    assert(PartitionedStore.selectedPartitionTotal(out) == 0L)
+    assert(ManifestStore.selectedPartitionTotal(out) == 0L)
   }
 }

@@ -1,7 +1,7 @@
 package graft
 
 import org.apache.spark.sql.functions._
-import graft.sources.{Failpoints, ManifestStore, PartitionedStore, ZoneMaps}
+import graft.sources.{Failpoints, ManifestStore, ZoneMaps}
 
 /** Zone-map data skipping (x163): pruning on clustered layouts,
   * conservative behavior everywhere else, staleness semantics.
@@ -21,7 +21,7 @@ class ZoneMapsSpec extends SparkSpec {
       rows.toDF("id", "v").withColumn("pt", expr("v div 300L")), root, "pt")
     ZoneMaps.refresh(spark, root, "v")
     val out = ZoneMaps.readWhere(spark, root, "v", 310L, 580L, requireFresh = true)
-    assert(PartitionedStore.selectedPartitionCount(out).contains(1L)) // pt=1 only
+    assert(ManifestStore.selectedPartitionTotal(out) == 1L) // pt=1 only
     assert(out.select(col("id")).collect().map(_.getLong(0)).toSet ==
       (104L to 193L).toSet) // 310/3=103.3 → 104; 580/3=193.3 → 193
   }
@@ -33,7 +33,7 @@ class ZoneMapsSpec extends SparkSpec {
       root, "pt")
     ZoneMaps.refresh(spark, root, "v")
     val out = ZoneMaps.readWhere(spark, root, "v", 310L, 580L, requireFresh = true)
-    assert(PartitionedStore.selectedPartitionCount(out).contains(4L))
+    assert(ManifestStore.selectedPartitionTotal(out) == 4L)
     assert(out.count() == 90L)
   }
 
@@ -57,7 +57,7 @@ class ZoneMapsSpec extends SparkSpec {
     // table spans two commits → sum selected partitions over ALL scans)
     ZoneMaps.refresh(spark, root, "v")
     val again = ZoneMaps.readWhere(spark, root, "v", 1L, 10L, requireFresh = true)
-    assert(PartitionedStore.selectedPartitionTotal(again) == 1L)
+    assert(ManifestStore.selectedPartitionTotal(again) == 1L)
     assert(again.count() == 4L)
   }
 
@@ -79,7 +79,7 @@ class ZoneMapsSpec extends SparkSpec {
     ZoneMaps.mergeAppend(spark, root, "v", batch)
     // fresh at the NEW snapshot, skipping intact
     val out = ZoneMaps.readWhere(spark, root, "v", 310L, 580L, requireFresh = true)
-    assert(PartitionedStore.selectedPartitionTotal(out) >= 1L)
+    assert(ManifestStore.selectedPartitionTotal(out) >= 1L)
     assert(out.select(col("id")).collect().map(_.getLong(0)).toSet ==
       (104L to 193L).toSet)
     val merged = rangesOf(root)
@@ -128,7 +128,7 @@ class ZoneMapsSpec extends SparkSpec {
     ZoneMaps.mergeAppend(spark, root, "v", batch)
     // pt=1's NULL range merged away: a [800, 1000] read now prunes pt=0
     val out = ZoneMaps.readWhere(spark, root, "v", 800L, 1000L, requireFresh = true)
-    assert(PartitionedStore.selectedPartitionTotal(out) == 1L)
+    assert(ManifestStore.selectedPartitionTotal(out) == 1L)
     assert(out.select(col("id")).collect().map(_.getLong(0)).toSet == Set(3L))
   }
 
@@ -158,7 +158,7 @@ class ZoneMapsSpec extends SparkSpec {
     assert(out.count() == 400L) // nothing lost anywhere in the window
     val narrow = ZoneMaps.readWhere(spark, root, "v", 310L, 580L, requireFresh = true)
     assert(narrow.count() == 90L)
-    assert(PartitionedStore.selectedPartitionTotal(narrow) < 5L)
+    assert(ManifestStore.selectedPartitionTotal(narrow) < 5L)
   }
 
   test("all-null partitions scan conservatively; mapping a partition column is refused") {
@@ -170,7 +170,7 @@ class ZoneMapsSpec extends SparkSpec {
     // pt=1 has a NULL range — it must still be scanned (and contribute
     // nothing), never silently skipped
     val out = ZoneMaps.readWhere(spark, root, "v", 1L, 10L, requireFresh = true)
-    assert(PartitionedStore.selectedPartitionCount(out).contains(2L))
+    assert(ManifestStore.selectedPartitionTotal(out) == 2L)
     assert(out.select(col("id")).collect().map(_.getLong(0)).toSet == Set(1L))
     intercept[IllegalArgumentException] {
       ZoneMaps.refresh(spark, root, "pt")

@@ -3,7 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.ext.{AsofJoin, Chunking, DataCard, Dedup, Dsir, Events, Graph, LangModel, MediaStore, Multimodal, Par, Pq, Privacy, Profiling, Quantiles, Redaction, Retrieval, SampleStore, Sampling, Scd2, Sharding, Similarity, Sketches, TextAnalysis}
-import graft.streaming.Drain
+import graft.streaming.Replay
 
 /** x217-x241: composed erasure, media store, bench registry, epoch compaction rollout.
   * Mechanical slice of the former single-object ExtQueries (r14);
@@ -603,26 +603,13 @@ private[graft] trait ExtErasureCompaction extends ExtLmStores {
   // one day re-delivered post-drain (at-least-once), then the twins
   // probe — bit-identical to the batch build, x219's oracle verbatim.
   def x221StreamMedia(spark: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.sql.streaming.Trigger
     val base = Dedup.materialize(mediaBase(spark, dir)
       .withColumn("day", pmod(col("media_id"), lit(3)).cast("long")))
     val table = FreshTables.next(spark, dir, "smediastore")
     val root = FreshTables.next(spark, dir, "smediain")
-    (0 until 3).foreach { b =>
-      base.filter(col("day") === b.toLong).repartition(1)
-        .write.mode("append").parquet(s"$root/in")
+    Replay.foreachBatch(spark, base, col("day"), root, "x221") { (batch, _) =>
+      MediaStore.append(spark, mediaBlobs(spark, batch), table)
     }
-    val stream = spark.readStream.schema(base.schema)
-      .option("maxFilesPerTrigger", 1).parquet(s"$root/in")
-    val q = stream.writeStream
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        MediaStore.append(spark, mediaBlobs(spark, batch), table)
-        ()
-      }
-      .option("checkpointLocation", s"$root/ckpt")
-      .trigger(Trigger.AvailableNow())
-      .start()
-    Drain(q, "x221", 300000)
     // at-least-once: re-deliver day 1 — the keyed merge replaces
     MediaStore.append(spark,
       mediaBlobs(spark, base.filter(col("day") === 1L)), table)
@@ -1341,7 +1328,6 @@ private[graft] trait ExtErasureCompaction extends ExtLmStores {
   // at-least-once converges). Read ≡ x222's one-shot probe (suiteB
   // retired) — the registry read is bit-invisible to the answer.
   def x240StreamRegistry(spark: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.sql.streaming.Trigger
     import graft.sources.ManifestStore
     // r15 bench diet: probe the build-once steady-state registry (suites
     // A+B appended, B retired — regProto's exact content) instead of
@@ -1356,10 +1342,6 @@ private[graft] trait ExtErasureCompaction extends ExtLmStores {
         .withColumn("day", pmod(col("doc_id"), lit(3)).cast("long")))
     val table = FreshTables.next(spark, dir, "streamregout")
     val base = FreshTables.next(spark, dir, "streamregin")
-    (0 until 3).foreach { b =>
-      corpus.filter(col("day") === b.toLong).repartition(1)
-        .write.mode("append").parquet(s"$base/in")
-    }
     def fold(batch: DataFrame): Unit = {
       val out = graft.ext.BenchRegistry
         .probe(spark, batch, "doc_id", "text", regT)
@@ -1367,14 +1349,7 @@ private[graft] trait ExtErasureCompaction extends ExtLmStores {
       if (!out.head(1).isEmpty)
         ManifestStore.mergeOrCreate(spark, table, out, Seq("id"), "pt")
     }
-    val stream = spark.readStream.schema(corpus.schema)
-      .option("maxFilesPerTrigger", 1).parquet(s"$base/in")
-    val q = stream.writeStream
-      .foreachBatch { (batch: DataFrame, _: Long) => fold(batch) }
-      .option("checkpointLocation", s"$base/ckpt")
-      .trigger(Trigger.AvailableNow())
-      .start()
-    Drain(q, "x240", 300000)
+    Replay.foreachBatch(spark, corpus, col("day"), base, "x240") { (batch, _) => fold(batch) }
     // at-least-once: re-deliver day 1 — keyed merge replaces in place
     fold(corpus.filter(col("day") === 1L))
     val out = ManifestStore.read(spark, table).select(
@@ -1471,7 +1446,6 @@ private[graft] trait ExtErasureCompaction extends ExtLmStores {
   // the same batch, interleaved by the scheduler, against eleven
   // different fence disciplines.
   def x242IngestCapstone(spark: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.sql.streaming.Trigger
     import graft.ext.{DedupStores, IndexStore, VectorStore, ViewStore}
     import graft.sources.ManifestStore
     import spark.implicits._
@@ -1640,18 +1614,7 @@ private[graft] trait ExtErasureCompaction extends ExtLmStores {
       require(bad.isEmpty, s"x242: fold step(s) failed: ${bad.mkString("; ")}")
     }
     val base = FreshTables.next(spark, dir, "capwire")
-    (0 until 3).foreach { b =>
-      inc.filter(col("__b") === b.toLong).repartition(1)
-        .write.mode("append").parquet(s"$base/in")
-    }
-    val stream = spark.readStream.schema(inc.schema)
-      .option("maxFilesPerTrigger", 1).parquet(s"$base/in")
-    val q = stream.writeStream
-      .foreachBatch { (batch: DataFrame, _: Long) => foldAll(batch) }
-      .option("checkpointLocation", s"$base/ckpt")
-      .trigger(Trigger.AvailableNow())
-      .start()
-    Drain(q, "x242", 600000)
+    Replay.foreachBatch(spark, inc, col("__b"), base, "x242") { (batch, _) => foldAll(batch) }
     // --- CROSS-STORE FENCE INTERPLAY: one store's crash window open
     // while the other ten proceed — the composition no pairwise gate
     // exercises. An erasure request against the view family crashes

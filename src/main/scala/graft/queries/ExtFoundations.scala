@@ -759,10 +759,9 @@ private[graft] trait ExtFoundations {
   protected object FreshTables {
     private val last = new java.util.concurrent.ConcurrentHashMap[String, String]()
     private val runs = new java.util.concurrent.atomic.AtomicLong(0L)
-    private val token = java.util.UUID.randomUUID().toString.take(8)
     def next(spark: SparkSession, dir: String, prefix: String): String = {
       val tag = dir.replaceAll("[^a-zA-Z0-9]", "_")
-      val table = graft.Scratch.path(s"${prefix}_tbl_${tag}_${token}_${runs.incrementAndGet()}")
+      val table = graft.Scratch.path(s"${prefix}_tbl_${tag}_${runs.incrementAndGet()}")
       Option(last.put(s"$prefix|$dir", table)).foreach { prev =>
         val fs = new org.apache.hadoop.fs.Path(prev)
           .getFileSystem(spark.sessionState.newHadoopConf())

@@ -3,7 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.ext.{AsofJoin, Chunking, DataCard, Dedup, Dsir, Events, Graph, LangModel, MediaStore, Multimodal, Pq, Privacy, Profiling, Quantiles, Redaction, Retrieval, SampleStore, Sampling, Scd2, Sharding, Similarity, Sketches, TextAnalysis}
-import graft.streaming.Drain
+import graft.streaming.Replay
 
 /** x188-x216: SCD2 store, sample/moment/vocab/LM stores, zipf/heaps, rebuild/repair.
   * Mechanical slice of the former single-object ExtQueries (r14);
@@ -58,7 +58,6 @@ private[graft] trait ExtLmStores extends ExtSkipIndexes {
   // one day re-delivered post-drain with row accounting, and the final
   // history is the batch build through the streaming door.
   def x189StreamScd2(spark: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.sql.streaming.Trigger
     import graft.ext.Scd2Store
     val ev = t(spark, dir, "events")
     val feed = Dedup.materialize(ev.filter(col("event_type") === "purchase")
@@ -68,22 +67,10 @@ private[graft] trait ExtLmStores extends ExtSkipIndexes {
         col("day")))
     val table = FreshTables.next(spark, dir, "sscd2store")
     val base = FreshTables.next(spark, dir, "sscd2in")
-    (0 until 3).foreach { d =>
-      feed.filter(col("day") === d.toLong).repartition(1)
-        .write.mode("append").parquet(s"$base/in")
+    Replay.foreachBatch(spark, feed, col("day"), base, "x189") { (batch, _) =>
+      Scd2Store.appendDay(spark, table, batch.drop("day"),
+        "user_id", "ts_us", "event_id", Seq("value"))
     }
-    val stream = spark.readStream.schema(feed.schema)
-      .option("maxFilesPerTrigger", 1).parquet(s"$base/in")
-    val q = stream.writeStream
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        Scd2Store.appendDay(spark, table, batch.drop("day"),
-          "user_id", "ts_us", "event_id", Seq("value"))
-        ()
-      }
-      .option("checkpointLocation", s"$base/ckpt")
-      .trigger(Trigger.AvailableNow())
-      .start()
-    Drain(q, "x189", 300000)
     val before = graft.sources.ManifestStore.read(spark, table).count()
     Scd2Store.appendDay(spark, table, feed.filter(col("day") === 1L),
       "user_id", "ts_us", "event_id", Seq("value"))
@@ -351,29 +338,16 @@ private[graft] trait ExtLmStores extends ExtSkipIndexes {
   // Day summaries merge losslessly, so the stream-fed store read is
   // the batch A-Res sample — x39's oracle verbatim.
   def x196StreamSample(spark: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.sql.streaming.Trigger
     val docs = Dedup.materialize(t(spark, dir, "documents")
       .select(col("doc_id"), TextAnalysis.wordCount(col("text")).as("wc"))
       .withColumn("day", pmod(col("doc_id"), lit(3)).cast("long")))
     val table = FreshTables.next(spark, dir, "ssamplestore")
     val base = FreshTables.next(spark, dir, "ssamplein")
-    (0 until 3).foreach { b =>
-      docs.filter(col("day") === b.toLong).repartition(1)
-        .write.mode("append").parquet(s"$base/in")
+    Replay.foreachBatch(spark, docs, col("day"), base, "x196") { (batch, _) =>
+      val d = batch.agg(min(col("day"))).head().getLong(0)
+      SampleStore.appendDay(spark, batch, "doc_id", col("wc"),
+        s"d$d", k = 100, slack = 8, table = table)
     }
-    val stream = spark.readStream.schema(docs.schema)
-      .option("maxFilesPerTrigger", 1).parquet(s"$base/in")
-    val q = stream.writeStream
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        val d = batch.agg(min(col("day"))).head().getLong(0)
-        SampleStore.appendDay(spark, batch, "doc_id", col("wc"),
-          s"d$d", k = 100, slack = 8, table = table)
-        ()
-      }
-      .option("checkpointLocation", s"$base/ckpt")
-      .trigger(Trigger.AvailableNow())
-      .start()
-    Drain(q, "x196", 300000)
     // at-least-once: re-deliver day 1 — the (key, day) merge replaces
     SampleStore.appendDay(spark, docs.filter(col("day") === 1L),
       "doc_id", col("wc"), "d1", k = 100, slack = 8, table = table)
@@ -572,28 +546,15 @@ private[graft] trait ExtLmStores extends ExtSkipIndexes {
   // direction is x199's oracle verbatim.
   def x200StreamMoments(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    import org.apache.spark.sql.streaming.Trigger
     val emb = Dedup.materialize(t(spark, dir, "embeddings")
       .withColumn("day", pmod(col("vec_id"), lit(3)).cast("long")))
     val table = FreshTables.next(spark, dir, "smomstore")
     val base = FreshTables.next(spark, dir, "smomin")
-    (0 until 3).foreach { b =>
-      emb.filter(col("day") === b.toLong).repartition(1)
-        .write.mode("append").parquet(s"$base/in")
+    Replay.foreachBatch(spark, emb, col("day"), base, "x200") { (batch, _) =>
+      val d = batch.agg(min(col("day"))).head().getLong(0)
+      graft.ext.EmbedPost.momentsAppendDay(spark, batch, "embedding", 64,
+        s"d$d", table)
     }
-    val stream = spark.readStream.schema(emb.schema)
-      .option("maxFilesPerTrigger", 1).parquet(s"$base/in")
-    val q = stream.writeStream
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        val d = batch.agg(min(col("day"))).head().getLong(0)
-        graft.ext.EmbedPost.momentsAppendDay(spark, batch, "embedding", 64,
-          s"d$d", table)
-        ()
-      }
-      .option("checkpointLocation", s"$base/ckpt")
-      .trigger(Trigger.AvailableNow())
-      .start()
-    Drain(q, "x200", 300000)
     // at-least-once: re-deliver day 1 — the day-keyed merges replace
     graft.ext.EmbedPost.momentsAppendDay(spark,
       emb.filter(col("day") === 1L), "embedding", 64, "d1", table)
@@ -704,29 +665,16 @@ private[graft] trait ExtLmStores extends ExtSkipIndexes {
   // arrive as micro-batches, each folded by vocabAppendDay in
   // foreachBatch; one day re-delivered post-drain with row accounting.
   def x203StreamVocab(spark: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.sql.streaming.Trigger
     val docs = Dedup.materialize(t(spark, dir, "documents")
       .select(col("doc_id"), col("text"))
       .withColumn("day", pmod(col("doc_id"), lit(3)).cast("long")))
     val table = FreshTables.next(spark, dir, "svocabstore")
     val base = FreshTables.next(spark, dir, "svocabin")
-    (0 until 3).foreach { b =>
-      docs.filter(col("day") === b.toLong).repartition(1)
-        .write.mode("append").parquet(s"$base/in")
+    Replay.foreachBatch(spark, docs, col("day"), base, "x203") { (batch, _) =>
+      val d = batch.agg(min(col("day"))).head().getLong(0)
+      graft.ext.Bpe.vocabAppendDay(spark, batch, "doc_id", "text",
+        s"d$d", table)
     }
-    val stream = spark.readStream.schema(docs.schema)
-      .option("maxFilesPerTrigger", 1).parquet(s"$base/in")
-    val q = stream.writeStream
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        val d = batch.agg(min(col("day"))).head().getLong(0)
-        graft.ext.Bpe.vocabAppendDay(spark, batch, "doc_id", "text",
-          s"d$d", table)
-        ()
-      }
-      .option("checkpointLocation", s"$base/ckpt")
-      .trigger(Trigger.AvailableNow())
-      .start()
-    Drain(q, "x203", 300000)
     // at-least-once: re-deliver day 1 — the (w, day) merge replaces
     graft.ext.Bpe.vocabAppendDay(spark,
       docs.filter(col("day") === 1L), "doc_id", "text", "d1", table)
@@ -884,29 +832,16 @@ private[graft] trait ExtLmStores extends ExtSkipIndexes {
   // folded by lmAppendDay in foreachBatch; one day re-delivered
   // post-drain. Scores ≡ x58's oracle through the streaming door.
   def x208StreamLm(spark: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.sql.streaming.Trigger
     val docs = t(spark, dir, "documents")
     val ref = Dedup.materialize(docs.filter(col("doc_id") % 7 === 0)
       .select(col("doc_id"), col("text"))
       .withColumn("day", pmod(col("doc_id"), lit(3)).cast("long")))
     val table = FreshTables.next(spark, dir, "slmstore")
     val base = FreshTables.next(spark, dir, "slmin")
-    (0 until 3).foreach { b =>
-      ref.filter(col("day") === b.toLong).repartition(1)
-        .write.mode("append").parquet(s"$base/in")
+    Replay.foreachBatch(spark, ref, col("day"), base, "x208") { (batch, _) =>
+      val d = batch.agg(min(col("day"))).head().getLong(0)
+      LangModel.lmAppendDay(spark, batch, "doc_id", "text", s"d$d", table)
     }
-    val stream = spark.readStream.schema(ref.schema)
-      .option("maxFilesPerTrigger", 1).parquet(s"$base/in")
-    val q = stream.writeStream
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        val d = batch.agg(min(col("day"))).head().getLong(0)
-        LangModel.lmAppendDay(spark, batch, "doc_id", "text", s"d$d", table)
-        ()
-      }
-      .option("checkpointLocation", s"$base/ckpt")
-      .trigger(Trigger.AvailableNow())
-      .start()
-    Drain(q, "x208", 300000)
     // at-least-once: re-deliver day 1 — the day-keyed merges replace
     LangModel.lmAppendDay(spark, ref.filter(col("day") === 1L),
       "doc_id", "text", "d1", table)
@@ -1052,7 +987,6 @@ private[graft] trait ExtLmStores extends ExtSkipIndexes {
   // direction is x205's oracle verbatim.
   def x211StreamForget(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    import org.apache.spark.sql.streaming.Trigger
     val emb = Dedup.materialize(t(spark, dir, "embeddings")
       .withColumn("day", pmod(col("vec_id"), lit(3)).cast("long")))
     val table = FreshTables.next(spark, dir, "smomforget")
@@ -1063,23 +997,11 @@ private[graft] trait ExtLmStores extends ExtSkipIndexes {
     val doomed = Dedup.materialize(emb.filter(col("vec_id") % 7 === 0)
       .withColumn("req", pmod(expr("vec_id div 7"), lit(2)).cast("long")))
     val base = FreshTables.next(spark, dir, "smomforgetin")
-    (0 until 2).foreach { b =>
-      doomed.filter(col("req") === b.toLong).repartition(1)
-        .write.mode("append").parquet(s"$base/in")
+    Replay.foreachBatch(spark, doomed, col("req"), base, "x211") { (batch, _) =>
+      val r = batch.agg(min(col("req"))).head().getLong(0)
+      graft.ext.EmbedPost.momentsForget(spark, batch, "embedding", 64,
+        s"f$r", table)
     }
-    val stream = spark.readStream.schema(doomed.schema)
-      .option("maxFilesPerTrigger", 1).parquet(s"$base/in")
-    val q = stream.writeStream
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        val r = batch.agg(min(col("req"))).head().getLong(0)
-        graft.ext.EmbedPost.momentsForget(spark, batch, "embedding", 64,
-          s"f$r", table)
-        ()
-      }
-      .option("checkpointLocation", s"$base/ckpt")
-      .trigger(Trigger.AvailableNow())
-      .start()
-    Drain(q, "x211", 300000)
     // at-least-once: re-deliver request batch 1 — the tag-keyed merge
     // must REPLACE, not subtract twice
     graft.ext.EmbedPost.momentsForget(spark,

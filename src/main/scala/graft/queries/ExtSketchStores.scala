@@ -3,7 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.ext.{AsofJoin, Chunking, DataCard, Dedup, Dsir, Events, Graph, LangModel, MediaStore, Multimodal, Pq, Privacy, Profiling, Quantiles, Redaction, Retrieval, SampleStore, Sampling, Scd2, Sharding, Similarity, Sketches, TextAnalysis}
-import graft.streaming.Drain
+import graft.streaming.Replay
 
 /** x101-x137: time travel, sketch stores (CM/hist), PQ ANN, expectations, streaming stores.
   * Mechanical slice of the former single-object ExtQueries (r14);
@@ -273,28 +273,19 @@ private[graft] trait ExtSketchStores extends ExtCorpusStats {
   // back O(d×w) rows; the final cells are batch-invariant (counts are
   // exact sums), so the probe must equal the batch-built x96-style gate.
   def x111StreamCountmin(spark: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.sql.streaming.Trigger
     val tag = dir.replaceAll("[^a-zA-Z0-9]", "_")
     val base = graft.Scratch.path(s"scm_$tag")
     val fs = org.apache.hadoop.fs.FileSystem.get(spark.sparkContext.hadoopConfiguration)
     fs.delete(new org.apache.hadoop.fs.Path(base), true)
     val keys = t(spark, dir, "events").select(col("user_id").as("k"))
     keys.write.parquet(s"$base/in")
-    val qname = s"x111_scm_$tag"
-    spark.catalog.dropTempView(qname)
-    val cells = Sketches.countMinCells(
+    val cells = Replay.memory(Sketches.countMinCells(
       spark.readStream.schema(keys.schema).parquet(s"$base/in"),
-      "k", depth = 4, width = 1024)
-    val q = cells.writeStream.format("memory").queryName(qname)
-      .outputMode("complete")
-      .option("checkpointLocation", s"$base/ckpt")
-      .trigger(Trigger.AvailableNow())
-      .start()
-    Drain(q, "x111", 300000)
+      "k", depth = 4, width = 1024), s"x111_scm_$tag", "complete")
     val exact = Dedup.materialize(
       keys.groupBy(col("k")).agg(count(lit(1)).as("cnt")))
     val top = Sampling.scoredTopK(exact, "k", col("cnt"), k = 20).drop("sel_rank")
-    Sketches.countMinEstimate(spark.table(qname), top, "k", depth = 4, width = 1024)
+    Sketches.countMinEstimate(cells, top, "k", depth = 4, width = 1024)
       .withColumn("overcount", col("est") - col("cnt"))
   }
 
@@ -819,7 +810,6 @@ private[graft] trait ExtSketchStores extends ExtCorpusStats {
   // staged events must equal the batch hopping pass exactly, so the
   // oracle is x122's.
   def x126StreamHopping(spark: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.sql.streaming.Trigger
     val tag = dir.replaceAll("[^a-zA-Z0-9]", "_")
     val base = graft.Scratch.path(s"shop_$tag")
     val fs = org.apache.hadoop.fs.FileSystem.get(spark.sparkContext.hadoopConfiguration)
@@ -828,18 +818,10 @@ private[graft] trait ExtSketchStores extends ExtCorpusStats {
     val src = e.select(timestamp_micros(Events.epochMicros(e)).as("tss"),
       col("event_type"), col("value"))
     src.write.parquet(s"$base/in")
-    val qname = s"x126_shop_$tag"
-    spark.catalog.dropTempView(qname)
     val agg = spark.readStream.schema(src.schema).parquet(s"$base/in")
       .groupBy(window(col("tss"), "2 hours", "30 minutes"), col("event_type"))
       .agg(count(lit(1)).as("n_events"), sum(dec2(col("value"))).as("__tv"))
-    val q = agg.writeStream.format("memory").queryName(qname)
-      .outputMode("complete")
-      .option("checkpointLocation", s"$base/ckpt")
-      .trigger(Trigger.AvailableNow())
-      .start()
-    Drain(q, "x126", 300000)
-    spark.table(qname).select(
+    Replay.memory(agg, s"x126_shop_$tag", "complete").select(
       unix_micros(col("window.start")).as("window_start"),
       col("event_type"), col("n_events"),
       col("__tv").cast("double").as("total_value"),
@@ -1321,7 +1303,6 @@ private[graft] trait ExtSketchStores extends ExtCorpusStats {
   // x129's contract, reached through the streaming door.
   def x137StreamVectorStore(spark: SparkSession, dir: String): DataFrame = {
     import graft.ext.VectorStore
-    import org.apache.spark.sql.streaming.Trigger
     val data = t(spark, dir, "embeddings")
     val incPred = col("vec_id") % 5 === 1 && col("vec_id") % 3 =!= 0
     val inc = Dedup.materialize(data.filter(incPred))
@@ -1332,22 +1313,10 @@ private[graft] trait ExtSketchStores extends ExtCorpusStats {
     ProtoStores.cloneTo(spark, vecHistProto(spark, dir), root)
     val batchKey = expr("pmod(vec_id div 3, 3)").cast("int")
     val base = FreshTables.next(spark, dir, "svecin")
-    (0 until 3).foreach { b =>
-      inc.filter(batchKey === b).repartition(1)
-        .write.mode("append").parquet(s"$base/in")
+    Replay.foreachBatch(spark, inc, batchKey, base, "x137") { (batch, _) =>
+      VectorStore.appendDay(spark, batch, "vec_id", "embedding", root,
+        dim = 64, m = 4, k = 16, stride = 3)
     }
-    val stream = spark.readStream.schema(inc.schema)
-      .option("maxFilesPerTrigger", 1).parquet(s"$base/in")
-    val q = stream.writeStream
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        VectorStore.appendDay(spark, batch, "vec_id", "embedding", root,
-          dim = 64, m = 4, k = 16, stride = 3)
-        ()
-      }
-      .option("checkpointLocation", s"$base/ckpt")
-      .trigger(Trigger.AvailableNow())
-      .start()
-    Drain(q, "x137", 300000)
     // at-least-once replay: re-deliver one batch AFTER the drain — the
     // (vec_id, sub) merge must replace, not duplicate
     VectorStore.appendDay(spark, inc.filter(batchKey === 1),

@@ -3,7 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.ext.{AsofJoin, Chunking, DataCard, Dedup, Dsir, Events, Graph, LangModel, MediaStore, Multimodal, Pq, Privacy, Profiling, Quantiles, Redaction, Retrieval, SampleStore, Sampling, Scd2, Sharding, Similarity, Sketches, TextAnalysis}
-import graft.streaming.Drain
+import graft.streaming.Replay
 
 /** x163-x187: zone/bloom/token skipping indexes, forgets, hh store, view stores, graph expansion.
   * Mechanical slice of the former single-object ExtQueries (r14);
@@ -162,7 +162,6 @@ private[graft] trait ExtSkipIndexes extends ExtVectorStores {
   // point lookup's result is require'd in place.
   def x167StreamSkip(spark: SparkSession, dir: String): DataFrame = {
     import graft.sources.{BloomIndex, ManifestStore, ZoneMaps}
-    import org.apache.spark.sql.streaming.Trigger
     val docs = t(spark, dir, "documents")
       .select(col("doc_id"), col("lang"), col("n_chars"))
       .withColumn("pt", expr("n_chars div 64L"))
@@ -174,25 +173,14 @@ private[graft] trait ExtSkipIndexes extends ExtVectorStores {
       table, "pt")
     ZoneMaps.refresh(spark, table, "n_chars")
     BloomIndex.refresh(spark, table, "doc_id")
-    (1 until 3).foreach { d =>
-      docs.filter(col("day") === d).repartition(1)
-        .write.mode("append").parquet(s"$base/in")
+    val days12 = docs.filter(col("day") =!= 0)
+    Replay.foreachBatch(spark, days12, col("day"), base, "x167") { (batch, _) =>
+      val b = batch.drop("day").cache()
+      ManifestStore.merge(spark, table, b, Seq("doc_id"), "pt")
+      ZoneMaps.maintainAppend(spark, table, "n_chars", b)
+      BloomIndex.maintainAppend(spark, table, "doc_id", b)
+      b.unpersist()
     }
-    val stream = spark.readStream.schema(docs.schema)
-      .option("maxFilesPerTrigger", 1).parquet(s"$base/in")
-    val q = stream.writeStream
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        val b = batch.drop("day").cache()
-        ManifestStore.merge(spark, table, b, Seq("doc_id"), "pt")
-        ZoneMaps.maintainAppend(spark, table, "n_chars", b)
-        BloomIndex.maintainAppend(spark, table, "doc_id", b)
-        b.unpersist()
-        ()
-      }
-      .option("checkpointLocation", s"$base/ckpt")
-      .trigger(Trigger.AvailableNow())
-      .start()
-    Drain(q, "x167", 300000)
     // at-least-once: re-deliver day 2 through the same maintenance path
     val replay = docs.filter(col("day") === 2).drop("day")
     ManifestStore.merge(spark, table, replay, Seq("doc_id"), "pt")
@@ -643,7 +631,6 @@ private[graft] trait ExtSkipIndexes extends ExtVectorStores {
   // with row accounting — the monitor read is x176's oracle through
   // the streaming door.
   def x177StreamHh(spark: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.sql.streaming.Trigger
     val docs = t(spark, dir, "documents")
     val toks = Dedup.materialize(
       LangModel.tokenRows(docs, "doc_id", "text")
@@ -651,22 +638,10 @@ private[graft] trait ExtSkipIndexes extends ExtVectorStores {
         .select(col("w"), col("day")))
     val table = FreshTables.next(spark, dir, "shhstore")
     val base = FreshTables.next(spark, dir, "shhin")
-    (0 until 3).foreach { b =>
-      toks.filter(col("day") === b.toLong).repartition(1)
-        .write.mode("append").parquet(s"$base/in")
+    Replay.foreachBatch(spark, toks, col("day"), base, "x177") { (batch, _) =>
+      val d = batch.agg(min(col("day"))).head().getLong(0)
+      Sketches.hhAppendDay(spark, batch, "w", s"d$d", table)
     }
-    val stream = spark.readStream.schema(toks.schema)
-      .option("maxFilesPerTrigger", 1).parquet(s"$base/in")
-    val q = stream.writeStream
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        val d = batch.agg(min(col("day"))).head().getLong(0)
-        Sketches.hhAppendDay(spark, batch, "w", s"d$d", table)
-        ()
-      }
-      .option("checkpointLocation", s"$base/ckpt")
-      .trigger(Trigger.AvailableNow())
-      .start()
-    Drain(q, "x177", 300000)
     // at-least-once: re-deliver day 1
     Sketches.hhAppendDay(spark, toks.filter(col("day") === 1L), "w", "d1", table)
     val stored = graft.sources.ManifestStore.read(spark, s"$table/hh").count()
@@ -971,7 +946,6 @@ private[graft] trait ExtSkipIndexes extends ExtVectorStores {
   // the session state store) — multi-batch replay must land exactly on
   // the batch result, through the shared x183 oracle.
   def x184StreamSessionWindow(spark: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.sql.streaming.Trigger
     val tag = dir.replaceAll("[^a-zA-Z0-9]", "_")
     val base = graft.Scratch.path(s"ssw_$tag")
     val fs = org.apache.hadoop.fs.FileSystem.get(spark.sparkContext.hadoopConfiguration)
@@ -980,21 +954,13 @@ private[graft] trait ExtSkipIndexes extends ExtVectorStores {
     val src = e.select(timestamp_micros(Events.epochMicros(e)).as("tss"),
       col("user_id"))
     src.write.parquet(s"$base/in")
-    val qname = s"x184_ssw_$tag"
-    spark.catalog.dropTempView(qname)
     val agg = spark.readStream.schema(src.schema).parquet(s"$base/in")
       .groupBy(col("user_id"),
         session_window(col("tss"), "1800000000 microseconds").as("__sw"))
       .agg(count(lit(1)).as("n_events"),
         min(unix_micros(col("tss"))).as("session_start"),
         max(unix_micros(col("tss"))).as("session_end"))
-    val q = agg.writeStream.format("memory").queryName(qname)
-      .outputMode("complete")
-      .option("checkpointLocation", s"$base/ckpt")
-      .trigger(Trigger.AvailableNow())
-      .start()
-    Drain(q, "x184", 300000)
-    spark.table(qname).select(col("user_id"),
+    Replay.memory(agg, s"x184_ssw_$tag", "complete").select(col("user_id"),
       unix_micros(col("__sw.start")).as("window_start"),
       unix_micros(col("__sw.end")).as("window_end"),
       col("session_start"), col("session_end"), col("n_events"))

@@ -3,7 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.ext.{AsofJoin, Chunking, DataCard, Dedup, Dsir, Events, Graph, LangModel, MediaStore, Multimodal, Pq, Privacy, Profiling, Quantiles, Redaction, Retrieval, SampleStore, Sampling, Scd2, Sharding, Similarity, Sketches, TextAnalysis}
-import graft.streaming.Drain
+import graft.streaming.{Drain, Replay}
 
 /** x32-x64: quality gates, streaming drains, sampling, corpus funnels, mixture plans.
   * Mechanical slice of the former single-object ExtQueries (r14);
@@ -14,7 +14,7 @@ private[graft] trait ExtStreamSample extends ExtFoundations {
   // --- x33: STATEFUL STREAMING sessionization ≡ batch oracle --------------
   // The flatMapGroupsWithState path end-to-end in the gate: events replay
   // through a real Structured Streaming query (parquet source →
-  // StatefulSessions.sessionize → memory sink, Trigger.AvailableNow) and
+  // StatefulSessions.sessionize → memory sink, drained by Replay) and
   // must produce exactly the batch gaps-and-islands sessions. Append mode
   // only emits CLOSED sessions, so a per-user SENTINEL event at
   // max(ts) + gap + 1 closes each user's final session deterministically
@@ -58,24 +58,16 @@ private[graft] trait ExtStreamSample extends ExtFoundations {
   // keys-only fingerprint store (broadcast or bucket-joined), never the
   // corpus.
   def x34StreamingIncrementalDedup(spark: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.sql.streaming.Trigger
     val tag = dir.replaceAll("[^a-zA-Z0-9]", "_")
     val base = graft.Scratch.path(s"sdedup_$tag")
     val fs = org.apache.hadoop.fs.FileSystem.get(spark.sparkContext.hadoopConfiguration)
     fs.delete(new org.apache.hadoop.fs.Path(base), true) // fresh replay per run
     val (inc, seen) = incrementalDedupInputs(spark, dir)
     inc.write.parquet(s"$base/in")
-    val qname = s"x34_sdedup_$tag"
-    spark.catalog.dropTempView(qname)
-    val q = spark.readStream.schema(inc.schema).parquet(s"$base/in")
+    Replay.memory(spark.readStream.schema(inc.schema).parquet(s"$base/in")
       .join(seen, Seq("fp"), "left")
-      .select(col("doc_id"), col("fp"), col("__seen").isNotNull.as("is_dup"))
-      .writeStream.format("memory").queryName(qname)
-      .option("checkpointLocation", s"$base/ckpt")
-      .trigger(Trigger.AvailableNow())
-      .start()
-    Drain(q, "x34", 300000)
-    spark.table(qname)
+      .select(col("doc_id"), col("fp"), col("__seen").isNotNull.as("is_dup")),
+      s"x34_sdedup_$tag", "append")
   }
 
   val x34Sql: String = x28Sql
@@ -600,7 +592,7 @@ private[graft] trait ExtStreamSample extends ExtFoundations {
       // reads and rewrites ~1/3 of the table — exercising the
       // O(touched partitions) contract instead of touching everything
       .withColumn("__ab", pmod(col("pt"), lit(3L)))
-    StreamUpsert.replayedMerge(spark, updates, Seq("okey", "price", "pt"), "__ab",
+    StreamUpsert.replayedPipeline(spark, updates, Seq("okey", "price", "pt"), "__ab",
       graft.Scratch.path(s"smu_in_$tag"), table, Seq("okey"), Seq("pt"))
     ManifestStore.read(spark, table).select(
       col("okey").cast("long").as("okey"),

@@ -3,7 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.ext.{AsofJoin, Chunking, DataCard, Dedup, Dsir, Events, Graph, LangModel, MediaStore, Multimodal, Pq, Privacy, Profiling, Quantiles, Redaction, Retrieval, SampleStore, Sampling, Scd2, Sharding, Similarity, Sketches, TextAnalysis}
-import graft.streaming.Drain
+import graft.streaming.Replay
 
 /** x138-x162: HLL/KMV stores, recall audits, trained codebooks, index stores, drift.
   * Mechanical slice of the former single-object ExtQueries (r14);
@@ -193,17 +193,12 @@ private[graft] trait ExtVectorStores extends ExtSketchStores {
   // extraction to an exact integer in BOTH engines (double casts would
   // hit the round-vs-truncate divergence).
   def x142StreamDrift(spark: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.sql.streaming.Trigger
     import graft.sources.ManifestStore
     val e = t(spark, dir, "events")
     val ev = Dedup.materialize(e.select(col("event_id"), col("event_type"),
       get_json_object(col("props"), "$.k").cast("long").as("k"),
       concat(lit("d"), pmod(col("event_id"), lit(3)).cast("string")).as("day")))
     val base = FreshTables.next(spark, dir, "sdrift_in")
-    (0 until 3).foreach { b =>
-      ev.filter(col("day") === s"d$b").repartition(1)
-        .write.mode("append").parquet(s"$base/in")
-    }
     val resT = FreshTables.next(spark, dir, "sdrift_res")
     def fold(batch: DataFrame): Unit = {
       val d = batch.agg(min(col("day"))).head().getString(0)
@@ -214,14 +209,9 @@ private[graft] trait ExtVectorStores extends ExtSketchStores {
           Seq("day", "event_type"), "day")
       }
     }
-    val stream = spark.readStream.schema(ev.schema)
-      .option("maxFilesPerTrigger", 1).parquet(s"$base/in")
-    val q = stream.writeStream
-      .foreachBatch { (batch: DataFrame, _: Long) => fold(batch) }
-      .option("checkpointLocation", s"$base/ckpt")
-      .trigger(Trigger.AvailableNow())
-      .start()
-    Drain(q, "x142", 300000)
+    Replay.foreachBatch(spark, ev, pmod(col("event_id"), lit(3)), base, "x142") {
+      (batch, _) => fold(batch)
+    }
     // at-least-once: re-deliver day d1 — the keyed merge must replace
     fold(ev.filter(col("day") === "d1"))
     ManifestStore.read(spark, resT)
@@ -427,23 +417,15 @@ private[graft] trait ExtVectorStores extends ExtSketchStores {
   // oracle. Drained in genuine multi-batch increments
   // (maxFilesPerTrigger = 1 over a 4-file stage).
   def x146StreamHll(spark: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.sql.streaming.Trigger
     val u = hllSource(spark, dir)
     val base = FreshTables.next(spark, dir, "shll_in")
     u.repartition(4).write.parquet(s"$base/in")
-    val qname = s"x146_shll_${dir.replaceAll("[^a-zA-Z0-9]", "_")}"
-    spark.catalog.dropTempView(qname)
     val regs = Sketches.hllRegisters(
       spark.readStream.schema(u.schema)
         .option("maxFilesPerTrigger", 1).parquet(s"$base/in"),
       "grp", "v", p = 8)
-    val q = regs.writeStream.format("memory").queryName(qname)
-      .outputMode("complete")
-      .option("checkpointLocation", s"$base/ckpt")
-      .trigger(Trigger.AvailableNow())
-      .start()
-    Drain(q, "x146", 300000)
-    val regTable = spark.table(qname)
+    val regTable = Replay.memory(regs,
+      s"x146_shll_${dir.replaceAll("[^a-zA-Z0-9]", "_")}", "complete")
     require(regTable.count() <= 13L * 256L,
       "x146: streaming state exceeded the groups x 2^p register bound")
     Sketches.hllEstimate(regTable, "grp")
@@ -896,17 +878,12 @@ private[graft] trait ExtVectorStores extends ExtSketchStores {
   // re-delivered after the drain). Per batch the work lives on the
   // O(types × distinct k × 2) grid after one count pass.
   def x154StreamKs(spark: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.sql.streaming.Trigger
     import graft.sources.ManifestStore
     val e = t(spark, dir, "events")
     val ev = Dedup.materialize(e.select(col("event_id"), col("event_type"),
       get_json_object(col("props"), "$.k").cast("long").as("k"),
       concat(lit("d"), pmod(col("event_id"), lit(3)).cast("string")).as("day")))
     val base = FreshTables.next(spark, dir, "sks_in")
-    (0 until 3).foreach { b =>
-      ev.filter(col("day") === s"d$b").repartition(1)
-        .write.mode("append").parquet(s"$base/in")
-    }
     val resT = FreshTables.next(spark, dir, "sks_res")
     def fold(batch: DataFrame): Unit = {
       val d = batch.agg(min(col("day"))).head().getString(0)
@@ -917,14 +894,9 @@ private[graft] trait ExtVectorStores extends ExtSketchStores {
           Seq("day", "event_type"), "day")
       }
     }
-    val stream = spark.readStream.schema(ev.schema)
-      .option("maxFilesPerTrigger", 1).parquet(s"$base/in")
-    val q = stream.writeStream
-      .foreachBatch { (batch: DataFrame, _: Long) => fold(batch) }
-      .option("checkpointLocation", s"$base/ckpt")
-      .trigger(Trigger.AvailableNow())
-      .start()
-    Drain(q, "x154", 300000)
+    Replay.foreachBatch(spark, ev, pmod(col("event_id"), lit(3)), base, "x154") {
+      (batch, _) => fold(batch)
+    }
     // at-least-once: re-deliver day d1 — the keyed merge must replace
     fold(ev.filter(col("day") === "d1"))
     ManifestStore.read(spark, resT)
@@ -980,7 +952,6 @@ private[graft] trait ExtVectorStores extends ExtSketchStores {
   // x147's recursive-CTE oracle, reached through the streaming door.
   def x155StreamCluster(spark: SparkSession, dir: String): DataFrame = {
     import graft.ext.ClusterStore
-    import org.apache.spark.sql.streaming.Trigger
     val docs = t(spark, dir, "documents")
     val pairs = Dedup.materialize(allPairs(spark, dir)
       .withColumn("day", pmod(xxhash64(col("id_a").cast("string")), lit(3L))))
@@ -988,21 +959,9 @@ private[graft] trait ExtVectorStores extends ExtSketchStores {
     // geometry + empty tables up front; every pair arrives via a batch
     ClusterStore.build(spark, pairs.limit(0).drop("day"), root, partitions = 8)
     val base = FreshTables.next(spark, dir, "sclin")
-    (0 until 3).foreach { b =>
-      pairs.filter(col("day") === b.toLong).repartition(1)
-        .write.mode("append").parquet(s"$base/in")
+    Replay.foreachBatch(spark, pairs, col("day"), base, "x155") { (batch, _) =>
+      ClusterStore.appendPairs(spark, batch.drop("day"), root, partitions = 8)
     }
-    val stream = spark.readStream.schema(pairs.schema)
-      .option("maxFilesPerTrigger", 1).parquet(s"$base/in")
-    val q = stream.writeStream
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        ClusterStore.appendPairs(spark, batch.drop("day"), root, partitions = 8)
-        ()
-      }
-      .option("checkpointLocation", s"$base/ckpt")
-      .trigger(Trigger.AvailableNow())
-      .start()
-    Drain(q, "x155", 300000)
     // at-least-once: re-deliver one already-folded batch — keyed
     // merges must replace, never duplicate
     ClusterStore.appendPairs(spark,
@@ -1164,28 +1123,15 @@ private[graft] trait ExtVectorStores extends ExtSketchStores {
   def x159StreamIndex(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
     import graft.ext.IndexStore
-    import org.apache.spark.sql.streaming.Trigger
     val docs = Dedup.materialize(t(spark, dir, "documents")
       .withColumn("day", pmod(xxhash64(col("doc_id").cast("string")), lit(3L))))
     val root = FreshTables.next(spark, dir, "sidxstore")
     val base = FreshTables.next(spark, dir, "sidxin")
-    (0 until 3).foreach { b =>
-      docs.filter(col("day") === b.toLong).repartition(1)
-        .write.mode("append").parquet(s"$base/in")
+    Replay.foreachBatch(spark, docs, col("day"), base, "x159") { (batch, _) =>
+      val d = batch.agg(min(col("day"))).head().getLong(0)
+      IndexStore.appendDay(spark, batch.drop("day"),
+        "doc_id", "text", s"d$d", root, partitions = 8)
     }
-    val stream = spark.readStream.schema(docs.schema)
-      .option("maxFilesPerTrigger", 1).parquet(s"$base/in")
-    val q = stream.writeStream
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        val d = batch.agg(min(col("day"))).head().getLong(0)
-        IndexStore.appendDay(spark, batch.drop("day"),
-          "doc_id", "text", s"d$d", root, partitions = 8)
-        ()
-      }
-      .option("checkpointLocation", s"$base/ckpt")
-      .trigger(Trigger.AvailableNow())
-      .start()
-    Drain(q, "x159", 300000)
     // at-least-once: re-deliver day 1 — all three tables must replace
     IndexStore.appendDay(spark, docs.filter(col("day") === 1L).drop("day"),
       "doc_id", "text", "d1", root, partitions = 8)
@@ -1264,28 +1210,15 @@ private[graft] trait ExtVectorStores extends ExtSketchStores {
   // subtotals losslessly, so the closing quantile estimates are
   // x123's — its oracle verbatim, through the streaming door.
   def x161StreamHist(spark: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.sql.streaming.Trigger
     val docs = Dedup.materialize(t(spark, dir, "documents")
       .select(col("n_chars"), pmod(col("doc_id"), lit(3)).cast("long").as("day")))
     val table = FreshTables.next(spark, dir, "shiststore")
     val base = FreshTables.next(spark, dir, "shistin")
-    (0 until 3).foreach { b =>
-      docs.filter(col("day") === b.toLong).repartition(1)
-        .write.mode("append").parquet(s"$base/in")
+    Replay.foreachBatch(spark, docs, col("day"), base, "x161") { (batch, _) =>
+      val d = batch.agg(min(col("day"))).head().getLong(0)
+      Sketches.histAppendDay(spark, batch, "n_chars",
+        bucketWidth = 32L, day = s"day$d", table = table)
     }
-    val stream = spark.readStream.schema(docs.schema)
-      .option("maxFilesPerTrigger", 1).parquet(s"$base/in")
-    val q = stream.writeStream
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        val d = batch.agg(min(col("day"))).head().getLong(0)
-        Sketches.histAppendDay(spark, batch, "n_chars",
-          bucketWidth = 32L, day = s"day$d", table = table)
-        ()
-      }
-      .option("checkpointLocation", s"$base/ckpt")
-      .trigger(Trigger.AvailableNow())
-      .start()
-    Drain(q, "x161", 300000)
     // at-least-once: re-deliver day 1 — the (bucket, day) merge replaces
     Sketches.histAppendDay(spark, docs.filter(col("day") === 1L), "n_chars",
       bucketWidth = 32L, day = "day1", table = table)
@@ -1315,7 +1248,6 @@ private[graft] trait ExtVectorStores extends ExtSketchStores {
   // order statistic included, through the streaming door.
   def x162StreamKmv(spark: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    import org.apache.spark.sql.streaming.Trigger
     val ws = t(spark, dir, "documents")
       .select(col("lang"), col("doc_id"),
         posexplode(TextAnalysis.tokens(col("text"))).as(Seq("pos", "w")))
@@ -1326,22 +1258,10 @@ private[graft] trait ExtVectorStores extends ExtSketchStores {
       .withColumn("day", pmod(TextAnalysis.md5Bucket(col("bg")), lit(3))))
     val table = FreshTables.next(spark, dir, "skmvstore")
     val base = FreshTables.next(spark, dir, "skmvin")
-    (0 until 3).foreach { b =>
-      bg.filter(col("day") === b).repartition(1)
-        .write.mode("append").parquet(s"$base/in")
+    Replay.foreachBatch(spark, bg, col("day"), base, "x162") { (batch, _) =>
+      val d = batch.agg(min(col("day"))).head().get(0).toString
+      Sketches.kmvAppendDay(spark, batch, "lang", "bg", s"d$d", table)
     }
-    val stream = spark.readStream.schema(bg.schema)
-      .option("maxFilesPerTrigger", 1).parquet(s"$base/in")
-    val q = stream.writeStream
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        val d = batch.agg(min(col("day"))).head().get(0).toString
-        Sketches.kmvAppendDay(spark, batch, "lang", "bg", s"d$d", table)
-        ()
-      }
-      .option("checkpointLocation", s"$base/ckpt")
-      .trigger(Trigger.AvailableNow())
-      .start()
-    Drain(q, "x162", 300000)
     // at-least-once: re-deliver day d1 — the (lang, day) merge replaces
     Sketches.kmvAppendDay(spark, bg.filter(col("day") === 1), "lang", "bg",
       "d1", table)

@@ -401,7 +401,7 @@ object SurfaceQueries {
 
   // --- q39: the streaming online-job path, end-to-end in the gate ---------
   // Orders subset exported as a CSV drop-directory, drained by OnlineJob
-  // (Structured Streaming, Trigger.AvailableNow) through the SAME
+  // (Structured Streaming, drain what has arrived) through the SAME
   // transform + log-state recovery + merge routing as the batch path;
   // keys pre-loaded in the log store must route as updates, the rest as
   // inserts. The oracle is the equivalent batch SQL — streaming and batch

@@ -1,7 +1,7 @@
 package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, Dataset, Encoders, SparkSession}
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, Trigger}
+import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
 /** Custom streaming state via `flatMapGroupsWithState` — gap-based
   * sessionization with explicit per-user state, the streaming twin of
@@ -77,56 +77,23 @@ object StatefulSessions {
       }
   }
 
-  /** Deterministic single-batch replay of [[sessionize]] over a
-    * pre-sorted event frame (`user_id` LONG, `ts` LONG event-time
-    * micros) — the x33 gate harness. Shares [[LateData]]'s cost model:
-    * the sorted input file is staged ONCE per JVM per scratch key
-    * (it is a pure function of the input), and the drain runs in the
-    * small-reducer replay session with a tmpfs checkpoint — the
-    * state-store commit floor, not the data, dominates this workload.
+  /** Deterministic single-batch replay of [[sessionize]] over an event
+    * frame (`user_id` LONG, `ts` LONG event-time micros) — the x33 gate
+    * harness. The input is staged by [[Replay.stage]] as one batch (one
+    * file, one micro-batch: `sessionize` sorts each user's events itself)
+    * and drained in the 4-reducer replay session — the state-store commit
+    * floor, not the data, dominates this workload.
     */
   def replayedSessionize(
       spark: SparkSession,
       events: DataFrame,
       gap: Long,
       scratch: String,
-      queryName: String,
-      timeoutMs: Long = 300000L): DataFrame = {
-    import org.apache.spark.sql.functions.col
-    val root = s"${scratch}_${LateData.jvmToken}"
-    val in = LateData.stagedDirs.computeIfAbsent(root, _ => {
-      val fs = new org.apache.hadoop.fs.Path(root)
-        .getFileSystem(spark.sessionState.newHadoopConf())
-      fs.delete(new org.apache.hadoop.fs.Path(root), true)
-      events.select(col("user_id"), col("ts"))
-        .orderBy("user_id", "ts").coalesce(1)
-        .write.parquet(s"$root/in")
-      sys.addShutdownHook {
-        try fs.delete(new org.apache.hadoop.fs.Path(root), true)
-        catch { case _: Throwable => () }
-      }
-      s"$root/in"
-    })
-    val run = LateData.runCounter.incrementAndGet()
-    val qn = s"${queryName}_r$run"
-    val ss = LateData.replaySession(spark)
+      queryName: String): DataFrame = {
+    import org.apache.spark.sql.functions.{col, lit}
+    val in = Replay.stage(spark, events.select(col("user_id"), col("ts")), lit(0L), scratch)
     implicit val evEnc = Encoders.product[Event]
-    val stream = ss.readStream.schema(evEnc.schema).parquet(in).as[Event]
-    Option(LateData.lastView.put(root, qn)).foreach(ss.catalog.dropTempView(_))
-    val ckpt = LateData.ckptDir(run)
-    val q = sessionize(stream, gap)
-      .writeStream.format("memory").queryName(qn)
-      .outputMode(OutputMode.Append())
-      .option("checkpointLocation", ckpt)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    try Drain(q, qn, timeoutMs)
-    finally {
-      val fs = new org.apache.hadoop.fs.Path(ckpt)
-        .getFileSystem(spark.sessionState.newHadoopConf())
-      try fs.delete(new org.apache.hadoop.fs.Path(ckpt), true)
-      catch { case _: java.io.IOException => () }
-    }
-    ss.table(qn)
+    val stream = Replay.session(spark, 4).readStream.schema(evEnc.schema).parquet(in).as[Event]
+    Replay.memory(sessionize(stream, gap).toDF(), queryName, "append")
   }
 }

@@ -1,11 +1,9 @@
 package graft.streaming
 
-import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
 
-/** Streaming exact-dedup over the deterministic file-per-batch replay
+/** Streaming exact-dedup over the deterministic file-per-batch [[Replay]]
   * harness: `dropDuplicatesWithinWatermark` keys state by the id and
   * evicts it once the watermark passes — O(ids inside the horizon)
   * state, the only dedup shape an unbounded stream can afford (a plain
@@ -33,16 +31,10 @@ object StreamDedup {
       batchCol: String,
       scratch: String,
       delay: String,
-      queryName: String,
-      timeoutMs: Long = 300000L): DataFrame = {
-    val root = s"${scratch}_${LateData.jvmToken}"
-    val in = LateData.stagedDirs.computeIfAbsent(root,
-      _ => LateData.stage(spark, events, Seq(tsUsCol, idCol), batchCol, root))
-    val run = LateData.runCounter.incrementAndGet()
-    val qn = s"${queryName}_r$run"
-
-    val ss = LateData.replaySession(spark)
-    val out = ss.readStream
+      queryName: String): DataFrame = {
+    val in = Replay.stage(spark,
+      events.select(col(tsUsCol), col(idCol), col(batchCol)), col(batchCol), scratch)
+    val out = Replay.session(spark, 4).readStream
       .schema(s"$tsUsCol LONG, $idCol LONG")
       .option("maxFilesPerTrigger", 1)
       .parquet(in)
@@ -50,19 +42,6 @@ object StreamDedup {
       .withWatermark("__ts", delay)
       .dropDuplicatesWithinWatermark(idCol)
       .select(col(idCol), col(tsUsCol))
-
-    Option(LateData.lastView.put(root, qn)).foreach(ss.catalog.dropTempView(_))
-    val ckpt = LateData.ckptDir(run)
-    val q = out.writeStream.format("memory").queryName(qn)
-      .outputMode("append")
-      .option("checkpointLocation", ckpt)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    try Drain(q, qn, timeoutMs)
-    finally {
-      val fs = new Path(ckpt).getFileSystem(spark.sessionState.newHadoopConf())
-      try fs.delete(new Path(ckpt), true) catch { case _: java.io.IOException => () }
-    }
-    ss.table(qn)
+    Replay.memory(out, queryName, "append")
   }
 }

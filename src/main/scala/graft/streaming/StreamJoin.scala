@@ -1,12 +1,10 @@
 package graft.streaming
 
-import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
 
-/** Watermarked stream-stream interval join over the same deterministic
-  * file-per-batch replay harness as [[LateData]] — the join-state gate
+/** Watermarked stream-stream interval join over the deterministic
+  * file-per-batch [[Replay]] harness — the join-state gate
   * for event-time streaming.
   *
   * The operator under test is Spark's stream-stream inner join with an
@@ -34,25 +32,13 @@ object StreamJoin {
   /** Stream-stream join state cost scales with STORE COMMITS per
     * trigger, not data: Spark's symmetric hash join keeps FOUR state
     * stores per shuffle partition (keyToNumValues + keyWithIndexToValue
-    * per side), so at the [[LateData.replaySession]] default of 4
-    * partitions every micro-batch commits 16 stores. The replay input
-    * is one small file per trigger — a single partition (4 stores)
-    * cuts the commit floor 4x with identical semantics (the watermark
-    * is global). Production sizes this to real key cardinality.
+    * per side), so at the 4 partitions the other replay operators use
+    * every micro-batch would commit 16 stores. The replay input is one
+    * small file per trigger — a single partition (4 stores) cuts the
+    * commit floor 4x with identical semantics (the watermark is global).
+    * Production sizes this to real key cardinality.
     */
-  private val joinSessionRef =
-    new java.util.concurrent.atomic.AtomicReference[SparkSession]()
-
-  private def joinSession(spark: SparkSession): SparkSession = {
-    var s = joinSessionRef.get()
-    if (s == null) {
-      val fresh = spark.newSession()
-      fresh.conf.set("spark.sql.shuffle.partitions", "1")
-      s = if (joinSessionRef.compareAndSet(null, fresh)) fresh
-          else joinSessionRef.get()
-    }
-    s
-  }
+  private val Partitions = 1
 
   /** Replay `left` and `right` (each carrying `tsUsCol` LONG epoch
     * micros, `keyCol` LONG, and `batchCol`) as two file-per-batch
@@ -70,17 +56,12 @@ object StreamJoin {
       scratch: String,
       delay: String,
       matchWindowUs: Long,
-      queryName: String,
-      timeoutMs: Long = 300000L): DataFrame = {
-    val root = s"${scratch}_${LateData.jvmToken}"
-    val inL = LateData.stagedDirs.computeIfAbsent(s"$root/l",
-      _ => LateData.stage(spark, left, Seq(tsUsCol, keyCol), batchCol, s"$root/l"))
-    val inR = LateData.stagedDirs.computeIfAbsent(s"$root/r",
-      _ => LateData.stage(spark, right, Seq(tsUsCol, keyCol), batchCol, s"$root/r"))
-    val run = LateData.runCounter.incrementAndGet()
-    val qn = s"${queryName}_r$run"
-
-    val ss = joinSession(spark)
+      queryName: String): DataFrame = {
+    def stage(side: DataFrame, sub: String): String = Replay.stage(spark,
+      side.select(col(tsUsCol), col(keyCol), col(batchCol)), col(batchCol), s"$scratch/$sub")
+    val inL = stage(left, "l")
+    val inR = stage(right, "r")
+    val ss = Replay.session(spark, Partitions)
     def side(in: String, prefix: String): DataFrame = ss.readStream
       .schema(s"$tsUsCol LONG, $keyCol LONG")
       .option("maxFilesPerTrigger", 1)
@@ -97,18 +78,6 @@ object StreamJoin {
       "inner")
       .select(col("l_key").as(keyCol), col("l_tu"), col("r_tu"))
 
-    Option(LateData.lastView.put(root, qn)).foreach(ss.catalog.dropTempView(_))
-    val ckpt = LateData.ckptDir(run)
-    val q = joined.writeStream.format("memory").queryName(qn)
-      .outputMode("append")
-      .option("checkpointLocation", ckpt)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    try Drain(q, qn, timeoutMs)
-    finally {
-      val fs = new Path(ckpt).getFileSystem(spark.sessionState.newHadoopConf())
-      try fs.delete(new Path(ckpt), true) catch { case _: java.io.IOException => () }
-    }
-    ss.table(qn)
+    Replay.memory(joined, queryName, "append")
   }
 }

@@ -1,9 +1,7 @@
 package graft.streaming
 
-import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
 
 import graft.sources.ManifestStore
 
@@ -32,15 +30,22 @@ import graft.sources.ManifestStore
   * rewrites only those. State lives in the table + checkpoint, not in
   * executor memory, so an unbounded stream runs in bounded resources.
   *
-  * The deterministic file-per-batch replay harness is shared with
-  * [[LateData]] (staged once per JVM; immutable thereafter).
+  * The deterministic file-per-batch replay harness is [[Replay]]'s.
   */
 object StreamUpsert {
 
   /** Replay `updates` (pre-assigned to arrival batches via `batchCol`)
-    * through a streaming query whose every micro-batch merges into the
-    * ManifestStore table at `tablePath` (which must already exist —
-    * `ManifestStore.write` the base snapshot first).
+    * through a streaming query whose every micro-batch runs `transform`
+    * and merges the result into the ManifestStore table at `tablePath`
+    * (which must already exist — `ManifestStore.write` the base snapshot
+    * first).
+    *
+    * `transform` is the full streaming-funnel seam between the decoded
+    * arrivals and the merge: quality gates, stream-static dedup probes
+    * against persisted stores, projections. It must be deterministic and
+    * per-row/stream-static only (no cross-batch state beyond the stores
+    * it joins), which keeps the at-least-once replay convergent and the
+    * txn fence sufficient for exactly-once.
     *
     * `writerId` upgrades the sink from at-least-once-convergent to
     * EXACTLY-ONCE: each merge records (writerId, batchId) in the
@@ -49,29 +54,6 @@ object StreamUpsert {
     * describes, actually wired. The id names the logical stream and
     * must be stable across restarts/replays of that stream (and unique
     * among writers of the table), exactly the public txnAppId contract.
-    */
-  def replayedMerge(
-      spark: SparkSession,
-      updates: DataFrame,
-      dataCols: Seq[String],
-      batchCol: String,
-      scratch: String,
-      tablePath: String,
-      keyCols: Seq[String],
-      partitionCols: Seq[String],
-      timeoutMs: Long = 300000L,
-      writerId: Option[String] = None): Unit =
-    replayedPipeline(spark, updates, dataCols, batchCol, scratch, tablePath,
-      keyCols, partitionCols, identity, timeoutMs, writerId)
-
-  /** [[replayedMerge]] with a per-micro-batch TRANSFORM between the
-    * decoded arrivals and the merge — the full streaming-funnel seam:
-    * each batch runs `transform` (quality gates, stream-static dedup
-    * probes against persisted stores, projections) and merges the result.
-    * `transform` must be deterministic and per-row/stream-static only
-    * (no cross-batch state beyond the stores it joins), which keeps the
-    * at-least-once replay convergent and the txn fence sufficient for
-    * exactly-once.
     */
   def replayedPipeline(
       spark: SparkSession,
@@ -82,35 +64,13 @@ object StreamUpsert {
       tablePath: String,
       keyCols: Seq[String],
       partitionCols: Seq[String],
-      transform: DataFrame => DataFrame,
-      timeoutMs: Long = 300000L,
-      writerId: Option[String] = None): Unit = {
-    val root = s"${scratch}_${LateData.jvmToken}"
-    val in = LateData.stagedDirs.computeIfAbsent(root,
-      _ => LateData.stage(spark, updates, dataCols, batchCol, root))
-    val run = LateData.runCounter.incrementAndGet()
-    val schema = updates.select(dataCols.map(col): _*).schema
-    val ckpt = LateData.ckptDir(run)
-    val q = spark.readStream
-      .schema(schema)
-      .option("maxFilesPerTrigger", 1)
-      .parquet(in)
-      .writeStream
-      .queryName(s"graft_stream_upsert_$run")
-      .option("checkpointLocation", ckpt)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        // batch belongs to the stream's session; keep the merge (its
-        // snapshot read + upsert plan join) in that same session
-        ManifestStore.merge(batch.sparkSession, tablePath, transform(batch),
-          keyCols, partitionCols, txn = writerId.map(w => (w, batchId)))
-      }
-      .trigger(Trigger.AvailableNow())
-      .start()
-    try Drain(q, "stream-upsert", timeoutMs)
-    finally {
-      // a drained run never resumes from its checkpoint — reclaim it
-      val fs = new Path(ckpt).getFileSystem(spark.sessionState.newHadoopConf())
-      try fs.delete(new Path(ckpt), true) catch { case _: java.io.IOException => () }
+      transform: DataFrame => DataFrame = identity,
+      writerId: Option[String] = None): Unit =
+    Replay.foreachBatch(spark, updates.select((dataCols :+ batchCol).map(col): _*),
+      col(batchCol), scratch, "graft_stream_upsert") { (batch, batchId) =>
+      // batch belongs to the stream's session; keep the merge (its
+      // snapshot read + upsert plan join) in that same session
+      ManifestStore.merge(batch.sparkSession, tablePath, transform(batch.drop(batchCol)),
+        keyCols, partitionCols, txn = writerId.map(w => (w, batchId)))
     }
-  }
 }

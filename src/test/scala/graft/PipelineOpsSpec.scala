@@ -80,7 +80,7 @@ class PipelineOpsSpec extends SparkSpec {
     // batch 0 updates key 2; batch 1 inserts key 4
     val updates = Seq((2L, "B", 1L, 0L), (4L, "d", 0L, 1L)).toDF("k", "v", "p", "__b")
 
-    StreamUpsert.replayedMerge(spark, updates, Seq("k", "v", "p"), "__b",
+    StreamUpsert.replayedPipeline(spark, updates, Seq("k", "v", "p"), "__b",
       scratch, table, Seq("k"), Seq("p"))
     def state(): Map[Long, (String, Long)] = ManifestStore.read(spark, table)
       .select(col("k"), col("v"), col("p").cast("long"))
@@ -93,7 +93,7 @@ class PipelineOpsSpec extends SparkSpec {
 
     // a full at-least-once replay (fresh checkpoint, same staged input)
     // re-merges both batches: state must converge, not corrupt
-    StreamUpsert.replayedMerge(spark, updates, Seq("k", "v", "p"), "__b",
+    StreamUpsert.replayedPipeline(spark, updates, Seq("k", "v", "p"), "__b",
       scratch, table, Seq("k"), Seq("p"))
     assert(state() == expected)
     assert(ManifestStore.versions(spark, table).size == 5)
@@ -106,7 +106,7 @@ class PipelineOpsSpec extends SparkSpec {
     val base = Seq((1L, "a", 0L), (2L, "b", 1L)).toDF("k", "v", "p")
     ManifestStore.write(spark, base, table, "p")
     val updates = Seq((2L, "B", 1L, 0L), (3L, "c", 0L, 1L)).toDF("k", "v", "p", "__b")
-    def run(): Unit = StreamUpsert.replayedMerge(spark, updates,
+    def run(): Unit = StreamUpsert.replayedPipeline(spark, updates,
       Seq("k", "v", "p"), "__b", scratch, table, Seq("k"), Seq("p"),
       writerId = Some(s"suf_$token"))
     run()

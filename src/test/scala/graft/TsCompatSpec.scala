@@ -22,13 +22,10 @@ class TsCompatSpec extends SparkSpec {
   import spark.implicits._
 
   private val base = {
-    val p = java.nio.file.Files.createTempDirectory(java.nio.file.Paths.get(graft.Scratch.root), "graft_tscompat")
-    // reclaim the fixture dir on JVM exit (LateData.stage's pattern) —
-    // otherwise every test run leaks a graft_tscompat* dir into /tmp
-    sys.addShutdownHook {
-      org.apache.commons.io.FileUtils.deleteQuietly(p.toFile)
-    }
-    p.toString
+    // under the per-JVM Scratch run dir, which Scratch's own shutdown
+    // hook removes, so a test run leaks no graft_tscompat* dir into /tmp
+    java.nio.file.Files.createTempDirectory(
+      java.nio.file.Paths.get(graft.Scratch.root), "graft_tscompat").toString
   }
   private val nanosDir  = s"$base/nanos"
   private val microsDir = s"$base/micros"

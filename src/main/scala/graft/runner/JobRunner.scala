@@ -18,7 +18,9 @@ import graft.spec.Specs._
   * is replaced by Spark partitioning over the full dataset. A day file
   * smaller than `spark.sql.files.openCostInBytes` (4 MB) is one input
   * partition, so [[run]] spreads such a narrow extract by its routing key
-  * before the route (see [[spread]]); a wide input keeps its splits.
+  * before the route (see [[spread]]), and the route joins the key state
+  * to the spread rows co-partitioned; a wide input keeps its splits and
+  * the state is broadcast.
   */
 object JobRunner {
 
@@ -164,6 +166,11 @@ object JobRunner {
     * builds the file partitions without running anything), so deciding
     * starts no Spark job. An extract with no file scan, or whose scan
     * prunes by a run-time subquery, is left alone.
+    *
+    * The spread is also the route join's partitioning: [[MergeRouter.route]]
+    * sees it in the plan and joins the state, which its `groupBy(pk)`
+    * already clusters on the key, as a shuffled hash join built from the
+    * spread rows, so the state is neither collected nor broadcast.
     */
   private def spread(spark: SparkSession, extracted: DataFrame): Boolean = {
     import org.apache.spark.sql.catalyst.expressions.DynamicPruning

@@ -11,8 +11,10 @@ import org.apache.spark.sql.functions._
   *
   * Here the log is a partitioned parquet table; the state lookup is a
   * distinct-keys aggregation (min model_id per (job, pk)) — one shuffle
-  * over keys only, usable as the broadcast side of the MergeRouter join
-  * when the loaded-key set is small.
+  * over keys only, which leaves the state hash-clustered on `pk`. The
+  * MergeRouter join streams it co-partitioned past an extract spread on
+  * the same key, and broadcasts it to any other extract when the
+  * loaded-key set is small.
   */
 object LogStore {
 

@@ -12,9 +12,10 @@ import graft.spec.Specs.ReprocessMode._
   * The reference decides insert-vs-update per row by probing the `etl.log`
   * table for a previously loaded `(job, pk) → model_id`. The distributed
   * form is a single left join of the incoming batch against the key-state
-  * table, then routing each row to an action. One shuffle-or-broadcast join
-  * total; the three writes that follow are filter-partitioned from the same
-  * routed plan (classic foreachBatch + MERGE shape).
+  * table, then routing each row to an action. One co-partitioned or
+  * broadcast join total (see [[route]]); the three writes that follow are
+  * filter-partitioned from the same routed plan (classic foreachBatch +
+  * MERGE shape).
   */
 object MergeRouter {
 
@@ -32,24 +33,37 @@ object MergeRouter {
     *  - OnlyUpdate: matched → update, unmatched → skip (:518-528)
     *  - Delete:     matched rows ALSO emit a delete action for the old id,
     *                then every row → insert (:506-517)
+    *
+    * The join plan follows from `incoming`'s own plan, with no option:
+    *  - `incoming` ends in a hash repartition on the routing key (the
+    *    spread [[graft.runner.JobRunner.run]] puts on a narrow extract):
+    *    a shuffled hash join that builds its table from `incoming`
+    *    (`BuildLeft`) and streams the state past it. The spread's exchange
+    *    and the state's `groupBy(pk)` exchange already cluster both sides
+    *    on the key, so no exchange is added and the state is neither
+    *    collected nor broadcast.
+    *  - anything else: the state is hinted broadcast when Catalyst's
+    *    plan-time size estimate fits the session broadcast threshold.
     */
   def route(incoming: DataFrame, state: DataFrame, pkCol: String, mode: ReprocessMode): DataFrame = {
     val st0 = state.select(col("pk").as("__st_pk"), col("model_id").as(IdCol))
-    // State tables are bounded by loaded-key cardinality; hint broadcast
-    // when Catalyst's plan-time estimate fits the session broadcast
-    // threshold, so the (typically huge) incoming side never shuffles just
-    // to probe key state. Estimation happens on the optimized plan — no
-    // action. When stats are unknown/over the threshold the hint is
-    // withheld and AQE may still convert at runtime from actual shuffle
-    // sizes.
+    val coPartitioned = hashedOnKey(incoming, pkCol)
+    // Unspread: state tables are bounded by loaded-key cardinality; hint
+    // broadcast when the estimate (on the optimized plan — no action) fits
+    // the threshold, so the (typically huge) incoming side never shuffles
+    // just to probe key state. The explicit hint matters: AQE may demote an
+    // unhinted broadcast whose shuffle stage has mostly empty partitions.
+    // When stats are unknown/over the threshold the hint is withheld and
+    // AQE may still convert at runtime from actual shuffle sizes.
     val conf = org.apache.spark.sql.internal.SQLConf.get
     val st =
-      if (conf.autoBroadcastJoinThreshold > 0 &&
+      if (!coPartitioned && conf.autoBroadcastJoinThreshold > 0 &&
           st0.queryExecution.optimizedPlan.stats.sizeInBytes <= conf.autoBroadcastJoinThreshold)
         F.broadcast(st0)
       else st0
-    val joined = incoming.join(
-      st, incoming(pkCol).cast("string") === col("__st_pk").cast("string"), "left")
+    val in = if (coPartitioned) incoming.hint("shuffle_hash") else incoming
+    val joined = in.join(
+      st, in(pkCol).cast("string") === col("__st_pk").cast("string"), "left")
       .drop("__st_pk")
     val matched = col(IdCol).isNotNull
     val routed = mode match {
@@ -76,6 +90,25 @@ object MergeRouter {
           .repartition(col(pkCol))
     }
     routed
+  }
+
+  /** Whether `incoming`'s plan ends in a hash repartition on `pkCol` cast
+    * to string (the form the route join compares). Read off the analyzed
+    * plan: no planning, no job.
+    */
+  private def hashedOnKey(incoming: DataFrame, pkCol: String): Boolean = {
+    import org.apache.spark.sql.catalyst.expressions.Cast
+    import org.apache.spark.sql.catalyst.plans.logical.RepartitionByExpression
+    import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
+    import org.apache.spark.sql.types.StringType
+    val plan = incoming.queryExecution.analyzed
+    (plan, plan.resolve(Seq(pkCol), incoming.sparkSession.sessionState.conf.resolver)) match {
+      case (r: RepartitionByExpression, Some(pk)) => r.partitioning match {
+        case HashPartitioning(Seq(c: Cast), _) => c.dataType == StringType && c.child.semanticEquals(pk)
+        case _ => false
+      }
+      case _ => false
+    }
   }
 
   /** The rows a sink would act on (drops `skip`). */

@@ -75,43 +75,28 @@ object FixedWidth {
       cols: Seq[FwColumn],
       headerCols: Seq[FwColumn] = Nil,
       footerCols: Seq[FwColumn] = Nil): DataFrame = {
-    val spark = lines.sparkSession
-    val hasH = headerCols.nonEmpty
-    val hasF = footerCols.nonEmpty
-
-    // Bounds are two scalar values; computing them is one cheap agg over
-    // the (tiny) line-number column, broadcast back as a 1-row dim.
-    val dataLines: DataFrame =
-      if (!hasH && !hasF) lines
-      else {
-        val b = lines.agg(
-          min(col("__line_no")).as("__first"),
-          max(col("__line_no")).as("__last"))
-        val withB = lines.crossJoin(broadcast(b))
-        withB.filter(
-          (!lit(hasH) || col("__line_no") =!= col("__first")) &&
-          (!lit(hasF) || col("__line_no") =!= col("__last")))
-          .drop("__first", "__last")
-      }
-
-    var out = dataLines.select(
-      (cols.map(c => typed(sliceCol(col("value"), c), c).as(c.outName)) :+ col("__line_no")): _*)
-
-    // Header/footer rows parsed with their own widths and merged into every
-    // data row (reference :247) — one-row broadcast cross joins.
-    if (hasH) {
-      val b = lines.agg(min(col("__line_no")).as("__first"))
-      val hRow = lines.join(broadcast(b), col("__line_no") === col("__first"))
-        .select(headerCols.map(c => typed(sliceCol(col("value"), c), c).as(c.outName)): _*)
-      out = out.crossJoin(broadcast(hRow))
+    def parsed(line: Column, fw: Seq[FwColumn], prefix: String): Seq[Column] =
+      fw.zipWithIndex.map { case (c, i) => typed(sliceCol(line, c), c).as(s"$prefix$i") }
+    val dataCols = cols.map(c => typed(sliceCol(col("value"), c), c).as(c.outName)) :+ col("__line_no")
+    if (headerCols.isEmpty && footerCols.isEmpty) lines.select(dataCols: _*)
+    else {
+      // One aggregate over the lines yields the bounds and the edge lines
+      // themselves (the values at the first and last `__line_no`); the
+      // header and footer are parsed once on that one-row frame, which is
+      // broadcast to every line to drop the edge rows and merge the
+      // header/footer fields into each data row (reference :247).
+      val bounds = lines.agg(
+          min(col("__line_no")).as("__first"), max(col("__line_no")).as("__last"),
+          min_by(col("value"), col("__line_no")).as("__head"),
+          max_by(col("value"), col("__line_no")).as("__tail"))
+        .select(Seq(col("__first"), col("__last")) ++
+          parsed(col("__head"), headerCols, "__h") ++ parsed(col("__tail"), footerCols, "__f"): _*)
+      val edge = Seq(headerCols.nonEmpty -> "__first", footerCols.nonEmpty -> "__last")
+        .collect { case (true, b) => col("__line_no") =!= col(b) }.reduce(_ && _)
+      lines.crossJoin(broadcast(bounds)).filter(edge).select(dataCols ++
+        headerCols.indices.map(i => col(s"__h$i").as(headerCols(i).outName)) ++
+        footerCols.indices.map(i => col(s"__f$i").as(footerCols(i).outName)): _*)
     }
-    if (hasF) {
-      val b = lines.agg(max(col("__line_no")).as("__last"))
-      val fRow = lines.join(broadcast(b), col("__line_no") === col("__last"))
-        .select(footerCols.map(c => typed(sliceCol(col("value"), c), c).as(c.outName)): _*)
-      out = out.crossJoin(broadcast(fRow))
-    }
-    out
   }
 
   /** Read a fixed-width file from disk with an explicit within-file line

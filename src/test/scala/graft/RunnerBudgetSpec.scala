@@ -4,8 +4,10 @@ import java.io.{File, PrintWriter}
 
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.execution.{FileSourceScanExec, SparkPlan}
+import org.apache.spark.sql.catalyst.optimizer.BuildLeft
 import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
-import org.apache.spark.sql.execution.exchange.{ReusedExchangeExec, ShuffleExchangeExec}
+import org.apache.spark.sql.execution.exchange.{BroadcastExchangeExec, ReusedExchangeExec, ShuffleExchangeExec}
+import org.apache.spark.sql.execution.joins.{BroadcastHashJoinExec, ShuffledHashJoinExec}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.internal.SQLConf
 import graft.operators.Transformer
@@ -24,10 +26,11 @@ object PkIdHandler extends ConnectorSink.Handler {
 
 /** Spark job budgets and routing of an ETL job on a day file of a few MB
   * (one input partition): building [[JobRunner.run]]'s plan runs no job,
-  * the load stage runs on several tasks after the routing-key spread, and
-  * the spread changes no routed row. A file under the spread's size
-  * threshold, or an input already split across the cores, keeps one stage
-  * from scan to log.
+  * the load stage runs on several tasks after the routing-key spread, the
+  * route joins the key state co-partitioned with the spread rows (no
+  * broadcast), and the spread changes no routed row. A file under the
+  * spread's size threshold, or an input already split across the cores,
+  * keeps one stage from scan to log and a broadcast route join.
   */
 class RunnerBudgetSpec extends SparkSpec {
   import spark.implicits._
@@ -111,22 +114,51 @@ class RunnerBudgetSpec extends SparkSpec {
   private def logFiles(log: String, jobName: String): Set[String] =
     Option(new File(log, s"job=$jobName").list()).toSeq.flatten.filter(_.endsWith(".parquet")).toSet
 
-  /** Shuffle exchanges between `file`'s scans and the root of `df`'s
-    * executed plan, one entry per scan of the file; `df` must have run.
+  /** The root of `df`'s executed plan, with AQE's wrapper taken off; `df`
+    * must have run.
     */
-  private def exchangesAbove(df: DataFrame, file: File): Seq[Int] = {
+  private def executed(df: DataFrame): SparkPlan = df.queryExecution.executedPlan match {
+    case a: AdaptiveSparkPlanExec => a.executedPlan
+    case p => p
+  }
+
+  /** Every node of `df`'s executed plan, query stages and reused
+    * exchanges opened; `df` must have run.
+    */
+  private def nodes(df: DataFrame): Seq[SparkPlan] = {
+    def walk(p: SparkPlan): Seq[SparkPlan] = p +: (p match {
+      case q: QueryStageExec => walk(q.plan)
+      case r: ReusedExchangeExec => walk(r.child)
+      case _ => p.children.flatMap(walk)
+    })
+    walk(executed(df))
+  }
+
+  /** Shuffle exchanges between the scans of the files under `path` and the
+    * root of `df`'s executed plan, one entry per scan; `df` must have run.
+    */
+  private def exchangesAbove(df: DataFrame, path: File): Seq[Int] = {
     def walk(p: SparkPlan): Seq[Int] = p match {
       case s: FileSourceScanExec =>
-        if (s.relation.location.inputFiles.exists(_.endsWith(file.getName))) Seq(0) else Nil
+        if (s.relation.location.inputFiles.exists(_.contains(path.getPath))) Seq(0) else Nil
       case q: QueryStageExec => walk(q.plan)
       case r: ReusedExchangeExec => walk(r.child)
       case _ => p.children.flatMap(walk).map(_ + (if (p.isInstanceOf[ShuffleExchangeExec]) 1 else 0))
     }
-    walk(df.queryExecution.executedPlan match {
-      case a: AdaptiveSparkPlanExec => a.executedPlan
-      case p => p
-    })
+    walk(executed(df))
   }
+
+  /** Whether `df`'s route joins the state co-partitioned: a shuffled hash
+    * join built from the spread side, and nothing broadcast.
+    */
+  private def coPartitioned(df: DataFrame): Boolean = {
+    val plan = nodes(df)
+    plan.exists { case j: ShuffledHashJoinExec => j.buildSide == BuildLeft; case _ => false } &&
+      !plan.exists(p => p.isInstanceOf[BroadcastExchangeExec] || p.isInstanceOf[BroadcastHashJoinExec])
+  }
+
+  private def broadcastJoin(df: DataFrame): Boolean =
+    nodes(df).exists(_.isInstanceOf[BroadcastHashJoinExec])
 
   /** Runs one job through [[JobRunner.runAll]] with the load the
     * benchmark runs: the connector, then the log append.
@@ -152,10 +184,10 @@ class RunnerBudgetSpec extends SparkSpec {
   test("a narrow day file loads on several tasks at a pinned job count, at most shuffle.partitions log files") {
     val d = dir()
     val cases = Seq(
-      csv(d, 0 until DayRows) -> 4,
-      txt(d, 0 until DayRows, headerFooter = false) -> 4,
-      // header and footer: two broadcast bounds and two broadcast rows
-      txt(d, 0 until DayRows, headerFooter = true) -> 12)
+      csv(d, 0 until DayRows) -> 3,
+      txt(d, 0 until DayRows, headerFooter = false) -> 3,
+      // header and footer: one bounds aggregate (its shuffle and its broadcast)
+      txt(d, 0 until DayRows, headerFooter = true) -> 5)
     for ((file, pinned) <- cases) withClue(s"${requireNarrow(file).getName}: ") {
       val j = job("load_" + file.getName.replace('.', '_'), file)
       val log = seededLog(j.name)
@@ -167,6 +199,20 @@ class RunnerBudgetSpec extends SparkSpec {
       assert(written.nonEmpty && written.size <= spark.conf.get("spark.sql.shuffle.partitions").toInt, written)
       assert(LogStore.stateFor(LogStore.read(spark, log), j.name).count() == DayRows)
     }
+  }
+
+  test("a spread job joins its key state co-partitioned: one exchange above each scan, nothing broadcast") {
+    val d = dir()
+    for (file <- Seq(csv(d, 0 until DayRows), txt(d, 0 until DayRows, headerFooter = false)).map(requireNarrow))
+      withClue(s"${file.getName}: ") {
+        val j = job("copart_" + file.getName.replace('.', '_'), file)
+        val log = seededLog(j.name)
+        val results = ConnectorSink(JobRunner.run(spark, j, Some(log)).routed, PkIdHandler)
+        results.collect()
+        assert(coPartitioned(results), executed(results))
+        assert(exchangesAbove(results, file) == Seq(1))
+        assert(exchangesAbove(results, new File(log)) == Seq(1))
+      }
   }
 
   test("a file under the size threshold, or an input split across the cores, is not spread") {
@@ -185,6 +231,7 @@ class RunnerBudgetSpec extends SparkSpec {
       val results = ConnectorSink(JobRunner.run(spark, j, Some(log)).routed, PkIdHandler)
       results.collect()
       assert(exchangesAbove(results, scanned) == Seq(0))
+      assert(broadcastJoin(results), executed(results))
     }
   }
 
@@ -203,6 +250,71 @@ class RunnerBudgetSpec extends SparkSpec {
       val results = ConnectorSink(routed, PkIdHandler)
       results.collect()
       assert(exchangesAbove(results, file) == Seq(1))
+      if (mode == ReprocessMode.Delete) assert(broadcastJoin(results), executed(results))
+      else assert(coPartitioned(results), executed(results))
+    }
+    val delete = job("route_delete_load", file, ReprocessMode.Delete)
+    assert(runJob(delete, seededLog(delete.name)).jobs == 4)
+  }
+
+  /** A log of `jobName` that holds, over the day's keys 0 until DayRows:
+    * two `info` rows with different ids for every third key (the smaller,
+    * the key itself, must win); `error` rows for keys with no `info` row;
+    * `info` rows with a null id; and `info` rows for keys past the day.
+    * A second job's rows sit in the same log.
+    */
+  private def messyLog(jobName: String): String = {
+    val log = new File(dir(), "log").getPath
+    def rows(ids: org.apache.spark.sql.Dataset[java.lang.Long], job: String, id: org.apache.spark.sql.Column,
+        level: String) = ids.select(lit(job).as("job"), format_string("P%09d", $"id").as("pk"),
+      id.cast("long").as("model_id"), lit(level).as("level"), lit("seed").as("message"), current_timestamp().as("ts"))
+    val day = spark.range(0, DayRows)
+    LogStore.append(spark, log, Seq(
+      rows(day.filter($"id" % 3 === 0), jobName, $"id" + 1000000, "info"),
+      rows(day.filter($"id" % 3 === 0), jobName, $"id", "info"),
+      rows(day.filter($"id" % 3 =!= 0 && $"id" % 5 === 1), jobName, $"id" + 7, "error"),
+      rows(day.filter($"id" % 3 =!= 0 && $"id" % 7 === 2), jobName, lit(null), "info"),
+      rows(spark.range(DayRows, DayRows + 5000), jobName, $"id", "info"),
+      rows(day, jobName + "_other", $"id" + 500, "info")).reduce(_ unionByName _))
+    log
+  }
+
+  /** A log that holds only another job's rows: no partition for `jobName`. */
+  private def otherJobLog(jobName: String): String = {
+    val log = new File(dir(), "log").getPath
+    LogStore.append(spark, log, spark.range(0, DayRows, 2).select(lit(jobName + "_other").as("job"),
+      format_string("P%09d", $"id").as("pk"), $"id".as("model_id"), lit("info").as("level"),
+      lit("seed").as("message"), current_timestamp().as("ts")))
+    log
+  }
+
+  test("on a messy log, the co-partitioned route equals the broadcast route row for row in every mode") {
+    val file = requireNarrow(csv(dir(), 0 until DayRows))
+    val logs = Seq[(String, String => Option[String])](
+      "messy" -> (n => Some(messyLog(n))), "no log" -> (_ => None), "no partition" -> (n => Some(otherJobLog(n))))
+    for ((logCase, mkLog) <- logs; mode <- Seq(ReprocessMode.Insert, ReprocessMode.Update,
+        ReprocessMode.NoUpdate, ReprocessMode.OnlyUpdate, ReprocessMode.Delete)) withClue(s"$logCase, $mode: ") {
+      val j = job("messy_" + mode.toString.toLowerCase, file, mode)
+      val log = mkLog(j.name)
+      val state = log.fold(Seq.empty[(String, Long)].toDF("pk", "model_id"))(
+        l => LogStore.stateFor(LogStore.read(spark, l), j.name))
+      val transformed = Transformer(JobRunner.extract(spark, j), j.transform)
+      val spread = MergeRouter.route(transformed.repartition(col("pk").cast("string")), state, "pk", mode)
+      val unspread = MergeRouter.route(transformed, state, "pk", mode)
+      val want = sortedRows(unspread)
+      assert(want.size >= DayRows)
+      assert(sortedRows(spread) == want)
+      if (mode != ReprocessMode.Delete) assert(sortedRows(JobRunner.run(spark, j, log).routed) == want)
+      if (logCase == "messy") {
+        assert(coPartitioned(spread), executed(spread))
+        assert(broadcastJoin(unspread), executed(unspread))
+        if (mode == ReprocessMode.Update) {
+          val updates = spread.filter(col(MergeRouter.ActionCol) === "update")
+            .select(col("pk"), col(MergeRouter.IdCol)).as[(String, Long)].collect()
+          assert(updates.length == (DayRows + 2) / 3)
+          assert(updates.forall { case (pk, id) => pk.substring(1).toLong == id }, "min(model_id) must win")
+        }
+      }
     }
   }
 }
